@@ -23,11 +23,11 @@ Three execution paths:
    JSON string column; emits canonical flattened JSON (dynamic keys).  This
    is the *only* Python that touches row data, and it is batch-vectorized —
    no per-row Python UDFs anywhere (BASELINE input_hint).
-3. :func:`flatten_projection` — when the payload schema is *known*, a pure
-   native column projection (``col("a.b").alias("a_b")``, ``to_json`` for
-   arrays/excepted subtrees).  Stays fully inside Catalyst/whole-stage
-   codegen: at 100 TB this is the hot path; the pandas UDF only runs for
-   schema discovery or truly dynamic keys.
+3. :func:`flatten_dataframe` — when the payload schema is *known*, a pure
+   native projection (``a.b AS a_b``, ``to_json`` for arrays/excepted
+   subtrees; :func:`flatten_sql` builds it as SQL text).  Stays fully
+   inside Catalyst/whole-stage codegen: at 100 TB this is the hot path;
+   the pandas UDF only runs for schema discovery or truly dynamic keys.
 """
 
 from __future__ import annotations
@@ -37,9 +37,11 @@ from typing import Any, Iterable, Optional
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from tap_rest_api_msdk_spark.functions.sqlexpr import quote_ident, select_struct
 
 _TRANSLATE = str.maketrans("-.", "__")
 
@@ -137,13 +139,15 @@ def make_flatten_udf(
 # Path 3: known-schema native projection (zero Python on the hot path)
 # ---------------------------------------------------------------------------
 
-def flatten_columns(
+def flatten_sql(
     schema: T.StructType,
     except_keys: Optional[Iterable[str]] = None,
     prefix: str = "",
     col_prefix: str = "",
-) -> list[Column]:
-    """Generate the native flatten projection for a *known* struct schema.
+) -> list[str]:
+    """The native flatten projection for a *known* struct schema, as SQL
+    expressions ``expr AS `name``` over the struct column ``col_prefix``
+    (a SQL identifier; empty = top-level columns).
 
     Mirrors F1 semantics on Spark types: StructType ~ dict (recurse),
     ArrayType ~ list (``to_json``), except-path subtrees ``to_json``.
@@ -156,21 +160,19 @@ def flatten_columns(
       exactly like the reference's dict overwrite (utils.py:55-69).
     """
     except_set = frozenset(except_keys or ())
-    by_name: dict[str, Column] = {}
+    by_name: dict[str, str] = {}
 
     def walk(struct: T.StructType, joined: str, path: str) -> None:
         for field in struct.fields:
             jpath = joined + field.name
-            cpath = (path + "." if path else "") + f"`{field.name}`"
+            cpath = (path + "." if path else "") + quote_ident(field.name)
             out_name = translate_key(jpath)
-            if jpath in except_set:
-                by_name[out_name] = F.to_json(F.col(cpath)).alias(out_name)
-            elif isinstance(field.dataType, T.StructType):
+            if isinstance(field.dataType, T.StructType) and jpath not in except_set:
                 walk(field.dataType, jpath + "_", cpath)
-            elif isinstance(field.dataType, (T.ArrayType, T.MapType)):
-                by_name[out_name] = F.to_json(F.col(cpath)).alias(out_name)
-            else:
-                by_name[out_name] = F.col(cpath).alias(out_name)
+                continue
+            if jpath in except_set or isinstance(field.dataType, (T.ArrayType, T.MapType)):
+                cpath = f"to_json({cpath})"
+            by_name[out_name] = f"{cpath} AS {quote_ident(out_name)}"
 
     walk(schema, prefix, col_prefix)
     return list(by_name.values())
@@ -190,16 +192,17 @@ def flatten_dataframe(
     prunes unused nested fields from the parse). Struct (the shredded
     columnar WAL format): the projection reads the struct directly — no
     parse at all, and parquet only materializes the referenced subfields.
-    Either way the whole stage stays in codegen.
+    Either way the whole stage stays in codegen, and the projection is one
+    SQL expression, so planning cost does not grow with the field count.
     """
-    keep = [F.col(c) for c in (keep_cols or [c for c in df.columns if c != payload_col])]
-    is_struct = isinstance(df.schema[payload_col].dataType, T.StructType)
-    if is_struct:
-        parsed = df.withColumn("__rec", F.col(payload_col))
+    keep = keep_cols or [c for c in df.columns if c != payload_col]
+    payload = quote_ident(payload_col)
+    if isinstance(df.schema[payload_col].dataType, T.StructType):
+        parsed, rec, raw = df, payload, f"to_json({payload})"
     else:
         parsed = df.withColumn("__rec", F.from_json(F.col(payload_col), payload_schema))
-    flat = flatten_columns(payload_schema, except_keys, col_prefix="__rec")
+        rec, raw = "`__rec`", payload
+    fields = [quote_ident(c) for c in keep] + flatten_sql(payload_schema, except_keys, col_prefix=rec)
     if store_raw_json_message:
-        raw = F.to_json(F.col(payload_col)) if is_struct else F.col(payload_col)
-        flat = flat + [raw.alias("_sdc_raw_json")]
-    return parsed.select(*keep, *flat)
+        fields.append(f"{raw} AS `_sdc_raw_json`")
+    return select_struct(parsed, fields)

@@ -32,10 +32,13 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tap_rest_api_msdk_spark.functions.sqlexpr import quote_ident, select_struct
 
-def lww_struct(order_cols: Sequence[str], value_cols: Sequence[str]):
-    """Struct whose natural ordering = (order_cols...), carrying values."""
-    return F.struct(*[F.col(c) for c in order_cols], *[F.col(c) for c in value_cols])
+
+def live_filter_sql(op_col: str) -> str:
+    """SQL predicate keeping rows whose op is not a delete tombstone."""
+    q = quote_ident(op_col)
+    return f"{q} IS NULL OR {q} != 'delete'"
 
 
 def lww_dedup(
@@ -51,23 +54,28 @@ def lww_dedup(
     the greatest (seq, commit, ...) — exactly LWW with deterministic
     tie-break. Columns come back in original order.
 
+    The aggregate and the output projection are each ONE SQL expression,
+    so building the plan costs the same few JVM calls whatever the column
+    count (a per-column ``Column`` costs several py4j round trips, which
+    dominated small micro-batches).
+
     If ``drop_delete_op_col`` names an op column, rows whose final state is
     a delete tombstone are dropped AFTER the LWW choice (a delete followed
     by nothing removes the key; a later upsert resurrects it).
     """
-    value_cols = [c for c in df.columns if c not in order_by]
-    agg = df.groupBy(*keys).agg(
-        F.max(lww_struct(order_by, [c for c in value_cols if c not in keys])).alias("__w")
+    cols = df.columns
+    carried = [c for c in cols if c not in order_by and c not in keys]
+    winner = ", ".join(quote_ident(c) for c in [*order_by, *carried])
+    agg = df.groupBy(*keys).agg(F.expr(f"max(struct({winner})) AS __w"))
+    out = select_struct(
+        agg,
+        [
+            quote_ident(c) if c in keys else f"__w.{quote_ident(c)} AS {quote_ident(c)}"
+            for c in cols
+        ],
     )
-    out_cols = [F.col(k) for k in keys] + [
-        F.col(f"__w.{c}").alias(c) for c in df.columns if c not in keys
-    ]
-    out = agg.select(*out_cols)
     if drop_delete_op_col:
-        out = out.filter(
-            F.col(drop_delete_op_col).isNull()
-            | (F.col(drop_delete_op_col) != F.lit("delete"))
-        )
+        out = out.filter(live_filter_sql(drop_delete_op_col))
     return out
 
 
@@ -86,10 +94,7 @@ def lww_dedup_window(
         .drop("__rn")
     )
     if drop_delete_op_col:
-        out = out.filter(
-            F.col(drop_delete_op_col).isNull()
-            | (F.col(drop_delete_op_col) != F.lit("delete"))
-        )
+        out = out.filter(live_filter_sql(drop_delete_op_col))
     return out
 
 
@@ -113,8 +118,5 @@ def lww_dedup_salted(
     phase1 = lww_dedup(salted, list(keys) + ["__salt"], order_by)
     phase2 = lww_dedup(phase1.drop("__salt"), keys, order_by)
     if drop_delete_op_col:
-        phase2 = phase2.filter(
-            F.col(drop_delete_op_col).isNull()
-            | (F.col(drop_delete_op_col) != F.lit("delete"))
-        )
+        phase2 = phase2.filter(live_filter_sql(drop_delete_op_col))
     return phase2

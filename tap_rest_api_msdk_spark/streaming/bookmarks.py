@@ -20,12 +20,19 @@ from tap_rest_api_msdk_spark.operators.incremental import serialize_bookmark
 
 
 class BookmarkStore:
-    """View over a LakeTable manifest's bookmark dict."""
+    """View over a LakeTable manifest's bookmark dict.
 
-    def __init__(self, table, stream: str, start_date: Any = ""):
+    ``bookmarks`` pins the view to one snapshot's bookmark dict (a commit
+    reads HEAD once and answers everything from it); without it every
+    ``get`` reads the table's HEAD.
+    """
+
+    def __init__(self, table, stream: str, start_date: Any = "",
+                 bookmarks: Optional[dict] = None):
         self.table = table
         self.stream = stream
         self.start_date = start_date
+        self.snapshot_bookmarks = bookmarks
 
     def get(self) -> Any:
         """Resolved starting bookmark: stored value, else start_date seed.
@@ -33,7 +40,8 @@ class BookmarkStore:
         Mirrors get_start_date (utils.py:99-115): a datetime-typed seed is
         surfaced in its truncated string form; raw values pass through.
         """
-        stored = self.table.bookmarks().get(self.stream)
+        marks = self.snapshot_bookmarks
+        stored = (self.table.bookmarks() if marks is None else marks).get(self.stream)
         if stored is not None:
             return stored
         if isinstance(self.start_date, dt.datetime):

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tap_rest_api_msdk_spark.functions.infer import merge_schemas
+from tap_rest_api_msdk_spark.functions.sqlexpr import quote_ident, select_struct
 
 LATEST_POINTER = "_latest.json"
 
@@ -62,6 +63,13 @@ LATEST_POINTER = "_latest.json"
 # uses (slice mod S), and because S | SLICE_MOD the residues nest across
 # commits with different S (DESIGN_hierarchical_bucketing.md)
 SLICE_MOD = 64
+
+
+def key_hash(keys: Sequence[str], modulus: int, seed: Optional[str] = None):
+    """``int(pmod(xxhash64(keys[, seed]), modulus))`` as one SQL expression:
+    the bucket (no seed) and slice/salt (seed ``"__salt__"``) of a row."""
+    args = [quote_ident(k) for k in keys] + ([f"'{seed}'"] if seed else [])
+    return F.expr(f"cast(pmod(xxhash64({', '.join(args)}), {int(modulus)}) as int)")
 
 
 def mm3_hash_int(value: int, seed: int = 42) -> int:
@@ -202,6 +210,11 @@ def _unpack_bloom(b64: str) -> list:
 
     raw = base64.b64decode(b64)
     return list(struct.unpack(f"<{len(raw) // 8}Q", raw))
+
+
+#: default ``base`` of the commit entry points: resolve HEAD at call time
+#: (a caller passing its own snapshot may pass None for an empty table)
+_HEAD = object()
 
 #: manifest keys that split into per-bucket SECTION files (split manifests,
 #: the Iceberg manifest-list shape): the version file carries only core
@@ -848,8 +861,13 @@ class LakeTable:
             return int(led.get("default", -1))
         return -1
 
-    def last_batch_id_for(self, writer_id: str = "default") -> int:
-        return self._last_for(self.current_manifest(), writer_id)
+    def last_batch_id_for(self, writer_id: str = "default",
+                          manifest: Optional[dict] = None) -> int:
+        """``writer_id``'s last committed batch id at ``manifest`` (a
+        snapshot the caller already holds), else at HEAD."""
+        return self._last_for(
+            manifest if manifest is not None else self.current_manifest(), writer_id
+        )
 
     @property
     def last_committed_batch_id(self) -> int:
@@ -1171,7 +1189,49 @@ class LakeTable:
     # write path
     # ------------------------------------------------------------------
     def _bucket_col(self, keys: Sequence[str]):
-        return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(self.num_buckets)).cast("int")
+        return key_hash(keys, self.num_buckets)
+
+    @staticmethod
+    def _lww_partitioned(df: DataFrame, keys, order_by, k_parts: int, S: int) -> DataFrame:
+        """Single-shuffle LWW merge (SURVEY §4.3 physical plan): one hash
+        exchange on (__bucket, __salt) — the salt is a pure function of
+        the merge keys, so every row of a key still co-locates — then an
+        in-partition sort and a first-row-per-key filter via lag(). No
+        second exchange: the window's required distribution is exactly
+        the repartition columns, and the write consumes the clustered
+        layout directly (sort doubles as file order -> contiguous
+        __bucket runs -> row-group stats). Winners keep ``__salt``."""
+        from pyspark.sql import Window
+
+        rep = df.withColumn("__salt", key_hash(keys, S, "__salt__")).repartition(
+            k_parts, "__bucket", "__salt"
+        )
+        w = Window.partitionBy("__bucket", "__salt").orderBy(
+            *[F.col(k).asc() for k in keys], *[F.col(o).desc() for o in order_by]
+        )
+        key_changed = F.lit(False)
+        for k in keys:
+            lagged = F.lag(F.col(k)).over(w)
+            key_changed = key_changed | lagged.isNull() | (lagged != F.col(k))
+        return rep.withColumn("__first", key_changed).filter("__first").drop("__first")
+
+    def _epoch_dir(self, epoch: int) -> str:
+        """A fresh data directory for one write job of snapshot ``epoch``.
+        Unique per job: concurrent writers must never share a physical
+        directory (mode="overwrite" would eat each other's files); the
+        manifest, not the dir name, defines the snapshot."""
+        return os.path.join(self.path, "data", f"epoch={epoch:010d}-{uuid.uuid4().hex[:8]}")
+
+    @staticmethod
+    def _write_parts(df: DataFrame, out_dir: str) -> dict:
+        """Write ``df`` under ``out_dir``; returns partition index -> file
+        (the HashPartitioning assignment the claims derive from)."""
+        df.write.mode("overwrite").parquet(out_dir)
+        return {
+            int(f.split("-")[1]): os.path.join(out_dir, f)
+            for f in os.listdir(out_dir)
+            if f.startswith("part-") and f.endswith(".parquet")
+        }
 
     @staticmethod
     def _files_and_meta(affected, S, k_parts, by_index, allowed=None,
@@ -1472,6 +1532,85 @@ class LakeTable:
                     return False
         return True
 
+    def _rebased_schema(self, cur: Optional[dict], writer_id: str, batch_id: int,
+                        new_schema: T.StructType, keys):
+        """A batch commit's schema rebased onto ``cur`` after a lost CAS.
+
+        ``_SKIP`` when ``cur`` shows this writer already committed the
+        batch (or a later one): a zombie/failover duplicate won the race,
+        and overwriting would REGRESS the ledger and let a later replay
+        apply twice. None (recompute) when a rebucket() won the race (our
+        files' __bucket values and section claims are in the OLD space;
+        the retry re-syncs the count — bucket-level conflict checks could
+        pass VACUOUSLY for a commit that consumed nothing), when the
+        schemas do not merge, or when the merge changes a key column's
+        type: the table's (existing rows would re-bucket) or ours (our
+        files bucket keys under new_schema's types, e.g. long keys written
+        on an empty table while a racer committed double — the retry
+        re-aligns the batch to the winner's key type)."""
+        if self._last_for(cur, writer_id) >= batch_id:
+            return self._SKIP
+        if cur and cur.get("num_buckets") and int(cur["num_buckets"]) != self.num_buckets:
+            return None
+        if cur is None or not cur.get("schema"):
+            return new_schema
+        cur_schema = T.StructType.fromJson(cur["schema"])
+        try:
+            final = merge_schemas(cur_schema, new_schema)
+        except Exception:
+            return None
+        ft = {f.name: f.dataType for f in final.fields}
+        for schema in (cur_schema, new_schema):
+            t = {f.name: f.dataType for f in schema.fields}
+            if any(k in t and t[k] != ft.get(k, t[k]) for k in keys):
+                return None
+        return final
+
+    def _batch_manifest(self, cur, batch_id, writer_id, schema, keys, order_by, op_col,
+                        files, deltas, slice_meta, bookmark_updates, extra_manifest,
+                        sizes, blooms, stats) -> dict:
+        """The next manifest of a batch commit on top of ``cur``."""
+        bookmarks = dict(cur.get("bookmarks", {})) if cur else {}
+        bookmarks.update(bookmark_updates or {})
+        return self._with_file_index({
+            # carry foreign extra keys (another writer's custom fields)
+            # through rebases; ours overlay below
+            **{k_: v for k_, v in (cur or {}).items() if k_ not in _MANIFEST_CORE_KEYS},
+            "batch_id": batch_id,
+            "batch_ids": self._bumped_ledger(cur, writer_id, batch_id),
+            "committed_at": time.time(),
+            "schema": schema.jsonValue(),
+            "files": files,
+            "deltas": deltas,
+            "slice_meta": slice_meta,
+            "bookmarks": bookmarks,
+            "num_buckets": self.num_buckets,
+            **({"stats_columns": list(self.stats_columns)} if self.stats_columns else {}),
+            "keys": list(keys),
+            "order_by": list(order_by),
+            "op_col": op_col,
+            "fold_round": int(cur.get("fold_round", 0)) if cur else 0,
+            **self._merged_extra(cur, extra_manifest),
+        }, sizes, cur, blooms, new_stats=stats)
+
+    def _commit_batch(self, m, out_dir, bookmark_updates, extra_manifest, assemble):
+        """CAS-commit a batch whose files are in ``out_dir``.
+
+        Lazy commit payloads resolve HERE — after the write action, right
+        before the commit — so a caller may overlap its own metrics job
+        with the write and still land exact bookmarks in the same
+        manifest. If a payload aborts (e.g. the pipeline's empty-batch
+        signal), the just-written epoch dir is reclaimed: no manifest
+        references it, so vacuum() could never see it (ADVICE r5 —
+        orphaned dir of empty part files)."""
+        try:
+            bookmark_updates = _resolved(bookmark_updates)
+            extra_manifest = _resolved(extra_manifest)
+        except BaseException:
+            shutil.rmtree(out_dir, ignore_errors=True)
+            raise
+        return self._try_commit(m, lambda cur: assemble(cur, bookmark_updates, extra_manifest))
+
     #: sentinel an ``assemble`` closure returns when, on a CAS rebase, the
     #: fresh snapshot shows the batch was ALREADY committed (a zombie /
     #: failover duplicate of the same writer won the race) — the commit
@@ -1585,10 +1724,8 @@ class LakeTable:
             [tuple(values[f.name] for f in probe_schema.fields)], probe_schema
         )
         row = probe.select(
-            F.pmod(F.xxhash64(*keys), F.lit(self.num_buckets)).cast("int").alias("b"),
-            F.pmod(
-                F.xxhash64(*keys, F.lit("__salt__")), F.lit(SLICE_MOD)
-            ).cast("int").alias("s64"),
+            key_hash(keys, self.num_buckets).alias("b"),
+            key_hash(keys, SLICE_MOD, "__salt__").alias("s64"),
             F.xxhash64(*keys, F.lit("__bloom1__")).alias("h1"),
             F.xxhash64(*keys, F.lit("__bloom2__")).alias("h2"),
         ).collect()[0]
@@ -1639,13 +1776,18 @@ class LakeTable:
         key_index: bool = False,
         delta_parts: Optional[int] = None,
         affected_est: Optional[int] = None,
+        base=_HEAD,
     ) -> dict:
         """LWW MERGE of a change batch into the table (exactly-once).
 
+        ``base`` is the HEAD manifest the caller already resolved (None =
+        empty table): the first attempt plans and commits against it
+        instead of reading HEAD again. Omitted, HEAD is read here.
+
         ``affected_buckets`` may be a zero-arg CALLABLE for the delta-
-        append modes (steady-overlap: the caller's lineage pass runs
-        concurrently with the write); ``affected_est`` then sizes the
-        write fan-out — see ``_append_delta``.
+        append modes (the caller's lineage pass runs concurrently with
+        the write); ``affected_est`` then sizes the write fan-out — see
+        ``_append_delta``.
 
         Returns a small stats dict (for the metrics/lineage table).
         Semantics: per key, the row with max (order_by...) wins across
@@ -1693,6 +1835,8 @@ class LakeTable:
                 eff_mode, writer_id, precombine=precombine,
                 key_index=key_index, delta_parts=delta_parts,
                 affected_est=affected_est,
+                # a recompute re-plans against the fresh HEAD
+                base=base if _attempt == 0 else _HEAD,
             )
             if out is not None:
                 if eff_mode != mode:
@@ -2044,12 +2188,8 @@ class LakeTable:
         # one bounded job: every requested key's pruning coordinates
         coords = probe.select(
             *keys,
-            F.pmod(F.xxhash64(*keys), F.lit(self.num_buckets))
-            .cast("int")
-            .alias("__b"),
-            F.pmod(F.xxhash64(*keys, F.lit("__salt__")), F.lit(SLICE_MOD))
-            .cast("int")
-            .alias("__s64"),
+            key_hash(keys, self.num_buckets).alias("__b"),
+            key_hash(keys, SLICE_MOD, "__salt__").alias("__s64"),
             F.xxhash64(*keys, F.lit("__bloom1__")).alias("__h1"),
             F.xxhash64(*keys, F.lit("__bloom2__")).alias("__h2"),
         ).collect()
@@ -2112,12 +2252,13 @@ class LakeTable:
         key_index: bool = False,
         delta_parts: Optional[int] = None,
         affected_est: Optional[int] = None,
+        base=_HEAD,
     ) -> Optional[dict]:
         """One optimistic attempt: compute + write data files against the
-        current snapshot, then CAS-commit. Returns None when a concurrent
-        commit invalidated the data files (conflicting buckets) — the
-        caller recomputes from the fresh snapshot."""
-        m = self.current_manifest()
+        snapshot ``base`` (default: HEAD), then CAS-commit. Returns None
+        when a concurrent commit invalidated the data files (conflicting
+        buckets) — the caller recomputes from the fresh snapshot."""
+        m = self.current_manifest() if base is _HEAD else base
         if batch_id <= self._last_for(m, writer_id):
             return {"skipped": True, "batch_id": batch_id}
         if m is not None:
@@ -2149,7 +2290,7 @@ class LakeTable:
         batch_schema = T.StructType(
             [f for f in batch_df.schema.fields if f.name != "__bucket"]
         )
-        old_schema = self.schema()
+        old_schema = T.StructType.fromJson(m["schema"]) if m and m.get("schema") else None
         new_schema = merge_schemas(old_schema, batch_schema) if old_schema else batch_schema
         # REFUSE type drift on merge-key columns: __bucket = hash(keys), so
         # widening a key (long -> double) re-hashes existing rows into
@@ -2168,17 +2309,22 @@ class LakeTable:
                     )
 
         def align(df: DataFrame) -> DataFrame:
-            cols = []
-            have = {f.name: f for f in df.schema.fields}
-            for f in new_schema.fields:
-                if f.name in have:
-                    c = F.col(f.name)
-                    if have[f.name].dataType != f.dataType:
-                        c = c.cast(f.dataType)
-                    cols.append(c.alias(f.name))
-                else:
-                    cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-            return df.select(*cols)
+            """``df`` in ``new_schema``'s column order and types. Only the
+            drifted columns (cast or null-filled) are built one by one; the
+            reorder is one SQL expression, and a frame already in the
+            target schema is returned as is."""
+            have = {f.name: f.dataType for f in df.schema.fields}
+            want = [(f.name, f.dataType) for f in new_schema.fields]
+            if list(have.items()) == want:
+                return df
+            fix = {
+                name: (F.col(name) if name in have else F.lit(None)).cast(dt)
+                for name, dt in want
+                if have.get(name) != dt
+            }
+            return select_struct(
+                df.withColumns(fix) if fix else df, [quote_ident(n) for n, _ in want]
+            )
 
         batch = align(batch_df).withColumn("__bucket", self._bucket_col(keys))
 
@@ -2190,9 +2336,9 @@ class LakeTable:
             foot = {int(b): {int(s) for s in v} for b, v in affected_granules.items()}
             affected = sorted(foot)
         elif callable(affected_buckets):
-            # steady-overlap: the caller's lineage aggregate is STILL
-            # RUNNING — legal only for delta appends, which need the exact
-            # set only after their write action (claims enumeration)
+            # the caller's lineage aggregate is STILL RUNNING — legal only
+            # for delta appends, which need the exact set only after their
+            # write action (claims enumeration)
             if mode not in ("mor", "cow_incremental"):
                 raise ValueError(
                     "lazy affected_buckets requires a delta-append mode "
@@ -2210,10 +2356,7 @@ class LakeTable:
             # (bucket, slice64) footprint, so the commit can rewrite only
             # the granules the batch touches — and two COW writers hitting
             # disjoint slices of one bucket both land without recompute
-            s64 = F.pmod(
-                F.xxhash64(*[F.col(k) for k in keys], F.lit("__salt__")),
-                F.lit(SLICE_MOD),
-            ).cast("int")
+            s64 = key_hash(keys, SLICE_MOD, "__salt__")
             foot = {}
             for r in batch.select("__bucket", s64.alias("__s64")).distinct().collect():
                 foot.setdefault(int(r[0]), set()).add(int(r[1]))
@@ -2237,19 +2380,20 @@ class LakeTable:
             batch = lww_dedup(batch, list(keys) + ["__bucket"], list(order_by))
 
         if mode in ("mor", "cow_incremental"):
-            out = self._append_delta(
+            out, committed = self._append_delta(
                 batch, keys, order_by, batch_id, op_col, affected,
                 new_schema, m, bookmark_updates, extra_manifest, t0, writer_id,
                 key_index=key_index, delta_parts=delta_parts,
                 affected_est=affected_est,
             )
-            if out is not None and mode == "cow_incremental":
+            if committed is not None and mode == "cow_incremental":
                 # hierarchical granular COW: the delta commit above is the
                 # O(batch) write; now fold the granules due this round —
                 # amortized O(table/fold_every) instead of O(table) per
-                # batch (DESIGN_hierarchical_bucketing.md). A fold that
-                # loses its CAS is simply deferred to the next round.
-                out["fold"] = self.fold_due(key_index=key_index)
+                # batch (DESIGN_hierarchical_bucketing.md) — planned on the
+                # manifest just published. A fold that loses its CAS is
+                # simply deferred to the next round.
+                out["fold"] = self.fold_due(key_index=key_index, base=committed)
                 out["mode"] = "cow_incremental"
             return out
 
@@ -2288,64 +2432,25 @@ class LakeTable:
             else:
                 all_rows = batch
         elif m:
-            existing = self.read(buckets=affected).drop("__bucket")
+            existing = self.read(buckets=affected, manifest=m).drop("__bucket")
             # re-derive the bucket after align (same pure function of keys)
             ex_aligned = align(existing).withColumn("__bucket", self._bucket_col(keys))
             all_rows = ex_aligned.unionByName(batch)
         else:
             all_rows = batch
 
-        # --- single-shuffle LWW merge (SURVEY §4.3 physical plan):
-        # one hash exchange on (__bucket, __salt) — the salt is a pure
-        # function of the merge keys, so every row of a key still
-        # co-locates — then an in-partition sort and a first-row-per-key
-        # filter via lag(). No second exchange: the window's required
-        # distribution is exactly the repartition columns, and the write
-        # consumes the clustered layout directly (sort doubles as file
-        # order -> contiguous __bucket runs -> row-group stats).
         # The salt DECOUPLES shuffle width from num_buckets: a batch
         # touching 16 buckets on a 512-core cluster still merges 16*S-wide
         # (S files per bucket, recorded per-commit in the manifest).
         # Skew note: a pathologically hot KEY still lands in one partition;
         # operators/dedup.lww_dedup_salted pre-shrinks such batches first.
-        from pyspark.sql import Window
-
         S = S_w if S_w is not None else self._fpb(len(affected))
         k_parts = max(1, len(affected) * S)
-        salt = F.pmod(
-            F.xxhash64(*[F.col(k) for k in keys], F.lit("__salt__")), F.lit(S)
-        ).cast("int")
-        rep = all_rows.withColumn("__salt", salt).repartition(
-            k_parts, "__bucket", "__salt"
-        )
-        w = Window.partitionBy("__bucket", "__salt").orderBy(
-            *[F.col(k).asc() for k in keys],
-            *[F.col(o).desc() for o in order_by],
-        )
-        key_changed = F.lit(False)
-        for k in keys:
-            lagged = F.lag(F.col(k)).over(w)
-            key_changed = key_changed | lagged.isNull() | (lagged != F.col(k))
-        merged = (
-            rep.withColumn("__first", key_changed)
-            .filter(F.col("__first"))
-            .drop("__first", "__salt")
-        )
+        merged = self._lww_partitioned(all_rows, keys, order_by, k_parts, S).drop("__salt")
 
         # --- write new files for affected buckets only (copy-on-write)
-        epoch = (m["version"] + 1) if m else 0
-        # unique per write job: concurrent writers must never share a
-        # physical directory (mode="overwrite" would eat each other's
-        # files); the manifest, not the dir name, defines the snapshot
-        out_dir = os.path.join(self.path, "data", f"epoch={epoch:010d}-{uuid.uuid4().hex[:8]}")
-        merged.write.mode("overwrite").parquet(out_dir)
-
-        # map buckets -> written files via HashPartitioning's assignment
-        by_index: dict[int, str] = {}
-        for fname in os.listdir(out_dir):
-            if fname.endswith(".parquet") and fname.startswith("part-"):
-                by_index[int(fname.split("-")[1])] = os.path.join(out_dir, fname)
-
+        out_dir = self._epoch_dir((m["version"] + 1) if m else 0)
+        by_index = self._write_parts(merged, out_dir)
         allowed = (
             None
             if plans is None
@@ -2365,28 +2470,12 @@ class LakeTable:
             else None
         )
 
-        def assemble(cur: Optional[dict]):
+        def assemble(cur: Optional[dict], bookmark_updates, extra_manifest):
+            final_schema = new_schema
             if cur is not m:
-                # a zombie/failover duplicate of THIS writer may have won
-                # the race with the same (or a later) batch: re-check the
-                # ledger against the fresh snapshot — overwriting would
-                # REGRESS the ledger and let a later replay apply twice
-                if self._last_for(cur, writer_id) >= batch_id:
-                    return self._SKIP
-                if (
-                    cur is not None
-                    and cur.get("num_buckets")
-                    and int(cur["num_buckets"]) != self.num_buckets
-                ):
-                    # a rebucket() won the race: our files' __bucket values
-                    # and section claims are in the OLD space, and the
-                    # bucket-level conflict checks below can pass VACUOUSLY
-                    # (a commit that consumed nothing — e.g. new keys into
-                    # an empty bucket — conflicts with no file set), which
-                    # would both mix two bucket spaces in one manifest and
-                    # write back the stale num_buckets. Recompute; the
-                    # retry re-syncs the count from the fresh manifest.
-                    return None
+                final_schema = self._rebased_schema(cur, writer_id, batch_id, new_schema, keys)
+                if final_schema is None or final_schema is self._SKIP:
+                    return final_schema
                 # lost the CAS: our rewritten files embody the OLD state of
                 # the granules we consumed — conflict detection is
                 # (bucket, slice)-granular when we planned granularly
@@ -2396,31 +2485,6 @@ class LakeTable:
                         return None
                 elif not self._cow_granular_rebase_ok(m, cur, plans):
                     return None
-                cur_schema = (
-                    T.StructType.fromJson(cur["schema"]) if cur and cur.get("schema") else None
-                )
-                try:
-                    final_schema = (
-                        merge_schemas(cur_schema, new_schema) if cur_schema else new_schema
-                    )
-                except Exception:
-                    return None
-                if cur_schema is not None:
-                    ct = {f.name: f.dataType for f in cur_schema.fields}
-                    nt = {f.name: f.dataType for f in new_schema.fields}
-                    ft = {f.name: f.dataType for f in final_schema.fields}
-                    for k in keys:
-                        if k in ct and ct[k] != ft.get(k, ct[k]):
-                            return None
-                        # OUR files bucket keys under new_schema's types: if
-                        # the merged schema differs (e.g. we wrote long keys
-                        # on an empty table while a racer committed double),
-                        # our files are mis-bucketed — recompute (the retry
-                        # re-aligns the batch to the winner's key type)
-                        if k in nt and nt[k] != ft.get(k, nt[k]):
-                            return None
-            else:
-                final_schema = new_schema
             files = dict(cur["files"]) if cur else {}
             deltas = dict(cur.get("deltas", {})) if cur else {}
             slice_meta = dict(cur.get("slice_meta", {})) if cur else {}
@@ -2448,44 +2512,13 @@ class LakeTable:
                     for f in cb + cd:
                         bmeta.pop(os.path.basename(f), None)
                     slice_meta[b_str] = {**bmeta, **our_meta.get(b_str, {})}
-            bookmarks = dict(cur.get("bookmarks", {})) if cur else {}
-            bookmarks.update(bookmark_updates or {})
-            return self._with_file_index({
-                # carry foreign extra keys (another writer's custom fields)
-                # through rebases; ours overlay below
-                **{k_: v for k_, v in (cur or {}).items() if k_ not in _MANIFEST_CORE_KEYS},
-                "batch_id": batch_id,
-                "batch_ids": self._bumped_ledger(cur, writer_id, batch_id),
-                "committed_at": time.time(),
-                "schema": final_schema.jsonValue(),
-                "files": files,
-                "deltas": deltas,
-                "slice_meta": slice_meta,
-                "bookmarks": bookmarks,
-                "num_buckets": self.num_buckets,
-                **({"stats_columns": list(self.stats_columns)}
-                   if self.stats_columns else {}),
-                "keys": list(keys),
-                "order_by": list(order_by),
-                "op_col": op_col,
-                "fold_round": int(cur.get("fold_round", 0)) if cur else 0,
-                **self._merged_extra(cur, extra_manifest),
-            }, our_sizes, cur, our_blooms, new_stats=our_stats)
+            return self._batch_manifest(
+                cur, batch_id, writer_id, final_schema, keys, order_by, op_col,
+                files, deltas, slice_meta, bookmark_updates, extra_manifest,
+                our_sizes, our_blooms, our_stats,
+            )
 
-        # lazy commit payloads resolve HERE — after the write action, right
-        # before the commit — so a caller may overlap its own metrics job
-        # with the merge write (the bulk-load path) and still land exact
-        # bookmarks in the same manifest. If the payload aborts (e.g. the
-        # bulk path's empty-batch signal), reclaim the just-written epoch
-        # dir: no manifest references it, so vacuum() could never see it
-        # (ADVICE r5 — orphaned dir of empty part files).
-        try:
-            bookmark_updates = _resolved(bookmark_updates)
-            extra_manifest = _resolved(extra_manifest)
-        except BaseException:
-            shutil.rmtree(out_dir, ignore_errors=True)
-            raise
-        committed = self._try_commit(m, assemble)
+        committed = self._commit_batch(m, out_dir, bookmark_updates, extra_manifest, assemble)
         if committed is None:
             return None  # conflicting buckets: caller recomputes
         if committed is self._SKIP:
@@ -2505,12 +2538,18 @@ class LakeTable:
         key_index: bool = False,
         delta_parts: Optional[int] = None,
         affected_est: Optional[int] = None,
-    ) -> dict:
+    ) -> tuple:
         """MOR write: within-batch LWW winners appended as delta files.
 
-        Never reads the base — write cost is O(batch). The within-batch
-        LWW is the map-side-combined aggregate (operators/dedup.lww_dedup),
-        so duplicate-heavy batches shuffle pre-combined rows only.
+        Never reads the base — write cost is O(batch). Returns ``(stats,
+        committed manifest)``; the manifest is None when nothing was
+        committed (``stats`` None = recompute, or a ledger skip).
+
+        One write job with at most one exchange: a single-file fan-out
+        (``k_parts == 1``) runs the LWW aggregate inside the scan task
+        (no exchange at all); otherwise the batch is hash-partitioned
+        once by (bucket, salt) and the LWW aggregate, grouped by (keys,
+        bucket, salt), reuses that partitioning.
 
         ``delta_parts`` caps the write fan-out for small batches into
         HIGH-bucket-count tables: several (bucket, salt) cells hash into
@@ -2522,28 +2561,27 @@ class LakeTable:
         64 buckets / 50k-row batches and 2.9x at 1024 buckets; it matters
         whenever batch_rows is small against num_buckets and the
         footers/commit latency dominate. The pipeline sizes it from the
-        batch's lineage row count (PipelineConfig.delta_file_rows,
-        default "auto" = ~4096 rows/file).
+        stream's previous batch (PipelineConfig.delta_file_rows, default
+        "auto" = ~4096 rows/file).
 
         Multi-writer: delta files are independent of the base snapshot, so
         a lost CAS always rebases (append our entries onto the fresh
         manifest) — MOR appends never recompute.
 
-        ``affected`` may be a CALLABLE (steady-overlap path): the delta
-        write never reads the base, so the exact touched-bucket set is
-        only needed AFTER the write action, for claims enumeration — the
-        caller's lineage aggregate can then run CONCURRENTLY with the
-        write. ``affected_est`` (estimated touched-bucket count, e.g. the
+        ``affected`` may be a CALLABLE: the delta write never reads the
+        base, so the exact touched-bucket set is only needed AFTER the
+        write action, for claims enumeration — the caller's lineage
+        aggregate can then run CONCURRENTLY with the write.
+        ``affected_est`` (estimated touched-bucket count, e.g. the
         previous micro-batch's — steady CDC streams are stationary) sizes
         S and the fan-out eagerly; S is a perf heuristic only, claims stay
         exact because the SAME S feeds both the salt column and
-        ``_files_and_meta``. A resolution failure (e.g. an empty batch's
-        ``_EmptyBulkBatch``) reclaims the unreferenced epoch dir, like the
-        lazy commit payloads below.
+        ``_files_and_meta``. A resolution failure (e.g. an empty batch)
+        reclaims the unreferenced epoch dir, like a failing lazy commit
+        payload (``_commit_batch``).
         """
         from tap_rest_api_msdk_spark.operators.dedup import lww_dedup
 
-        winners = lww_dedup(batch, list(keys) + ["__bucket"], order_by)
         lazy_affected = callable(affected)
         n_aff = (
             int(affected_est) if lazy_affected and affected_est else
@@ -2553,21 +2591,16 @@ class LakeTable:
         k_parts = max(1, n_aff * S)
         if delta_parts is not None:
             k_parts = max(1, min(k_parts, int(delta_parts)))
-        salt = F.pmod(
-            F.xxhash64(*[F.col(k) for k in keys], F.lit("__salt__")), F.lit(S)
-        ).cast("int")
-        epoch = (m["version"] + 1) if m else 0
-        # unique per write job: concurrent writers must never share a
-        # physical directory (mode="overwrite" would eat each other's
-        # files); the manifest, not the dir name, defines the snapshot
-        out_dir = os.path.join(self.path, "data", f"epoch={epoch:010d}-{uuid.uuid4().hex[:8]}")
-        (
-            winners.withColumn("__salt", salt)
-            .repartition(k_parts, "__bucket", "__salt")
-            .drop("__salt")
-            .write.mode("overwrite")
-            .parquet(out_dir)
-        )
+        out_dir = self._epoch_dir((m["version"] + 1) if m else 0)
+        if k_parts == 1:
+            winners = lww_dedup(batch.coalesce(1), list(keys) + ["__bucket"], order_by)
+        else:
+            salt = key_hash(keys, S, "__salt__")
+            part = batch.withColumn("__salt", salt).repartition(k_parts, "__bucket", "__salt")
+            winners = lww_dedup(part, list(keys) + ["__bucket", "__salt"], order_by).drop(
+                "__salt"
+            )
+        by_index = self._write_parts(winners, out_dir)
 
         if lazy_affected:
             # resolve the exact touched-bucket set now that the write is
@@ -2578,11 +2611,6 @@ class LakeTable:
                 shutil.rmtree(out_dir, ignore_errors=True)
                 raise
 
-        by_index: dict[int, str] = {}
-        for fname in os.listdir(out_dir):
-            if fname.endswith(".parquet") and fname.startswith("part-"):
-                by_index[int(fname.split("-")[1])] = os.path.join(out_dir, fname)
-
         our_deltas, our_meta = self._files_and_meta(affected, S, k_parts, by_index)
         our_sizes = self._sizes_of(by_index)
         our_stats = self._stats_of(by_index, self._stat_cols(order_by))
@@ -2592,94 +2620,32 @@ class LakeTable:
             else None
         )
 
-        def assemble(cur: Optional[dict]):
-            if cur is not m and self._last_for(cur, writer_id) >= batch_id:
-                # a duplicate of this writer already committed this batch
-                # (or a later one) — appending our delta files again would
-                # double-apply the batch; the replay becomes a no-op
-                return self._SKIP
-            if (
-                cur is not m
-                and cur is not None
-                and cur.get("num_buckets")
-                and int(cur["num_buckets"]) != self.num_buckets
-            ):
-                # a rebucket() won the race: our delta files carry __bucket
-                # values (and section claims) in the OLD bucket space —
-                # appending them would mis-route every key; recompute (the
-                # retry re-syncs num_buckets from the fresh manifest). The
-                # fold path rejects this structurally (its consumed delta
-                # files vanished); MOR "always rebases" and COW (whose
-                # conflict checks pass vacuously when the commit consumed
-                # nothing) both carry this explicit guard.
-                return None
-            cur_schema = (
-                T.StructType.fromJson(cur["schema"]) if cur and cur.get("schema") else None
+        def assemble(cur: Optional[dict], bookmark_updates, extra_manifest):
+            # delta files are independent of the base: a lost CAS always
+            # rebases, unless the batch landed already or must recompute
+            final_schema = (
+                new_schema if cur is m
+                else self._rebased_schema(cur, writer_id, batch_id, new_schema, keys)
             )
-            try:
-                final_schema = (
-                    merge_schemas(cur_schema, new_schema)
-                    if (cur is not m and cur_schema is not None)
-                    else new_schema
-                )
-            except Exception:
-                return None
-            if cur is not m and cur_schema is not None:
-                # same key-type-drift guard as the COW rebase: our delta
-                # files bucket keys under OUR key types; if an intervening
-                # schema evolution widened a key column, the same key would
-                # map to two buckets (duplicate live rows) — recompute
-                ct = {f.name: f.dataType for f in cur_schema.fields}
-                nt = {f.name: f.dataType for f in new_schema.fields}
-                ft = {f.name: f.dataType for f in final_schema.fields}
-                for k in keys:
-                    if k in ct and ct[k] != ft.get(k, ct[k]):
-                        return None
-                    if k in nt and nt[k] != ft.get(k, nt[k]):
-                        return None
+            if final_schema is None or final_schema is self._SKIP:
+                return final_schema
             deltas = dict(cur.get("deltas", {})) if cur else {}
             slice_meta = dict(cur.get("slice_meta", {})) if cur else {}
             for b_str, flist in our_deltas.items():
                 have = deltas.get(b_str, [])
                 deltas[b_str] = have + [f for f in flist if f not in have]
                 slice_meta[b_str] = {**slice_meta.get(b_str, {}), **our_meta[b_str]}
-            bookmarks = dict(cur.get("bookmarks", {})) if cur else {}
-            bookmarks.update(bookmark_updates or {})
-            return self._with_file_index({
-                # carry foreign extra keys (another writer's custom fields)
-                # through rebases; ours overlay below
-                **{k_: v for k_, v in (cur or {}).items() if k_ not in _MANIFEST_CORE_KEYS},
-                "batch_id": batch_id,
-                "batch_ids": self._bumped_ledger(cur, writer_id, batch_id),
-                "committed_at": time.time(),
-                "schema": final_schema.jsonValue(),
-                "files": dict(cur["files"]) if cur else {},
-                "deltas": deltas,
-                "slice_meta": slice_meta,
-                "bookmarks": bookmarks,
-                "num_buckets": self.num_buckets,
-                **({"stats_columns": list(self.stats_columns)}
-                   if self.stats_columns else {}),
-                "keys": list(keys),
-                "order_by": list(order_by),
-                "op_col": op_col,
-                "fold_round": int(cur.get("fold_round", 0)) if cur else 0,
-                **self._merged_extra(cur, extra_manifest),
-            }, our_sizes, cur, our_blooms, new_stats=our_stats)
+            return self._batch_manifest(
+                cur, batch_id, writer_id, final_schema, keys, order_by, op_col,
+                dict(cur["files"]) if cur else {}, deltas, slice_meta,
+                bookmark_updates, extra_manifest, our_sizes, our_blooms, our_stats,
+            )
 
-        # lazy commit payloads resolve post-write (see the COW twin above);
-        # an aborting payload reclaims the unreferenced epoch dir
-        try:
-            bookmark_updates = _resolved(bookmark_updates)
-            extra_manifest = _resolved(extra_manifest)
-        except BaseException:
-            shutil.rmtree(out_dir, ignore_errors=True)
-            raise
-        committed = self._try_commit(m, assemble)
+        committed = self._commit_batch(m, out_dir, bookmark_updates, extra_manifest, assemble)
         if committed is None:
-            return None
+            return None, None
         if committed is self._SKIP:
-            return {"skipped": True, "batch_id": batch_id}
+            return {"skipped": True, "batch_id": batch_id}, None
         return {
             "skipped": False,
             "batch_id": batch_id,
@@ -2687,7 +2653,7 @@ class LakeTable:
             "mode": "mor",
             "affected_buckets": len(affected),
             "merge_seconds": time.time() - t0,
-        }
+        }, committed
 
     @staticmethod
     def _bucket_files(m: dict, b_str: str) -> list:
@@ -2787,13 +2753,7 @@ class LakeTable:
         keys = list(m["keys"])
         if allowed_slices is not None:
             sl = self.spark.createDataFrame(allowed_slices, "__b int, __s64 int")
-            df = df.withColumn(
-                "__s64",
-                F.pmod(
-                    F.xxhash64(*[F.col(k) for k in keys], F.lit("__salt__")),
-                    F.lit(SLICE_MOD),
-                ).cast("int"),
-            )
+            df = df.withColumn("__s64", key_hash(keys, SLICE_MOD, "__salt__"))
             df = df.join(
                 F.broadcast(sl),
                 (df["__bucket"] == sl["__b"]) & (df["__s64"] == sl["__s64"]),
@@ -3091,14 +3051,18 @@ class LakeTable:
         delta_sel = [f for f in dfiles if residues(f) & due]
         return S_b, sorted(due), base_sel, delta_sel
 
-    def fold_due(self, k_fold: Optional[int] = None, key_index: bool = False) -> dict:
+    def fold_due(
+        self, k_fold: Optional[int] = None, key_index: bool = False, base=_HEAD
+    ) -> dict:
         """Fold the delta chains of the granules due this round into fresh
         base files — the staggered, (bucket, slice)-granular half of
         ``mode="cow_incremental"``. One LWW merge job over ONLY the due
         granules' files (bucket- and slice-pruned scan), one shuffle, one
         atomic commit. Returns fold stats ({"skipped": True} when nothing
-        is due or a concurrent commit invalidated the fold)."""
-        m = self.current_manifest()
+        is due or a concurrent commit invalidated the fold). ``base`` is
+        the manifest to plan on (e.g. the one a commit just published);
+        omitted, HEAD is read."""
+        m = self.current_manifest() if base is _HEAD else base
         if m is None or not m.get("deltas"):
             return {"skipped": True}
         if m.get("num_buckets"):  # manifest-authoritative (rebucket-safe)
@@ -3166,22 +3130,7 @@ class LakeTable:
         keys, order_by = list(m["keys"]), list(m["order_by"])
         S_w = max(max(p[0] for p in plans.values()), self._fpb(len(plans)))
         k_parts = max(1, len(plans) * S_w)
-        salt = F.pmod(
-            F.xxhash64(*[F.col(c) for c in keys], F.lit("__salt__")), F.lit(S_w)
-        ).cast("int")
-        from pyspark.sql import Window
-
-        rep = df.withColumn("__salt", salt).repartition(k_parts, "__bucket", "__salt")
-        w = Window.partitionBy("__bucket", "__salt").orderBy(
-            *[F.col(c).asc() for c in keys], *[F.col(o).desc() for o in order_by]
-        )
-        key_changed = F.lit(False)
-        for c in keys:
-            lagged = F.lag(F.col(c)).over(w)
-            key_changed = key_changed | lagged.isNull() | (lagged != F.col(c))
-        winners = rep.withColumn("__first", key_changed).filter(F.col("__first")).drop(
-            "__first"
-        )
+        winners = self._lww_partitioned(df, keys, order_by, k_parts, S_w)
 
         # ---- era-split on the fold path (r5 verdict item #4): fold output
         # mixes the FULL ordering-range of the folded granules (measured
@@ -3244,15 +3193,7 @@ class LakeTable:
         else:
             merged = winners.drop("__salt")
 
-        epoch = m["version"] + 1
-        out_dir = os.path.join(
-            self.path, "data", f"epoch={epoch:010d}-{uuid.uuid4().hex[:8]}"
-        )
-        merged.write.mode("overwrite").parquet(out_dir)
-        by_index: dict[int, str] = {}
-        for fname in os.listdir(out_dir):
-            if fname.endswith(".parquet") and fname.startswith("part-"):
-                by_index[int(fname.split("-")[1])] = os.path.join(out_dir, fname)
+        by_index = self._write_parts(merged, self._epoch_dir(m["version"] + 1))
         new_sizes = self._sizes_of(by_index)
         new_stats = self._stats_of(by_index, self._stat_cols(m.get("order_by")))
         new_blooms = (
@@ -3436,19 +3377,11 @@ class LakeTable:
         EVERY clustered column's zone map stays tight (~sqrt-fraction
         per column on a 2-D layout). Same partition-key and claims
         mechanics — the cell id simply IS the __era value."""
-        # unique per write job: concurrent writers must never share a
-        # physical directory (mode="overwrite" would eat each other's
-        # files); the manifest, not the dir name, defines the snapshot
-        out_dir = os.path.join(
-            self.path, "data", f"epoch={epoch:010d}-{uuid.uuid4().hex[:8]}"
-        )
         S = files_per_bucket if files_per_bucket else self._fpb(len(affected))
         rk = (m.get("order_by") or [None])[0]
         n_e = max(1, int(self.era_split or 1))
         eras = None
-        salt = F.pmod(
-            F.xxhash64(*[F.col(k) for k in m["keys"]], F.lit("__salt__")), F.lit(S)
-        ).cast("int")
+        salt = key_hash(m["keys"], S, "__salt__")
         zsort = None
         if n_e > 1 and cluster_bounds:
             cell, zsort = zorder_cell_and_key(cluster_bounds, n_e)
@@ -3498,14 +3431,9 @@ class LakeTable:
             # skips row groups even inside files the whole-file zone map
             # cannot prune, and runs of adjacent values compress better
             shaped = shaped.sortWithinPartitions("__bucket", "__salt", rk)
-        (
-            shaped.drop("__salt", "__era", "__z")
-            .write.mode("overwrite").parquet(out_dir)
+        by_index = self._write_parts(
+            shaped.drop("__salt", "__era", "__z"), self._epoch_dir(epoch)
         )
-        by_index: dict[int, str] = {}
-        for fname in os.listdir(out_dir):
-            if fname.endswith(".parquet") and fname.startswith("part-"):
-                by_index[int(fname.split("-")[1])] = os.path.join(out_dir, fname)
         new_files, new_meta = self._files_and_meta(
             affected, S, k_parts, by_index, eras=eras
         )
@@ -3835,30 +3763,16 @@ class LakeTable:
         t0 = time.time()
         keys = list(m["keys"])
         df = self.read_state()  # resolves MOR deltas; keeps tombstones
-        df = df.drop("__bucket").withColumn(
-            "__bucket",
-            F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(nb)).cast("int"),
-        )
+        df = df.drop("__bucket").withColumn("__bucket", key_hash(keys, nb))
         epoch = m["version"] + 1
-        out_dir = os.path.join(
-            self.path, "data", f"epoch={epoch:010d}-{uuid.uuid4().hex[:8]}"
-        )
         S = self._fpb(nb)
         k_parts = max(1, nb * S)
-        salt = F.pmod(
-            F.xxhash64(*[F.col(k) for k in keys], F.lit("__salt__")), F.lit(S)
-        ).cast("int")
-        (
-            df.withColumn("__salt", salt)
+        by_index = self._write_parts(
+            df.withColumn("__salt", key_hash(keys, S, "__salt__"))
             .repartition(k_parts, "__bucket", "__salt")
-            .drop("__salt")
-            .write.mode("overwrite")
-            .parquet(out_dir)
+            .drop("__salt"),
+            self._epoch_dir(epoch),
         )
-        by_index: dict[int, str] = {}
-        for fname in os.listdir(out_dir):
-            if fname.endswith(".parquet") and fname.startswith("part-"):
-                by_index[int(fname.split("-")[1])] = os.path.join(out_dir, fname)
         files, slice_meta = self._files_and_meta(range(nb), S, k_parts, by_index)
         manifest = self._with_file_index({
             **{k_: v for k_, v in m.items() if k_ != "key_blooms"},

@@ -14,6 +14,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tap_rest_api_msdk_spark.functions.sqlexpr import quote_ident
+
 
 def lineage_metrics(
     batch_df: DataFrame,
@@ -23,22 +25,29 @@ def lineage_metrics(
     bytes_col: Optional[str] = None,
     slice_col: Optional[str] = None,
 ) -> DataFrame:
+    """One row per bucket. The aggregates are built as SQL text, so the
+    plan costs the same few JVM calls whatever the batch's width."""
+    rk = quote_ident(rk_col)
     aggs = [
-        F.count(F.lit(1)).alias("event_count"),
-        F.min(rk_col).alias("offset_start"),
-        F.max(rk_col).alias("offset_end"),
-        F.max(rk_col).alias("max_replication_key"),
+        "count(1) AS event_count",
+        f"min({rk}) AS offset_start",
+        f"max({rk}) AS offset_end",
+        f"max({rk}) AS max_replication_key",
     ]
     if ts_col:
-        aggs.append(F.max(ts_col).alias("watermark"))
+        aggs.append(f"max({quote_ident(ts_col)}) AS watermark")
     if bytes_col:
-        aggs.append(F.sum(F.length(F.col(bytes_col)).cast("long")).alias("payload_bytes"))
+        aggs.append(f"sum(cast(length({quote_ident(bytes_col)}) AS BIGINT)) AS payload_bytes")
     if slice_col:
         # (bucket, slice64) footprint for granular COW: <=64 distinct ints
         # per bucket, collected in the SAME map-side-combined aggregate —
         # the merge gets its granule plan without an extra scan
-        aggs.append(F.collect_set(F.col(slice_col)).alias("slice_classes"))
-    return batch_df.groupBy(F.col(bucket_col).alias("partition_id")).agg(*aggs)
+        aggs.append(f"collect_set({quote_ident(slice_col)}) AS slice_classes")
+    return (
+        batch_df.groupBy(F.col(bucket_col).alias("partition_id"))
+        .agg(F.expr(f"struct({', '.join(aggs)}) AS __m"))
+        .select("partition_id", "__m.*")
+    )
 
 
 def append_metrics(metrics_df: DataFrame, table_path: str, batch_id: int, stream: str) -> None:

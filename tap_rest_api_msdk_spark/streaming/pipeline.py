@@ -7,6 +7,14 @@ RECORD/STATE **[inherited: singer-sdk, §2.4]**. Spark loop (per micro-batch):
   within-batch LWW -> LakeTable.merge_upsert (idempotent batch id, bookmark
   + lineage committed atomically with the data)
 
+One commit = one snapshot and, in the steady delta-append case, one write
+job. :func:`process_batch` reads HEAD once and hands that snapshot to the
+ledger check, the bookmark, the record counter, the merge and the fold
+after it; only a lost CAS re-reads HEAD. The lineage aggregate (per-bucket
+counts, offsets, high watermarks) runs as a second job concurrently with
+the write and resolves into the same atomic commit. A delta batch that
+fits one file is written by a single shuffle-free job.
+
 Two drivers share the exact same batch processor:
 
 * :func:`run_batch_replay` — deterministic replay over a WAL DataFrame in
@@ -29,7 +37,7 @@ from pyspark.sql import types as T
 from tap_rest_api_msdk_spark.functions.flatten import flatten_dataframe
 from tap_rest_api_msdk_spark.operators.incremental import incremental_filter
 from tap_rest_api_msdk_spark.streaming.bookmarks import BookmarkStore
-from tap_rest_api_msdk_spark.streaming.laketable import LakeTable
+from tap_rest_api_msdk_spark.streaming.laketable import SLICE_MOD, LakeTable, key_hash
 from tap_rest_api_msdk_spark.streaming.metrics import append_metrics_rows, lineage_metrics
 
 
@@ -44,7 +52,8 @@ def _resolve_delta_file_rows(v) -> Optional[int]:
         return None
     if v == "auto":
         return DELTA_FILE_ROWS_AUTO
-    if isinstance(v, int) and v > 0:
+    # bool is an int subclass: True would mean one delta file per row
+    if isinstance(v, int) and not isinstance(v, bool) and v > 0:
         return v
     raise ValueError(f"delta_file_rows {v!r} (expected 'auto', a positive int, or None)")
 
@@ -78,11 +87,6 @@ class PipelineConfig:
     schema_evolution: str = "sample"
     inference_records: int = 50
     _schema_discovered: bool = False  # set by the pipeline on first inference
-    # (touched_buckets, rows) of the last steady batch — sizes the next
-    # batch's delta-write fan-out so its lineage pass can run CONCURRENTLY
-    # with the write (perf hint only; claims stay exact). None = the next
-    # delta batch runs sequentially and seeds it.
-    _steady_est: Optional[tuple] = None
     # sink write strategy: "cow" rewrites affected buckets fully merged;
     # "mor" appends delta files (O(batch) writes) and resolves at read —
     # the steady-state streaming path. auto_compact_every folds MOR deltas
@@ -110,17 +114,18 @@ class PipelineConfig:
     # target rows per DELTA file for mor/cow_incremental micro-batches:
     # caps the delta write fan-out at ceil(batch_rows / this), writing
     # files SHARED across buckets (the claim format's collision case;
-    # folds apportion shared-file bytes per claim). "auto" (the default)
-    # targets DELTA_FILE_ROWS_AUTO rows/file — measured on the bench's
-    # steady shape (30 x 50k-row batches into a 64-bucket 2.5M-key table,
-    # local[32]): uncapped 25.6-27.6k ev/s vs capped-at-16-files
-    # 35.3-35.7k (+30%, reproduced twice; fold batches FASTER too — fewer
-    # pending files). At 1024+ buckets the gap is 2.9x (r6 bench leg): a
-    # small batch would otherwise write num_buckets near-empty files
-    # whose footers and commit latency dominate. Large batches are
-    # unaffected (the cap only ever LOWERS the partition count below one
-    # file per (bucket, salt)). None = uncapped, the pre-r5 layout; an
-    # int = explicit rows-per-file target.
+    # folds apportion shared-file bytes per claim). A small batch would
+    # otherwise write up to num_buckets near-empty files whose footers and
+    # commit latency dominate (measured +30% steady ingest at 64 buckets,
+    # 2.9x at 1024). Large batches are unaffected: the cap only ever
+    # LOWERS the partition count below one file per (bucket, salt).
+    # batch_rows comes from the stream's previous batch, recorded in the
+    # snapshot, so the write starts before this batch's lineage job has
+    # counted it. A batch expected to fit in ONE file (the steady CDC
+    # shape) commits in two concurrent single-task jobs: the write (LWW
+    # aggregate in the scan task, no exchange) and the lineage aggregate.
+    # "auto" (the default) targets DELTA_FILE_ROWS_AUTO rows per file;
+    # None = uncapped, the pre-r5 layout; an int = explicit target.
     delta_file_rows: Union[int, str, None] = "auto"
     # malformed payloads (unparseable JSON -> null struct after from_json):
     # "keep" emits all-null flattened fields (the tap's permissive shape),
@@ -193,27 +198,68 @@ def prepare_batch(df: DataFrame, conf: PipelineConfig, bookmark: Any) -> DataFra
     return out
 
 
-class _EmptyBulkBatch(Exception):
-    """Raised by the bulk-load path's lazy bookmark resolver when the
-    lineage job reports ZERO rows — aborts merge_upsert between its write
-    action and its CAS commit, so an empty first batch never commits a
-    manifest or burns the writer's ledger slot (same outward behavior as
-    the sequential path's early return)."""
+class _EmptyBatch(Exception):
+    """Raised by a lazy commit payload when the lineage job reports ZERO
+    rows: aborts merge_upsert between its write action and its CAS commit,
+    so an empty batch never commits a manifest or burns the writer's
+    ledger slot (the unreferenced epoch dir is reclaimed)."""
+
+
+class _Lineage:
+    """The batch's lineage aggregate, collected on its own thread so it
+    overlaps the merge write (it leaves cores idle that the write fills).
+    The thread inherits the caller's Spark job group and properties."""
+
+    def __init__(self, metrics_df: DataFrame):
+        from pyspark import InheritableThread
+
+        self._box: dict = {}
+        self._thread = InheritableThread(target=self._run, args=(metrics_df,), daemon=True)
+        self._thread.start()
+
+    def _run(self, metrics_df: DataFrame) -> None:
+        try:
+            self._box["rows"] = metrics_df.collect()
+        except BaseException as e:  # re-raised by rows()
+            self._box["err"] = e
+
+    def rows(self) -> list:
+        self._thread.join()
+        if "err" in self._box:
+            raise self._box["err"]
+        return self._box["rows"]
+
+    def nonempty_rows(self) -> list:
+        rows = self.rows()
+        if not rows:
+            raise _EmptyBatch()
+        return rows
 
 
 def process_batch(
     table: LakeTable, conf: PipelineConfig, batch_df: DataFrame, batch_id: int
 ) -> dict:
-    """One idempotent micro-batch commit (data + bookmarks + lineage)."""
+    """One idempotent micro-batch commit (data + bookmarks + lineage).
+
+    HEAD is read once: that snapshot answers the ledger check, the
+    starting bookmark, the records counter and the table schema, and it is
+    the base of the merge and of the fold that follows it. Only a lost CAS
+    re-reads HEAD.
+    """
+    snap = table.current_manifest()
+    if snap and snap.get("num_buckets"):  # manifest-authoritative
+        table.num_buckets = int(snap["num_buckets"])
     # batch-id ledger check FIRST: a replayed (already-committed) batch must
     # be a complete no-op — merge_upsert would skip it anyway, but side
     # channels (the DLQ append, metrics work) must not run twice either
     # the stream IS the writer: per-stream ledgers let several streams
     # share one table without suppressing each other's batch ids
-    if batch_id <= table.last_batch_id_for(conf.stream):
+    if snap is not None and batch_id <= table.last_batch_id_for(conf.stream, snap):
         return {"skipped": True, "batch_id": batch_id}
 
-    store = BookmarkStore(table, conf.stream, conf.start_date)
+    store = BookmarkStore(
+        table, conf.stream, conf.start_date, bookmarks=(snap or {}).get("bookmarks", {})
+    )
     bookmark = store.get()
     raw = incremental_filter(batch_df, conf.replication_key, bookmark)
 
@@ -223,10 +269,9 @@ def process_batch(
     # per-STREAM counter map (multi-writer safe: dict-valued extra keys
     # merge per entry on CAS rebase); legacy single-counter manifests
     # attribute their total to this stream
-    _m = table.current_manifest() or {}
-    _rc_by = _m.get("records_committed_by") or {}
+    _rc_by = (snap or {}).get("records_committed_by") or {}
     records_committed = _rc_by.get(
-        conf.stream, 0 if _rc_by else _m.get("records_committed", 0)
+        conf.stream, 0 if _rc_by else (snap or {}).get("records_committed", 0)
     )
     if conf.result_limit is not None:
         remaining = conf.result_limit - records_committed
@@ -317,38 +362,33 @@ def process_batch(
     # throughput vs persisting the flattened batch across both passes.
     # Record-shaped streams whose keys live INSIDE the payload fall back to
     # metrics over the flattened batch (pays one extra JSON pass).
-    # table.num_buckets is manifest-authoritative (a reopened table keeps
-    # its committed bucket count even if conf disagrees)
-    bucket = F.pmod(
-        F.xxhash64(*[F.col(k) for k in conf.keys]), F.lit(table.num_buckets)
-    ).cast("int")
+    bucket = key_hash(conf.keys, table.num_buckets)
     metrics_src = (
         raw if all(k in raw.columns for k in conf.keys) else prepare_batch(raw, conf, None)
     )
-    # for COW sinks, ALSO collect the (bucket, slice64) footprint in the
-    # same aggregate: merge_upsert then rewrites only the touched granules
-    # ((bucket, slice)-granular COW) instead of whole buckets, at zero
-    # extra scan cost. The footprint MUST be exact (claims derive from
-    # it), which holds because metrics_src carries the same key values as
-    # the shaped batch and runs after malformed/result-limit filtering.
-    # BULK LOAD (first commit into an empty table): granule claims are
-    # meaningless with no existing files, so the footprint is skipped and
-    # the lineage job runs CONCURRENTLY with the merge write (below) —
-    # the metrics scan is bandwidth-bound and leaves cores idle that the
-    # compute-bound merge fills (measured ~1.3x on the 64M-event replay).
-    bulk = not _m
+    # for COW sinks on a non-empty table, ALSO collect the (bucket,
+    # slice64) footprint in the same aggregate: merge_upsert then rewrites
+    # only the touched granules ((bucket, slice)-granular COW) instead of
+    # whole buckets, at zero extra scan cost. The footprint MUST be exact
+    # (claims derive from it), which holds because metrics_src carries the
+    # same key values as the shaped batch and runs after malformed/
+    # result-limit filtering. On an empty table (bulk load) there is
+    # nothing to claim against.
+    bulk = snap is None
+    delta = conf.sink_mode in ("mor", "cow_incremental")
     want_granular = conf.sink_mode == "cow" and not bulk
+    # delta fan-out: (touched buckets, events) of this stream's previous
+    # batch, kept in the snapshot — a CDC stream is stationary, so it
+    # sizes this batch's write before the lineage job has counted it
+    est = ((snap or {}).get("delta_fanout") or {}).get(conf.stream) if delta else None
+    dfr = _resolve_delta_file_rows(conf.delta_file_rows) if delta else None
     src = metrics_src.withColumn("__p", bucket)
+    if est is not None and dfr is not None and est[1] <= dfr:
+        # a batch expected to fill one delta file is aggregated in one task:
+        # no exchange, one job
+        src = src.coalesce(1)
     if want_granular:
-        from tap_rest_api_msdk_spark.streaming.laketable import SLICE_MOD
-
-        src = src.withColumn(
-            "__s64",
-            F.pmod(
-                F.xxhash64(*[F.col(k) for k in conf.keys], F.lit("__salt__")),
-                F.lit(SLICE_MOD),
-            ).cast("int"),
-        )
+        src = src.withColumn("__s64", key_hash(conf.keys, SLICE_MOD, "__salt__"))
     metrics_df = lineage_metrics(
         src,
         "__p",
@@ -373,149 +413,75 @@ def process_batch(
     if conf.fold_min_bytes is not None:
         table.fold_min_bytes = conf.fold_min_bytes
 
-    # steady-overlap eligibility: delta-append modes never read the base,
-    # so the ONLY pre-write input the lineage pass feeds is fan-out sizing
-    # (S, k_parts, delta_parts) — estimable from the PREVIOUS batch of a
-    # stationary CDC stream. The first steady batch runs sequentially (and
-    # seeds the estimate); later batches run the lineage aggregate
-    # concurrently with the delta write, like the bulk path. COW stays
-    # sequential: its merge plan consumes the exact (bucket, slice)
-    # footprint up front.
-    overlap = (
-        not bulk
-        and conf.sink_mode in ("mor", "cow_incremental")
-        and conf._steady_est is not None
-    )
-    if bulk or overlap:
-        # ---- overlapped fast path: ONE wall-clock pass instead of two.
-        # The lineage aggregate runs in a background thread while the
-        # merge computes and writes; the commit payloads (bookmarks,
-        # records_committed, affected buckets) are passed as MEMOIZED
-        # CALLABLES that laketable resolves after the write action and
-        # immediately before the CAS commit — exact bookmarks still land
-        # in the same atomic manifest. An empty batch aborts via
-        # _EmptyBulkBatch before anything commits (no ledger slot burned,
-        # the orphan epoch dir reclaimed), preserving the sequential
-        # path's semantics.
-        import threading
-
-        box: dict = {}
-
-        def _collect_metrics():
-            try:
-                box["rows"] = metrics_df.collect()
-            except BaseException as e:  # re-raised on join
-                box["err"] = e
-
-        th = threading.Thread(target=_collect_metrics, daemon=True)
-        th.start()
-
-        def _mrows():
-            if "rows" not in box and "err" not in box:
-                th.join()
-            if "err" in box:
-                raise box["err"]
-            return box["rows"]
-
-        def _bookmarks():
-            rows = _mrows()
-            if not rows:
-                raise _EmptyBulkBatch()
-            hw_ = max(r["max_replication_key"] for r in rows)
-            return store.updates_for(
-                hw_, {r["partition_id"]: r["max_replication_key"] for r in rows}
-            )
-
-        def _extra():
-            n = sum(r["event_count"] for r in _mrows())
-            return {
-                "records_committed": records_committed + n,
-                "records_committed_by": {conf.stream: records_committed + n},
-            }
-
-        mu_kwargs: dict = {}
-        if overlap:
-            # exact touched-bucket set, resolved by laketable AFTER the
-            # delta write (claims enumeration); estimates size the fan-out
-            def _affected():
-                rows = _mrows()
-                if not rows:
-                    raise _EmptyBulkBatch()
-                return sorted({int(r["partition_id"]) for r in rows})
-
-            est_aff, est_rows = conf._steady_est
-            dfr = _resolve_delta_file_rows(conf.delta_file_rows)
-            mu_kwargs = {
-                "affected_buckets": _affected,
-                "affected_est": est_aff,
-                "delta_parts": -(-est_rows // dfr) if dfr else None,
-            }
-
-        try:
-            stats = table.merge_upsert(
-                shaped,
-                keys=conf.keys,
-                order_by=conf.order_by,
-                batch_id=batch_id,
-                op_col=conf.op_col,
-                bookmark_updates=_bookmarks,
-                extra_manifest=_extra,
-                mode=conf.sink_mode,
-                writer_id=conf.stream,
-                **mu_kwargs,
-            )
-        except _EmptyBulkBatch:
-            return {"skipped": True, "empty": True, "batch_id": batch_id}
-        mrows = _mrows()
-        if not mrows:  # merge skipped before resolving (e.g. ledger race)
-            return {"skipped": True, "empty": True, "batch_id": batch_id}
-        hw = max(r["max_replication_key"] for r in mrows)
-        if overlap:
-            conf._steady_est = (
-                len({r["partition_id"] for r in mrows}),
-                sum(r["event_count"] for r in mrows),
-            )
-    else:
-        mrows = metrics_df.collect()
+    # The lineage job runs concurrently with the merge write; its rows feed
+    # the commit payloads (bookmarks, counters, touched buckets) as
+    # callables that laketable resolves after the write action and right
+    # before the CAS, so exact bookmarks land in the same atomic manifest.
+    # A COW merge into a non-empty table plans its rewrite from the exact
+    # footprint, and a delta append without a fan-out estimate sizes from
+    # the exact counts: those wait for the lineage rows first.
+    lineage = _Lineage(metrics_df)
+    mu_kwargs: dict = {}
+    if want_granular or (delta and est is None):
+        mrows = lineage.rows()
         if not mrows:
             return {"skipped": True, "empty": True, "batch_id": batch_id}
-        hw = max(r["max_replication_key"] for r in mrows)
-        per_part = {r["partition_id"]: r["max_replication_key"] for r in mrows}
-        foot = (
-            {int(r["partition_id"]): set(r["slice_classes"]) for r in mrows}
-            if want_granular
-            else None
+        if want_granular:
+            mu_kwargs = {
+                # lineage partition == merge bucket
+                "affected_buckets": sorted(r["partition_id"] for r in mrows),
+                "affected_granules": {
+                    int(r["partition_id"]): set(r["slice_classes"]) for r in mrows
+                },
+            }
+        else:
+            est = [len(mrows), sum(r["event_count"] for r in mrows)]
+    if delta:
+        mu_kwargs = {
+            # exact touched-bucket set, needed only after the delta write
+            "affected_buckets": lambda: sorted(
+                int(r["partition_id"]) for r in lineage.nonempty_rows()
+            ),
+            "affected_est": est[0],
+            "delta_parts": -(-est[1] // dfr) if dfr else None,
+        }
+
+    def _bookmarks():
+        rows = lineage.nonempty_rows()
+        return store.updates_for(
+            max(r["max_replication_key"] for r in rows),
+            {r["partition_id"]: r["max_replication_key"] for r in rows},
         )
-        batch_rows = sum(r["event_count"] for r in mrows)
-        dfr = _resolve_delta_file_rows(conf.delta_file_rows)
-        delta_parts = (
-            -(-batch_rows // dfr)
-            if dfr and conf.sink_mode in ("mor", "cow_incremental")
-            else None
-        )
+
+    def _extra():
+        rows = lineage.nonempty_rows()
+        events = sum(r["event_count"] for r in rows)
+        n = records_committed + events
+        out = {"records_committed": n, "records_committed_by": {conf.stream: n}}
+        if delta:
+            out["delta_fanout"] = {conf.stream: [len(rows), events]}
+        return out
+
+    try:
         stats = table.merge_upsert(
             shaped,
             keys=conf.keys,
             order_by=conf.order_by,
             batch_id=batch_id,
             op_col=conf.op_col,
-            bookmark_updates=store.updates_for(hw, per_part),
-            extra_manifest={
-                "records_committed": records_committed + batch_rows,
-                "records_committed_by": {
-                    conf.stream: records_committed + batch_rows
-                },
-            },
-            affected_buckets=sorted(per_part),  # lineage partition == merge bucket
-            affected_granules=foot,
+            bookmark_updates=_bookmarks,
+            extra_manifest=_extra,
             mode=conf.sink_mode,
             writer_id=conf.stream,
-            delta_parts=delta_parts,
+            base=snap,
+            **mu_kwargs,
         )
-        if conf.sink_mode in ("mor", "cow_incremental"):
-            # seed the steady-overlap fan-out estimate: the NEXT batch's
-            # lineage pass runs concurrently with its delta write
-            conf._steady_est = (len(per_part), batch_rows)
+    except _EmptyBatch:
+        return {"skipped": True, "empty": True, "batch_id": batch_id}
+    mrows = lineage.rows()
+    if not mrows:  # merge skipped before resolving (e.g. ledger race)
+        return {"skipped": True, "empty": True, "batch_id": batch_id}
+    hw = max(r["max_replication_key"] for r in mrows)
     if (
         not stats.get("skipped")
         and conf.sink_mode == "mor"

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tap_rest_api_msdk_spark.functions.flatten import (
-    flatten_columns,
     flatten_dataframe,
     flatten_json_string,
     flatten_record,

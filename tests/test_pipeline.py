@@ -15,7 +15,9 @@ from pyspark.sql import functions as F
 from tap_rest_api_msdk_spark.sources.wal_synth import synth_repo_wal, write_wal_slices
 from tap_rest_api_msdk_spark.streaming.metrics import read_metrics
 from tap_rest_api_msdk_spark.streaming.pipeline import (
+    DELTA_FILE_ROWS_AUTO,
     PipelineConfig,
+    _resolve_delta_file_rows,
     process_batch,
     run_batch_replay,
     run_streaming,
@@ -112,7 +114,7 @@ def test_bulk_first_batch_overlapped_metrics_exact(spark, wal, tmp_path):
 def test_bulk_empty_first_batch_commits_nothing(spark, wal, tmp_path):
     """An empty FIRST batch must not commit a manifest or burn the
     writer's ledger slot (the bulk path aborts between write and commit
-    via _EmptyBulkBatch); the same batch_id must still be usable by the
+    via _EmptyBatch); the same batch_id must still be usable by the
     real first batch afterwards."""
     from tap_rest_api_msdk_spark.streaming.laketable import LakeTable
 
@@ -203,50 +205,73 @@ def test_streaming_cow_incremental_matches_oracle(spark, wal, tmp_path):
     assert spark_state(table) == oracle_state(wal_path)
 
 
-def test_steady_overlap_matches_sequential_and_aborts_empty(spark, wal, tmp_path):
-    """Steady-overlap path (r6): from the second delta batch on, the
-    lineage aggregate runs concurrently with the delta write, with the
-    fan-out sized from the PREVIOUS batch's stats. Must be invisible in
-    every durable artifact: final state, claims, ledger. An empty batch
-    mid-stream aborts between write and commit (no ledger slot, no orphan
-    epoch dir)."""
+def test_steady_commit_matches_reopened_run_and_aborts_empty(spark, wal, tmp_path):
+    """From the second delta batch on, the lineage aggregate runs
+    concurrently with the delta write, whose fan-out is sized from the
+    previous batch's counts kept in the snapshot. A run that reopens the
+    table and config before every batch must be indistinguishable in
+    every durable artifact: final state, file layout, claims, ledger. An
+    empty batch mid-stream aborts between write and commit (no manifest,
+    no ledger slot, no orphan epoch dir)."""
     wal_df, wal_path, ps = wal
     from tap_rest_api_msdk_spark.streaming.laketable import LakeTable
 
     slices = [(-1, 1500), (1500, 2700), (2700, 3900), (3900, N_EVENTS)]
 
-    def run(tdir, force_sequential):
-        table = LakeTable(spark, tdir, num_buckets=8)
-        c = conf(ps, sink_mode="cow_incremental")
+    def run(tdir, reopen):
+        table, c = LakeTable(spark, tdir, num_buckets=8), conf(ps, sink_mode="cow_incremental")
         for i, (s, e) in enumerate(slices):
-            if force_sequential:
-                c._steady_est = None  # keep every batch on the exact path
+            if reopen:
+                table = LakeTable(spark, tdir, num_buckets=8)
+                c = conf(ps, sink_mode="cow_incremental")
             b = wal_df.filter((F.col("seq") > s) & (F.col("seq") <= e))
             st = process_batch(table, c, b, batch_id=i)
             assert not st.get("skipped")
         return table, c
 
-    t_seq, _ = run(str(tmp_path / "seq"), True)
-    t_ovl, c_ovl = run(str(tmp_path / "ovl"), False)
-    assert c_ovl._steady_est is not None  # overlap actually engaged
-    assert spark_state(t_seq) == spark_state(t_ovl) == oracle_state(wal_path)
-    # bookmarks / ledger / record counters identical
-    ms, mo = t_seq.current_manifest(), t_ovl.current_manifest()
-    for k in ("bookmarks", "batch_ids", "records_committed", "num_buckets"):
-        assert ms[k] == mo[k], k
+    t_once, c_once = run(str(tmp_path / "once"), False)
+    t_reopen, _ = run(str(tmp_path / "reopen"), True)
+    assert spark_state(t_once) == spark_state(t_reopen) == oracle_state(wal_path)
+    # bookmarks / ledger / record counters / fan-out estimate identical
+    mo, mr = t_once.current_manifest(), t_reopen.current_manifest()
+    for k in ("bookmarks", "batch_ids", "records_committed", "records_committed_by",
+              "num_buckets", "delta_fanout"):
+        assert mo[k] == mr[k], k
+    assert mo["delta_fanout"]["repo_wal"][1] == N_EVENTS - 1 - slices[-1][0]
 
-    # empty batch mid-stream on the OVERLAP path: write happens, resolve
+    def layout(m):
+        return {
+            sec: {b: len(v) for b, v in m[sec].items()} for sec in ("files", "deltas")
+        }
+
+    assert layout(mo) == layout(mr)
+
+    # empty batch mid-stream on the concurrent path: write happens, resolve
     # aborts, epoch dir reclaimed, ledger slot free
+    opath = str(tmp_path / "once")
     v = mo["version"]
-    n_dirs = len(os.listdir(os.path.join(str(tmp_path / "ovl"), "data")))
+    n_dirs = len(os.listdir(os.path.join(opath, "data")))
     st = process_batch(
-        t_ovl, c_ovl, wal_df.filter(F.col("seq") < 0), batch_id=len(slices)
+        t_once, c_once, wal_df.filter(F.col("seq") < 0), batch_id=len(slices)
     )
     assert st["skipped"] and st.get("empty")
-    assert t_ovl.current_manifest()["version"] == v
-    assert len(os.listdir(os.path.join(str(tmp_path / "ovl"), "data"))) == n_dirs
+    assert t_once.current_manifest()["version"] == v
+    assert t_once.last_batch_id_for("repo_wal") == len(slices) - 1
+    assert len(os.listdir(os.path.join(opath, "data"))) == n_dirs
     # the same batch_id still lands afterwards (slot not burned)
-    st = process_batch(
-        t_ovl, c_ovl, wal_df.filter(F.col("seq") > slices[-1][1]), batch_id=len(slices)
+    late = wal_df.filter(F.col("seq") > N_EVENTS - 10).withColumn(
+        "seq", F.col("seq") + N_EVENTS
     )
-    assert st["skipped"] or not st.get("empty")
+    st = process_batch(t_once, c_once, late, batch_id=len(slices))
+    assert not st.get("skipped")
+    assert t_once.last_batch_id_for("repo_wal") == len(slices)
+
+
+def test_delta_file_rows_validation():
+    assert _resolve_delta_file_rows(None) is None
+    assert _resolve_delta_file_rows("auto") == DELTA_FILE_ROWS_AUTO
+    assert _resolve_delta_file_rows(7) == 7
+    # bool is an int subclass: True must not mean "one delta file per row"
+    for bad in (True, False, 0, -5, 2.5, "4096"):
+        with pytest.raises(ValueError):
+            _resolve_delta_file_rows(bad)
