@@ -862,7 +862,9 @@ def oracle_sql() -> dict[str, str]:
         # Gopher quality rules: integer counts + single IEEE divisions
         "text_gopher_quality": f"""
             with t as (
-                select {_WS_TOKENS} as w from documents
+                -- a null text is the empty document
+                select regexp_split_to_array(lower(trim(coalesce(text, ''))), '\\s+') as w
+                from documents
             ), m as (
                 select len(w) as n,
                        list_sum(list_transform(w, x -> len(x))) as total_len,

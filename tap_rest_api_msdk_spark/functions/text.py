@@ -89,7 +89,9 @@ def quality_score(text: Column) -> Column:
 
 def lang_id(text: Column) -> Column:
     """Stopword-hit argmax over {en,fr,de,es}; ties resolve in that order;
-    zero hits everywhere -> 'und' (undetermined)."""
+    zero hits everywhere -> 'und' (undetermined). A null text is the empty
+    document."""
+    text = F.coalesce(text, F.lit(""))
     hits = {lang: stopword_hits(text, lang) for lang in STOPWORDS}
     best = F.greatest(*hits.values())
     out = F.lit("und")
@@ -144,8 +146,10 @@ def gopher_quality_flags(
     word-count bounds, mean word length band, fraction of words containing
     a letter, minimum stop-word evidence, and symbol-to-word ratio
     (# / ellipsis). Exactly twinnable in SQL — integer counts and single
-    IEEE divisions only.
+    IEEE divisions only. A null text is the empty document (one empty
+    token).
     """
+    text = F.coalesce(text, F.lit(""))
     toks = ws_tokens(text)
     n = F.size(toks)
     # sum of token lengths == length of the separator-free concat (native

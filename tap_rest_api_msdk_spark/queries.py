@@ -302,7 +302,9 @@ def q_text_langid(spark, sf_dir):
     from tap_rest_api_msdk_spark.functions.text import STOPWORDS
 
     docs = _t(spark, sf_dir, "documents")
-    tokens = F.split(F.lower(F.trim(F.col("text"))), "\\s+")
+    # a null text is the empty document (one empty token), so it still
+    # gets its 'und' row instead of vanishing in the explode
+    tokens = TX.ws_tokens(F.coalesce(F.col("text"), F.lit("")))
     tok = _spread(docs).select("doc_id", F.explode(tokens).alias("tk"))
     hits = tok.groupBy("doc_id").agg(
         *[
@@ -334,7 +336,8 @@ def q_text_gopher_quality(spark, sf_dir):
     from tap_rest_api_msdk_spark.functions.text import STOPWORDS
 
     docs = _t(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), "\\s+")
+    # a null text is the empty document, counted in n_docs (see text_langid)
+    toks = TX.ws_tokens(F.coalesce(F.col("text"), F.lit("")))
     tok = _spread(docs).select("doc_id", F.explode(toks).alias("t"))
     per = tok.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n"),

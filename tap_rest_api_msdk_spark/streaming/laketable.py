@@ -130,8 +130,8 @@ def zorder_cell_and_key(cluster_bounds: dict, n_cells: int, bits: int = 8):
     expressions, for multi-dimensional clustered rewrites.
 
     ``cluster_bounds`` maps column -> (lo, hi) — global numeric bounds of
-    the rewrite's input, from manifest zone maps (metadata-only, like the
-    1-D era split's ``_era_bounds``). Each column is quantized to ``bits``
+    the rewrite's input, from manifest zone maps (metadata-only,
+    ``LakeTable._cluster_bounds``). Each column is quantized to ``bits``
     rank levels within its bounds, the quantized values' bits are
     interleaved MSB-first across columns (standard Morton order), and:
 
@@ -215,6 +215,10 @@ def _unpack_bloom(b64: str) -> list:
 #: default ``base`` of the commit entry points: resolve HEAD at call time
 #: (a caller passing its own snapshot may pass None for an empty table)
 _HEAD = object()
+
+#: ``compact_buckets(buckets=...)`` value selecting every non-empty bucket
+#: (``compact()``)
+_EVERY_BUCKET = object()
 
 #: manifest keys that split into per-bucket SECTION files (split manifests,
 #: the Iceberg manifest-list shape): the version file carries only core
@@ -595,7 +599,7 @@ class LakeTable:
         # amplification O(table/k) amortized, read amplification <= k
         # delta files per granule, and cold granules never pay a rewrite;
         # 10 matches the usual lakehouse delta-commits-per-compaction
-        # default (sweep in BENCH/BASELINE.md)
+        # default (cdcbench's steady_cdc workload runs at it)
         self.fold_every = 10
         # fold_trigger="size" switches to LSM size-tiered scheduling: a
         # granule folds when its pending delta BYTES reach
@@ -997,25 +1001,27 @@ class LakeTable:
                 df = df.filter(F.col(c) >= F.lit(lo))
             if hi is not None:
                 df = df.filter(F.col(c) <= F.lit(hi))
-        # ownership semi-join: a physical file may be SHARED by several
-        # colliding buckets, and a later commit can rewrite one of them —
-        # rows only count for (file, bucket) pairs the manifest still
-        # references, otherwise the sharing bucket's old file would leak
-        # the rewritten bucket's stale rows. File basenames are unique
-        # (epoch dir + task uuid).
+        return self._owned_rows(df, pairs)
+
+    def _owned_rows(self, df: DataFrame, pairs) -> DataFrame:
+        """Ownership semi-join: a physical file may be SHARED by several
+        colliding buckets, and a later commit can rewrite one of them —
+        rows only count for the (file basename, bucket) ``pairs`` the
+        manifest still references, otherwise the sharing bucket's old file
+        would leak the rewritten bucket's stale rows. File basenames are
+        unique (epoch dir + task uuid)."""
         lookup = self.spark.createDataFrame(
             sorted(set(pairs)), "__file string, __owned_bucket int"
         )
         df = df.withColumn(
             "__file", F.element_at(F.split(F.input_file_name(), "/"), -1)
         )
-        df = df.join(
+        return df.join(
             F.broadcast(lookup),
             (df["__file"] == lookup["__file"])
             & (df["__bucket"] == lookup["__owned_bucket"]),
             "leftsemi",
         ).drop("__file")
-        return df
 
     def read_state(
         self,
@@ -1804,10 +1810,15 @@ class LakeTable:
         * ``"mor"`` — merge-on-read: the batch's within-batch LWW winners
           are appended as DELTA files without touching the base — write
           amplification is O(batch), not O(table); readers resolve via
-          ``read_state`` and ``compact()`` folds deltas into a new base.
-          This is the steady-state streaming-CDC write path (Hudi/Iceberg
-          MOR equivalent); both modes share semantics and the batch-id
-          ledger, and may be mixed batch-by-batch.
+          ``read_state`` (Hudi/Iceberg MOR equivalent). ``mor`` is
+          ``cow_incremental`` with folds off: its deltas reach the base
+          only through an explicit ``compact()``/``compact_buckets()``.
+        * ``"cow_incremental"`` — the same delta append, then ``fold_due``
+          on the manifest it just published: the steady-state
+          streaming-CDC write path.
+
+        All modes share semantics and the batch-id ledger, and may be
+        mixed batch-by-batch.
 
         Multi-writer: commits CAS the manifest version (``_publish``);
         the idempotence ledger is per ``writer_id``. A lost race rebases
@@ -2414,19 +2425,9 @@ class LakeTable:
                     (old_schema or new_schema).fields
                     + [T.StructField("__bucket", T.IntegerType(), True)]
                 )
-                ex = self.spark.read.schema(stored).parquet(*sorted(files_needed))
-                lookup = self.spark.createDataFrame(
-                    sorted(set(own_pairs)), "__file string, __owned_bucket int"
-                )
-                ex = ex.withColumn(
-                    "__file", F.element_at(F.split(F.input_file_name(), "/"), -1)
-                )
-                ex = ex.join(
-                    F.broadcast(lookup),
-                    (ex["__file"] == lookup["__file"])
-                    & (ex["__bucket"] == lookup["__owned_bucket"]),
-                    "leftsemi",
-                ).drop("__file", "__bucket")
+                ex = self._owned_rows(
+                    self.spark.read.schema(stored).parquet(*sorted(files_needed)), own_pairs
+                ).drop("__bucket")
                 ex_aligned = align(ex).withColumn("__bucket", self._bucket_col(keys))
                 all_rows = ex_aligned.unionByName(batch)
             else:
@@ -2459,15 +2460,8 @@ class LakeTable:
                 for b, (S_b, touched, _cb, _cd) in plans.items()
             }
         )
-        our_files, our_meta = self._files_and_meta(
-            affected, S, k_parts, by_index, allowed=allowed
-        )
-        our_sizes = self._sizes_of(by_index)
-        our_stats = self._stats_of(by_index, self._stat_cols(order_by))
-        our_blooms = (
-            self._compute_file_blooms(list(by_index.values()), keys)
-            if key_index
-            else None
+        our_files, our_meta, our_sizes, our_stats, our_blooms = self._harvest(
+            by_index, affected, S, k_parts, keys, order_by, key_index, allowed=allowed
         )
 
         def assemble(cur: Optional[dict], bookmark_updates, extra_manifest):
@@ -2485,33 +2479,22 @@ class LakeTable:
                         return None
                 elif not self._cow_granular_rebase_ok(m, cur, plans):
                     return None
-            files = dict(cur["files"]) if cur else {}
-            deltas = dict(cur.get("deltas", {})) if cur else {}
-            slice_meta = dict(cur.get("slice_meta", {})) if cur else {}
             if plans is None:
-                # whole-bucket COW: replace the bucket's file set wholesale
-                files.update(our_files)
-                slice_meta.update(our_meta)
-                for b in affected:
-                    deltas.pop(str(b), None)  # folded into the new base
+                # whole-bucket COW: the bucket's whole file set (deltas
+                # included) is folded into the new base
+                c = cur or {}
+                consumed = {
+                    str(b): (c.get("files", {}).get(str(b), []),
+                             c.get("deltas", {}).get(str(b), []))
+                    for b in affected
+                }
             else:
                 # granular COW: swap ONLY the consumed files; untouched
                 # granules' files (and deltas landed since our snapshot in
                 # OUR granules — newer batches, LWW-safe as pending
                 # deltas) carry forward
-                for b, (S_b, touched, cb, cd) in plans.items():
-                    b_str = str(b)
-                    keep_base = [f for f in files.get(b_str, []) if f not in set(cb)]
-                    files[b_str] = keep_base + our_files.get(b_str, [])
-                    left = [f for f in deltas.get(b_str, []) if f not in set(cd)]
-                    if left:
-                        deltas[b_str] = left
-                    else:
-                        deltas.pop(b_str, None)
-                    bmeta = dict(slice_meta.get(b_str, {}))
-                    for f in cb + cd:
-                        bmeta.pop(os.path.basename(f), None)
-                    slice_meta[b_str] = {**bmeta, **our_meta.get(b_str, {})}
+                consumed = {str(b): (cb, cd) for b, (_S, _t, cb, cd) in plans.items()}
+            files, deltas, slice_meta = self._swap_consumed(cur, consumed, our_files, our_meta)
             return self._batch_manifest(
                 cur, batch_id, writer_id, final_schema, keys, order_by, op_col,
                 files, deltas, slice_meta, bookmark_updates, extra_manifest,
@@ -2611,13 +2594,8 @@ class LakeTable:
                 shutil.rmtree(out_dir, ignore_errors=True)
                 raise
 
-        our_deltas, our_meta = self._files_and_meta(affected, S, k_parts, by_index)
-        our_sizes = self._sizes_of(by_index)
-        our_stats = self._stats_of(by_index, self._stat_cols(order_by))
-        our_blooms = (
-            self._compute_file_blooms(list(by_index.values()), keys)
-            if key_index
-            else None
+        our_deltas, our_meta, our_sizes, our_stats, our_blooms = self._harvest(
+            by_index, affected, S, k_parts, keys, order_by, key_index
         )
 
         def assemble(cur: Optional[dict], bookmark_updates, extra_manifest):
@@ -2732,19 +2710,7 @@ class LakeTable:
         stored = T.StructType(schema.fields + [T.StructField("__bucket", T.IntegerType(), True)])
         if not files:
             return self.spark.createDataFrame([], stored).drop("__bucket")
-        df = self.spark.read.schema(stored).parquet(*sorted(files))
-        lookup = self.spark.createDataFrame(
-            sorted(set(pairs)), "__file string, __owned_bucket int"
-        )
-        df = df.withColumn(
-            "__file", F.element_at(F.split(F.input_file_name(), "/"), -1)
-        )
-        df = df.join(
-            F.broadcast(lookup),
-            (df["__file"] == lookup["__file"])
-            & (df["__bucket"] == lookup["__owned_bucket"]),
-            "leftsemi",
-        ).drop("__file")
+        df = self._owned_rows(self.spark.read.schema(stored).parquet(*sorted(files)), pairs)
         # granule pruning: a selected file may span untouched residues —
         # those rows resolve identically on both sides, so drop them
         # before the LWW sort (tiny broadcast of (bucket, slice64) pairs).
@@ -3068,7 +3034,6 @@ class LakeTable:
         if m.get("num_buckets"):  # manifest-authoritative (rebucket-safe)
             self.num_buckets = int(m["num_buckets"])
         k = max(1, k_fold or self.fold_every)
-        round_ = int(m.get("fold_round", 0))
         t0 = time.time()
 
         plans = {}
@@ -3113,18 +3078,7 @@ class LakeTable:
             for b in owners.get(fname, ())
         )
         if not fully_selected:
-            lookup = self.spark.createDataFrame(
-                sorted(selected), "__file string, __owned_bucket int"
-            )
-            df = df.withColumn(
-                "__file", F.element_at(F.split(F.input_file_name(), "/"), -1)
-            )
-            df = df.join(
-                F.broadcast(lookup),
-                (df["__file"] == lookup["__file"])
-                & (df["__bucket"] == lookup["__owned_bucket"]),
-                "leftsemi",
-            ).drop("__file")
+            df = self._owned_rows(df, selected)
 
         # ---- one single-exchange LWW merge, salted at the fold depth
         keys, order_by = list(m["keys"]), list(m["order_by"])
@@ -3141,117 +3095,26 @@ class LakeTable:
         # output-sized exchange keyed (bucket, salt, era) — the LWW window
         # itself must stay (bucket, salt): a key's versions span eras, and
         # partitioning the window by era would resolve per-era winners.
-        # Claims are untouched (era is not a claim coordinate; a granule
-        # owns one file per era via the [S, residues] multi-file case).
-        n_e = max(1, int(self.era_split or 1))
-        rk0 = order_by[0] if order_by else None
-        eras = None
-        in_bn = {os.path.basename(f) for f in files_needed}
-        cluster_bounds = self._cluster_bounds(m, in_bn) if n_e > 1 else None
-        era_bounds = (
-            self._era_bounds(m, in_bn)
-            if n_e > 1 and rk0 and cluster_bounds is None
-            else None
-        )
-        if cluster_bounds is not None:
-            # z-order on the fold path (r6): same one extra OUTPUT-sized
-            # exchange as the 1-D era split, but the cell is the Morton
-            # interleave over cluster_by and the within-file sort is the
-            # full Morton key — fold output stays prunable on EVERY
-            # clustered column, not just the ordering column
-            cell, zsort = zorder_cell_and_key(cluster_bounds, n_e)
-            k_parts = k_parts * n_e
-            merged = (
-                winners.withColumn("__era", cell)
-                .withColumn("__z", zsort)
-                .repartition(k_parts, "__bucket", "__salt", "__era")
-                .sortWithinPartitions("__bucket", "__salt", "__z")
-                .drop("__salt", "__era", "__z")
-            )
-            eras = list(range(n_e))
-        elif era_bounds is not None:
-            lo_e, hi_e = era_bounds
-            span_e = hi_e - lo_e + 1
-            era = F.coalesce(
-                F.least(
-                    F.lit(n_e - 1),
-                    F.greatest(
-                        F.lit(0),
-                        F.floor((F.col(rk0) - F.lit(lo_e)) * n_e / F.lit(span_e)),
-                    ),
-                ).cast("int"),
-                F.lit(0),
-            )
-            k_parts = k_parts * n_e
-            merged = (
-                winners.withColumn("__era", era)
-                .repartition(k_parts, "__bucket", "__salt", "__era")
-                .sortWithinPartitions("__bucket", "__salt", rk0)
-                .drop("__salt", "__era")
-            )
-            eras = list(range(n_e))
+        # Without a clustered layout the winners are written as they come
+        # out of the window: no extra exchange, no sort.
+        laid = self._clustered_layout(winners, m, files_needed, k_parts)
+        if laid is None:
+            merged, eras = winners.drop("__salt"), None
         else:
-            merged = winners.drop("__salt")
-
+            merged, k_parts, eras = laid
         by_index = self._write_parts(merged, self._epoch_dir(m["version"] + 1))
-        new_sizes = self._sizes_of(by_index)
-        new_stats = self._stats_of(by_index, self._stat_cols(m.get("order_by")))
-        new_blooms = (
-            self._compute_file_blooms(list(by_index.values()), keys)
-            if key_index
-            else None
-        )
         # claim ONLY the residues this fold actually rewrote (due granules,
         # lifted from depth S_b to the write depth S_w) — see _files_and_meta
         allowed = {
             int(b_str): {s for s in range(S_w) if s % S_b in set(due)}
             for b_str, (S_b, due, _bs, _ds) in plans.items()
         }
-        new_files, new_meta = self._files_and_meta(
-            [int(b) for b in plans], S_w, k_parts, by_index, allowed=allowed,
-            eras=eras,
+        written = self._harvest(
+            by_index, [int(b) for b in plans], S_w, k_parts, keys, order_by,
+            key_index, allowed=allowed, eras=eras,
         )
-
-        def assemble(cur: Optional[dict]) -> Optional[dict]:
-            if cur is None:
-                return None
-            if cur is not m:
-                # the fold's output embodies (base ∪ consumed deltas) as of
-                # m: valid iff every fold bucket's base is unchanged and
-                # the consumed delta files are all still pending
-                for b_str, (S_b, due, base_sel, delta_sel) in plans.items():
-                    if cur.get("files", {}).get(b_str, []) != m.get("files", {}).get(b_str, []):
-                        return None
-                    if not set(delta_sel) <= set(cur.get("deltas", {}).get(b_str, [])):
-                        return None
-            files = dict(cur["files"])
-            deltas = dict(cur.get("deltas", {}))
-            slice_meta = dict(cur.get("slice_meta", {}))
-            for b_str, (S_b, due, base_sel, delta_sel) in plans.items():
-                keep_base = [f for f in files.get(b_str, []) if f not in set(base_sel)]
-                files[b_str] = keep_base + new_files[b_str]
-                left = [f for f in deltas.get(b_str, []) if f not in set(delta_sel)]
-                if left:
-                    deltas[b_str] = left
-                else:
-                    deltas.pop(b_str, None)
-                bmeta = dict(slice_meta.get(b_str, {}))
-                for f in base_sel + delta_sel:
-                    # drop meta only for files no longer referenced by b
-                    base_name = os.path.basename(f)
-                    if f not in keep_base and f not in left:
-                        bmeta.pop(base_name, None)
-                slice_meta[b_str] = {**bmeta, **new_meta[b_str]}
-            return self._with_file_index({
-                **{k_: v for k_, v in cur.items() if k_ != "version"},
-                "files": files,
-                "deltas": deltas,
-                "slice_meta": slice_meta,
-                "fold_round": int(cur.get("fold_round", round_)) + 1,
-                "committed_at": time.time(),
-            }, new_sizes, new_blooms=new_blooms, new_stats=new_stats)
-
-        committed = self._try_commit(m, assemble)
+        consumed = {b_str: (bs, ds) for b_str, (_S, _due, bs, ds) in plans.items()}
+        committed = self._commit_rewrite(m, consumed, written, fold=True)
         if committed is None:
             return {"skipped": True, "reason": "commit contention"}
         return {
@@ -3267,28 +3130,31 @@ class LakeTable:
     def compact(
         self, tombstone_watermark: Optional[int] = None, key_index: bool = False
     ) -> dict:
-        """Rewrite the full table into one fresh epoch: merges small files
-        and purges delete tombstones whose seq <= ``tombstone_watermark``
-        (safe once the source can no longer replay events older than the
-        watermark — the classic log-compaction contract).
+        """Rewrite every non-empty bucket into fresh base files:
+        ``compact_buckets`` with all buckets selected. Merges small files,
+        folds pending deltas into the base and purges delete tombstones
+        whose seq <= ``tombstone_watermark`` (safe once the source can no
+        longer replay events older than the watermark — the classic
+        log-compaction contract).
 
-        Runs as a normal commit (bumps version, keeps batch-id ledger), so
-        readers never see a partial compaction. Multi-writer: compaction
-        claims the FULL table state, so any concurrent commit invalidates
-        it — on a lost CAS the whole rewrite recomputes from the fresh
+        Runs as maintenance (bumps version, keeps the batch-id ledger), so
+        readers never see a partial compaction. Multi-writer: the
+        ``compact_buckets`` rebase rule — a delta a racer appends
+        mid-rewrite stays pending (LWW re-applies it at read) and the
+        compaction still commits; a commit that changed a bucket's base
+        files (a COW merge, a fold) forces a recompute from the fresh
         snapshot (bounded retries; compaction is maintenance, the writers
         win ties).
 
         ``key_index=True`` re-harvests per-file key blooms for the
         rewritten files (a full rewrite otherwise drops them — files
         without blooms stay lookup CANDIDATES, so this only restores
-        pruning, never correctness).
+        pruning, never correctness). Returns ``compact_buckets``' result.
         """
-        for _attempt in range(3):
-            out = self._compact_once(tombstone_watermark, key_index)
-            if out is not None:
-                return out
-        return {"skipped": True, "reason": "commit contention (3 attempts)"}
+        return self.compact_buckets(
+            buckets=_EVERY_BUCKET, tombstone_watermark=tombstone_watermark,
+            key_index=key_index,
+        )
 
     @staticmethod
     def _purge_tombstones(df, m: dict, tombstone_watermark: Optional[int]):
@@ -3310,36 +3176,22 @@ class LakeTable:
         )
         return df.filter(~purge)
 
-    def _era_bounds(self, m: dict, basenames) -> Optional[tuple]:
-        """[lo, hi] of the LWW ordering column across the given input
-        files, from manifest zone maps ONLY (no data read). None when any
-        file lacks bounds (legacy commits, non-numeric ordering) — the
-        era split then quietly disables rather than scanning."""
-        rk = (m.get("order_by") or [None])[0]
-        if not rk:
-            return None
-        stats = m.get("file_stats", {})
-        lo = hi = None
-        for bn in basenames:
-            st = _stat_bounds(stats.get(bn), rk, rk)
-            if st is None:
+    def _cluster_bounds(self, m: dict, basenames, cols=None) -> Optional[dict]:
+        """``{col: (lo, hi)}`` for ``cols`` (default: the ``cluster_by``
+        columns, when there are >= 2) across the given input files, from
+        manifest zone maps ONLY — no data read. None unless ALL columns
+        have bounds in ALL files (legacy commits and non-numeric columns
+        have none) and a non-degenerate span: the clustered layout then
+        quietly falls back (z-order to the 1-D era split, that to none)
+        rather than scanning."""
+        if cols is None:
+            if not self.cluster_by or len(self.cluster_by) < 2:
                 return None
-            lo = st[0] if lo is None else min(lo, st[0])
-            hi = st[1] if hi is None else max(hi, st[1])
-        return (lo, hi) if lo is not None and hi > lo else None
-
-    def _cluster_bounds(self, m: dict, basenames) -> Optional[dict]:
-        """``{col: (lo, hi)}`` for every ``cluster_by`` column across the
-        given input files, from manifest zone maps ONLY (the z-order
-        sibling of ``_era_bounds`` — no data read). None unless ALL
-        columns have bounds in ALL files and a non-degenerate span —
-        the z layout then quietly falls back to the 1-D era split."""
-        if not self.cluster_by or len(self.cluster_by) < 2:
-            return None
+            cols = self.cluster_by
         rk = (m.get("order_by") or [None])[0]
         stats = m.get("file_stats", {})
         out = {}
-        for c in self.cluster_by:
+        for c in cols:
             lo = hi = None
             for bn in basenames:
                 st = _stat_bounds(stats.get(bn), c, rk)
@@ -3352,135 +3204,178 @@ class LakeTable:
             out[c] = (lo, hi)
         return out
 
-    def _rewrite_job(self, df, affected: Sequence[int], epoch: int, m: dict,
-                     key_index: bool, files_per_bucket: Optional[int] = None,
-                     era_bounds: Optional[tuple] = None,
-                     cluster_bounds: Optional[dict] = None):
-        """One bucket-space rewrite job: salt, repartition, write a fresh
-        epoch dir, index the part files, harvest sizes/zone-stats (+ key
-        blooms when asked) and derive the per-bucket file/slice claims.
-        Shared by full compaction and bucket-granular compaction — the
-        two differ only in WHICH buckets they rewrite.
-        ``files_per_bucket`` overrides the parallelism-derived slice
-        count (must be a power of two <= 64 for residue nesting).
+    def _clustered_layout(self, salted: DataFrame, m: dict, input_files, k_parts: int):
+        """Range-clustered layout of a rewrite's salted output rows
+        (``__bucket``, ``__salt``), shared by folds and bucket rewrites.
 
-        ``era_bounds`` + ``self.era_split > 1`` = range-clustered layout:
-        the partition key gains an __era column (ordering value's range
-        bucket), so each (bucket, slice) granule writes one file per era
-        — era-DISJOINT files by construction, keeping zone maps tight
-        after compaction merges history. Claims are unchanged: era is not
-        a claim coordinate, a granule just owns several files.
+        With ``era_split > 1`` the partition key gains an ``__era`` cell,
+        so each (bucket, slice) granule writes one file per cell —
+        cell-DISJOINT files by construction, keeping zone maps tight after
+        a rewrite merges history. The cell is a Morton interleave over
+        ``cluster_by`` when every clustered column has bounds in the input
+        files (rows sorted by the full Morton key within each file, so
+        EVERY clustered column stays prunable), else the LWW ordering
+        column's value range (rows sorted by it). Bounds come from the
+        manifest zone maps of ``input_files`` only — no data read. Claims
+        are untouched: the cell is not a claim coordinate, a granule just
+        owns several files ([S, residues] per file, ``_files_and_meta``).
 
-        ``cluster_bounds`` (z-order, takes precedence over the 1-D era
-        key): the cell is a Morton interleave over the ``cluster_by``
-        columns and within-file clustering uses the full Morton key, so
-        EVERY clustered column's zone map stays tight (~sqrt-fraction
-        per column on a 2-D layout). Same partition-key and claims
-        mechanics — the cell id simply IS the __era value."""
-        S = files_per_bucket if files_per_bucket else self._fpb(len(affected))
-        rk = (m.get("order_by") or [None])[0]
+        Returns ``(frame, k_parts, eras)`` — the frame repartitioned and
+        sorted, helper columns dropped — or None when no clustered layout
+        applies (``era_split`` <= 1, or the input files lack bounds)."""
         n_e = max(1, int(self.era_split or 1))
-        eras = None
-        salt = key_hash(m["keys"], S, "__salt__")
-        zsort = None
-        if n_e > 1 and cluster_bounds:
-            cell, zsort = zorder_cell_and_key(cluster_bounds, n_e)
-            k_parts = max(1, len(affected) * S * n_e)
-            shaped = (
-                df.withColumn("__salt", salt)
-                .withColumn("__era", cell)
-                .withColumn("__z", zsort)
-                .repartition(k_parts, "__bucket", "__salt", "__era")
-            )
-            eras = list(range(n_e))
-        elif n_e > 1 and rk and era_bounds is not None:
-            lo, hi = era_bounds
-            span = hi - lo + 1
-            era = F.coalesce(
+        if n_e == 1:
+            return None
+        in_bn = {os.path.basename(f) for f in input_files}
+        bounds = self._cluster_bounds(m, in_bn)
+        if bounds is not None:
+            cell, zsort = zorder_cell_and_key(bounds, n_e)
+            salted, sort_col = salted.withColumn("__z", zsort), "__z"
+        else:
+            sort_col = (m.get("order_by") or [None])[0]
+            bounds = self._cluster_bounds(m, in_bn, [sort_col]) if sort_col else None
+            if bounds is None:
+                return None
+            lo, hi = bounds[sort_col]
+            cell = F.coalesce(
                 F.least(
                     F.lit(n_e - 1),
                     F.greatest(
                         F.lit(0),
-                        F.floor((F.col(rk) - F.lit(lo)) * n_e / F.lit(span)),
+                        F.floor((F.col(sort_col) - F.lit(lo)) * n_e / F.lit(hi - lo + 1)),
                     ),
                 ).cast("int"),
                 F.lit(0),
             )
-            k_parts = max(1, len(affected) * S * n_e)
-            shaped = (
-                df.withColumn("__salt", salt)
-                .withColumn("__era", era)
-                .repartition(k_parts, "__bucket", "__salt", "__era")
-            )
-            eras = list(range(n_e))
-        else:
-            k_parts = max(1, len(affected) * S)
-            shaped = df.withColumn("__salt", salt).repartition(
-                k_parts, "__bucket", "__salt"
-            )
-        if zsort is not None:
-            # z-order: cluster rows by the full Morton key within each
-            # file — row-group min/max stay tight on ALL clustered
-            # columns at once (balanced), not just the ordering column
-            shaped = shaped.sortWithinPartitions("__bucket", "__salt", "__z")
-        elif rk:
-            # cluster rows by the ordering column WITHIN each output file
-            # (file-to-granule mapping is untouched — still (bucket, salt)):
-            # parquet row-group min/max become tight on the ordering
-            # column, so read_since/read_range's pushed residual filter
-            # skips row groups even inside files the whole-file zone map
-            # cannot prune, and runs of adjacent values compress better
-            shaped = shaped.sortWithinPartitions("__bucket", "__salt", rk)
-        by_index = self._write_parts(
-            shaped.drop("__salt", "__era", "__z"), self._epoch_dir(epoch)
+        k_parts = k_parts * n_e
+        frame = (
+            salted.withColumn("__era", cell)
+            .repartition(k_parts, "__bucket", "__salt", "__era")
+            .sortWithinPartitions("__bucket", "__salt", sort_col)
+            .drop("__salt", "__era", "__z")
         )
-        new_files, new_meta = self._files_and_meta(
-            affected, S, k_parts, by_index, eras=eras
+        return frame, k_parts, list(range(n_e))
+
+    def _harvest(self, by_index: dict, affected, S: int, k_parts: int, keys, order_by,
+                 key_index: bool, allowed=None, eras=None) -> tuple:
+        """Manifest entries for one write job's part files: ``(files,
+        slice_meta, sizes, zone stats, key blooms)`` — per-bucket claims
+        (``_files_and_meta``), byte sizes, zone maps, and key blooms when
+        ``key_index`` (else None)."""
+        files, meta = self._files_and_meta(
+            affected, S, k_parts, by_index, allowed=allowed, eras=eras
         )
-        new_sizes = self._sizes_of(by_index)
-        new_stats = self._stats_of(by_index, self._stat_cols(m.get("order_by")))
-        new_blooms = (
-            self._compute_file_blooms(list(by_index.values()), list(m["keys"]))
+        blooms = (
+            self._compute_file_blooms(list(by_index.values()), list(keys))
             if key_index
             else None
         )
-        return by_index, new_files, new_meta, new_sizes, new_stats, new_blooms
+        return (files, meta, self._sizes_of(by_index),
+                self._stats_of(by_index, self._stat_cols(order_by)), blooms)
 
-    def _compact_once(
-        self, tombstone_watermark: Optional[int] = None, key_index: bool = False
-    ) -> Optional[dict]:
-        m = self.current_manifest()
-        if m is None:
-            return {"skipped": True, "reason": "empty table"}
-        if m.get("num_buckets"):  # manifest-authoritative (rebucket-safe)
-            self.num_buckets = int(m["num_buckets"])
-        df = self.read_state()  # resolves MOR deltas before rewriting
-        df = self._purge_tombstones(df, m, tombstone_watermark)
-        epoch = m["version"] + 1
-        era_bounds = cluster_bounds = None
-        if self.era_split and self.era_split > 1:
-            all_bn = {
-                os.path.basename(f)
-                for sec in ("files", "deltas")
-                for fl in m.get(sec, {}).values()
-                for f in fl
-            }
-            cluster_bounds = self._cluster_bounds(m, all_bn)
-            if cluster_bounds is None:
-                era_bounds = self._era_bounds(m, all_bn)
-        by_index, files, slice_meta, new_sizes, new_stats, new_blooms = (
-            self._rewrite_job(
-                df, list(range(self.num_buckets)), epoch, m, key_index,
-                era_bounds=era_bounds, cluster_bounds=cluster_bounds,
-            )
+    def _rewrite_job(self, df, affected: Sequence[int], epoch: int, m: dict,
+                     key_index: bool, input_files,
+                     files_per_bucket: Optional[int] = None):
+        """One bucket-space rewrite job: salt, repartition, write a fresh
+        epoch dir, index the part files and harvest their manifest
+        entries. Shared by bucket compaction and rebucket — they differ
+        only in WHICH buckets they rewrite (and in which bucket space).
+        ``files_per_bucket`` overrides the parallelism-derived slice
+        count (must be a power of two <= 64 for residue nesting).
+        ``input_files`` are the files ``df`` was read from: their zone
+        maps bound the clustered layout (``_clustered_layout``). Returns
+        ``(by_index, _harvest(...))``."""
+        S = files_per_bucket if files_per_bucket else self._fpb(len(affected))
+        k_parts = max(1, len(affected) * S)
+        salted = df.withColumn("__salt", key_hash(m["keys"], S, "__salt__"))
+        laid = self._clustered_layout(salted, m, input_files, k_parts)
+        if laid is not None:
+            shaped, k_parts, eras = laid
+        else:
+            eras = None
+            shaped = salted.repartition(k_parts, "__bucket", "__salt")
+            rk = (m.get("order_by") or [None])[0]
+            if rk:
+                # cluster rows by the ordering column WITHIN each output file
+                # (file-to-granule mapping is untouched — still (bucket, salt)):
+                # parquet row-group min/max become tight on the ordering
+                # column, so read_since/read_range's pushed residual filter
+                # skips row groups even inside files the whole-file zone map
+                # cannot prune, and runs of adjacent values compress better
+                shaped = shaped.sortWithinPartitions("__bucket", "__salt", rk)
+            shaped = shaped.drop("__salt")
+        by_index = self._write_parts(shaped, self._epoch_dir(epoch))
+        return by_index, self._harvest(
+            by_index, affected, S, k_parts, m["keys"], m.get("order_by"),
+            key_index, eras=eras,
         )
-        manifest = self._with_file_index({
-            **m, "version": epoch, "files": files, "deltas": {},
-            "slice_meta": slice_meta, "committed_at": time.time(),
-        }, new_sizes, new_blooms=new_blooms, new_stats=new_stats)
-        if not self._publish(manifest):
-            return None  # concurrent commit: the compacted state is stale
-        return {"skipped": False, "version": epoch, "files": len(by_index)}
+
+    @staticmethod
+    def _swap_consumed(cur: Optional[dict], consumed: dict, new_files: dict,
+                       new_meta: dict) -> tuple:
+        """``(files, deltas, slice_meta)`` of ``cur`` with each bucket's
+        consumed (base files, delta files) replaced by its new base files
+        — the file swap of every rewrite commit (COW merge, fold,
+        compaction). The bucket's other base files and its other pending
+        deltas carry forward; slice metadata is kept only for the files
+        the bucket still references."""
+        files = dict(cur["files"]) if cur else {}
+        deltas = dict(cur.get("deltas", {})) if cur else {}
+        slice_meta = dict(cur.get("slice_meta", {})) if cur else {}
+        for b_str, (base_sel, delta_sel) in consumed.items():
+            keep_base = [f for f in files.get(b_str, []) if f not in set(base_sel)]
+            files[b_str] = keep_base + new_files.get(b_str, [])
+            left = [f for f in deltas.get(b_str, []) if f not in set(delta_sel)]
+            if left:
+                deltas[b_str] = left
+            else:
+                deltas.pop(b_str, None)
+            keep = {os.path.basename(f) for f in keep_base + left}
+            bmeta = {bn: v for bn, v in slice_meta.get(b_str, {}).items() if bn in keep}
+            slice_meta[b_str] = {**bmeta, **new_meta.get(b_str, {})}
+        return files, deltas, slice_meta
+
+    def _commit_rewrite(self, m: dict, consumed: dict, written: tuple,
+                        fold: bool = False) -> Optional[dict]:
+        """CAS-commit a maintenance rewrite — a fold or a bucket
+        compaction — of ``consumed`` (bucket -> (base files, delta files),
+        read from ``m``) into the ``written`` part files (``_harvest``).
+
+        The output embodies LWW(consumed base ∪ consumed deltas) as of
+        ``m``, so on a lost CAS it stays valid iff every rewritten
+        bucket's base is unchanged and its consumed deltas are all still
+        pending: deltas appended since stay pending (LWW re-applies them
+        at read) and commits to other buckets rebase. Base files the
+        rewrite did not consume (a fold's non-due granules) carry
+        forward. Maintenance: the per-writer ledger is untouched; a fold
+        also bumps ``fold_round``. Returns the committed manifest, or
+        None when the rewrite is stale."""
+        new_files, new_meta, new_sizes, new_stats, new_blooms = written
+
+        def assemble(cur: Optional[dict]) -> Optional[dict]:
+            if cur is None:
+                return None
+            if cur is not m:
+                for b_str, (_base_sel, delta_sel) in consumed.items():
+                    if cur.get("files", {}).get(b_str, []) != m.get("files", {}).get(b_str, []):
+                        return None
+                    if not set(delta_sel) <= set(cur.get("deltas", {}).get(b_str, [])):
+                        return None
+            files, deltas, slice_meta = self._swap_consumed(cur, consumed, new_files, new_meta)
+            out = {
+                **{k_: v for k_, v in cur.items() if k_ != "version"},
+                "files": files,
+                "deltas": deltas,
+                "slice_meta": slice_meta,
+                "committed_at": time.time(),
+            }
+            if fold:
+                out["fold_round"] = int(cur.get("fold_round", 0)) + 1
+            return self._with_file_index(
+                out, new_sizes, new_blooms=new_blooms, new_stats=new_stats
+            )
+
+        return self._try_commit(m, assemble)
 
     def compact_buckets(
         self,
@@ -3493,7 +3388,8 @@ class LakeTable:
     ) -> dict:
         """Incremental small-file compaction (Iceberg binpack analog):
         rewrite ONLY the buckets whose small-file count warrants it,
-        never the table. At 100 TB ``compact()``'s full rewrite is not a
+        never the table (``compact()`` is this with every non-empty bucket
+        selected). At 100 TB a full rewrite is not a
         maintenance option — granular COW and folds leave a trail of
         per-commit files, and this reclaims them bucket by bucket with
         cost proportional to the buckets actually fragmented.
@@ -3545,7 +3441,10 @@ class LakeTable:
             self.num_buckets = int(m["num_buckets"])
         t0 = time.time()
         sizes = m.get("file_bytes", {})
-        wanted = None if buckets is None else {int(b) for b in buckets}
+        wanted = (
+            None if buckets is None or buckets is _EVERY_BUCKET
+            else {int(b) for b in buckets}
+        )
         consumed: dict[str, tuple[list, list]] = {}  # b -> (base, deltas)
         for b_str in sorted(
             set(m.get("files", {})) | set(m.get("deltas", {})), key=int
@@ -3554,8 +3453,8 @@ class LakeTable:
             dl = list(m.get("deltas", {}).get(b_str, []))
             if not base and not dl:
                 continue
-            if wanted is not None:
-                if int(b_str) in wanted:
+            if buckets is not None:  # explicit selection
+                if wanted is None or int(b_str) in wanted:
                     consumed[b_str] = (base, dl)
                 continue
             n_small = sum(
@@ -3586,75 +3485,24 @@ class LakeTable:
                 fpb *= 2
         df = self.read_state(buckets=due, manifest=m)
         df = self._purge_tombstones(df, m, tombstone_watermark)
-        epoch = m["version"] + 1
-        era_bounds = cluster_bounds = None
-        if self.era_split and self.era_split > 1:
-            in_bn = {
-                os.path.basename(f) for b_, d_ in consumed.values()
-                for f in b_ + d_
-            }
-            cluster_bounds = self._cluster_bounds(m, in_bn)
-            if cluster_bounds is None:
-                era_bounds = self._era_bounds(m, in_bn)
+        inputs = {f for b_, d_ in consumed.values() for f in b_ + d_}
         # full-bucket rewrite: the new files legitimately claim every
         # residue the job computed for them (no partial-granule caveat)
-        _by_index, new_files, new_meta, new_sizes, new_stats, new_blooms = (
-            self._rewrite_job(df, due, epoch, m, key_index,
-                              files_per_bucket=fpb, era_bounds=era_bounds,
-                              cluster_bounds=cluster_bounds)
+        _by_index, written = self._rewrite_job(
+            df, due, m["version"] + 1, m, key_index, inputs, files_per_bucket=fpb
         )
-        files_in = len({f for b_, d_ in consumed.values() for f in b_ + d_})
-
-        def assemble(cur: Optional[dict]) -> Optional[dict]:
-            if cur is None:
-                return None
-            if cur is not m:
-                # output embodies LWW(base ∪ deltas) as of m per due
-                # bucket: valid iff each due bucket's base is unchanged
-                # and its consumed deltas are all still pending
-                for b_str, (base_sel, delta_sel) in consumed.items():
-                    if cur.get("files", {}).get(b_str, []) != base_sel:
-                        return None
-                    if not set(delta_sel) <= set(cur.get("deltas", {}).get(b_str, [])):
-                        return None
-            files = dict(cur["files"])
-            deltas = dict(cur.get("deltas", {}))
-            slice_meta = dict(cur.get("slice_meta", {}))
-            for b_str, (base_sel, delta_sel) in consumed.items():
-                files[b_str] = new_files[b_str]
-                sel = set(delta_sel)
-                left = [f for f in deltas.get(b_str, []) if f not in sel]
-                if left:
-                    deltas[b_str] = left
-                else:
-                    deltas.pop(b_str, None)
-                keep = {os.path.basename(f) for f in left}
-                bmeta = {
-                    bn: v
-                    for bn, v in slice_meta.get(b_str, {}).items()
-                    if bn in keep
-                }
-                slice_meta[b_str] = {**bmeta, **new_meta[b_str]}
-            return self._with_file_index({
-                **{k_: v for k_, v in cur.items() if k_ != "version"},
-                "files": files,
-                "deltas": deltas,
-                "slice_meta": slice_meta,
-                "committed_at": time.time(),
-            }, new_sizes, new_blooms=new_blooms, new_stats=new_stats)
-
-        committed = self._try_commit(m, assemble)
+        committed = self._commit_rewrite(m, consumed, written)
         if committed is None:
             return None
         return {
             "skipped": False,
             "version": committed["version"],
             "compacted_buckets": len(due),
-            "files_in": files_in,
+            "files_in": len(inputs),
             # referenced files only: a zero-row partition's file is never
             # claimed by any (bucket, residue) and stays dead on disk
             # until vacuum
-            "files_out": len({f for fl in new_files.values() for f in fl}),
+            "files_out": len({f for fl in written[0].values() for f in fl}),
             "seconds": time.time() - t0,
         }
 
@@ -3761,19 +3609,12 @@ class LakeTable:
         if nb == self.num_buckets:
             return {"skipped": True, "reason": f"already at {nb} buckets"}
         t0 = time.time()
-        keys = list(m["keys"])
-        df = self.read_state()  # resolves MOR deltas; keeps tombstones
-        df = df.drop("__bucket").withColumn("__bucket", key_hash(keys, nb))
+        df = self.read_state(manifest=m)  # resolves MOR deltas; keeps tombstones
+        df = df.drop("__bucket").withColumn("__bucket", key_hash(m["keys"], nb))
         epoch = m["version"] + 1
-        S = self._fpb(nb)
-        k_parts = max(1, nb * S)
-        by_index = self._write_parts(
-            df.withColumn("__salt", key_hash(keys, S, "__salt__"))
-            .repartition(k_parts, "__bucket", "__salt")
-            .drop("__salt"),
-            self._epoch_dir(epoch),
+        by_index, (files, slice_meta, sizes, stats, blooms) = self._rewrite_job(
+            df, range(nb), epoch, m, key_index, all_files_of(m)
         )
-        files, slice_meta = self._files_and_meta(range(nb), S, k_parts, by_index)
         manifest = self._with_file_index({
             **{k_: v for k_, v in m.items() if k_ != "key_blooms"},
             "version": epoch,
@@ -3782,13 +3623,7 @@ class LakeTable:
             "deltas": {},
             "slice_meta": slice_meta,
             "committed_at": time.time(),
-        }, self._sizes_of(by_index),
-            new_blooms=(
-                self._compute_file_blooms(list(by_index.values()), keys)
-                if key_index
-                else None
-            ),
-            new_stats=self._stats_of(by_index, self._stat_cols(m.get("order_by"))))
+        }, sizes, new_blooms=blooms, new_stats=stats)
         if not self._publish(manifest):
             return None  # concurrent commit: the rewritten layout is stale
         self.num_buckets = nb

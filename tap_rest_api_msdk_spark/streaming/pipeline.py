@@ -88,21 +88,14 @@ class PipelineConfig:
     inference_records: int = 50
     _schema_discovered: bool = False  # set by the pipeline on first inference
     # sink write strategy: "cow" rewrites affected buckets fully merged;
-    # "mor" appends delta files (O(batch) writes) and resolves at read —
-    # the steady-state streaming path. auto_compact_every folds MOR deltas
-    # into a new base every N committed batches.
-    # "cow_incremental" (DESIGN_hierarchical_bucketing.md) appends deltas
-    # like MOR then folds the (bucket, slice) granules due this round —
-    # amortized O(table/fold_every) rewrite per batch, delta chains bounded.
+    # "cow_incremental" (DESIGN_hierarchical_bucketing.md) appends delta
+    # files (O(batch) writes, resolved at read) then folds the (bucket,
+    # slice) granules due this round — amortized O(table/fold_every)
+    # rewrite per batch, delta chains bounded: the steady-state streaming
+    # path. "mor" is cow_incremental with folds off; its deltas fold into
+    # the base only on an explicit LakeTable.compact()/compact_buckets()
+    # (e.g. scripts/run_pipeline.py --mode maintenance from cron).
     sink_mode: str = "cow"
-    auto_compact_every: Optional[int] = None
-    # auto_compact_mode "full" rewrites the whole table (the pre-r4
-    # behavior); "small_files" binpacks only fragmented buckets via
-    # compact_buckets — the 100 TB-safe default shape, where maintenance
-    # cost tracks fragmentation instead of table size
-    auto_compact_mode: str = "full"
-    auto_compact_small_file_bytes: int = 32 << 20
-    auto_compact_min_input_files: int = 4
     fold_every: Optional[int] = None  # cow_incremental stagger (None = table default)
     # cow_incremental fold scheduling: "commits" (delta-chain length, the
     # Hudi NUM_COMMITS trigger) or "size" (LSM size-tiered: pending delta
@@ -482,27 +475,6 @@ def process_batch(
     if not mrows:  # merge skipped before resolving (e.g. ledger race)
         return {"skipped": True, "empty": True, "batch_id": batch_id}
     hw = max(r["max_replication_key"] for r in mrows)
-    if (
-        not stats.get("skipped")
-        and conf.sink_mode == "mor"
-        and conf.auto_compact_every
-        and (batch_id + 1) % conf.auto_compact_every == 0
-    ):
-        if conf.auto_compact_mode not in ("full", "small_files"):
-            # a typo must not silently fall through to the O(table)
-            # full rewrite the small_files mode exists to avoid
-            raise ValueError(
-                f"auto_compact_mode {conf.auto_compact_mode!r} "
-                "(expected 'full' or 'small_files')"
-            )
-        stats["compaction"] = (
-            table.compact_buckets(
-                small_file_bytes=conf.auto_compact_small_file_bytes,
-                min_input_files=conf.auto_compact_min_input_files,
-            )
-            if conf.auto_compact_mode == "small_files"
-            else table.compact()
-        )
     if not stats.get("skipped"):
         # metrics rows were already collected; append driver-side (pyarrow).
         # slice_classes is merge-plan plumbing, not lineage — keep the

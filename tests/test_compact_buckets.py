@@ -198,26 +198,6 @@ def test_target_file_bytes_sizes_output(spark, table):
     assert snap(table) == before
 
 
-def test_auto_compact_mode_typo_raises(spark, tmp_path):
-    """A misspelled auto_compact_mode must raise, never silently fall
-    through to the O(table) full rewrite."""
-    from pyspark.sql import functions as SF
-    from tap_rest_api_msdk_spark.sources.wal_synth import synth_repo_wal
-    from tap_rest_api_msdk_spark.streaming.pipeline import (
-        PipelineConfig,
-        process_batch,
-    )
-
-    wal = synth_repo_wal(spark, 400, n_repos=4, n_paths=10)
-    conf = PipelineConfig(
-        stream="s", sink_mode="mor", num_buckets=2, auto_compact_every=1,
-        auto_compact_mode="small-files",  # hyphen typo
-    )
-    t = LakeTable(spark, str(tmp_path / "typo"), num_buckets=2)
-    with pytest.raises(ValueError, match="auto_compact_mode"):
-        process_batch(t, conf, wal, 0)
-
-
 def test_stats_respects_min_input_files(spark, table):
     """stats(min_input_files=...) must answer for the thresholds the
     maintenance job actually uses."""
@@ -272,9 +252,9 @@ def test_stats_report_tracks_fragmentation(spark, table):
 
 
 def test_pipeline_auto_compact_small_files(spark, tmp_path):
-    """sink_mode='mor' + auto_compact_mode='small_files' dispatches the
-    periodic maintenance to compact_buckets (bucket-granular binpack)
-    instead of the full rewrite; state must match batch-by-batch replay."""
+    """A sink_mode='mor' pipeline table binpacked by an explicit
+    compact_buckets call (the maintenance that replaces pipeline
+    auto-compaction); state must match the LWW of the whole WAL."""
     from pyspark.sql import functions as SF
     from tap_rest_api_msdk_spark.sources.wal_synth import synth_repo_wal
     from tap_rest_api_msdk_spark.streaming.pipeline import (
@@ -283,22 +263,16 @@ def test_pipeline_auto_compact_small_files(spark, tmp_path):
     )
 
     wal = synth_repo_wal(spark, 3000, n_repos=8, n_paths=30)
-    conf = PipelineConfig(
-        stream="s", sink_mode="mor", num_buckets=4, auto_compact_every=2,
-        auto_compact_mode="small_files", auto_compact_min_input_files=2,
-    )
+    conf = PipelineConfig(stream="s", sink_mode="mor", num_buckets=4)
     t = LakeTable(spark, str(tmp_path / "auto"), num_buckets=4)
-    compactions = []
     for i in range(4):
         b = wal.filter(
             (SF.col("seq") > i * 750) & (SF.col("seq") <= (i + 1) * 750)
         )
-        stats = process_batch(t, conf, b, i)
-        if "compaction" in stats:
-            compactions.append(stats["compaction"])
-    assert compactions and any(
-        "compacted_buckets" in c for c in compactions if not c.get("skipped")
-    ), compactions
+        assert not process_batch(t, conf, b, i).get("skipped")
+    out = t.compact_buckets(min_input_files=2)
+    assert not out.get("skipped") and out["compacted_buckets"] > 0, out
+    assert not t.current_manifest().get("deltas")
     # state equals the straight LWW of the whole WAL
     from tap_rest_api_msdk_spark.operators.dedup import lww_dedup
 
@@ -385,22 +359,34 @@ def test_racing_rebucket_forces_recompute(spark, table):
         assert out["version"] == m["version"]
 
 
-def test_racing_delta_stays_pending(spark, table):
+def _deltas(m):
+    return {f for fl in m.get("deltas", {}).values() for f in fl}
+
+
+@pytest.mark.parametrize("compactor", [
+    pytest.param(lambda t: t.compact_buckets(small_file_bytes=32 << 20, min_input_files=2),
+                 id="compact_buckets"),
+    pytest.param(lambda t: t.compact(), id="compact"),
+])
+def test_racing_delta_stays_pending(spark, table, compactor):
     """A racer's MOR delta appended to a due bucket mid-compaction is NOT
-    consumed: it stays pending and LWW re-applies it at read."""
+    consumed: the compaction rebases past it, the delta stays pending and
+    LWW re-applies it at read. Full compaction follows the same rule."""
     racer = LakeTable(spark, table.path, num_buckets=4)
     real_publish = table._publish
-    injected = {"done": False}
+    raced = set()
 
     def racing_publish(manifest):
-        if not injected["done"]:
-            injected["done"] = True
+        if not raced:
+            before = _deltas(racer.current_manifest())
             up(racer, [(11_000, 99, "up", "delta-raced")], 7, mode="mor")
+            raced.update(_deltas(racer.current_manifest()) - before)
         return real_publish(manifest)
 
     table._publish = racing_publish
-    out = table.compact_buckets(small_file_bytes=32 << 20, min_input_files=2)
+    out = compactor(table)
     table._publish = real_publish
     assert not out.get("skipped")
+    assert raced and raced <= _deltas(table.current_manifest())
     got = {r["id"]: (r["seq"], r["val"]) for r in table.to_df().collect()}
     assert got[99] == (11_000, "delta-raced")

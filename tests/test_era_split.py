@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from tap_rest_api_msdk_spark.streaming.laketable import (
     LakeTable,
     bucket_salt_era_to_partition,
+    key_hash,
     mm3_hash_int,
 )
 
@@ -76,6 +77,42 @@ def test_era_split_compact_preserves_state_and_prunes(spark, history):
     assert any(len(fl) > 1 for fl in m["files"].values())
 
 
+def test_era_split_rebucket_preserves_state_and_is_era_disjoint(spark, history):
+    """rebucket writes through the same rewrite job as compaction, so its
+    output gets the era layout too: live state byte-identical, and within
+    each new bucket the files cover disjoint ordering ranges."""
+    t = history
+    before = _snap(t)
+    t.era_split = 4
+    out = t.rebucket(8)
+    assert not out.get("skipped")
+    assert _snap(t) == before
+    m = t.current_manifest()
+    assert int(m["num_buckets"]) == 8 and not m.get("deltas")
+    assert all(len(fl) > 1 for fl in m["files"].values())  # several eras
+    # era-keyed files: every row sits in the output partition its (bucket,
+    # salt, seq era) hashes to, so a file holds one era of a bucket unless
+    # two of the bucket's groups hash to the same partition
+    S = {ent[0] for bm in m["slice_meta"].values() for ent in bm.values()}
+    assert len(S) == 1
+    S = S.pop()
+    files = sorted({f for fl in m["files"].values() for f in fl})
+    groups = (
+        spark.read.parquet(*files)
+        .select(F.input_file_name().alias("f"), "__bucket",
+                key_hash(["id"], S, "__salt__").alias("s"),
+                F.floor(F.col("seq") * 4 / 2000).cast("int").alias("e"))
+        .distinct().collect()
+    )
+    for r in groups:
+        part = int(os.path.basename(r["f"]).split("-")[1])
+        assert bucket_salt_era_to_partition(r["__bucket"], r["s"], r["e"], 8 * S * 4) == part
+    assert len({(r["__bucket"], r["e"]) for r in groups}) == 8 * 4
+    t.read_since(1800)
+    plan = t.last_read_plan
+    assert plan["files_scanned"] < plan["files_total"], plan
+
+
 def test_era_split_equivalent_to_plain_compact(spark, tmp_path):
     a = LakeTable(spark, str(tmp_path / "a"), num_buckets=2)
     b = LakeTable(spark, str(tmp_path / "b"), num_buckets=2)
@@ -119,7 +156,7 @@ def test_era_split_binpack_path(spark, history):
 
 def test_era_split_disables_without_stats(spark, history, monkeypatch):
     """Legacy tables (no zone maps) must compact exactly as before —
-    _era_bounds returns None and the layout falls back to 2-col keys."""
+    _cluster_bounds returns None and the layout falls back to 2-col keys."""
     t = history
     t.era_split = 4
     before = _snap(t)

@@ -96,13 +96,15 @@ def test_mor_exactly_once_and_mixed_mode(spark, wal, tmp_path):
 
 
 def test_mor_auto_compaction(spark, wal, tmp_path):
+    """mor has no pipeline auto-compaction: an explicit compact() between
+    batches folds the deltas so far into the base."""
     wal_df, _ = wal
-    mor = run_batch_replay(
-        spark, wal_df, str(tmp_path / "m4"),
-        conf(sink_mode="mor", auto_compact_every=2), slices=SLICES,
-    )
+    path, c = str(tmp_path / "m4"), conf(sink_mode="mor")
+    mor = run_batch_replay(spark, wal_df, path, c, slices=SLICES[:2])
+    assert not mor.compact().get("skipped")
+    mor = run_batch_replay(spark, wal_df, path, c, slices=SLICES[2:], start_batch_id=2)
     m = mor.current_manifest()
-    # batches 0,1,2 -> compaction fired after batch 1; batch 2's delta remains
+    # batches 0,1 -> compacted; batch 2's delta remains
     assert len([f for fl in m["deltas"].values() for f in fl]) > 0
     assert any(m["files"].values())
     full_cow = run_batch_replay(spark, wal_df, str(tmp_path / "ref2"), conf(), slices=SLICES)
