@@ -10,7 +10,10 @@ inference, and incremental search-query rendering.
   documented as requiring the pandas-UDF fallback.
 * :func:`infer_payload_struct` — samples N+1 payloads (``limit`` pushdown,
   mirroring the single discovery page, tap.py:608-618) and returns the
-  NESTED spark schema the native flatten projection consumes.
+  NESTED spark schema the native flatten projection consumes. The sample
+  goes back to the JVM as an Arrow frame and is inferred by the same JSON
+  reader as :func:`infer_json_schema_full` (the ``schema_evolution="full"``
+  whole-batch path): JVM-only jobs, no pickled Python-RDD stage.
 * :func:`render_search_query` — F10's ``string.Template`` substitution of
   ``$last_run_date`` into a server-side search expression
   (streams.py:378-387), including the request-body variant that parses the
@@ -21,14 +24,18 @@ from __future__ import annotations
 
 import json
 import re
+import shutil
 from string import Template
-from typing import Any, Optional
+from typing import Any, Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tap_rest_api_msdk_spark.session import arrow_frame
+
 _ARRAY_PATH = re.compile(r"^\$?\.?(?P<path>[A-Za-z0-9_.]*?)\.?\[\*\]$")
+_PAYLOADS = T.StructType([T.StructField("value", T.StringType(), True)])
 
 
 def parse_records_path(records_path: str) -> tuple[list[str], bool]:
@@ -147,20 +154,75 @@ def infer_payload_struct(
 ) -> T.StructType:
     """Nested StructType of a JSON payload column from an N+1 sample.
 
-    Uses ``spark.read.json`` over the sampled strings so nested
-    struct/array shapes survive (the flat genson-parity path in
-    functions/infer.py is for the FLATTENED record schema / catalog).
-    Preserves the reference's N+1 off-by-one (tap.py:636-637).
+    The sample is collected (``limit`` pushdown) and handed back to the
+    JVM as an Arrow frame, where the JSON reader of
+    :func:`infer_json_schema_full` infers it: the sample and the
+    whole-batch paths share one reader, and no row is pickled into a
+    Python RDD. Nested struct/array shapes survive (the flat
+    genson-parity path in functions/infer.py is for the FLATTENED record
+    schema / catalog). Preserves the reference's N+1 off-by-one
+    (tap.py:636-637).
     """
-    spark = df.sparkSession
-    rows = df.select(payload_col).limit(inference_records + 1).collect()
-    sample = [r[0] for r in rows if r[0] is not None]
+    rows = df.select(F.col(payload_col).cast("string")).limit(inference_records + 1).collect()
+    sample = [(r[0],) for r in rows if r[0] is not None]
     if not sample:
         return T.StructType([])
-    schema = spark.read.json(spark.sparkContext.parallelize(sample)).schema
-    # read.json appends _corrupt_record when the sample holds bad rows;
-    # that's a parser artifact, not a payload field
+    schema = _json_schema_jvm(arrow_frame(df.sparkSession, sample, _PAYLOADS))
+    # the JSON reader appends _corrupt_record when the sample holds bad
+    # rows; that's a parser artifact, not a payload field
     return T.StructType([f for f in schema.fields if f.name != "_corrupt_record"])
+
+
+def _json_schema_jvm(payloads: DataFrame) -> T.StructType:
+    """Schema the Scala ``DataFrameReader.json(Dataset[String])``
+    overload infers from a ``value: string`` frame, via py4j: plan-only,
+    no row crosses into Python."""
+    spark = payloads.sparkSession
+    jds = getattr(payloads._jdf, "as")(spark._jvm.org.apache.spark.sql.Encoders.STRING())
+    jschema = spark._jsparkSession.read().json(jds).schema()
+    return T._parse_datatype_json_string(jschema.json())
+
+
+def infer_json_schema_full(
+    payloads: DataFrame,
+    spill_dir: str,
+    attempts: Sequence[str] = ("jvm", "rdd", "spill"),
+) -> T.StructType:
+    """Whole-batch JSON payload schema inference over a one-column
+    ``value: string`` frame, trying in order:
+
+    - ``jvm``: :func:`_json_schema_jvm` (the fast path on classic
+      sessions; :func:`infer_payload_struct` uses it too).
+    - ``rdd``: ``spark.read.json(payloads.rdd.map(...))`` — classic
+      sessions where the JVM handle is unavailable.
+    - ``spill``: write the payloads as text under ``spill_dir`` and
+      ``read.json`` the files — the only API shape Spark Connect supports
+      (Connect has neither ``_jvm`` nor RDDs). ``spill_dir`` should sit on
+      the lake table's storage, which is shared on a real cluster by
+      construction; it is removed afterwards.
+
+    ``attempts`` is exposed so tests can pin a specific path.
+    """
+    spark_ = payloads.sparkSession
+    # null payloads carry no schema, and the RDD/JVM json readers would
+    # surface them as a _corrupt_record column — drop them for every path
+    payloads = payloads.filter(F.col("value").isNotNull())
+    last_err: Exception | None = None
+    for attempt in attempts:
+        try:
+            if attempt == "jvm":
+                return _json_schema_jvm(payloads)
+            if attempt == "rdd":
+                return spark_.read.json(payloads.rdd.map(lambda r: r[0])).schema
+            if attempt == "spill":
+                payloads.write.mode("overwrite").text(spill_dir)
+                try:
+                    return spark_.read.json(spill_dir).schema
+                finally:
+                    shutil.rmtree(spill_dir, ignore_errors=True)
+        except Exception as e:  # try the next, less-capable API shape
+            last_err = e
+    raise RuntimeError(f"all schema-inference paths failed ({attempts})") from last_err
 
 
 def render_search_query(

@@ -55,6 +55,7 @@ from pyspark.sql import types as T
 
 from tap_rest_api_msdk_spark.functions.infer import merge_schemas
 from tap_rest_api_msdk_spark.functions.sqlexpr import quote_ident, select_struct
+from tap_rest_api_msdk_spark.session import arrow_frame
 
 LATEST_POINTER = "_latest.json"
 
@@ -63,6 +64,15 @@ LATEST_POINTER = "_latest.json"
 # uses (slice mod S), and because S | SLICE_MOD the residues nest across
 # commits with different S (DESIGN_hierarchical_bucketing.md)
 SLICE_MOD = 64
+
+# lookup frames built from Python rows: (file basename, owning bucket)
+# ownership pairs and touched (bucket, slice64) granules
+_OWNED_PAIRS = T.StructType(
+    [T.StructField("__file", T.StringType()), T.StructField("__owned_bucket", T.IntegerType())]
+)
+_GRANULES = T.StructType(
+    [T.StructField("__b", T.IntegerType()), T.StructField("__s64", T.IntegerType())]
+)
 
 
 def key_hash(keys: Sequence[str], modulus: int, seed: Optional[str] = None):
@@ -980,7 +990,7 @@ class LakeTable:
                if col_ranges else {}),
         }
         if not files:
-            return self.spark.createDataFrame([], stored)
+            return arrow_frame(self.spark, [], stored)
         # schema evolution: read each file with the CURRENT table schema;
         # parquet reader fills missing columns with null by name.
         df = self.spark.read.schema(stored).parquet(*sorted(files))
@@ -1009,10 +1019,10 @@ class LakeTable:
         rows only count for the (file basename, bucket) ``pairs`` the
         manifest still references, otherwise the sharing bucket's old file
         would leak the rewritten bucket's stale rows. File basenames are
-        unique (epoch dir + task uuid)."""
-        lookup = self.spark.createDataFrame(
-            sorted(set(pairs)), "__file string, __owned_bucket int"
-        )
+        unique (epoch dir + task uuid). The pairs reach the JVM as one
+        Arrow frame (``arrow_frame``), so building the broadcast side is
+        a JVM-only stage whatever the pair count."""
+        lookup = arrow_frame(self.spark, sorted(set(pairs)), _OWNED_PAIRS)
         df = df.withColumn(
             "__file", F.element_at(F.split(F.input_file_name(), "/"), -1)
         )
@@ -1188,7 +1198,7 @@ class LakeTable:
         schema = T.StructType.fromJson(new["schema"])
         stored = T.StructType(schema.fields + [T.StructField("__bucket", T.IntegerType(), True)])
         if not added:
-            return self.spark.createDataFrame([], stored)
+            return arrow_frame(self.spark, [], stored)
         return self.spark.read.schema(stored).parquet(*sorted(added))
 
     # ------------------------------------------------------------------
@@ -1726,8 +1736,8 @@ class LakeTable:
             raise ValueError(f"lookup needs exactly the merge keys {keys}")
         schema = T.StructType.fromJson(m["schema"])
         probe_schema = T.StructType([f for f in schema.fields if f.name in keys])
-        probe = self.spark.createDataFrame(
-            [tuple(values[f.name] for f in probe_schema.fields)], probe_schema
+        probe = arrow_frame(
+            self.spark, [tuple(values[f.name] for f in probe_schema.fields)], probe_schema
         )
         row = probe.select(
             key_hash(keys, self.num_buckets).alias("b"),
@@ -2192,7 +2202,8 @@ class LakeTable:
         if not key_values:
             return None
         probe_schema = T.StructType([f for f in schema.fields if f.name in keys])
-        probe = self.spark.createDataFrame(
+        probe = arrow_frame(
+            self.spark,
             [tuple(kv[f.name] for f in probe_schema.fields) for kv in key_values],
             probe_schema,
         ).dropDuplicates(keys)
@@ -2709,7 +2720,7 @@ class LakeTable:
         schema = T.StructType.fromJson(m["schema"])
         stored = T.StructType(schema.fields + [T.StructField("__bucket", T.IntegerType(), True)])
         if not files:
-            return self.spark.createDataFrame([], stored).drop("__bucket")
+            return arrow_frame(self.spark, [], stored).drop("__bucket")
         df = self._owned_rows(self.spark.read.schema(stored).parquet(*sorted(files)), pairs)
         # granule pruning: a selected file may span untouched residues —
         # those rows resolve identically on both sides, so drop them
@@ -2718,7 +2729,7 @@ class LakeTable:
         # (the common whole-table-churn case): skip the filter.
         keys = list(m["keys"])
         if allowed_slices is not None:
-            sl = self.spark.createDataFrame(allowed_slices, "__b int, __s64 int")
+            sl = arrow_frame(self.spark, allowed_slices, _GRANULES)
             df = df.withColumn("__s64", key_hash(keys, SLICE_MOD, "__salt__"))
             df = df.join(
                 F.broadcast(sl),
@@ -2852,7 +2863,7 @@ class LakeTable:
             ]
         )
         if not plan["touched"]:
-            return self.spark.createDataFrame([], out_schema)
+            return arrow_frame(self.spark, [], out_schema)
         fully_touched = all(
             len(touched) == S_b for S_b, touched in plan["touched"].values()
         )

@@ -50,13 +50,6 @@ def lineage_metrics(
     )
 
 
-def append_metrics(metrics_df: DataFrame, table_path: str, batch_id: int, stream: str) -> None:
-    out = metrics_df.withColumn("batch_id", F.lit(batch_id)).withColumn(
-        "stream", F.lit(stream)
-    )
-    out.write.mode("append").parquet(os.path.join(table_path, "metrics"))
-
-
 def append_metrics_rows(rows, schema, table_path: str, batch_id: int, stream: str) -> None:
     """Driver-side metrics append via pyarrow (rows are already collected —
     spinning a Spark job to write ~num_buckets rows costs more than the

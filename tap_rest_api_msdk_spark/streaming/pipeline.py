@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 
 from tap_rest_api_msdk_spark.functions.flatten import flatten_dataframe
 from tap_rest_api_msdk_spark.operators.incremental import incremental_filter
+from tap_rest_api_msdk_spark.sources.reader import infer_json_schema_full
 from tap_rest_api_msdk_spark.streaming.bookmarks import BookmarkStore
 from tap_rest_api_msdk_spark.streaming.laketable import SLICE_MOD, LakeTable, key_hash
 from tap_rest_api_msdk_spark.streaming.metrics import append_metrics_rows, lineage_metrics
@@ -125,54 +126,6 @@ class PipelineConfig:
     # "drop" filters them, "dlq" additionally lands the raw rows in a
     # dead-letter parquet dir under the table path for replay/inspection.
     malformed_policy: str = "keep"
-
-
-def infer_json_schema_full(
-    payloads: DataFrame,
-    spill_dir: str,
-    attempts: Sequence[str] = ("jvm", "rdd", "spill"),
-) -> T.StructType:
-    """Whole-batch JSON payload schema inference over a one-column
-    ``value: string`` frame, trying in order:
-
-    - ``jvm``: the Scala ``DataFrameReader.json(Dataset[String])`` overload
-      via py4j — plan-only, no row crosses into Python (the fast path on
-      classic sessions).
-    - ``rdd``: ``spark.read.json(payloads.rdd.map(...))`` — classic
-      sessions where the JVM handle is unavailable.
-    - ``spill``: write the payloads as text under ``spill_dir`` and
-      ``read.json`` the files — the only API shape Spark Connect supports
-      (Connect has neither ``_jvm`` nor RDDs). ``spill_dir`` should sit on
-      the lake table's storage, which is shared on a real cluster by
-      construction; it is removed afterwards.
-
-    ``attempts`` is exposed so tests can pin a specific path.
-    """
-    spark_ = payloads.sparkSession
-    # null payloads carry no schema, and the RDD/JVM json readers would
-    # surface them as a _corrupt_record column — drop them for every path
-    payloads = payloads.filter(F.col("value").isNotNull())
-    last_err: Exception | None = None
-    for attempt in attempts:
-        try:
-            if attempt == "jvm":
-                jvm = spark_._jvm
-                jds = getattr(payloads._jdf, "as")(jvm.org.apache.spark.sql.Encoders.STRING())
-                jschema = spark_._jsparkSession.read().json(jds).schema()
-                return T._parse_datatype_json_string(jschema.json())
-            if attempt == "rdd":
-                return spark_.read.json(payloads.rdd.map(lambda r: r[0])).schema
-            if attempt == "spill":
-                payloads.filter(F.col("value").isNotNull()).write.mode("overwrite").text(spill_dir)
-                try:
-                    return spark_.read.json(spill_dir).schema
-                finally:
-                    import shutil
-
-                    shutil.rmtree(spill_dir, ignore_errors=True)
-        except Exception as e:  # try the next, less-capable API shape
-            last_err = e
-    raise RuntimeError(f"all schema-inference paths failed ({attempts})") from last_err
 
 
 def prepare_batch(df: DataFrame, conf: PipelineConfig, bookmark: Any) -> DataFrame:

@@ -9,9 +9,16 @@ micro-batch that does not fold must:
 * read HEAD exactly once (``LakeTable._current_core``);
 * build its plans with a number of py4j round trips that does not grow
   with the payload's width (60 fields within 10% of 15 fields).
+
+No engine path hands Python rows to Spark as a pickled Python RDD: payload
+inference, the ownership and granule lookups, point probes and empty
+reads all ship Arrow, so ``SparkContext.parallelize`` is never called.
 """
 
 import gc
+from contextlib import contextmanager
+
+from pyspark import SparkContext
 
 from py4j import protocol as proto
 from py4j.clientserver import ClientServerConnection
@@ -19,7 +26,11 @@ from pyspark.sql import functions as F
 
 from tap_rest_api_msdk_spark.sources.wal_synth import synth_repo_wal
 from tap_rest_api_msdk_spark.streaming.laketable import LakeTable
-from tap_rest_api_msdk_spark.streaming.pipeline import PipelineConfig, process_batch
+from tap_rest_api_msdk_spark.streaming.pipeline import (
+    PipelineConfig,
+    process_batch,
+    run_batch_replay,
+)
 
 BOOT, BATCH = 2000, 500
 RELEASE = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
@@ -92,3 +103,67 @@ def test_steady_commit_fixed_cost(spark, tmp_path):
         assert 1 <= cost["jobs"] <= 2, cost
         assert cost["heads"] == 1, cost
     assert wide["py4j"] <= 1.10 * narrow["py4j"], (narrow, wide)
+
+
+@contextmanager
+def _parallelize_calls(counts: dict, name: str):
+    """Count ``SparkContext.parallelize`` calls inside the block: every
+    ``createDataFrame(list)``, and PySpark's silent non-Arrow fallback,
+    goes through it."""
+    calls = [0]
+    orig = SparkContext.parallelize
+
+    def counting(self, *args, **kwargs):
+        calls[0] += 1
+        return orig(self, *args, **kwargs)
+
+    SparkContext.parallelize = counting
+    try:
+        yield
+    finally:
+        SparkContext.parallelize = orig
+        counts[name] = calls[0]
+
+
+def test_engine_paths_never_parallelize(spark, tmp_path):
+    counts: dict = {}
+    # JSON WAL; the payload gains metadata.stars from seq 450 on, the first
+    # event of slice 2, so slice 2's inference sample sees the evolution
+    wal = synth_repo_wal(spark, 904, n_repos=10, n_paths=40, evolve_at=450, partitions=2)
+    conf = PipelineConfig(stream="json", num_buckets=4)
+    with _parallelize_calls(counts, "replay: 2 slices, inference, granular COW"):
+        t = run_batch_replay(spark, wal, str(tmp_path / "j"), conf, [(-1, 449), (449, 899)])
+    assert any("stars" in c for c in t.to_df().columns)
+    v = t.current_manifest()["version"]
+    with _parallelize_calls(counts, "granular COW slice"):
+        out = process_batch(t, conf, wal.filter(F.col("seq") > 899), 2)
+    assert not out.get("skipped")
+    head = t.current_manifest()["version"]
+    key = t.to_df().select("repo", "path").first().asDict()
+    with _parallelize_calls(counts, "reads"):
+        assert t.to_df().count() > 0
+        assert t.read_since(450).count() > 0
+        assert t.read_since(10**9).count() == 0
+        assert t.cdc_diff(v).count() > 0
+        assert t.cdc_diff(head).count() == 0
+        assert t.changes_since(head).count() == 0
+        assert t.lookup(key).count() == 1
+    with _parallelize_calls(counts, "point update/delete"):
+        assert t.update_keys([key], {"content": F.lit("x")}, batch_id=10)["n_updated"] == 1
+        assert t.delete_keys([key], batch_id=11)["n_deleted"] == 1
+
+    # cow_incremental: delta commits, then a fold of the granules due
+    swal = synth_repo_wal(spark, 1600, n_repos=10, n_paths=40, partitions=2, shredded=True)
+    s = LakeTable(spark, str(tmp_path / "s"), num_buckets=4)
+    boot = PipelineConfig(stream="boot", num_buckets=4)
+    process_batch(s, boot, swal.filter(F.col("seq") < 1000), 0)
+    inc = PipelineConfig(stream="inc", num_buckets=4, sink_mode="cow_incremental", fold_every=2)
+    folds = []
+    with _parallelize_calls(counts, "delta commits and folds"):
+        for i in range(3):
+            lo = 1000 + 200 * i
+            batch = swal.filter((F.col("seq") >= lo) & (F.col("seq") < lo + 200))
+            folds.append(process_batch(s, inc, batch, i)["fold"])
+        assert s.to_df().count() > 0
+    assert any(not f.get("skipped") for f in folds), folds
+    assert all(n == 0 for n in counts.values()), counts
