@@ -75,7 +75,7 @@ def span_report(t, hi_seq: int) -> dict:
     # bulk shape): measure what read_since must scan once chains fold
     for b, flist in m.get("files", {}).items():
         for f in flist:
-            st = _stat_bounds(stats.get(os.path.basename(f)), order0, order0)
+            st = _stat_bounds(stats.get(os.path.basename(f)), order0)
             if st is None:
                 continue
             lo, hi = st
@@ -87,7 +87,7 @@ def span_report(t, hi_seq: int) -> dict:
             # fold outputs live in epoch dirs > the bulk batch's epoch 0
             if "/epoch=0000000000-" in f:
                 continue
-            st = _stat_bounds(stats.get(os.path.basename(f)), order0, order0)
+            st = _stat_bounds(stats.get(os.path.basename(f)), order0)
             if st is None:
                 continue
             fold_files += 1

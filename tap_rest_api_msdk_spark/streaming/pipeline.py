@@ -98,21 +98,14 @@ class PipelineConfig:
     # (e.g. scripts/run_pipeline.py --mode maintenance from cron).
     sink_mode: str = "cow"
     fold_every: Optional[int] = None  # cow_incremental stagger (None = table default)
-    # cow_incremental fold scheduling: "commits" (delta-chain length, the
-    # Hudi NUM_COMMITS trigger) or "size" (LSM size-tiered: pending delta
-    # bytes vs granule base bytes — cold granules with trivial-byte deltas
-    # never rewrite under Zipf-skewed write patterns)
-    fold_trigger: Optional[str] = None  # None = table default ("commits")
-    fold_size_ratio: Optional[float] = None
-    fold_min_bytes: Optional[int] = None
     # target rows per DELTA file for mor/cow_incremental micro-batches:
     # caps the delta write fan-out at ceil(batch_rows / this), writing
-    # files SHARED across buckets (the claim format's collision case;
-    # folds apportion shared-file bytes per claim). A small batch would
-    # otherwise write up to num_buckets near-empty files whose footers and
-    # commit latency dominate (measured +30% steady ingest at 64 buckets,
-    # 2.9x at 1024). Large batches are unaffected: the cap only ever
-    # LOWERS the partition count below one file per (bucket, salt).
+    # files SHARED across buckets (the claim format's collision case). A
+    # small batch would otherwise write up to num_buckets near-empty files
+    # whose footers and commit latency dominate (measured +30% steady
+    # ingest at 64 buckets, 2.9x at 1024). Large batches are unaffected:
+    # the cap only ever LOWERS the partition count below one file per
+    # (bucket, salt).
     # batch_rows comes from the stream's previous batch, recorded in the
     # snapshot, so the write starts before this batch's lineage job has
     # counted it. A batch expected to fit in ONE file (the steady CDC
@@ -213,12 +206,8 @@ def process_batch(
     # the table has committed `result_limit` records; a partial batch is
     # truncated deterministically by replication-key order
     # per-STREAM counter map (multi-writer safe: dict-valued extra keys
-    # merge per entry on CAS rebase); legacy single-counter manifests
-    # attribute their total to this stream
-    _rc_by = (snap or {}).get("records_committed_by") or {}
-    records_committed = _rc_by.get(
-        conf.stream, 0 if _rc_by else (snap or {}).get("records_committed", 0)
-    )
+    # merge per entry on CAS rebase)
+    records_committed = ((snap or {}).get("records_committed_by") or {}).get(conf.stream, 0)
     if conf.result_limit is not None:
         remaining = conf.result_limit - records_committed
         if remaining <= 0:
@@ -352,12 +341,6 @@ def process_batch(
     shaped = prepare_batch(raw, conf, None)  # bookmark already applied
     if conf.fold_every:
         table.fold_every = conf.fold_every
-    if conf.fold_trigger:
-        table.fold_trigger = conf.fold_trigger
-    if conf.fold_size_ratio is not None:
-        table.fold_size_ratio = conf.fold_size_ratio
-    if conf.fold_min_bytes is not None:
-        table.fold_min_bytes = conf.fold_min_bytes
 
     # The lineage job runs concurrently with the merge write; its rows feed
     # the commit payloads (bookmarks, counters, touched buckets) as

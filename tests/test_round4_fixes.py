@@ -7,10 +7,7 @@
    idempotence check and apply twice (and MOR would append duplicate
    delta files).
 2. The MOR rebase carries the same key-type-drift guard as COW.
-3. A named writer resuming on a PRE-UPGRADE manifest (single global
-   ``batch_id``, no ``batch_ids`` map) falls back to the legacy 'default'
-   ledger entry, so replayed batches stay suppressed across the upgrade.
-4. A partial fold claims slice residues ONLY for the granules it actually
+3. A partial fold claims slice residues ONLY for the granules it actually
    rewrote (``_files_and_meta(allowed=...)``) — over-claiming would drag
    fold output into every later fold of unrelated granules.
 """
@@ -110,36 +107,6 @@ def test_mor_rebase_refuses_key_type_drift(spark, tmp_path):
     rows = LakeTable(spark, path).to_df().collect()
     assert [r["text"] for r in rows] == ["w1"]
     assert rows[0]["id"] == 1.0
-
-
-def test_legacy_manifest_ledger_fallback(spark, tmp_path):
-    """A named stream resuming on a pre-upgrade manifest (global batch_id,
-    no batch_ids map) must still suppress replayed batches."""
-    path = str(tmp_path / "tbl_legacy")
-    t = LakeTable(spark, path, num_buckets=4)
-    t.merge_upsert(_rows(spark, [1], 4, "old"), keys=["id"], order_by=["seq"],
-                   batch_id=4)
-    # rewrite the manifest as a LEGACY one: drop the batch_ids map
-    mdir = os.path.join(path, "manifests")
-    name = sorted(os.listdir(mdir))[-1]
-    with open(os.path.join(mdir, name)) as fh:
-        m = json.load(fh)
-    m.pop("batch_ids")
-    with open(os.path.join(mdir, name), "w") as fh:
-        json.dump(m, fh)
-
-    t2 = LakeTable(spark, path, num_buckets=4)
-    assert t2.last_batch_id_for("my_stream") == 4  # legacy fallback
-    out = t2.merge_upsert(_rows(spark, [2], 3, "replay"), keys=["id"],
-                          order_by=["seq"], batch_id=3, writer_id="my_stream")
-    assert out.get("skipped")
-    # a genuinely NEW batch commits and adopts the per-writer ledger
-    out2 = t2.merge_upsert(_rows(spark, [2], 5, "new"), keys=["id"],
-                           order_by=["seq"], batch_id=5, writer_id="my_stream")
-    assert not out2.get("skipped")
-    assert t2.current_manifest()["batch_ids"]["my_stream"] == 5
-    # post-upgrade manifests do NOT fall back (independent writers again)
-    assert t2.last_batch_id_for("other_stream") == -1
 
 
 def test_files_and_meta_allowed_restricts_claims():
@@ -347,81 +314,6 @@ def test_expire_manifests_bounds_log_and_keeps_head(spark, tmp_path):
     t.merge_upsert(_rows(spark, [3], 9, "post"), keys=["id"], order_by=["seq"],
                    batch_id=9, mode="mor")
     assert {r["id"] for r in t.to_df().collect()} == {1, 2, 3}
-
-
-def test_size_tiered_folds_hot_granules_spare_cold(spark, tmp_path):
-    """LSM size-tiered fold scheduling (fold_trigger='size'): under a
-    Zipf-skewed write pattern, hot granules fold when their pending delta
-    BYTES reach the threshold, while cold granules — whose delta-file
-    COUNT exceeds fold_every but whose bytes are trivial — are never
-    rewritten (the commits trigger would have folded them)."""
-    import hashlib
-
-    path = str(tmp_path / "tbl_size_fold")
-    t = LakeTable(spark, path, num_buckets=8)
-    t.fold_trigger = "size"
-    t.fold_min_bytes = 40_000
-    t.fold_every = 5  # what the commits trigger WOULD have used
-
-    def blob(k, b):  # poorly compressible payload
-        return "".join(
-            hashlib.md5(f"{k}-{b}-{i}".encode()).hexdigest() for i in range(10)
-        )
-
-    # bucket of each candidate key under xxhash64(id) % 8
-    ids = list(range(4000))
-    kb = {
-        r["id"]: r["b"]
-        for r in spark.createDataFrame([(i,) for i in ids], "id long")
-        .withColumn("b", F.pmod(F.xxhash64("id"), F.lit(8)).cast("int"))
-        .collect()
-    }
-    hot_buckets, cold_buckets = {0, 1}, {2, 3, 4, 5, 6, 7}
-    hot = [i for i in ids if kb[i] in hot_buckets][:600]
-    cold_by_bucket = {b: [i for i in ids if kb[i] == b] for b in cold_buckets}
-
-    def df_of(rows, seq):
-        return spark.createDataFrame(
-            [(int(i), int(seq), blob(i, seq)) for i in rows],
-            "id long, seq long, text string",
-        )
-
-    t.merge_upsert(df_of(ids, 0), keys=["id"], order_by=["seq"], batch_id=0,
-                   mode="cow")
-    base_files = {b: list(fl) for b, fl in t.current_manifest()["files"].items()}
-    # Zipf shape: hot batches and cold trickle batches ALTERNATE, so cold
-    # delta files never share a physical file with hot rows (a shared file
-    # folds as a whole regardless of trigger — whole-file closure); every
-    # cold bucket's chain still grows past fold_every, with trivial bytes
-    for batch in range(1, 13):
-        if batch % 2 == 1:
-            rows = hot
-        else:
-            rows = [cold_by_bucket[b][batch] for b in sorted(cold_buckets)]
-        t.merge_upsert(df_of(rows, batch), keys=["id"], order_by=["seq"],
-                       batch_id=batch, mode="cow_incremental")
-
-    m = t.current_manifest()
-    assert int(m.get("fold_round", 0)) >= 1  # hot granules DID fold
-    for b in hot_buckets:
-        # folded: fresh base files, bounded delta chain
-        assert m["files"][str(b)] != base_files[str(b)]
-        assert len(m.get("deltas", {}).get(str(b), [])) < 12
-    spared = 0
-    for b in cold_buckets:
-        chain = m.get("deltas", {}).get(str(b), [])
-        if len(chain) >= t.fold_every:  # commits trigger would have fired
-            assert m["files"][str(b)] == base_files[str(b)], b  # no rewrite
-            spared += 1
-    assert spared >= 4, spared
-    # exactness is untouched by the scheduler: LWW state is the fixpoint
-    got = {r["id"]: r["seq"] for r in t.to_df().collect()}
-    assert all(got[i] == 11 for i in hot)  # last hot batch
-    touched_cold = {
-        cold_by_bucket[b][batch] for b in cold_buckets for batch in range(2, 13, 2)
-    }
-    assert all(got[i] >= 1 for i in touched_cold)
-    assert all(got[i] == 0 for i in ids if i not in hot and i not in touched_cold)
 
 
 def test_disjoint_slice_cow_writers_both_land_without_recompute(spark, tmp_path):

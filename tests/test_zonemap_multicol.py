@@ -1,7 +1,7 @@
 """Multi-column zone maps (r4 verdict item #6): ``file_stats`` keyed
 col -> [lo, hi], ``read_range(col=...)`` pruning on a non-ordering
-column (the event-time window read), legacy-format fallback, and the
-deltas soundness degradation.
+column (the event-time window read), and the deltas soundness
+degradation.
 
 Era-disjointness on an append-mostly table comes from (bucket, slice)-
 granular COW: a commit touching only new keys rewrites only its own
@@ -12,7 +12,6 @@ a keyed LWW table)."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -50,6 +49,10 @@ def test_stats_columns_harvested_and_persisted(spark, table):
         assert set(entry) == {"seq", "ts"}
         for lohi in entry.values():
             assert lohi[0] <= lohi[1]
+        assert _stat_bounds(entry, "ts") == entry["ts"]
+        assert _stat_bounds(entry, "text") is None
+    assert _stat_bounds({"ts": [1, 2]}, "ts") == [1, 2]
+    assert _stat_bounds(None, "seq") is None
     # reopen: stats_columns is manifest-authoritative
     t2 = LakeTable(spark, table.path, num_buckets=4)
     assert t2.stats_columns == ["ts"]
@@ -84,52 +87,6 @@ def test_col_range_degrades_to_residual_under_deltas(spark, table):
 def test_unknown_col_range_refused(spark, table):
     with pytest.raises(ValueError, match="unknown column"):
         table.read_range(0, 1, col="nope").collect()
-
-
-def test_legacy_list_format_fallback(spark, table):
-    """Pre-r5 manifests store file_stats as bare [lo, hi] lists for the
-    ordering column. A table carrying them must: keep order-column
-    pruning, return exact (unpruned) results for col reads, and merge
-    formats cleanly on the next commit."""
-    assert _stat_bounds([3, 7], "seq", "seq") == [3, 7]
-    assert _stat_bounds([3, 7], "ts", "seq") is None
-    assert _stat_bounds({"ts": [1, 2]}, "ts", "seq") == [1, 2]
-    assert _stat_bounds(None, "seq", "seq") is None
-
-    # downgrade the committed manifest to the legacy format in place
-    mpath = table._manifest_path(table.current_manifest()["version"])
-    with open(mpath) as fh:
-        core = json.load(fh)
-    assert "sections_ref" in core or "file_stats" in core
-    t = LakeTable(spark, table.path, num_buckets=4)
-    m = t.current_manifest()
-    legacy = {bn: entry["seq"] for bn, entry in m["file_stats"].items()}
-    m2 = dict(m, file_stats=legacy)
-    # write an unsplit manifest one version ahead (legacy shape predates
-    # split sections anyway)
-    m2["version"] = m["version"] + 1
-    m2.pop("sections_ref", None)
-    with open(t._manifest_path(m2["version"]), "w") as fh:
-        json.dump(m2, fh)
-    t = LakeTable(spark, table.path, num_buckets=4)
-    assert not isinstance(
-        next(iter(t.current_manifest()["file_stats"].values())), dict
-    )
-    # ordering-column pruning still works off legacy entries
-    t.read_since(400)
-    plan = t.last_read_plan
-    assert plan["files_scanned"] < plan["files_total"], plan
-    # ts read: exact, merely unpruned
-    got = {r["id"] for r in t.read_range(400, 1000, col="ts").collect()}
-    assert got == set(range(400, 420))
-    assert t.last_read_plan["files_scanned"] == t.last_read_plan["files_total"]
-    # next commit merges formats without error; new files carry dicts
-    t.merge_upsert(_rows(spark, 420, 425), keys=["id"], order_by=["seq"],
-                   batch_id=2, op_col=None)
-    stats = t.current_manifest()["file_stats"]
-    assert any(isinstance(e, dict) for e in stats.values())
-    got = {r["id"] for r in t.read_range(400, 1000, col="ts").collect()}
-    assert got == set(range(400, 425))
 
 
 def test_stats_survive_maintenance_multicol(spark, table):
