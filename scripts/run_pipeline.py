@@ -22,6 +22,7 @@ entirely from cluster resources (see SCALE.md).
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import os
 import sys
@@ -207,7 +208,7 @@ def main(argv=None) -> int:
 
         with open(args.tap_config) as fh:
             stream, conf, _planner = build_pipelines(json.load(fh))[0]
-        conf.num_buckets = args.num_buckets
+        conf = dataclasses.replace(conf, num_buckets=args.num_buckets)
     else:
         conf = PipelineConfig(
             stream="cdc",

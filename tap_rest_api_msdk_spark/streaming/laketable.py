@@ -2372,8 +2372,8 @@ class LakeTable:
         64 buckets / 50k-row batches and 2.9x at 1024 buckets; it matters
         whenever batch_rows is small against num_buckets and the
         footers/commit latency dominate. The pipeline sizes it from the
-        stream's previous batch (PipelineConfig.delta_file_rows, default
-        "auto" = ~4096 rows/file).
+        stream's previous batch at ``pipeline.DELTA_FILE_ROWS_AUTO``
+        (4096) rows per file.
 
         Multi-writer: delta files are independent of the base snapshot, so
         a lost CAS always rebases (append our entries onto the fresh

@@ -3,17 +3,19 @@
 Reference loop: paginator -> request -> parse_response -> post_process ->
 RECORD/STATE **[inherited: singer-sdk, §2.4]**. Spark loop (per micro-batch):
 
-  scan WAL slice (start,end] -> filter(rk > bookmark) -> flatten(payload) ->
-  within-batch LWW -> LakeTable.merge_upsert (idempotent batch id, bookmark
-  + lineage committed atomically with the data)
+  scan WAL slice (start,end] -> filter(rk > bookmark) -> resolve payload
+  schema -> flatten(payload) -> within-batch LWW -> LakeTable.merge_upsert
+  (idempotent batch id, bookmark, payload schema + lineage committed
+  atomically with the data)
 
 One commit = one snapshot and, in the steady delta-append case, one write
 job. :func:`process_batch` reads HEAD once and hands that snapshot to the
-ledger check, the bookmark, the record counter, the merge and the fold
-after it; only a lost CAS re-reads HEAD. The lineage aggregate (per-bucket
-counts, offsets, high watermarks) runs as a second job concurrently with
-the write and resolves into the same atomic commit. A delta batch that
-fits one file is written by a single shuffle-free job.
+ledger check, the bookmark, the record counter, the payload-schema
+resolver, the merge and the fold after it; only a lost CAS re-reads HEAD.
+The lineage aggregate (per-bucket counts, offsets, high watermarks) runs as
+a second job concurrently with the write and resolves into the same atomic
+commit. A delta batch that fits one file is written by a single
+shuffle-free job.
 
 Two drivers share the exact same batch processor:
 
@@ -28,40 +30,39 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
-from typing import Any, Optional, Sequence, Union
+from functools import reduce
+from typing import Any, Optional, Sequence
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tap_rest_api_msdk_spark.functions.flatten import flatten_dataframe
-from tap_rest_api_msdk_spark.operators.incremental import incremental_filter
+from tap_rest_api_msdk_spark.functions.infer import merge_struct_types
+from tap_rest_api_msdk_spark.operators.incremental import incremental_filter, result_limit
+from tap_rest_api_msdk_spark.sources import reader
 from tap_rest_api_msdk_spark.sources.reader import infer_json_schema_full
 from tap_rest_api_msdk_spark.streaming.bookmarks import BookmarkStore
 from tap_rest_api_msdk_spark.streaming.laketable import SLICE_MOD, LakeTable, key_hash
 from tap_rest_api_msdk_spark.streaming.metrics import append_metrics_rows, lineage_metrics
 
 
-# "auto" delta fan-out target (rows per delta file). 4096 puts the bench's
-# 50k-row steady batches at ~13 files — the measured knee (16 files beat
-# both 64 and 4 on the 30-batch steady shape; see delta_file_rows below).
+# Target rows per DELTA file of a mor/cow_incremental batch: the delta write
+# fan-out is capped at ceil(batch_rows / this), so files are SHARED across
+# buckets. Uncapped, a small batch writes up to num_buckets near-empty files
+# whose footers and commit latency dominate (measured +30% steady ingest at
+# 64 buckets, 2.9x at 1024); 4096 puts 50k-row steady batches at ~13 files,
+# the measured knee (16 files beat both 64 and 4 on the 30-batch steady
+# shape). batch_rows is the stream's previous batch, kept in the snapshot.
 DELTA_FILE_ROWS_AUTO = 4096
 
 
-def _resolve_delta_file_rows(v) -> Optional[int]:
-    if v is None:
-        return None
-    if v == "auto":
-        return DELTA_FILE_ROWS_AUTO
-    # bool is an int subclass: True would mean one delta file per row
-    if isinstance(v, int) and not isinstance(v, bool) and v > 0:
-        return v
-    raise ValueError(f"delta_file_rows {v!r} (expected 'auto', a positive int, or None)")
-
-
-@dataclass
+@dataclass(frozen=True)
 class PipelineConfig:
-    """Resolved engine config for one stream (F6 analog at the Spark layer)."""
+    """Resolved engine config for one stream (F6 analog at the Spark layer).
+    Frozen: what a stream learns as it runs (bookmarks, counters, payload
+    schema) is committed in the table's manifest, never kept here."""
 
     stream: str
     keys: Sequence[str] = ("repo", "path")
@@ -69,6 +70,8 @@ class PipelineConfig:
     order_by: Sequence[str] = ("seq", "commit")  # deterministic LWW tie-break
     op_col: Optional[str] = "op"
     payload_col: Optional[str] = "payload"
+    # a SUPPLIED payload schema (F5 file/inline bypass); None = discovered
+    # and committed per stream in the manifest (F4)
     payload_schema: Optional[T.StructType] = None
     except_keys: list = field(default_factory=list)
     store_raw_json_message: bool = False
@@ -80,14 +83,14 @@ class PipelineConfig:
     # auto from cores): decouples write parallelism from the bucket layout
     files_per_bucket: Optional[int] = None
     # payload schema drift handling (FX6): "fixed" trusts the discovered
-    # schema for the stream's lifetime (fastest; late-appearing fields are
-    # dropped); "sample" re-samples N+1 payloads per batch and additively
-    # merges the nested schema (catches fields that appear at batch
-    # boundaries — the CDC evolution shape); "full" infers over the whole
-    # batch via a JVM-native json read (exact, one extra parse pass).
+    # schema for the stream's lifetime, restarts included (fastest;
+    # late-appearing fields are dropped); "sample" re-samples N+1 payloads
+    # per batch and additively merges the nested schema (catches fields
+    # that appear at batch boundaries — the CDC evolution shape); "full"
+    # infers over the whole batch via a JVM-native json read (exact, one
+    # extra parse pass).
     schema_evolution: str = "sample"
     inference_records: int = 50
-    _schema_discovered: bool = False  # set by the pipeline on first inference
     # sink write strategy: "cow" rewrites affected buckets fully merged;
     # "cow_incremental" (DESIGN_hierarchical_bucketing.md) appends delta
     # files (O(batch) writes, resolved at read) then folds the (bucket,
@@ -98,22 +101,6 @@ class PipelineConfig:
     # (e.g. scripts/run_pipeline.py --mode maintenance from cron).
     sink_mode: str = "cow"
     fold_every: Optional[int] = None  # cow_incremental stagger (None = table default)
-    # target rows per DELTA file for mor/cow_incremental micro-batches:
-    # caps the delta write fan-out at ceil(batch_rows / this), writing
-    # files SHARED across buckets (the claim format's collision case). A
-    # small batch would otherwise write up to num_buckets near-empty files
-    # whose footers and commit latency dominate (measured +30% steady
-    # ingest at 64 buckets, 2.9x at 1024). Large batches are unaffected:
-    # the cap only ever LOWERS the partition count below one file per
-    # (bucket, salt).
-    # batch_rows comes from the stream's previous batch, recorded in the
-    # snapshot, so the write starts before this batch's lineage job has
-    # counted it. A batch expected to fit in ONE file (the steady CDC
-    # shape) commits in two concurrent single-task jobs: the write (LWW
-    # aggregate in the scan task, no exchange) and the lineage aggregate.
-    # "auto" (the default) targets DELTA_FILE_ROWS_AUTO rows per file;
-    # None = uncapped, the pre-r5 layout; an int = explicit target.
-    delta_file_rows: Union[int, str, None] = "auto"
     # malformed payloads (unparseable JSON -> null struct after from_json):
     # "keep" emits all-null flattened fields (the tap's permissive shape),
     # "drop" filters them, "dlq" additionally lands the raw rows in a
@@ -121,27 +108,72 @@ class PipelineConfig:
     malformed_policy: str = "keep"
 
 
-def prepare_batch(df: DataFrame, conf: PipelineConfig, bookmark: Any) -> DataFrame:
-    """bookmark filter -> flatten: the record-shaping stage (F10 + F1)."""
-    out = incremental_filter(df, conf.replication_key, bookmark)
-    if conf.payload_col and conf.payload_schema is not None:
-        keep = [c for c in df.columns if c != conf.payload_col]
-        out = flatten_dataframe(
-            out,
-            conf.payload_col,
-            conf.payload_schema,
-            except_keys=conf.except_keys,
-            keep_cols=keep,
-            store_raw_json_message=conf.store_raw_json_message,
-        )
-    return out
+def committed_payload_schema(snap: Optional[dict], stream: str) -> Optional[T.StructType]:
+    """The payload schema ``stream`` committed with its last batch, or None."""
+    js = ((snap or {}).get("payload_schema") or {}).get(stream)
+    return T.StructType.fromJson(js) if js else None
+
+
+def resolve_payload_schema(
+    snap: Optional[dict], conf: PipelineConfig, raw: DataFrame, table_path: str, batch_id: int
+) -> Optional[T.StructType]:
+    """The payload schema a batch flattens with and commits (F4 discovery,
+    FX6 drift; tap.py:557-640 analog), or None. The stream's schema so far
+    is the one ``snap`` committed for it, whatever this process has seen:
+
+    * shredded struct payload (the parquet schema IS the payload schema):
+      committed and supplied schemas merged additively with the observed;
+    * JSON with a supplied schema (F5 bypass): that schema, kept fixed;
+    * discovered JSON under ``fixed``: inferred only while none is committed;
+    * under ``sample`` / ``full``: the N+1 sample / whole batch inferred
+      (its last fallback spills under the table) and merged additively.
+    """
+    if not conf.payload_col:
+        return None
+    committed = committed_payload_schema(snap, conf.stream)
+    observed = raw.schema[conf.payload_col].dataType
+    if isinstance(observed, T.StructType):
+        known = (committed, conf.payload_schema, observed)
+        return reduce(merge_struct_types, [s for s in known if s is not None])
+    if conf.payload_schema is not None:
+        return conf.payload_schema
+    if committed is not None and conf.schema_evolution == "fixed":
+        return committed
+    if conf.schema_evolution == "full":
+        payloads = raw.select(F.col(conf.payload_col).cast("string").alias("value"))
+        spill = os.path.join(table_path, "_tmp_infer", f"batch_id={batch_id}")
+        observed = infer_json_schema_full(payloads, spill)
+    else:
+        # looked up on the module per call, so a wrapper installed there sees it
+        observed = reader.infer_payload_struct(raw, conf.payload_col, conf.inference_records)
+    if not observed.fields:
+        return committed
+    return observed if committed is None else merge_struct_types(committed, observed)
+
+
+def prepare_batch(
+    df: DataFrame, conf: PipelineConfig, payload_schema: Optional[T.StructType]
+) -> DataFrame:
+    """flatten: the record-shaping stage (F1) with the batch's resolved
+    payload schema (None = nothing to flatten)."""
+    if not conf.payload_col or payload_schema is None:
+        return df
+    keep = [c for c in df.columns if c != conf.payload_col]
+    return flatten_dataframe(
+        df,
+        conf.payload_col,
+        payload_schema,
+        except_keys=conf.except_keys,
+        keep_cols=keep,
+        store_raw_json_message=conf.store_raw_json_message,
+    )
 
 
 class _EmptyBatch(Exception):
-    """Raised by a lazy commit payload when the lineage job reports ZERO
-    rows: aborts merge_upsert between its write action and its CAS commit,
-    so an empty batch never commits a manifest or burns the writer's
-    ledger slot (the unreferenced epoch dir is reclaimed)."""
+    """The lineage job reported ZERO rows. Raised from a lazy commit
+    payload, it aborts merge_upsert between its write action and its CAS
+    commit, so an empty batch never commits a manifest or burns the
+    writer's ledger slot (the unreferenced epoch dir is reclaimed)."""
 
 
 class _Lineage:
@@ -150,8 +182,6 @@ class _Lineage:
     The thread inherits the caller's Spark job group and properties."""
 
     def __init__(self, metrics_df: DataFrame):
-        from pyspark import InheritableThread
-
         self._box: dict = {}
         self._thread = InheritableThread(target=self._run, args=(metrics_df,), daemon=True)
         self._thread.start()
@@ -162,17 +192,14 @@ class _Lineage:
         except BaseException as e:  # re-raised by rows()
             self._box["err"] = e
 
-    def rows(self) -> list:
+    def rows(self, nonempty: bool = False) -> list:
+        """The rows; ``nonempty`` raises :class:`_EmptyBatch` on none."""
         self._thread.join()
         if "err" in self._box:
             raise self._box["err"]
-        return self._box["rows"]
-
-    def nonempty_rows(self) -> list:
-        rows = self.rows()
-        if not rows:
+        if nonempty and not self._box["rows"]:
             raise _EmptyBatch()
-        return rows
+        return self._box["rows"]
 
 
 def process_batch(
@@ -180,19 +207,19 @@ def process_batch(
 ) -> dict:
     """One idempotent micro-batch commit (data + bookmarks + lineage).
 
-    HEAD is read once: that snapshot answers the ledger check, the
-    starting bookmark, the records counter and the table schema, and it is
-    the base of the merge and of the fold that follows it. Only a lost CAS
-    re-reads HEAD.
+    The result depends only on (snapshot, batch, config). HEAD is read
+    once: that snapshot answers the ledger check, the starting bookmark,
+    the records counter, the stream's payload schema and the table schema,
+    and it is the base of the merge and of the fold that follows it. Only
+    a lost CAS re-reads HEAD. The resolved payload schema is committed in
+    the same manifest as the data it shaped.
     """
     snap = table.current_manifest()
     if snap and snap.get("num_buckets"):  # manifest-authoritative
         table.num_buckets = int(snap["num_buckets"])
-    # batch-id ledger check FIRST: a replayed (already-committed) batch must
-    # be a complete no-op — merge_upsert would skip it anyway, but side
-    # channels (the DLQ append, metrics work) must not run twice either
-    # the stream IS the writer: per-stream ledgers let several streams
-    # share one table without suppressing each other's batch ids
+    # batch-id ledger check FIRST: a replayed batch must be a complete
+    # no-op, side channels (DLQ append, metrics) included. The stream IS
+    # the writer: several streams share one table, each with its own ledger
     if snap is not None and batch_id <= table.last_batch_id_for(conf.stream, snap):
         return {"skipped": True, "batch_id": batch_id}
 
@@ -202,93 +229,40 @@ def process_batch(
     bookmark = store.get()
     raw = incremental_filter(batch_df, conf.replication_key, bookmark)
 
-    # F11 result cap across batches (pagination_results_limit): stop once
-    # the table has committed `result_limit` records; a partial batch is
-    # truncated deterministically by replication-key order
-    # per-STREAM counter map (multi-writer safe: dict-valued extra keys
-    # merge per entry on CAS rebase)
+    # F11 result cap across batches (pagination_results_limit), per stream
     records_committed = ((snap or {}).get("records_committed_by") or {}).get(conf.stream, 0)
     if conf.result_limit is not None:
         remaining = conf.result_limit - records_committed
         if remaining <= 0:
             return {"skipped": True, "result_limit_reached": True, "batch_id": batch_id}
-        from tap_rest_api_msdk_spark.operators.incremental import result_limit as _cap
+        raw = result_limit(raw.orderBy(conf.replication_key), remaining)
 
-        raw = _cap(raw.orderBy(conf.replication_key), remaining)
-
-    # F4 dynamic discovery + drift handling: no schema supplied -> infer
-    # from an N+1 sample (tap.py:557-640 analog); on later batches, merge
-    # newly-observed payload fields additively per conf.schema_evolution
-    # (the tap flattens drifting records dynamically, streams.py:588-603;
-    # the lake sink then evolves the flat schema, SURVEY §4.2).
-    payload_is_struct = bool(
-        conf.payload_col
-        and conf.payload_col in raw.columns
-        and isinstance(raw.schema[conf.payload_col].dataType, T.StructType)
+    schema = resolve_payload_schema(snap, conf, raw, table.path, batch_id)
+    if conf.payload_col and not (schema and schema.fields):
+        return {"skipped": True, "empty": True, "batch_id": batch_id}
+    json_payload = conf.payload_col and not isinstance(
+        raw.schema[conf.payload_col].dataType, T.StructType
     )
-    if payload_is_struct:
-        # pre-shredded columnar WAL: the parquet schema IS the payload
-        # schema — no inference pass, no JSON parse, no malformed handling
-        # (shredding already happened at ingest). Drift arrives as parquet
-        # schema evolution and merges additively like any other batch.
-        from tap_rest_api_msdk_spark.functions.infer import merge_struct_types
-
-        observed = raw.schema[conf.payload_col].dataType
-        conf.payload_schema = (
-            observed
-            if conf.payload_schema is None
-            else merge_struct_types(conf.payload_schema, observed)
+    if json_payload and conf.malformed_policy in ("drop", "dlq"):
+        # PERMISSIVE from_json yields a struct of nulls on bad input; the
+        # standard detector is the corrupt-record column (a shredded WAL
+        # was parsed at ingest and has nothing malformed)
+        probe_schema = T.StructType(
+            list(schema.fields) + [T.StructField("_corrupt_record", T.StringType(), True)]
         )
-        conf._schema_discovered = True
-    elif conf.payload_col:
-        from tap_rest_api_msdk_spark.functions.infer import merge_struct_types
-        from tap_rest_api_msdk_spark.sources.reader import infer_payload_struct
-
-        # a user-SUPPLIED schema (F5 file/inline bypass) stays fixed, like
-        # the reference's no-discovery path; only discovered schemas track
-        # drift across batches
-        def _infer_full():
-            payloads = raw.select(F.col(conf.payload_col).cast("string").alias("value"))
-            spill = os.path.join(table.path, "_tmp_infer", f"batch_id={batch_id}")
-            return infer_json_schema_full(payloads, spill)
-
-        observed = None
-        if conf.payload_schema is None or (
-            conf._schema_discovered and conf.schema_evolution in ("sample", "full")
-        ):
-            if conf.schema_evolution == "full":
-                observed = _infer_full()
-            else:
-                observed = infer_payload_struct(raw, conf.payload_col, conf.inference_records)
-            conf._schema_discovered = True
-        if observed is not None and observed.fields:
-            if conf.payload_schema is None:
-                conf.payload_schema = observed
-            else:
-                conf.payload_schema = merge_struct_types(conf.payload_schema, observed)
-        if conf.payload_schema is None or not conf.payload_schema.fields:
-            return {"skipped": True, "empty": True, "batch_id": batch_id}
-
-        if conf.malformed_policy in ("drop", "dlq"):
-            # PERMISSIVE from_json yields a struct of nulls on bad input;
-            # the standard detector is the corrupt-record column
-            probe_schema = T.StructType(
-                list(conf.payload_schema.fields)
-                + [T.StructField("_corrupt_record", T.StringType(), True)]
+        parsed = F.from_json(
+            F.col(conf.payload_col),
+            probe_schema,
+            {"columnNameOfCorruptRecord": "_corrupt_record"},
+        )
+        ok = parsed["_corrupt_record"].isNull() | F.col(conf.payload_col).isNull()
+        if conf.malformed_policy == "dlq":
+            # overwrite into the per-batch dir (plus the ledger check
+            # above): DLQ landing is idempotent under crash-replay
+            raw.filter(~ok).write.mode("overwrite").parquet(
+                os.path.join(table.path, "dlq", f"batch_id={batch_id}")
             )
-            parsed = F.from_json(
-                F.col(conf.payload_col),
-                probe_schema,
-                {"columnNameOfCorruptRecord": "_corrupt_record"},
-            )
-            ok = parsed["_corrupt_record"].isNull() | F.col(conf.payload_col).isNull()
-            if conf.malformed_policy == "dlq":
-                # overwrite into the per-batch dir (plus the ledger check
-                # above): DLQ landing is idempotent under crash-replay
-                raw.filter(~ok).write.mode("overwrite").parquet(
-                    os.path.join(table.path, "dlq", f"batch_id={batch_id}")
-                )
-            raw = raw.filter(ok)
+        raw = raw.filter(ok)
 
     # lineage + high-watermark + affected buckets in ONE cheap pass over the
     # RAW batch (merge keys / seq / ts / payload are all pre-flatten
@@ -299,26 +273,19 @@ def process_batch(
     # metrics over the flattened batch (pays one extra JSON pass).
     bucket = key_hash(conf.keys, table.num_buckets)
     metrics_src = (
-        raw if all(k in raw.columns for k in conf.keys) else prepare_batch(raw, conf, None)
+        raw if all(k in raw.columns for k in conf.keys) else prepare_batch(raw, conf, schema)
     )
-    # for COW sinks on a non-empty table, ALSO collect the (bucket,
-    # slice64) footprint in the same aggregate: merge_upsert then rewrites
-    # only the touched granules ((bucket, slice)-granular COW) instead of
-    # whole buckets, at zero extra scan cost. The footprint MUST be exact
-    # (claims derive from it), which holds because metrics_src carries the
-    # same key values as the shaped batch and runs after malformed/
-    # result-limit filtering. On an empty table (bulk load) there is
-    # nothing to claim against.
-    bulk = snap is None
+    # a COW sink on a non-empty table also collects the exact (bucket,
+    # slice64) footprint in the same aggregate, so merge_upsert rewrites
+    # only the touched granules; metrics_src carries the shaped batch's
+    # keys after malformed/result-limit filtering, so claims stay exact
     delta = conf.sink_mode in ("mor", "cow_incremental")
-    want_granular = conf.sink_mode == "cow" and not bulk
-    # delta fan-out: (touched buckets, events) of this stream's previous
-    # batch, kept in the snapshot — a CDC stream is stationary, so it
-    # sizes this batch's write before the lineage job has counted it
+    want_granular = conf.sink_mode == "cow" and snap is not None
+    # delta fan-out: (touched buckets, events) of the stream's previous
+    # batch — a CDC stream is stationary, so it sizes this batch's write
     est = ((snap or {}).get("delta_fanout") or {}).get(conf.stream) if delta else None
-    dfr = _resolve_delta_file_rows(conf.delta_file_rows) if delta else None
     src = metrics_src.withColumn("__p", bucket)
-    if est is not None and dfr is not None and est[1] <= dfr:
+    if est is not None and est[1] <= DELTA_FILE_ROWS_AUTO:
         # a batch expected to fill one delta file is aggregated in one task:
         # no exchange, one job
         src = src.coalesce(1)
@@ -333,12 +300,12 @@ def process_batch(
         # struct has no single serialized length
         bytes_col=(
             conf.payload_col
-            if conf.payload_col in metrics_src.columns and not payload_is_struct
+            if json_payload and conf.payload_col in metrics_src.columns
             else None
         ),
         slice_col="__s64" if want_granular else None,
     )
-    shaped = prepare_batch(raw, conf, None)  # bookmark already applied
+    shaped = prepare_batch(raw, conf, schema)
     if conf.fold_every:
         table.fold_every = conf.fold_every
 
@@ -350,12 +317,29 @@ def process_batch(
     # footprint, and a delta append without a fan-out estimate sizes from
     # the exact counts: those wait for the lineage rows first.
     lineage = _Lineage(metrics_df)
-    mu_kwargs: dict = {}
-    if want_granular or (delta and est is None):
-        mrows = lineage.rows()
-        if not mrows:
-            return {"skipped": True, "empty": True, "batch_id": batch_id}
+
+    def _bookmarks():
+        rows = lineage.rows(nonempty=True)
+        return store.updates_for(
+            max(r["max_replication_key"] for r in rows),
+            {r["partition_id"]: r["max_replication_key"] for r in rows},
+        )
+
+    def _extra():
+        rows = lineage.rows(nonempty=True)
+        events = sum(r["event_count"] for r in rows)
+        n = records_committed + events
+        out = {"records_committed": n, "records_committed_by": {conf.stream: n}}
+        if delta:
+            out["delta_fanout"] = {conf.stream: [len(rows), events]}
+        if schema is not None:
+            out["payload_schema"] = {conf.stream: schema.jsonValue()}
+        return out
+
+    try:  # an empty batch raises _EmptyBatch wherever the rows are first used
+        mu_kwargs: dict = {}
         if want_granular:
+            mrows = lineage.rows(nonempty=True)
             mu_kwargs = {
                 # lineage partition == merge bucket
                 "affected_buckets": sorted(r["partition_id"] for r in mrows),
@@ -363,35 +347,18 @@ def process_batch(
                     int(r["partition_id"]): set(r["slice_classes"]) for r in mrows
                 },
             }
-        else:
-            est = [len(mrows), sum(r["event_count"] for r in mrows)]
-    if delta:
-        mu_kwargs = {
-            # exact touched-bucket set, needed only after the delta write
-            "affected_buckets": lambda: sorted(
-                int(r["partition_id"]) for r in lineage.nonempty_rows()
-            ),
-            "affected_est": est[0],
-            "delta_parts": -(-est[1] // dfr) if dfr else None,
-        }
-
-    def _bookmarks():
-        rows = lineage.nonempty_rows()
-        return store.updates_for(
-            max(r["max_replication_key"] for r in rows),
-            {r["partition_id"]: r["max_replication_key"] for r in rows},
-        )
-
-    def _extra():
-        rows = lineage.nonempty_rows()
-        events = sum(r["event_count"] for r in rows)
-        n = records_committed + events
-        out = {"records_committed": n, "records_committed_by": {conf.stream: n}}
         if delta:
-            out["delta_fanout"] = {conf.stream: [len(rows), events]}
-        return out
-
-    try:
+            if est is None:
+                mrows = lineage.rows(nonempty=True)
+                est = [len(mrows), sum(r["event_count"] for r in mrows)]
+            mu_kwargs = {
+                # exact touched-bucket set, needed only after the delta write
+                "affected_buckets": lambda: sorted(
+                    int(r["partition_id"]) for r in lineage.rows(nonempty=True)
+                ),
+                "affected_est": est[0],
+                "delta_parts": -(-est[1] // DELTA_FILE_ROWS_AUTO),
+            }
         stats = table.merge_upsert(
             shaped,
             keys=conf.keys,
@@ -405,10 +372,8 @@ def process_batch(
             base=snap,
             **mu_kwargs,
         )
+        mrows = lineage.rows(nonempty=True)  # the merge may skip before resolving
     except _EmptyBatch:
-        return {"skipped": True, "empty": True, "batch_id": batch_id}
-    mrows = lineage.rows()
-    if not mrows:  # merge skipped before resolving (e.g. ledger race)
         return {"skipped": True, "empty": True, "batch_id": batch_id}
     hw = max(r["max_replication_key"] for r in mrows)
     if not stats.get("skipped"):
@@ -421,6 +386,12 @@ def process_batch(
         append_metrics_rows(mrows, persisted, table.path, batch_id, conf.stream)
     stats["rows_high_watermark"] = hw
     return stats
+
+
+def _open(spark: SparkSession, table_path: str, conf: PipelineConfig) -> LakeTable:
+    return LakeTable(
+        spark, table_path, num_buckets=conf.num_buckets, files_per_bucket=conf.files_per_bucket
+    )
 
 
 def run_batch_replay(
@@ -436,10 +407,7 @@ def run_batch_replay(
     ``slices`` — optional list of (start_seq, end_seq] ranges from the
     offset planner (plans/planner.py); default = one batch for the lot.
     """
-    table = LakeTable(
-        spark, table_path, num_buckets=conf.num_buckets,
-        files_per_bucket=conf.files_per_bucket,
-    )
+    table = _open(spark, table_path, conf)
     rk = conf.replication_key
     if slices is None:
         process_batch(table, conf, wal_df, start_batch_id)
@@ -470,14 +438,11 @@ def run_streaming(
     ``start()`` so several availableNow drains can run CONCURRENTLY (the
     caller awaits each query; orchestrate.start_all does exactly this).
     """
-    table = LakeTable(
-        spark, table_path, num_buckets=conf.num_buckets,
-        files_per_bucket=conf.files_per_bucket,
-    )
-    reader = spark.readStream.schema(wal_schema)
+    table = _open(spark, table_path, conf)
+    source = spark.readStream.schema(wal_schema)
     if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(wal_dir)
+        source = source.option("maxFilesPerTrigger", int(max_files_per_trigger))
+    stream = source.parquet(wal_dir)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         process_batch(table, conf, batch_df, batch_id)

@@ -33,16 +33,18 @@ resurrects the key and closes it).
 Crash ordering: the history commit lands BEFORE the state commit, so a
 replayed batch recomputes the history rows from the same pre-batch state
 (and its ledger skips the re-commit anyway); each table keeps its own
-per-stream ledger.
+per-stream ledger. The payload schema is resolved once per batch, by the
+pipeline's resolver against the pre-batch state snapshot, and both tables
+flatten with it.
 """
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from tap_rest_api_msdk_spark.operators.incremental import incremental_filter
 from tap_rest_api_msdk_spark.operators.scd import scd2_intervals
@@ -52,32 +54,21 @@ from tap_rest_api_msdk_spark.streaming.pipeline import (
     PipelineConfig,
     prepare_batch,
     process_batch,
+    resolve_payload_schema,
 )
 
 
-def _resolve_schema(raw: DataFrame, conf: PipelineConfig) -> None:
-    """Minimal payload-schema resolution for the history stage (the state
-    pipeline's full drift handling runs right after in process_batch and
-    keeps ``conf.payload_schema`` authoritative across batches)."""
-    if not conf.payload_col or conf.payload_col not in raw.columns:
-        return
-    dt = raw.schema[conf.payload_col].dataType
-    if isinstance(dt, T.StructType):
-        from tap_rest_api_msdk_spark.functions.infer import merge_struct_types
-
-        conf.payload_schema = (
-            dt
-            if conf.payload_schema is None
-            else merge_struct_types(conf.payload_schema, dt)
-        )
-        conf._schema_discovered = True
-    elif conf.payload_schema is None:
-        from tap_rest_api_msdk_spark.sources.reader import infer_payload_struct
-
-        conf.payload_schema = infer_payload_struct(
-            raw, conf.payload_col, conf.inference_records
-        )
-        conf._schema_discovered = True
+def _resolved_batch(
+    state: LakeTable, conf: PipelineConfig, batch_df: DataFrame, batch_id: int
+) -> tuple:
+    """The batch past the stream's bookmark and its payload schema, both
+    resolved against the pre-batch state snapshot, as ``process_batch`` does."""
+    snap = state.current_manifest()
+    store = BookmarkStore(
+        state, conf.stream, conf.start_date, bookmarks=(snap or {}).get("bookmarks", {})
+    )
+    raw = incremental_filter(batch_df, conf.replication_key, store.get())
+    return raw, resolve_payload_schema(snap, conf, raw, state.path, batch_id)
 
 
 def _history_rows(
@@ -144,12 +135,10 @@ def commit_history(
     :func:`scd2_process_batch` sequences it before the state merge."""
     if batch_id <= history.last_batch_id_for(conf.stream):
         return {"skipped": True, "batch_id": batch_id}
-    store = BookmarkStore(state, conf.stream, conf.start_date)
-    raw = incremental_filter(batch_df, conf.replication_key, store.get())
-    _resolve_schema(raw, conf)
-    if conf.payload_schema is None and conf.payload_col:
+    raw, schema = _resolved_batch(state, conf, batch_df, batch_id)
+    if conf.payload_col and not (schema and schema.fields):
         return None  # nothing inferable; the state pipeline will skip too
-    shaped = prepare_batch(raw, conf, None)
+    shaped = prepare_batch(raw, conf, schema)
     # one bounded materialization: reused by the emptiness probe, the
     # bucket-footprint collect, and the merge write
     rows = _history_rows(state, conf, shaped, batch_id).localCheckpoint(eager=True)
@@ -177,9 +166,14 @@ def scd2_process_batch(
     """One exactly-once micro-batch into BOTH tables: the SCD2 history
     commit first (it reads the pre-batch state), then the normal
     latest-state ``process_batch``. Each commit is guarded by its own
-    per-stream ledger, so any crash/replay interleaving reconverges."""
+    per-stream ledger, so any crash/replay interleaving reconverges. Both
+    commits flatten with the schema resolved once here (one inference)."""
     if conf.result_limit is not None:
         raise ValueError("result_limit is not supported with an SCD2 companion")
+    if batch_id > state.last_batch_id_for(conf.stream):
+        schema = _resolved_batch(state, conf, batch_df, batch_id)[1]
+        if schema is not None:
+            conf = replace(conf, payload_schema=schema)
     return {
         "history": commit_history(
             state, history, conf, batch_df, batch_id, history_mode

@@ -22,6 +22,7 @@ from tap_rest_api_msdk_spark.streaming.laketable import LakeTable
 
 SCHEMA = "seq long, repo string, path string, commit string, op string, content string"
 KEYS = ["repo", "path"]
+PAYLOAD = T.StructType([T.StructField("payload", T.StringType())])
 ORDER = ["seq", "commit"]
 
 
@@ -77,7 +78,9 @@ payloads = st.one_of(
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.lists(payloads, min_size=1, max_size=20), st.integers(min_value=0, max_value=20))
 def test_infer_payload_struct_matches_parallelized_read(spark, sample, n):
-    df = spark.createDataFrame([(p,) for p in sample], "payload string")
+    # an Arrow-built input: createDataFrame(list) would run a pickled
+    # Python-RDD job per example
+    df = arrow_frame(spark, [(p,) for p in sample], PAYLOAD)
     assert infer_payload_struct(df, "payload", n) == parallelized_infer(df, "payload", n)
 
 

@@ -11,7 +11,12 @@ from pyspark.sql import functions as F
 
 from tap_rest_api_msdk_spark.sources.wal_synth import synth_repo_wal
 from tap_rest_api_msdk_spark.streaming.laketable import LakeTable
-from tap_rest_api_msdk_spark.streaming.pipeline import PipelineConfig, process_batch
+from tap_rest_api_msdk_spark.streaming.pipeline import (
+    PipelineConfig,
+    committed_payload_schema,
+    prepare_batch,
+    process_batch,
+)
 
 N = 5000
 
@@ -52,18 +57,17 @@ def test_chaos_replay_reconverges(spark, wal, tmp_path, seed):
 
     path = str(tmp_path / f"t{seed}")
     table = LakeTable(spark, path, num_buckets=8)
-    ps = None
     for i, (s, e) in enumerate(slices):
         conf = PipelineConfig(
             stream="chaos",
             payload_col="payload",
-            payload_schema=ps,
+            payload_schema=None,
             num_buckets=8,
             sink_mode=rng.choice(["cow", "mor", "cow_incremental"]),
         )
         batch = wal_df.filter((F.col("seq") > s) & (F.col("seq") <= e))
         process_batch(table, conf, batch, i)
-        ps = conf.payload_schema
+        ps = committed_payload_schema(table.current_manifest(), "chaos")
         if rng.random() < 0.5:
             # duplicate delivery of the SAME batch id (replay after crash)
             process_batch(table, conf, batch, i)
@@ -74,16 +78,11 @@ def test_chaos_replay_reconverges(spark, wal, tmp_path, seed):
             # replaying already-applied events is LWW-idempotent, so the
             # oracle stays unchanged while the granular bookkeeping mixes
             # with every other mode's commits
-            from tap_rest_api_msdk_spark.streaming.pipeline import prepare_batch
-
             s2, e2 = slices[rng.randrange(0, i + 1)]
             dup = wal_df.filter((F.col("seq") > s2) & (F.col("seq") <= e2))
-            conf2 = PipelineConfig(
-                stream="audit", payload_col="payload",
-                payload_schema=ps, num_buckets=8,
-            )
+            conf2 = PipelineConfig(stream="audit", payload_col="payload", num_buckets=8)
             table.merge_upsert(
-                prepare_batch(dup, conf2, None),
+                prepare_batch(dup, conf2, ps),
                 keys=conf2.keys, order_by=conf2.order_by, op_col=conf2.op_col,
                 batch_id=1000 + i, mode="cow", writer_id="audit",
             )

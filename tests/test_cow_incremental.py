@@ -10,6 +10,7 @@ import random
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from tap_rest_api_msdk_spark.streaming.laketable import LakeTable
 
@@ -204,41 +205,52 @@ def test_cdc_diff_from_empty_is_all_inserts(spark, tmp_path):
 
 
 def test_shared_delta_files_cap_converges_identically(spark, tmp_path):
-    """r5 delta_file_rows knob: capping the delta fan-out makes delta
-    files SHARED across buckets (several (bucket, salt) cells per file).
-    Claims, folds, and reads must converge to the identical LWW state as
-    the uncapped layout."""
+    """The pipeline caps the delta fan-out at DELTA_FILE_ROWS_AUTO rows
+    per file, so a small batch writes delta files SHARED across buckets
+    (several (bucket, salt) cells per file). Claims, folds, and reads must
+    converge to the identical LWW state as uncapped direct delta merges."""
     from tap_rest_api_msdk_spark.streaming.pipeline import (
         PipelineConfig,
         process_batch,
     )
 
-    wal = spark.createDataFrame(
+    from tap_rest_api_msdk_spark.session import arrow_frame
+
+    # an Arrow-built WAL: a createDataFrame(list) one would run a pickled
+    # Python-RDD stage in every job that scans it
+    wal = arrow_frame(
+        spark,
         [(i % 300, i, "upsert" if i % 40 else "delete", f"v{i}")
          for i in range(3000)],
-        "id long, seq long, op string, text string",
+        T.StructType([
+            T.StructField("id", T.LongType()), T.StructField("seq", T.LongType()),
+            T.StructField("op", T.StringType()), T.StructField("text", T.StringType()),
+        ]),
+    )
+    conf = PipelineConfig(
+        stream="s", keys=("id",), replication_key="seq",
+        order_by=("seq",), op_col="op", payload_col=None, ts_col=None,
+        num_buckets=16, sink_mode="cow_incremental",
     )
     states = {}
-    for label, dfr in (("capped", 200), ("uncapped", None)):
+    for label in ("capped", "uncapped"):
         t = LakeTable(spark, str(tmp_path / label), num_buckets=16)
         t.fold_every = 3
-        conf = PipelineConfig(
-            stream="s", keys=("id",), replication_key="seq",
-            order_by=("seq",), op_col="op", payload_col=None, ts_col=None,
-            num_buckets=16, sink_mode="cow_incremental",
-            delta_file_rows=dfr,
-        )
         for b in range(6):
             sl = wal.filter(
                 (F.col("seq") >= b * 500) & (F.col("seq") < (b + 1) * 500)
             )
-            process_batch(t, conf, sl, b)
+            if label == "capped":
+                process_batch(t, conf, sl, b)
+            else:
+                t.merge_upsert(sl, keys=["id"], order_by=["seq"], batch_id=b,
+                               op_col="op", mode="cow_incremental", writer_id="s")
         states[label] = {
             r["id"]: (r["seq"], r["text"]) for r in t.to_df().collect()
         }
-        if dfr:
-            # the cap actually engaged: ceil(500/200)=3 files per delta
-            # commit instead of 16+ (one per bucket)
+        if label == "capped":
+            # the cap actually engaged: one file per 500-row delta commit
+            # instead of 16+ (one per bucket)
             m = t.current_manifest()
             sizes = [len(v) for v in m.get("deltas", {}).values()]
             assert sum(sizes) < 16 * 2, m.get("deltas")

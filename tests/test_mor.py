@@ -88,8 +88,7 @@ def test_mor_exactly_once_and_mixed_mode(spark, wal, tmp_path):
     s_replay = process_batch(t, c, wal_df.filter(F.col("seq") < 3000), 0)
     assert s_replay["skipped"] and state(t) == before
     # switch to COW for the next batch: folds deltas for affected buckets
-    c2 = conf(sink_mode="cow")
-    c2.payload_schema = c.payload_schema
+    c2 = conf(sink_mode="cow")  # the discovered schema is the table's
     process_batch(t, c2, wal_df.filter(F.col("seq") >= 3000), 1)
     full_cow = run_batch_replay(spark, wal_df, str(tmp_path / "ref"), conf())
     assert state(t) == state(full_cow)

@@ -214,15 +214,13 @@ def test_chaos_with_concurrent_writer(spark, tmp_path):
     th = threading.Thread(target=audit_writer)
     th.start()
     try:
-        ps = None
         for i, (s, e) in enumerate(slices):
             conf = PipelineConfig(
-                stream="chaos", payload_col="payload", payload_schema=ps,
+                stream="chaos", payload_col="payload", payload_schema=None,
                 num_buckets=8, sink_mode=rng.choice(["cow", "mor", "cow_incremental"]),
             )
             batch = wal_df.filter((F.col("seq") > s) & (F.col("seq") <= e))
             process_batch(table, conf, batch, i)
-            ps = conf.payload_schema
     finally:
         stop.set()
         th.join(180)

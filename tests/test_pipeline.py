@@ -15,9 +15,7 @@ from pyspark.sql import functions as F
 from tap_rest_api_msdk_spark.sources.wal_synth import synth_repo_wal, write_wal_slices
 from tap_rest_api_msdk_spark.streaming.metrics import read_metrics
 from tap_rest_api_msdk_spark.streaming.pipeline import (
-    DELTA_FILE_ROWS_AUTO,
     PipelineConfig,
-    _resolve_delta_file_rows,
     process_batch,
     run_batch_replay,
     run_streaming,
@@ -267,11 +265,136 @@ def test_steady_commit_matches_reopened_run_and_aborts_empty(spark, wal, tmp_pat
     assert t_once.last_batch_id_for("repo_wal") == len(slices)
 
 
-def test_delta_file_rows_validation():
-    assert _resolve_delta_file_rows(None) is None
-    assert _resolve_delta_file_rows("auto") == DELTA_FILE_ROWS_AUTO
-    assert _resolve_delta_file_rows(7) == 7
-    # bool is an int subclass: True must not mean "one delta file per row"
-    for bad in (True, False, 0, -5, 2.5, "4096"):
-        with pytest.raises(ValueError):
-            _resolve_delta_file_rows(bad)
+def _evolving_wal(d, shredded):
+    """An evolving WAL whose result a lost schema would change. Batch 1:
+    100 events whose payloads all carry {a, x}. Batch 2: 200 events on new
+    keys; x from event 60 on, y from event 120 on (past the 51-payload
+    sample horizon). Returns the batch paths (one parquet file each) and
+    the full-row DuckDB oracle."""
+    import datetime as dt
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def payload(i):
+        p = {"a": i}
+        if i < 100 or i >= 160:
+            p["x"] = f"x{i}"
+        if i >= 220:
+            p["y"] = 2 * i
+        return p
+
+    t0 = dt.datetime(2024, 1, 1)
+    paths = []
+    for lo, hi, fields in ((0, 100, ("a", "x")), (100, 300, ("a", "x", "y"))):
+        ids = range(lo, hi)
+        if shredded:  # the batch's parquet struct carries its own fields only
+            col = pa.array(
+                [{f: payload(i).get(f) for f in fields} for i in ids],
+                pa.struct([(f, pa.string() if f == "x" else pa.int64()) for f in fields]),
+            )
+        else:
+            col = pa.array([json.dumps(payload(i)) for i in ids])
+        tbl = pa.table({
+            "seq": pa.array(list(ids), pa.int64()),
+            "ts": pa.array([t0 + dt.timedelta(seconds=i) for i in ids], pa.timestamp("us")),
+            "repo": [f"r{i % 7}" for i in ids],
+            "path": [f"p{i}" for i in ids],
+            "commit": [f"c{i}" for i in ids],
+            "op": ["upsert"] * len(ids),
+            "payload": col,
+        })
+        os.makedirs(f"{d}/b{lo}")
+        pq.write_table(tbl, f"{d}/b{lo}/part-0.parquet")
+        paths.append(f"{d}/b{lo}")
+    con = duckdb.connect()
+    # each batch's struct as JSON text: a struct lacking a field reads null
+    payload_sql = "* replace (to_json(payload)::varchar as payload)" if shredded else "*"
+    con.sql("create view wal as " + " union all ".join(
+        f"select {payload_sql} from read_parquet('{p}/*.parquet')" for p in paths
+    ))
+
+    def field(f):
+        return f"json_extract_string(payload, '$.{f}')"
+
+    want = {
+        (r[0], r[1]): r[2:]
+        for r in con.sql(
+            f"""
+            with ranked as (select *, row_number() over (
+                partition by repo, path order by seq desc, commit desc) rn from wal)
+            select repo, path, seq, commit, cast({field('a')} as bigint),
+                   cast({field('x')} as varchar), cast({field('y')} as bigint)
+            from ranked where rn = 1 and op <> 'delete'
+            """
+        ).fetchall()
+    }
+    return paths, want
+
+
+@pytest.mark.parametrize(
+    "wal_kind,evolution",
+    [("json", "fixed"), ("json", "sample"), ("json", "full"), ("shredded", "sample")],
+)
+def test_restart_before_every_batch_matches_uninterrupted_run(
+    spark, tmp_path, wal_kind, evolution
+):
+    """The payload schema a stream discovers is committed per stream in
+    the manifest, so a run that reopens the table and builds a fresh
+    config before every batch (a process restart) equals the
+    uninterrupted run on every column and on the committed schema."""
+    from tap_rest_api_msdk_spark.streaming.laketable import LakeTable
+    from tap_rest_api_msdk_spark.streaming.pipeline import committed_payload_schema
+
+    paths, want = _evolving_wal(str(tmp_path / "wal"), wal_kind == "shredded")
+
+    def fresh(tdir):
+        return LakeTable(spark, tdir, num_buckets=4), PipelineConfig(
+            stream="evo", payload_col="payload", num_buckets=4,
+            sink_mode="cow_incremental", schema_evolution=evolution,
+        )
+
+    def run(tdir, reopen):
+        table, c = fresh(tdir)
+        for i, p in enumerate(paths):
+            if reopen:
+                table, c = fresh(tdir)
+            assert not process_batch(table, c, spark.read.parquet(p), batch_id=i).get("skipped")
+        df = table.to_df()
+        rows = sorted(df.select(*sorted(df.columns)).collect())
+        return df, rows, committed_payload_schema(table.current_manifest(), "evo")
+
+    df, rows, schema = run(str(tmp_path / "once"), False)
+    _, rows_reopened, schema_reopened = run(str(tmp_path / "reopen"), True)
+    assert rows_reopened == rows
+    assert schema_reopened == schema
+    # x, known since batch 1, is kept on all 140 batch-2
+    # rows that carry it, whether or not batch 2's sample saw it
+    assert df.filter((F.col("seq") >= 100) & F.col("x").isNotNull()).count() == 140
+    assert ("y" in schema.names) == (evolution == "full" or wal_kind == "shredded")
+    if "y" in schema.names:  # nothing dropped: the full-row oracle holds
+        got = df.select("repo", "path", "seq", "commit", "a", "x", "y").collect()
+        assert {(r[0], r[1]): tuple(r[2:]) for r in got} == want
+
+
+def test_committed_schema_survives_maintenance(spark, tmp_path):
+    """A fold, compact() and rebucket() carry the stream's committed
+    payload schema forward unchanged."""
+    from tap_rest_api_msdk_spark.streaming.laketable import LakeTable
+    from tap_rest_api_msdk_spark.streaming.pipeline import committed_payload_schema
+
+    paths, _ = _evolving_wal(str(tmp_path / "wal"), False)
+    table = LakeTable(spark, str(tmp_path / "t"), num_buckets=4)
+    c = PipelineConfig(stream="evo", payload_col="payload", num_buckets=4,
+                       sink_mode="cow_incremental")
+    for i, p in enumerate(paths):
+        process_batch(table, c, spark.read.parquet(p), batch_id=i)
+    schema = committed_payload_schema(table.current_manifest(), "evo")
+    assert schema is not None and "x" in schema.names
+    for op in (lambda: table.fold_due(k_fold=1), table.compact, lambda: table.rebucket(8)):
+        v = table.current_manifest()["version"]
+        op()
+        m = table.current_manifest()
+        assert m["version"] > v
+        assert committed_payload_schema(m, "evo") == schema

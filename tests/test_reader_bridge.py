@@ -72,13 +72,19 @@ def test_infer_payload_struct_nested(spark):
 def test_pipeline_auto_inference(spark, tmp_path):
     """payload_schema=None -> discovered from the first batch (F4)."""
     from tap_rest_api_msdk_spark.sources.wal_synth import synth_repo_wal
-    from tap_rest_api_msdk_spark.streaming.pipeline import PipelineConfig, run_batch_replay
+    from tap_rest_api_msdk_spark.streaming.pipeline import (
+        PipelineConfig,
+        committed_payload_schema,
+        run_batch_replay,
+    )
 
     wal = synth_repo_wal(spark, 2000, n_repos=5, n_paths=20)
     conf = PipelineConfig(stream="auto", payload_col="payload", payload_schema=None)
     table = run_batch_replay(spark, wal, str(tmp_path / "t"), conf)
     assert "content" in table.to_df().columns
-    assert conf.payload_schema is not None  # cached for subsequent batches
+    # committed per stream with the data, for later batches and restarts
+    assert "content" in committed_payload_schema(table.current_manifest(), "auto").names
+    assert conf.payload_schema is None
 
 
 def test_render_search_query():

@@ -8,6 +8,8 @@ between the history and state commits.
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -55,7 +57,7 @@ def batch_bounds(i):
 def oracle_rows(wal_df, payload_schema):
     """scd2_intervals over the full shaped stream — the batch-side truth."""
     conf = mkconf(payload_schema)
-    shaped = prepare_batch(wal_df, conf, None)
+    shaped = prepare_batch(wal_df, conf, payload_schema)
     iv = scd2_intervals(shaped, ["repo", "path"], ["seq", "commit"], "ts", op_col="op")
     return sorted(tuple(r) for r in iv.select(*CMP).collect())
 
@@ -132,8 +134,8 @@ def test_late_version_leaves_history_untouched(spark, wal, built):
     state, hist, conf = built
     before = sorted(tuple(r) for r in scd2_view(hist).select(*CMP).collect())
     v_before = hist.current_manifest()["version"]
-    stale_conf = mkconf(schema)
-    stale_conf.stream = "stale_replayer"  # empty bookmark, empty ledger
+    # empty bookmark, empty ledger
+    stale_conf = dataclasses.replace(mkconf(schema), stream="stale_replayer")
     lo, hi = batch_bounds(0)
     b = wal_df.filter((F.col("seq") >= lo) & (F.col("seq") < hi))
     out = commit_history(state, hist, stale_conf, b, 1)
@@ -141,3 +143,41 @@ def test_late_version_leaves_history_untouched(spark, wal, built):
     assert hist.current_manifest()["version"] == v_before
     after = sorted(tuple(r) for r in scd2_view(hist).select(*CMP).collect())
     assert after == before
+
+
+def test_field_first_seen_in_batch_2_reaches_history(spark, tmp_path):
+    """A payload field first seen in batch 2 lands in the history table on
+    every batch-2 version, as in the state table: the batch's schema is
+    resolved once and both commits flatten with it."""
+    import datetime as dt
+    import json
+
+    from pyspark.sql import types as T
+
+    from tap_rest_api_msdk_spark.session import arrow_frame
+
+    schema = T.StructType([
+        T.StructField("repo", T.StringType()), T.StructField("path", T.StringType()),
+        T.StructField("seq", T.LongType()), T.StructField("commit", T.StringType()),
+        T.StructField("op", T.StringType()), T.StructField("ts", T.TimestampType()),
+        T.StructField("payload", T.StringType()),
+    ])
+    t0 = dt.datetime(2024, 1, 1)
+    # batch 2 updates batch 1's 50 keys, and only its payloads carry x
+    wal = arrow_frame(spark, [
+        ("r", f"p{i % 50}", i, f"c{i}", "upsert", t0 + dt.timedelta(seconds=i),
+         json.dumps({"a": i, **({"x": f"x{i}"} if i >= 50 else {})}))
+        for i in range(100)
+    ], schema)
+    state = LakeTable(spark, str(tmp_path / "state"), num_buckets=4)
+    hist = LakeTable(spark, str(tmp_path / "hist"), num_buckets=4)
+    conf = PipelineConfig(stream="s", payload_col="payload", num_buckets=4)
+    for i in range(2):
+        b = wal.filter((F.col("seq") >= 50 * i) & (F.col("seq") < 50 * (i + 1)))
+        scd2_process_batch(state, hist, conf, b, i)
+    live = state.to_df()
+    assert live.filter(F.col("x").isNotNull()).count() == 50
+    versions = scd2_view(hist)
+    assert versions.filter((F.col("seq") >= 50) & F.col("x").isNotNull()).count() == 50
+    current = scd2_view(hist, current_only=True).select("path", "seq", "x")
+    assert sorted(current.collect()) == sorted(live.select("path", "seq", "x").collect())
