@@ -234,9 +234,9 @@ _MANIFEST_CORE_KEYS = frozenset({
 
 #: per-file key-bloom parameters (Hudi bloom-index analog): 3 lanes via
 #: Kirsch-Mitzenmacher double hashing over salted xxhash64; the bit width
-#: is a TABLE knob (LakeTable.bloom_bits, default 16384 ≈ 10+ bits/key at
-#: typical file sizes — sub-1% false-positive candidates) and each stored
-#: entry records its own width, base64-packed little-endian
+#: is 16384 bits per file (≈ 10+ bits/key at typical file sizes — sub-1%
+#: false-positive candidates) and each stored entry records its own width,
+#: base64-packed little-endian
 BLOOM_BITS_DEFAULT = 16384
 BLOOM_K = 3
 
@@ -292,13 +292,13 @@ def _load_section(path: str) -> dict:
 
 
 def assemble_manifest(table_path: str, m: Optional[dict]) -> Optional[dict]:
-    """Resolve a split manifest's ``sections_ref`` into the full in-memory
-    dict every consumer works with (pre-split manifests pass through).
-    Section files are content-addressed (sha1 of canonical JSON), so
-    unchanged buckets re-reference the same file across versions and the
-    process cache makes repeated loads O(changed sections)."""
-    if not m or "sections_ref" not in m:
-        return m
+    """Resolve a manifest core's ``sections_ref`` into the full in-memory
+    dict every consumer works with (None passes through). Section files
+    are content-addressed (sha1 of canonical JSON), so unchanged buckets
+    re-reference the same file across versions and the process cache
+    makes repeated loads O(changed sections)."""
+    if m is None:
+        return None
     out = {k: v for k, v in m.items() if k != "sections_ref"}
     files: dict = {}
     deltas: dict = {}
@@ -334,28 +334,15 @@ def assemble_manifest(table_path: str, m: Optional[dict]) -> Optional[dict]:
     return out
 
 
-def section_of(table_path: str, core: Optional[dict], b_str: str) -> dict:
-    """ONE bucket's section of a (possibly unassembled) manifest:
-    bucket-scoped consumers (point lookups, single-bucket readers) parse
-    O(1) metadata instead of assembling the whole manifest — the
-    completion of the split-manifest design for the read side. Pre-split
-    manifests fall back to their inline sections."""
-    if not core:
+def section_of(table_path: str, core: dict, b_str: str) -> dict:
+    """ONE bucket's section of a manifest core: bucket-scoped consumers
+    (point lookups, single-bucket readers) parse O(1) metadata instead of
+    assembling the whole manifest — the completion of the split-manifest
+    design for the read side."""
+    rel = core["sections_ref"].get(b_str)
+    if rel is None:
         return {}
-    refs = core.get("sections_ref")
-    if refs is not None:
-        rel = refs.get(b_str)
-        if rel is None:
-            return {}
-        return _load_section(os.path.join(table_path, "manifests", rel))
-    return {
-        "files": core.get("files", {}).get(b_str, []),
-        "deltas": core.get("deltas", {}).get(b_str, []),
-        "slice_meta": core.get("slice_meta", {}).get(b_str, {}),
-        "file_bytes": core.get("file_bytes", {}),
-        "file_stats": core.get("file_stats", {}),
-        "key_blooms": core.get("key_blooms", {}),
-    }
+    return _load_section(os.path.join(table_path, "manifests", rel))
 
 
 def load_core_at(table_path: str, version: int) -> Optional[dict]:
@@ -377,16 +364,12 @@ def load_manifest_at(table_path: str, version: int) -> Optional[dict]:
     return assemble_manifest(table_path, load_core_at(table_path, version))
 
 
-def assemble_manifest_buckets(
-    table_path: str, core: Optional[dict], buckets
-) -> Optional[dict]:
-    """Assemble ONLY the given buckets' sections of a split manifest —
+def assemble_manifest_buckets(table_path: str, core: dict, buckets) -> dict:
+    """Assemble ONLY the given buckets' sections of a manifest core —
     the partial-read completion of the split-manifest design: consumers
     that can prove the other buckets irrelevant (e.g. cdc_diff's
     section-ref prefilter) pay O(relevant sections) metadata instead of
-    O(live files). Pre-split manifests pass through fully assembled."""
-    if not core or "sections_ref" not in core:
-        return assemble_manifest(table_path, core)
+    O(live files)."""
     wanted = set(str(b) for b in buckets)
     pruned = dict(core)
     pruned["sections_ref"] = {
@@ -499,31 +482,22 @@ def _section_files(table_path: str, rel: str) -> set:
 def _step_added_files(
     table_path: str, prev_m: Optional[dict], cur_m: dict
 ) -> set:
-    """Files present in ``cur_m`` but not ``prev_m``. When BOTH manifests
-    are split, only sections whose content-addressed ref CHANGED are
-    loaded — an unchanged ref proves the bucket's file set identical.
+    """Files present in core ``cur_m`` but not in core ``prev_m`` (None:
+    the empty table). Only sections whose content-addressed ref CHANGED
+    are loaded — an unchanged ref proves the bucket's file set identical.
     Valid because a data file's bucket claims are fixed when it is
     written (a section never adopts a pre-existing file from another
     bucket), so the union of per-changed-section diffs equals the global
-    set difference. Pre-split / assembled manifests fall back to the
-    full-set diff."""
-    pr = (prev_m or {}).get("sections_ref")
-    cr = cur_m.get("sections_ref")
-    if prev_m is not None and pr is not None and cr is not None:
-        out: set = set()
-        for b, rel in cr.items():
-            prev_rel = pr.get(b)
-            if prev_rel == rel:
-                continue
-            cur_files = _section_files(table_path, rel)
-            prev_files = (
-                _section_files(table_path, prev_rel) if prev_rel else set()
-            )
-            out |= cur_files - prev_files
-        return out
-    return all_files_of(assemble_manifest(table_path, cur_m)) - all_files_of(
-        assemble_manifest(table_path, prev_m)
-    )
+    set difference."""
+    pr = prev_m["sections_ref"] if prev_m is not None else {}
+    out: set = set()
+    for b, rel in cur_m["sections_ref"].items():
+        prev_rel = pr.get(b)
+        if prev_rel == rel:
+            continue
+        prev_files = _section_files(table_path, prev_rel) if prev_rel else set()
+        out |= _section_files(table_path, rel) - prev_files
+    return out
 
 
 def walk_added_files(
@@ -589,17 +563,19 @@ class LakeTable:
     ):
         self.spark = spark
         self.path = path
-        self.num_buckets = num_buckets
-        # extra zone-map columns beyond the LWW ordering column (r4
-        # verdict item #6): every commit harvests [min, max] per listed
-        # column from the parquet footers it just wrote, and reads can
-        # file-prune on any of them (``read_range(col=...)``). A TABLE
-        # property: persisted in the manifest at first commit and
-        # manifest-authoritative on reopen, so every writer maintains the
-        # same maps. Typical use: the event-time column of an
+        # the bucket count and the extra zone-map columns are TABLE
+        # properties that live in the snapshot: each operation takes them
+        # from the snapshot it planned on (``_buckets_of``,
+        # ``_stats_columns_of``), and these constructor values only seed
+        # a table whose snapshot has no committed value yet. Extra
+        # zone-map columns (beyond the LWW ordering column): every commit
+        # harvests [min, max] per listed column from the parquet footers
+        # it just wrote, and reads can file-prune on any of them
+        # (``read_range(col=...)``) — e.g. the event-time column of an
         # append-mostly table, so "events from March" touches March's
         # files, not the table.
-        self.stats_columns = list(stats_columns) if stats_columns else []
+        self._seed_buckets = int(num_buckets)
+        self._seed_stats_columns = list(stats_columns) if stats_columns else []
         # range-clustered rewrite layout (r4 verdict lead #7): when > 1,
         # full/binpack compaction splits each (bucket, slice) granule's
         # output into up to era_split files keyed by the LWW ordering
@@ -633,41 +609,54 @@ class LakeTable:
         # 10 matches the usual lakehouse delta-commits-per-compaction
         # default (cdcbench's steady_cdc workload runs at it)
         self.fold_every = 10
-        # key-bloom width for key_index=True commits (bits per file;
-        # ~10 bits per expected key per file keeps lookup false-positive
-        # candidates below 1%)
-        self.bloom_bits = BLOOM_BITS_DEFAULT
         # scan accounting for the latest read()/read_since() call:
         # {files_total, files_scanned, min_order}
         self.last_read_plan: Optional[dict] = None
         # merge shuffle width is DECOUPLED from the bucket count: each
         # bucket may be written as up to ``files_per_bucket`` files, split
         # by a key-salt, so a 16-bucket table still merges with cores-scale
-        # parallelism (None = auto from defaultParallelism). Unlike
-        # num_buckets this is NOT a table property — it's a per-writer
+        # parallelism (None = auto from defaultParallelism). Unlike the
+        # bucket count this is NOT a table property — it's a per-writer
         # execution knob; the manifest records whatever files each commit
         # produced.
         self.files_per_bucket = files_per_bucket
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
         os.makedirs(os.path.join(path, "manifests"), exist_ok=True)
-        # bucket count is a TABLE property: once committed, the manifest's
-        # value wins over the constructor arg (a mismatched reopen would
-        # silently mis-route keys to the wrong buckets otherwise)
-        m = self.current_manifest()
-        if m and "num_buckets" in m:
-            self.num_buckets = m["num_buckets"]
-        if m and m.get("stats_columns") is not None:
-            # stats_columns is a table property too: the committed value
-            # wins on reopen so every writer maintains the same zone maps
-            self.stats_columns = list(m["stats_columns"])
 
-    def _stat_cols(self, order_by) -> list:
-        """Zone-map column set for a write job: the LWW ordering column
-        (always, when numeric — the read_since/read_range workhorse) plus
-        the table's configured ``stats_columns``."""
+    def _buckets_of(self, m: Optional[dict]) -> int:
+        """The bucket count of snapshot ``m``: its committed value, else
+        this handle's seed (a table with nothing committed yet). Every key
+        routing goes through the snapshot it planned on, so a handle
+        opened before a ``rebucket()`` can never hash into the old space."""
+        return int(m["num_buckets"]) if m and m.get("num_buckets") else self._seed_buckets
+
+    def bucket_col(self, keys: Sequence[str], m: Optional[dict]):
+        """THE bucket of each row's ``keys`` under snapshot ``m``."""
+        return key_hash(keys, self._buckets_of(m))
+
+    def _stats_columns_of(self, m: Optional[dict]) -> list:
+        """Snapshot ``m``'s extra zone-map columns, else this handle's seed."""
+        if m and m.get("stats_columns") is not None:
+            return list(m["stats_columns"])
+        return list(self._seed_stats_columns)
+
+    @property
+    def num_buckets(self) -> int:
+        """The bucket count at HEAD."""
+        return self._buckets_of(self._current_core())
+
+    @property
+    def stats_columns(self) -> list:
+        """The extra zone-map columns at HEAD."""
+        return self._stats_columns_of(self._current_core())
+
+    def _stat_cols(self, m: Optional[dict], order_by) -> list:
+        """Zone-map column set for a write job planned on ``m``: the LWW
+        ordering column (always, when numeric — the read_since/read_range
+        workhorse) plus the snapshot's ``stats_columns``."""
         first = (list(order_by) or [None])[0] if order_by else None
         out = [first] if first else []
-        out += [c for c in self.stats_columns if c not in out]
+        out += [c for c in self._stats_columns_of(m) if c not in out]
         # cluster columns too: a z-order rewrite's OUTPUT files must
         # carry bounds on every clustered column or the NEXT rewrite
         # (and read-side pruning) would quietly lose the layout
@@ -733,9 +722,9 @@ class LakeTable:
                 return out
             except (json.JSONDecodeError, OSError, FileNotFoundError):
                 pass  # fall through to the parse-tolerant listing walk
-        return self._current_manifest_by_listing(assemble=False)
+        return self._current_core_by_listing()
 
-    def _current_manifest_by_listing(self, assemble: bool = True) -> Optional[dict]:
+    def _current_core_by_listing(self) -> Optional[dict]:
         """O(versions) fallback: list manifests/ and walk downward past
         unparseable top files (a crashed legacy writer's partial write)."""
         mdir = os.path.join(self.path, "manifests")
@@ -747,19 +736,15 @@ class LakeTable:
         except FileNotFoundError:
             names = []
         self.last_head_reads = len(names) + 1
-
-        def _out(raw):
-            return assemble_manifest(self.path, raw) if assemble else raw
-
         for name in names:
             try:
                 with open(os.path.join(mdir, name)) as fh:
-                    return _out(json.load(fh))
+                    return json.load(fh)
             except (json.JSONDecodeError, OSError):
                 continue
         try:
             with open(self._pointer_path()) as fh:
-                return _out(json.load(fh))
+                return json.load(fh)
         except FileNotFoundError:
             return None
 
@@ -1197,9 +1182,6 @@ class LakeTable:
     # ------------------------------------------------------------------
     # write path
     # ------------------------------------------------------------------
-    def _bucket_col(self, keys: Sequence[str]):
-        return key_hash(keys, self.num_buckets)
-
     @staticmethod
     def _lww_partitioned(df: DataFrame, keys, order_by, k_parts: int, S: int) -> DataFrame:
         """Single-shuffle LWW merge (SURVEY §4.3 physical plan): one hash
@@ -1519,24 +1501,26 @@ class LakeTable:
         return True
 
     def _rebased_schema(self, cur: Optional[dict], writer_id: str, batch_id: int,
-                        new_schema: T.StructType, keys):
-        """A batch commit's schema rebased onto ``cur`` after a lost CAS.
+                        new_schema: T.StructType, keys, nb: int):
+        """A batch commit's schema rebased onto ``cur`` after a lost CAS;
+        ``nb`` is the bucket count the batch was hashed with.
 
         ``_SKIP`` when ``cur`` shows this writer already committed the
         batch (or a later one): a zombie/failover duplicate won the race,
         and overwriting would REGRESS the ledger and let a later replay
         apply twice. None (recompute) when a rebucket() won the race (our
         files' __bucket values and section claims are in the OLD space;
-        the retry re-syncs the count — bucket-level conflict checks could
-        pass VACUOUSLY for a commit that consumed nothing), when the
-        schemas do not merge, or when the merge changes a key column's
-        type: the table's (existing rows would re-bucket) or ours (our
-        files bucket keys under new_schema's types, e.g. long keys written
-        on an empty table while a racer committed double — the retry
-        re-aligns the batch to the winner's key type)."""
+        the retry plans on the new snapshot's count — bucket-level
+        conflict checks could pass VACUOUSLY for a commit that consumed
+        nothing), when the schemas do not merge, or when the merge
+        changes a key column's type: the table's (existing rows would
+        re-bucket) or ours (our files bucket keys under new_schema's
+        types, e.g. long keys written on an empty table while a racer
+        committed double — the retry re-aligns the batch to the winner's
+        key type)."""
         if self._last_for(cur, writer_id) >= batch_id:
             return self._SKIP
-        if cur and cur.get("num_buckets") and int(cur["num_buckets"]) != self.num_buckets:
+        if self._buckets_of(cur) != nb:
             return None
         if cur is None or not cur.get("schema"):
             return new_schema
@@ -1558,6 +1542,7 @@ class LakeTable:
         """The next manifest of a batch commit on top of ``cur``."""
         bookmarks = dict(cur.get("bookmarks", {})) if cur else {}
         bookmarks.update(bookmark_updates or {})
+        stats_cols = self._stats_columns_of(cur)
         return self._with_file_index({
             # carry foreign extra keys (another writer's custom fields)
             # through rebases; ours overlay below
@@ -1570,8 +1555,8 @@ class LakeTable:
             "deltas": deltas,
             "slice_meta": slice_meta,
             "bookmarks": bookmarks,
-            "num_buckets": self.num_buckets,
-            **({"stats_columns": list(self.stats_columns)} if self.stats_columns else {}),
+            "num_buckets": self._buckets_of(cur),
+            **({"stats_columns": stats_cols} if stats_cols else {}),
             "keys": list(keys),
             "order_by": list(order_by),
             "op_col": op_col,
@@ -1630,7 +1615,7 @@ class LakeTable:
         BATCH's output, never the table."""
         if not files:
             return {}
-        m_bits = int(self.bloom_bits)
+        m_bits = BLOOM_BITS_DEFAULT
         # BOTH lane seeds are salted: xxhash64(keys) is also the bucket
         # hash, so within one bucket's file it only spans m/num_buckets
         # positions — an unsalted lane 0 saturates and inflates false
@@ -1712,8 +1697,6 @@ class LakeTable:
         the candidate files and LWW-resolves them (tombstones dropped).
         Returns ``(probe frame of the requested keys, resolved rows,
         funnel stats)``."""
-        if m.get("num_buckets"):  # manifest-authoritative (rebucket-safe)
-            self.num_buckets = int(m["num_buckets"])
         keys = list(m["keys"])
         schema = T.StructType.fromJson(m["schema"])
         probe_schema = T.StructType([f for f in schema.fields if f.name in keys])
@@ -1724,7 +1707,7 @@ class LakeTable:
         )
         # one bounded job: every requested key's pruning coordinates
         coords = probe.select(
-            key_hash(keys, self.num_buckets).alias("b"),
+            self.bucket_col(keys, m).alias("b"),
             key_hash(keys, SLICE_MOD, "__salt__").alias("s64"),
             F.xxhash64(*keys, F.lit("__bloom1__")).alias("h1"),
             F.xxhash64(*keys, F.lit("__bloom2__")).alias("h2"),
@@ -1898,7 +1881,7 @@ class LakeTable:
         (matched live rows at the snapshot; 0 skips the commit).
         """
         return self._dml_commit(
-            "delete_where", lambda m: self.to_df(drop_deletes=True).filter(predicate),
+            "delete_where", lambda core, m: self.to_df(manifest=m).filter(predicate),
             batch_id, writer_id, mode, seq_bump,
         )
 
@@ -1932,7 +1915,7 @@ class LakeTable:
         Returns merge stats plus ``n_updated`` (0 skips the commit
         without burning the ledger slot)."""
         return self._dml_commit(
-            "update_where", lambda m: self.to_df(drop_deletes=True).filter(predicate),
+            "update_where", lambda core, m: self.to_df(manifest=m).filter(predicate),
             batch_id, writer_id, mode, seq_bump, set_values=set_values,
         )
 
@@ -1957,7 +1940,7 @@ class LakeTable:
         burning the ledger slot. ``last_delete_stats`` records the
         pruning funnel."""
         return self._dml_commit(
-            "delete_keys", lambda m: self._point_victims(m, key_values),
+            "delete_keys", lambda core, m: self._point_victims(core, key_values),
             batch_id, writer_id, mode, seq_bump, key_values=key_values,
         )
 
@@ -1982,7 +1965,7 @@ class LakeTable:
         LWW/replay semantics match ``update_where``. ``last_delete_stats``
         records the shared pruning funnel."""
         return self._dml_commit(
-            "update_keys", lambda m: self._point_victims(m, key_values),
+            "update_keys", lambda core, m: self._point_victims(core, key_values),
             batch_id, writer_id, mode, seq_bump, set_values=set_values,
             key_values=key_values,
         )
@@ -1998,21 +1981,23 @@ class LakeTable:
     def _dml_commit(self, verb: str, victims_of, batch_id: int, writer_id: str,
                     mode: str, seq_bump: int, set_values: Optional[dict] = None,
                     key_values: Optional[Sequence[dict]] = None) -> dict:
-        """The one commit path of the four DML verbs. Validates against
-        the HEAD core, short-circuits a replayed ``batch_id`` BEFORE the
-        victim scan, then merges the victims (``victims_of(core)``) as
-        tombstones — or, with ``set_values``, as assigned rows — whose
-        first ``order_by`` value is bumped by ``seq_bump`` so they win the
-        LWW. Zero victims skip the commit without burning the ledger
-        slot. Returns the merge stats plus ``n_deleted``/``n_updated``."""
-        m = self._current_core()
-        if m is None:
+        """The one commit path of the four DML verbs, on ONE snapshot: HEAD
+        is read once, and that core validates the call, short-circuits a
+        replayed ``batch_id`` BEFORE the victim scan, feeds the victim
+        scan (``victims_of(core, assembled manifest)``) and is the merge's
+        ``base``. The victims merge as tombstones — or, with
+        ``set_values``, as assigned rows — whose first ``order_by`` value
+        is bumped by ``seq_bump`` so they win the LWW. Zero victims skip
+        the commit without burning the ledger slot. Returns the merge
+        stats plus ``n_deleted``/``n_updated``."""
+        core = self._current_core()
+        if core is None:
             raise ValueError(f"{verb} on an empty table")
-        keys, order_by = list(m["keys"]), list(m["order_by"])
-        op_col = m.get("op_col")
+        keys, order_by = list(core["keys"]), list(core["order_by"])
+        op_col = core.get("op_col")
         dtypes = {
             f.name: f.dataType.simpleString()
-            for f in T.StructType.fromJson(m["schema"]).fields
+            for f in T.StructType.fromJson(core["schema"]).fields
         }
         if set_values is None and not op_col:
             raise ValueError(
@@ -2020,7 +2005,7 @@ class LakeTable:
                 "are how deletes persist); this table was created without one"
             )
         if set_values is not None:
-            self._validated_assignment_types(m, set_values, dtypes, verb)
+            self._validated_assignment_types(core, set_values, dtypes, verb)
         bump_col = order_by[0]
         if dtypes.get(bump_col) not in ("tinyint", "smallint", "int", "bigint"):
             raise ValueError(
@@ -2032,9 +2017,10 @@ class LakeTable:
                 raise ValueError(f"{verb} needs exactly the merge keys {keys}")
         result = "n_deleted" if set_values is None else "n_updated"
         skip = {"skipped": True, "batch_id": batch_id, result: 0}
-        if batch_id <= self._last_for(m, writer_id):
+        if batch_id <= self._last_for(core, writer_id):
             return skip  # a replay must not pay the victim scan
-        victims = victims_of(m)
+        m = assemble_manifest(self.path, core)
+        victims = victims_of(core, m)
         if victims is None:
             return skip
         # persist across the gating count AND the merge write (one victim
@@ -2060,6 +2046,7 @@ class LakeTable:
                 op_col=op_col,
                 mode=mode,
                 writer_id=writer_id,
+                base=m,
             )
         finally:
             victims.unpersist()
@@ -2127,13 +2114,6 @@ class LakeTable:
                 raise ValueError(
                     f"order_by {list(order_by)} != table order_by {m['order_by']}"
                 )
-            # bucket count is manifest-authoritative MID-FLIGHT too (not
-            # just at reopen): after a rebucket() an instance constructed
-            # under the old count would otherwise bucket this batch into
-            # the old space and commit it with NO conflict — the first
-            # attempt's cur IS m, so only this sync protects it
-            if m.get("num_buckets"):
-                self.num_buckets = int(m["num_buckets"])
             if op_col is None:
                 op_col = m.get("op_col")
             elif m.get("op_col") is not None and op_col != m["op_col"]:
@@ -2180,7 +2160,10 @@ class LakeTable:
                 df.withColumns(fix) if fix else df, [quote_ident(n) for n, _ in want]
             )
 
-        batch = align(batch_df).withColumn("__bucket", self._bucket_col(keys))
+        # the bucket count is the planning snapshot's (a handle opened
+        # before a rebucket() still hashes into the new space)
+        nb = self._buckets_of(m)
+        batch = align(batch_df).withColumn("__bucket", key_hash(keys, nb))
 
         if callable(affected_buckets) and mode not in ("mor", "cow_incremental"):
             # the caller's lineage aggregate is STILL RUNNING — legal only
@@ -2234,7 +2217,7 @@ class LakeTable:
         if mode in ("mor", "cow_incremental"):
             out, committed = self._append_delta(
                 batch, keys, order_by, batch_id, op_col, affected,
-                new_schema, m, bookmark_updates, extra_manifest, t0, writer_id,
+                new_schema, m, nb, bookmark_updates, extra_manifest, t0, writer_id,
                 key_index=key_index, delta_parts=delta_parts,
                 affected_est=affected_est,
             )
@@ -2271,7 +2254,7 @@ class LakeTable:
                     self.spark.read.schema(stored).parquet(*sorted(files_needed)), own_pairs
                 ).drop("__bucket")
                 # re-derive the bucket after align (same pure function of keys)
-                ex_aligned = align(ex).withColumn("__bucket", self._bucket_col(keys))
+                ex_aligned = align(ex).withColumn("__bucket", key_hash(keys, nb))
                 all_rows = ex_aligned.unionByName(batch)
 
         # The salt DECOUPLES shuffle width from num_buckets: a batch
@@ -2295,13 +2278,15 @@ class LakeTable:
             }
         )
         our_files, our_meta, our_sizes, our_stats, our_blooms = self._harvest(
-            by_index, affected, S, k_parts, keys, order_by, key_index, allowed=allowed
+            m, by_index, affected, S, k_parts, keys, order_by, key_index, allowed=allowed
         )
 
         def assemble(cur: Optional[dict], bookmark_updates, extra_manifest):
             final_schema = new_schema
             if cur is not m:
-                final_schema = self._rebased_schema(cur, writer_id, batch_id, new_schema, keys)
+                final_schema = self._rebased_schema(
+                    cur, writer_id, batch_id, new_schema, keys, nb
+                )
                 if final_schema is None or final_schema is self._SKIP:
                     return final_schema
                 # lost the CAS: our rewritten files embody the OLD state of
@@ -2345,7 +2330,7 @@ class LakeTable:
 
     def _append_delta(
         self, batch, keys, order_by, batch_id, op_col, affected,
-        new_schema, m, bookmark_updates, extra_manifest, t0,
+        new_schema, m, nb, bookmark_updates, extra_manifest, t0,
         writer_id: str = "default",
         key_index: bool = False,
         delta_parts: Optional[int] = None,
@@ -2396,7 +2381,7 @@ class LakeTable:
         lazy_affected = callable(affected)
         n_aff = (
             int(affected_est) if lazy_affected and affected_est else
-            (self.num_buckets if lazy_affected else len(affected))
+            (nb if lazy_affected else len(affected))
         )
         S = self._fpb(n_aff)
         k_parts = max(1, n_aff * S)
@@ -2423,7 +2408,7 @@ class LakeTable:
                 raise
 
         our_deltas, our_meta, our_sizes, our_stats, our_blooms = self._harvest(
-            by_index, affected, S, k_parts, keys, order_by, key_index
+            m, by_index, affected, S, k_parts, keys, order_by, key_index
         )
 
         def assemble(cur: Optional[dict], bookmark_updates, extra_manifest):
@@ -2431,7 +2416,7 @@ class LakeTable:
             # rebases, unless the batch landed already or must recompute
             final_schema = (
                 new_schema if cur is m
-                else self._rebased_schema(cur, writer_id, batch_id, new_schema, keys)
+                else self._rebased_schema(cur, writer_id, batch_id, new_schema, keys, nb)
             )
             if final_schema is None or final_schema is self._SKIP:
                 return final_schema
@@ -2585,57 +2570,23 @@ class LakeTable:
             if to_version is None
             else load_core_at(self.path, to_version)
         )
-        core_from = load_core_at(self.path, from_version)
-        # section-ref prefilter: sections are CONTENT-ADDRESSED, so a
-        # bucket whose ref is identical on both endpoints has an
-        # identical file set and cannot produce a diff row — its section
-        # is never even loaded. Metadata cost drops from O(live files)
-        # to O(changed buckets' files); the full assembly survives only
-        # for pre-split manifests (and the pre-creation all-inserts
-        # path, which reads the whole table anyway).
-        if (
-            core_to is not None
-            and core_from is not None
-            and "sections_ref" in core_to
-            and "sections_ref" in core_from
-        ):
-            rf, rt = core_from["sections_ref"], core_to["sections_ref"]
-            changed_b = {b for b in set(rf) | set(rt) if rf.get(b) != rt.get(b)}
-            m = assemble_manifest_buckets(self.path, core_to, changed_b)
-            m_from = assemble_manifest_buckets(self.path, core_from, changed_b)
-            sections_accounting = {
-                # bucket-level accounting: each counted bucket loads its
-                # section on BOTH endpoints (<= 2 files per bucket)
-                "buckets_loaded": len(changed_b),
-                "buckets_total": len(set(rf) | set(rt)),
-            }
-        else:
-            m = assemble_manifest(self.path, core_to)
-            m_from = assemble_manifest(self.path, core_from)
-            sections_accounting = None
-        if m is None:
+        if core_to is None:
             return None
-        keys = list(m["keys"])
-        op_col = m.get("op_col")
-        schema = T.StructType.fromJson(m["schema"])
+        core_from = load_core_at(self.path, from_version)
+        keys = list(core_to["keys"])
+        op_col = core_to.get("op_col")
+        schema = T.StructType.fromJson(core_to["schema"])
         attrs = [f.name for f in schema.fields if f.name not in keys]
-        if m_from is None and from_version >= 0:
+        if core_from is None and from_version >= 0:
             raise ValueError(
                 f"manifest v{from_version} expired: cdc_diff's before-"
                 "endpoint exceeds retained metadata (the whole table would "
                 "misreport as inserts); raise expire_manifests("
                 "retain_last=...) to cover readers"
             )
-        if m_from is None:
+        if core_from is None:
             # pre-creation endpoint (from_version < 0): all-inserts is exact
-            after_full = self.read_state(version=to_version)
-            if after_full is None:
-                return None
-            after_full = after_full.drop("__bucket")
-            if op_col and op_col in after_full.columns:
-                after_full = after_full.filter(
-                    F.col(op_col).isNull() | (F.col(op_col) != F.lit("delete"))
-                )
+            after_full = self.to_df(manifest=assemble_manifest(self.path, core_to))
             return after_full.select(
                 *keys,
                 F.lit("insert").alias("change"),
@@ -2644,10 +2595,20 @@ class LakeTable:
                 ).alias("before"),
                 F.struct(*attrs).alias("after"),
             )
-
+        # section-ref prefilter: sections are CONTENT-ADDRESSED, so a
+        # bucket whose ref is identical on both endpoints has an
+        # identical file set and cannot produce a diff row — its section
+        # is never even loaded. Metadata cost drops from O(live files)
+        # to O(changed buckets' files).
+        rf, rt = core_from["sections_ref"], core_to["sections_ref"]
+        changed_b = {b for b in set(rf) | set(rt) if rf.get(b) != rt.get(b)}
+        m = assemble_manifest_buckets(self.path, core_to, changed_b)
+        m_from = assemble_manifest_buckets(self.path, core_from, changed_b)
         plan = self.cdc_diff_plan(m_from, m)
-        if sections_accounting is not None:
-            plan.update(sections_accounting)
+        # bucket-level accounting: each counted bucket loads its section
+        # on BOTH endpoints (<= 2 files per bucket)
+        plan["buckets_loaded"] = len(changed_b)
+        plan["buckets_total"] = len(set(rf) | set(rt))
         self.last_cdc_diff_plan = plan
         # key fields in the KEYS-LIST order (not schema field order): the
         # populated path selects *keys first, so the empty-window frame
@@ -2777,8 +2738,6 @@ class LakeTable:
         m = self.current_manifest() if base is _HEAD else base
         if m is None or not m.get("deltas"):
             return {"skipped": True}
-        if m.get("num_buckets"):  # manifest-authoritative (rebucket-safe)
-            self.num_buckets = int(m["num_buckets"])
         k = max(1, k_fold or self.fold_every)
         t0 = time.time()
 
@@ -2848,7 +2807,7 @@ class LakeTable:
             for b_str, (S_b, due, _bs, _ds) in plans.items()
         }
         written = self._harvest(
-            by_index, [int(b) for b in plans], S_w, k_parts, keys, order_by,
+            m, by_index, [int(b) for b in plans], S_w, k_parts, keys, order_by,
             key_index, allowed=allowed, eras=eras,
         )
         consumed = {b_str: (bs, ds) for b_str, (_S, _due, bs, ds) in plans.items()}
@@ -2992,9 +2951,9 @@ class LakeTable:
         )
         return frame, k_parts, list(range(n_e))
 
-    def _harvest(self, by_index: dict, affected, S: int, k_parts: int, keys, order_by,
-                 key_index: bool, allowed=None, eras=None) -> tuple:
-        """Manifest entries for one write job's part files: ``(files,
+    def _harvest(self, m: Optional[dict], by_index: dict, affected, S: int, k_parts: int,
+                 keys, order_by, key_index: bool, allowed=None, eras=None) -> tuple:
+        """Manifest entries for one write job planned on ``m``: ``(files,
         slice_meta, sizes, zone stats, key blooms)`` — per-bucket claims
         (``_files_and_meta``), byte sizes, zone maps, and key blooms when
         ``key_index`` (else None)."""
@@ -3007,7 +2966,7 @@ class LakeTable:
             else None
         )
         return (files, meta, self._sizes_of(by_index),
-                self._stats_of(by_index, self._stat_cols(order_by)), blooms)
+                self._stats_of(by_index, self._stat_cols(m, order_by)), blooms)
 
     def _rewrite_job(self, df, affected: Sequence[int], epoch: int, m: dict,
                      key_index: bool, input_files,
@@ -3042,7 +3001,7 @@ class LakeTable:
             shaped = shaped.drop("__salt")
         by_index = self._write_parts(shaped, self._epoch_dir(epoch))
         return by_index, self._harvest(
-            by_index, affected, S, k_parts, m["keys"], m.get("order_by"),
+            m, by_index, affected, S, k_parts, m["keys"], m.get("order_by"),
             key_index, eras=eras,
         )
 
@@ -3173,8 +3132,6 @@ class LakeTable:
         m = self.current_manifest()
         if m is None:
             return {"skipped": True, "reason": "empty table"}
-        if m.get("num_buckets"):  # manifest-authoritative (rebucket-safe)
-            self.num_buckets = int(m["num_buckets"])
         t0 = time.time()
         sizes = m.get("file_bytes", {})
         wanted = (
@@ -3286,7 +3243,7 @@ class LakeTable:
         )
         return {
             "version": m["version"],
-            "num_buckets": int(m.get("num_buckets", self.num_buckets)),
+            "num_buckets": self._buckets_of(m),
             "files": len(uniq),
             "bytes": total_bytes,
             "delta_files_pending": len(uniq_delta),
@@ -3320,10 +3277,11 @@ class LakeTable:
         Multi-writer: in-flight commits computed under the OLD count lose
         the CAS and recompute — COW/fold structurally (their consumed
         files vanished), MOR via the explicit bucket-drift rebase guard —
-        and every writer path re-syncs ``num_buckets`` from the fresh
-        manifest before recomputing. Old-version time travel still reads
-        its own manifest's sections, so history stays intact. Key blooms
-        are dropped for the rewritten files unless ``key_index=True``
+        and the recompute plans on the fresh snapshot, whose count every
+        operation reads (``_buckets_of``); no handle caches it.
+        Old-version time travel still reads its own manifest's sections,
+        so history stays intact. Key blooms are dropped for the rewritten
+        files unless ``key_index=True``
         re-harvests them (files without blooms remain lookup candidates —
         pruning-only metadata, also rebuilt by later ``key_index=True``
         writes or folds)."""
@@ -3340,9 +3298,7 @@ class LakeTable:
         m = self.current_manifest()
         if m is None:
             raise ValueError("rebucket on an empty table")
-        if m.get("num_buckets"):
-            self.num_buckets = int(m["num_buckets"])
-        if nb == self.num_buckets:
+        if nb == self._buckets_of(m):
             return {"skipped": True, "reason": f"already at {nb} buckets"}
         t0 = time.time()
         df = self.read_state(manifest=m)  # resolves MOR deltas; keeps tombstones
@@ -3362,7 +3318,6 @@ class LakeTable:
         }, sizes, new_blooms=blooms, new_stats=stats)
         if not self._publish(manifest):
             return None  # concurrent commit: the rewritten layout is stale
-        self.num_buckets = nb
         return {
             "skipped": False,
             "version": epoch,
@@ -3655,9 +3610,12 @@ class LakeTable:
         min_order: Optional[float] = None,
         max_order: Optional[float] = None,
         col_ranges: Optional[dict] = None,
+        manifest: Optional[dict] = None,
     ) -> Optional[DataFrame]:
         """State of the table (MOR deltas resolved, tombstones filtered by
-        default; ``version`` time-travels — an int version or a TAG name).
+        default; ``version`` time-travels — an int version or a TAG name;
+        ``manifest`` pins an already-assembled snapshot, as in
+        ``read_state``).
 
         ``min_order``/``max_order`` restrict the result to rows whose
         current version has LWW ordering value inside the bounds,
@@ -3671,8 +3629,10 @@ class LakeTable:
         ONE manifest load here drives the listing, the dedup decision,
         the residual filters and the tombstone filter — a racing commit
         can't tear them apart."""
-        version = self.resolve_version(version) if version is not None else None
-        m = self.manifest_at(version) if version is not None else self.current_manifest()
+        m = manifest
+        if m is None:
+            version = self.resolve_version(version) if version is not None else None
+            m = self.manifest_at(version) if version is not None else self.current_manifest()
         if m is None:
             return None
         if (min_order is not None or max_order is not None) and not m.get("order_by"):

@@ -215,8 +215,6 @@ def process_batch(
     the same manifest as the data it shaped.
     """
     snap = table.current_manifest()
-    if snap and snap.get("num_buckets"):  # manifest-authoritative
-        table.num_buckets = int(snap["num_buckets"])
     # batch-id ledger check FIRST: a replayed batch must be a complete
     # no-op, side channels (DLQ append, metrics) included. The stream IS
     # the writer: several streams share one table, each with its own ledger
@@ -271,7 +269,7 @@ def process_batch(
     # throughput vs persisting the flattened batch across both passes.
     # Record-shaped streams whose keys live INSIDE the payload fall back to
     # metrics over the flattened batch (pays one extra JSON pass).
-    bucket = key_hash(conf.keys, table.num_buckets)
+    bucket = table.bucket_col(conf.keys, snap)  # lineage partition == merge bucket
     metrics_src = (
         raw if all(k in raw.columns for k in conf.keys) else prepare_batch(raw, conf, schema)
     )

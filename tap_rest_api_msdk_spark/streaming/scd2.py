@@ -58,42 +58,29 @@ from tap_rest_api_msdk_spark.streaming.pipeline import (
 )
 
 
-def _resolved_batch(
-    state: LakeTable, conf: PipelineConfig, batch_df: DataFrame, batch_id: int
-) -> tuple:
-    """The batch past the stream's bookmark and its payload schema, both
-    resolved against the pre-batch state snapshot, as ``process_batch`` does."""
-    snap = state.current_manifest()
-    store = BookmarkStore(
-        state, conf.stream, conf.start_date, bookmarks=(snap or {}).get("bookmarks", {})
-    )
-    raw = incremental_filter(batch_df, conf.replication_key, store.get())
-    return raw, resolve_payload_schema(snap, conf, raw, state.path, batch_id)
-
-
 def _history_rows(
-    state: LakeTable, conf: PipelineConfig, shaped: DataFrame, batch_id: int
+    state: LakeTable, snap: Optional[dict], conf: PipelineConfig, shaped: DataFrame,
+    batch_id: int,
 ) -> DataFrame:
-    """The batch's history delta: new versions (open or within-batch
-    closed) plus re-emissions of previously-open rows now closed."""
+    """The batch's history delta against state snapshot ``snap``: new
+    versions (open or within-batch closed) plus re-emissions of
+    previously-open rows now closed."""
     keys = list(conf.keys)
     ob = list(conf.order_by)
     ordst = F.struct(*[F.col(c) for c in ob])
 
     prev: Optional[DataFrame] = None
-    if state.current_manifest() is not None:
-        bcol = state._bucket_col(keys)  # the table's own bucketing function
+    if snap is not None:
+        bcol = state.bucket_col(keys, snap)  # the snapshot's own bucketing
         aff = [
             r["b"]
             for r in shaped.select(bcol.alias("b")).distinct().collect()
         ]
-        prev_all = state.read_state(buckets=aff)
-        if prev_all is not None:
-            # trim collateral keys sharing the affected buckets: the window
-            # input stays O(batch keys), not O(bucket)
-            prev = prev_all.drop("__bucket").join(
-                shaped.select(*keys).distinct(), keys, "leftsemi"
-            )
+        # trim collateral keys sharing the affected buckets: the window
+        # input stays O(batch keys), not O(bucket)
+        prev = state.read_state(buckets=aff, manifest=snap).drop("__bucket").join(
+            shaped.select(*keys).distinct(), keys, "leftsemi"
+        )
 
     if prev is not None:
         prev_ord = prev.select(
@@ -122,6 +109,51 @@ def _history_rows(
     )
 
 
+def _history_half(
+    state: LakeTable,
+    history: LakeTable,
+    conf: PipelineConfig,
+    batch_df: DataFrame,
+    batch_id: int,
+    history_mode: str,
+) -> tuple:
+    """``(history commit result, the batch's payload schema)``, on ONE
+    state snapshot: it answers the bookmark, the payload schema, the
+    bucket footprint and the previous-state read. The history merge
+    commits on the history snapshot its ledger check read."""
+    snap = state.current_manifest()
+    hist = history.current_manifest()
+    skip = {"skipped": True, "batch_id": batch_id}
+    history_due = batch_id > LakeTable._last_for(hist, conf.stream)
+    if not history_due and batch_id <= LakeTable._last_for(snap, conf.stream):
+        return skip, None  # both halves already committed
+    store = BookmarkStore(
+        state, conf.stream, conf.start_date, bookmarks=(snap or {}).get("bookmarks", {})
+    )
+    raw = incremental_filter(batch_df, conf.replication_key, store.get())
+    schema = resolve_payload_schema(snap, conf, raw, state.path, batch_id)
+    if not history_due:
+        return skip, schema
+    if conf.payload_col and not (schema and schema.fields):
+        return None, schema  # nothing inferable; the state pipeline will skip too
+    shaped = prepare_batch(raw, conf, schema)
+    # one bounded materialization: reused by the emptiness probe, the
+    # bucket-footprint collect, and the merge write
+    rows = _history_rows(state, snap, conf, shaped, batch_id).localCheckpoint(eager=True)
+    if rows.isEmpty():
+        return None, schema
+    return history.merge_upsert(
+        rows,
+        keys=list(conf.keys) + list(conf.order_by),
+        order_by=["__gen"],
+        batch_id=batch_id,
+        op_col=None,
+        mode=history_mode,
+        writer_id=conf.stream,
+        base=hist,
+    ), schema
+
+
 def commit_history(
     state: LakeTable,
     history: LakeTable,
@@ -133,26 +165,7 @@ def commit_history(
     """The history half of one micro-batch (exactly-once by the history
     table's own per-stream ledger). MUST run against the PRE-batch state —
     :func:`scd2_process_batch` sequences it before the state merge."""
-    if batch_id <= history.last_batch_id_for(conf.stream):
-        return {"skipped": True, "batch_id": batch_id}
-    raw, schema = _resolved_batch(state, conf, batch_df, batch_id)
-    if conf.payload_col and not (schema and schema.fields):
-        return None  # nothing inferable; the state pipeline will skip too
-    shaped = prepare_batch(raw, conf, schema)
-    # one bounded materialization: reused by the emptiness probe, the
-    # bucket-footprint collect, and the merge write
-    rows = _history_rows(state, conf, shaped, batch_id).localCheckpoint(eager=True)
-    if rows.isEmpty():
-        return None
-    return history.merge_upsert(
-        rows,
-        keys=list(conf.keys) + list(conf.order_by),
-        order_by=["__gen"],
-        batch_id=batch_id,
-        op_col=None,
-        mode=history_mode,
-        writer_id=conf.stream,
-    )
+    return _history_half(state, history, conf, batch_df, batch_id, history_mode)[0]
 
 
 def scd2_process_batch(
@@ -167,19 +180,14 @@ def scd2_process_batch(
     commit first (it reads the pre-batch state), then the normal
     latest-state ``process_batch``. Each commit is guarded by its own
     per-stream ledger, so any crash/replay interleaving reconverges. Both
-    commits flatten with the schema resolved once here (one inference)."""
+    commits flatten with the schema the history half resolved (one
+    inference)."""
     if conf.result_limit is not None:
         raise ValueError("result_limit is not supported with an SCD2 companion")
-    if batch_id > state.last_batch_id_for(conf.stream):
-        schema = _resolved_batch(state, conf, batch_df, batch_id)[1]
-        if schema is not None:
-            conf = replace(conf, payload_schema=schema)
-    return {
-        "history": commit_history(
-            state, history, conf, batch_df, batch_id, history_mode
-        ),
-        "state": process_batch(state, conf, batch_df, batch_id),
-    }
+    out, schema = _history_half(state, history, conf, batch_df, batch_id, history_mode)
+    if schema is not None:
+        conf = replace(conf, payload_schema=schema)
+    return {"history": out, "state": process_batch(state, conf, batch_df, batch_id)}
 
 
 def scd2_view(history: LakeTable, current_only: bool = False) -> Optional[DataFrame]:

@@ -10,6 +10,10 @@ micro-batch that does not fold must:
 * build its plans with a number of py4j round trips that does not grow
   with the payload's width (60 fields within 10% of 15 fields).
 
+Every other operation plans on one snapshot too: opening a table reads no
+manifest, each DML verb reads HEAD once, and an SCD2 micro-batch reads
+each table's HEAD once per half (state twice, history once).
+
 No engine path hands Python rows to Spark as a pickled Python RDD: payload
 inference, the ownership and granule lookups, point probes and empty
 reads all ship Arrow, so ``SparkContext.parallelize`` is never called.
@@ -23,7 +27,9 @@ from pyspark import SparkContext
 from py4j import protocol as proto
 from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from tap_rest_api_msdk_spark.session import arrow_frame
 from tap_rest_api_msdk_spark.sources.wal_synth import synth_repo_wal
 from tap_rest_api_msdk_spark.streaming.laketable import LakeTable
 from tap_rest_api_msdk_spark.streaming.pipeline import (
@@ -31,6 +37,7 @@ from tap_rest_api_msdk_spark.streaming.pipeline import (
     process_batch,
     run_batch_replay,
 )
+from tap_rest_api_msdk_spark.streaming.scd2 import scd2_process_batch
 
 BOOT, BATCH = 2000, 500
 RELEASE = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
@@ -167,3 +174,64 @@ def test_engine_paths_never_parallelize(spark, tmp_path):
         assert s.to_df().count() > 0
     assert any(not f.get("skipped") for f in folds), folds
     assert all(n == 0 for n in counts.values()), counts
+
+
+@contextmanager
+def _head_reads(counts: dict, name: str):
+    """Count HEAD reads (``LakeTable._current_core`` calls, which every
+    ``current_manifest`` makes) inside the block."""
+    calls = [0]
+    core = LakeTable._current_core
+
+    def counting(self):
+        calls[0] += 1
+        return core(self)
+
+    LakeTable._current_core = counting
+    try:
+        yield
+    finally:
+        LakeTable._current_core = core
+        counts[name] = calls[0]
+
+
+def test_each_operation_plans_on_one_snapshot(spark, tmp_path):
+    schema = T.StructType([
+        T.StructField("id", T.LongType()), T.StructField("seq", T.LongType()),
+        T.StructField("op", T.StringType()), T.StructField("text", T.StringType()),
+    ])
+    path = str(tmp_path / "t")
+    t = LakeTable(spark, path, num_buckets=4)
+    rows = arrow_frame(spark, [(i, i, "upsert", f"v{i}") for i in range(40)], schema)
+    t.merge_upsert(rows, keys=["id"], order_by=["seq"], batch_id=0, op_col="op")
+
+    wal = synth_repo_wal(spark, 400, n_repos=5, n_paths=20, partitions=2, shredded=True)
+    state = LakeTable(spark, str(tmp_path / "state"), num_buckets=4)
+    hist = LakeTable(spark, str(tmp_path / "hist"), num_buckets=4)
+    conf = PipelineConfig(stream="s", num_buckets=4)
+    scd2_process_batch(state, hist, conf, wal.filter(F.col("seq") < 200), 0)
+
+    counts: dict = {}
+    with _head_reads(counts, "LakeTable()"):
+        LakeTable(spark, path, num_buckets=16)
+    with _head_reads(counts, "delete_where"):
+        assert t.delete_where("id = 1", batch_id=1)["n_deleted"] == 1
+    with _head_reads(counts, "update_where"):
+        assert t.update_where("id = 2", {"text": "'x'"}, batch_id=2)["n_updated"] == 1
+    with _head_reads(counts, "delete_keys"):
+        assert t.delete_keys([{"id": 3}], batch_id=3)["n_deleted"] == 1
+    with _head_reads(counts, "update_keys"):
+        assert t.update_keys([{"id": 4}], {"text": F.lit("y")}, batch_id=4)["n_updated"] == 1
+    with _head_reads(counts, "scd2_process_batch"):
+        out = scd2_process_batch(state, hist, conf, wal.filter(F.col("seq") >= 200), 1)
+    assert not out["history"]["skipped"] and not out["state"]["skipped"]
+    assert counts == {
+        "LakeTable()": 0,
+        "delete_where": 1,
+        "update_where": 1,
+        "delete_keys": 1,
+        "update_keys": 1,
+        "scd2_process_batch": 3,
+    }, counts
+    live = {r["id"]: r["text"] for r in t.to_df().collect()}
+    assert 1 not in live and 3 not in live and live[2] == "x" and live[4] == "y"

@@ -12,11 +12,14 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tap_rest_api_msdk_spark.session import arrow_frame
 from tap_rest_api_msdk_spark.streaming.laketable import LakeTable
 
 
 def _mk(spark, rows):
-    return spark.createDataFrame(rows, "id long, seq long, op string, text string")
+    return arrow_frame(
+        spark, rows, T.StructType.fromDDL("id long, seq long, op string, text string")
+    )
 
 
 def _drive(spark, path, n_keys, n_batches, rng, fold_every=4, files_per_bucket=None):
@@ -263,9 +266,9 @@ def test_cdc_diff_empty_window_column_order_matches_populated(spark, tmp_path):
     order, the empty-window early return must still lead with the keys in
     KEYS-LIST order (same as the populated path's select) — a positional
     consumer unioning consecutive windows would otherwise mix frames."""
-    rows = spark.createDataFrame(
-        [(10, "k1", 0, "a"), (20, "k2", 0, "b")],
-        "a long, b string, seq long, text string",
+    rows = arrow_frame(
+        spark, [(10, "k1", 0, "a"), (20, "k2", 0, "b")],
+        T.StructType.fromDDL("a long, b string, seq long, text string"),
     )
     t = LakeTable(spark, str(tmp_path / "t"), num_buckets=4)
     # keys REVERSED vs schema order: (b, a) while schema leads (a, b)
@@ -275,8 +278,8 @@ def test_cdc_diff_empty_window_column_order_matches_populated(spark, tmp_path):
     empty = t.cdc_diff(v0)  # HEAD -> HEAD: zero touched granules
     assert empty.count() == 0
     t.merge_upsert(
-        spark.createDataFrame([(30, "k3", 1, "c")],
-                              "a long, b string, seq long, text string"),
+        arrow_frame(spark, [(30, "k3", 1, "c")],
+                    T.StructType.fromDDL("a long, b string, seq long, text string")),
         keys=["b", "a"], order_by=["seq"], batch_id=1, op_col=None)
     populated = t.cdc_diff(v0)
     assert populated.count() == 1

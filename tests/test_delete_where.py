@@ -5,7 +5,9 @@ flow through cdc_diff, and lose to genuinely-later concurrent upserts.
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from tap_rest_api_msdk_spark.session import arrow_frame
 from tap_rest_api_msdk_spark.streaming.laketable import LakeTable, head_version
 
 SCHEMA = "seq long, repo string, path string, commit string, op string, content string"
@@ -14,7 +16,7 @@ ORDER = ["seq", "commit"]
 
 
 def mk(spark, rows):
-    return spark.createDataFrame(rows, SCHEMA)
+    return arrow_frame(spark, rows, T.StructType.fromDDL(SCHEMA))
 
 
 @pytest.fixture()
@@ -118,7 +120,9 @@ def test_mor_mode_delete_resolves_identically(spark, table):
 def test_requires_op_col_and_integral_seq(spark, tmp_path):
     t = LakeTable(spark, str(tmp_path / "noop"), num_buckets=2)
     t.merge_upsert(
-        spark.createDataFrame([(1, "k", "v")], "seq long, k string, v string"),
+        arrow_frame(
+            spark, [(1, "k", "v")], T.StructType.fromDDL("seq long, k string, v string")
+        ),
         ["k"],
         ["seq"],
         batch_id=0,
@@ -128,9 +132,9 @@ def test_requires_op_col_and_integral_seq(spark, tmp_path):
 
     t2 = LakeTable(spark, str(tmp_path / "strseq"), num_buckets=2)
     t2.merge_upsert(
-        spark.createDataFrame(
-            [("2024-01-01", "k", "up", "v")],
-            "ts string, k string, op string, v string",
+        arrow_frame(
+            spark, [("2024-01-01", "k", "up", "v")],
+            T.StructType.fromDDL("ts string, k string, op string, v string"),
         ),
         ["k"],
         ["ts"],
@@ -144,7 +148,7 @@ def test_requires_op_col_and_integral_seq(spark, tmp_path):
 def test_delete_keys_prunes_and_deletes(spark, tmp_path):
     t = LakeTable(spark, str(tmp_path / "pk"), num_buckets=8)
     rows = [(i, f"r{i % 50}", f"p{i}", f"c{i}", "upsert", f"v{i}") for i in range(400)]
-    df = spark.createDataFrame(rows, SCHEMA)
+    df = arrow_frame(spark, rows, T.StructType.fromDDL(SCHEMA))
     # several batches so each bucket holds several bloom-indexed files
     for b in range(4):
         t.merge_upsert(

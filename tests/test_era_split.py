@@ -11,7 +11,9 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from tap_rest_api_msdk_spark.session import arrow_frame
 from tap_rest_api_msdk_spark.streaming.laketable import (
     LakeTable,
     bucket_salt_era_to_partition,
@@ -23,9 +25,9 @@ from tap_rest_api_msdk_spark.streaming.laketable import (
 def _rows(spark, lo, hi):
     # append-mostly: each batch writes NEW ids, so live winners span the
     # full seq range — the workload whose history era-splitting serves
-    return spark.createDataFrame(
-        [(int(i), int(i), f"v{i}") for i in range(lo, hi)],
-        "id long, seq long, text string",
+    return arrow_frame(
+        spark, [(int(i), int(i), f"v{i}") for i in range(lo, hi)],
+        T.StructType.fromDDL("id long, seq long, text string"),
     )
 
 
@@ -47,9 +49,9 @@ def test_three_col_partition_fn_matches_spark(spark):
     """bucket_salt_era_to_partition must mirror HashPartitioning over
     three int columns exactly (the claims derivation depends on it)."""
     k = 48
-    df = spark.createDataFrame(
-        [(b, s, e) for b in range(4) for s in range(4) for e in range(3)],
-        "b int, s int, e int",
+    df = arrow_frame(
+        spark, [(b, s, e) for b in range(4) for s in range(4) for e in range(3)],
+        T.StructType.fromDDL("b int, s int, e int"),
     ).repartition(k, "b", "s", "e")
     got = {
         (r["b"], r["s"], r["e"]): r["p"]
@@ -226,9 +228,9 @@ def test_era_split_fold_lww_across_eras(spark, tmp_path):
     t.era_split = 4
     t.merge_upsert(_rows(spark, 0, 400), keys=["id"], order_by=["seq"], batch_id=0)
     # rewrite ids 0..99 with HIGH seq (other end of the era range)
-    upd = spark.createDataFrame(
-        [(i, 10_000 + i, f"u{i}") for i in range(100)],
-        "id long, seq long, text string",
+    upd = arrow_frame(
+        spark, [(i, 10_000 + i, f"u{i}") for i in range(100)],
+        T.StructType.fromDDL("id long, seq long, text string"),
     )
     t.merge_upsert(upd, keys=["id"], order_by=["seq"], batch_id=1,
                    mode="cow_incremental")

@@ -6,13 +6,14 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tap_rest_api_msdk_spark.session import arrow_frame
 from tap_rest_api_msdk_spark.streaming.laketable import LakeTable
 
 SCHEMA = "seq long, repo string, path string, commit string, op string, content string"
 
 
 def mk(spark, rows):
-    return spark.createDataFrame(rows, SCHEMA)
+    return arrow_frame(spark, rows, T.StructType.fromDDL(SCHEMA))
 
 
 @pytest.fixture()
@@ -101,9 +102,9 @@ def test_schema_evolution_additive_and_widening(spark, table):
     table.merge_upsert(
         mk(spark, [(1, "r1", "a", "c1", "upsert", "v1")]), KEYS, ORDER, 0, op_col="op"
     )
-    evolved = spark.createDataFrame(
-        [(2, "r2", "b", "c2", "upsert", "v2", 42, 1.5)],
-        SCHEMA + ", stars long, size double",
+    evolved = arrow_frame(
+        spark, [(2, "r2", "b", "c2", "upsert", "v2", 42, 1.5)],
+        T.StructType.fromDDL(SCHEMA + ", stars long, size double"),
     )
     table.merge_upsert(evolved, KEYS, ORDER, 1, op_col="op")
     df = table.to_df()
@@ -112,8 +113,9 @@ def test_schema_evolution_additive_and_widening(spark, table):
     assert rows["r1"].stars is None  # old rows backfilled with null
     assert rows["r2"].stars == 42
     # widening: a later long batch for 'size' keeps double (never narrow)
-    again = spark.createDataFrame(
-        [(3, "r3", "c", "c3", "upsert", "v3", 1, 7)], SCHEMA + ", stars long, size long"
+    again = arrow_frame(
+        spark, [(3, "r3", "c", "c3", "upsert", "v3", 1, 7)],
+        T.StructType.fromDDL(SCHEMA + ", stars long, size long"),
     )
     table.merge_upsert(again, KEYS, ORDER, 2, op_col="op")
     assert dict(table.to_df().dtypes)["size"] == "double"
@@ -176,8 +178,9 @@ def test_register_view_enables_sql(spark, tmp_path):
     from tap_rest_api_msdk_spark.streaming.laketable import LakeTable
 
     t = LakeTable(spark, str(tmp_path / "t"), num_buckets=4)
-    df = spark.createDataFrame(
-        [(1, 10, "a"), (2, 20, "b"), (1, 30, "c")], "k long, seq long, v string"
+    df = arrow_frame(
+        spark, [(1, 10, "a"), (2, 20, "b"), (1, 30, "c")],
+        T.StructType.fromDDL("k long, seq long, v string"),
     )
     t.merge_upsert(df, keys=["k"], order_by=["seq"], batch_id=0)
     t.register_view("lake_t")
@@ -190,8 +193,8 @@ def test_vacuum_retention_preserves_time_travel(spark, tmp_path):
 
     t = LakeTable(spark, str(tmp_path / "t"), num_buckets=2)
     for i in range(3):
-        df = spark.createDataFrame([(k, 100 * i + k, f"v{i}") for k in range(10)],
-                                   "k long, seq long, v string")
+        df = arrow_frame(spark, [(k, 100 * i + k, f"v{i}") for k in range(10)],
+                         T.StructType.fromDDL("k long, seq long, v string"))
         t.merge_upsert(df, keys=["k"], order_by=["seq"], batch_id=i)
     cur = t.current_manifest()["version"]
     # retain the last 2 snapshots: the previous version must stay readable
@@ -216,9 +219,9 @@ def test_vacuum_reclaims_dead_epoch_dirs(spark, tmp_path):
 
     t = LakeTable(spark, str(tmp_path / "t"), num_buckets=2)
     for i in range(4):
-        df = spark.createDataFrame(
-            [(k, 100 * i + k, f"v{i}") for k in range(10)],
-            "k long, seq long, v string",
+        df = arrow_frame(
+            spark, [(k, 100 * i + k, f"v{i}") for k in range(10)],
+            T.StructType.fromDDL("k long, seq long, v string"),
         )
         t.merge_upsert(df, keys=["k"], order_by=["seq"], batch_id=i)
     data = str(tmp_path / "t" / "data")
@@ -246,8 +249,9 @@ def test_compact_key_index_reharvests_blooms(spark, tmp_path):
     from tap_rest_api_msdk_spark.streaming.laketable import LakeTable
 
     t = LakeTable(spark, str(tmp_path / "cb"), num_buckets=2)
-    df = spark.createDataFrame(
-        [(k, k, "up", f"v{k}") for k in range(50)], "k long, seq long, op string, v string"
+    df = arrow_frame(
+        spark, [(k, k, "up", f"v{k}") for k in range(50)],
+        T.StructType.fromDDL("k long, seq long, op string, v string"),
     )
     t.merge_upsert(
         df, keys=["k"], order_by=["seq"], batch_id=0, op_col="op", key_index=True

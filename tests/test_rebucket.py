@@ -5,14 +5,16 @@ computed under the old count (the bucket-drift rebase guard).
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from tap_rest_api_msdk_spark.session import arrow_frame
 from tap_rest_api_msdk_spark.streaming.laketable import LakeTable, head_version
 
 SCHEMA = "seq long, id long, op string, val string"
 
 
 def mk(spark, rows):
-    return spark.createDataFrame(rows, SCHEMA)
+    return arrow_frame(spark, rows, T.StructType.fromDDL(SCHEMA))
 
 
 def up(t, rows, bid, **kw):

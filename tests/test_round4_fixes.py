@@ -20,7 +20,9 @@ import os
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from tap_rest_api_msdk_spark.session import arrow_frame
 from tap_rest_api_msdk_spark.streaming.laketable import (
     LakeTable,
     bucket_salt_to_partition,
@@ -28,9 +30,9 @@ from tap_rest_api_msdk_spark.streaming.laketable import (
 
 
 def _rows(spark, ids, seq, text):
-    return spark.createDataFrame(
-        [(int(i), int(seq), f"{text}-{i}-{seq}") for i in ids],
-        "id long, seq long, text string",
+    return arrow_frame(
+        spark, [(int(i), int(seq), f"{text}-{i}-{seq}") for i in ids],
+        T.StructType.fromDDL("id long, seq long, text string"),
     )
 
 
@@ -88,7 +90,10 @@ def test_mor_rebase_refuses_key_type_drift(spark, tmp_path):
         if not injected["done"]:
             injected["done"] = True
             t2.merge_upsert(
-                spark.createDataFrame([(1.0, 1, "w2")], "id double, seq long, text string"),
+                arrow_frame(
+                    spark, [(1.0, 1, "w2")],
+                    T.StructType.fromDDL("id double, seq long, text string"),
+                ),
                 keys=["id"], order_by=["seq"], batch_id=0, mode="mor",
                 writer_id="w2",
             )
@@ -96,7 +101,9 @@ def test_mor_rebase_refuses_key_type_drift(spark, tmp_path):
 
     t1._publish = racing_publish
     out = t1.merge_upsert(
-        spark.createDataFrame([(1, 2, "w1")], "id long, seq long, text string"),
+        arrow_frame(
+            spark, [(1, 2, "w1")], T.StructType.fromDDL("id long, seq long, text string")
+        ),
         keys=["id"], order_by=["seq"], batch_id=0, mode="mor",
         writer_id="w1",
     )
@@ -136,7 +143,7 @@ def test_partial_fold_claims_only_due_residues(spark, tmp_path):
     # residue class of each id at depth 4 (same salt function as the table)
     res = {
         r["id"]: r["res"]
-        for r in spark.createDataFrame([(i,) for i in ids], "id long")
+        for r in arrow_frame(spark, [(i,) for i in ids], T.StructType.fromDDL("id long"))
         .withColumn(
             "res",
             F.pmod(F.xxhash64(F.col("id"), F.lit("__salt__")), F.lit(4)).cast("int"),
@@ -180,9 +187,9 @@ def test_partial_fold_claims_only_due_residues(spark, tmp_path):
 
 
 def _mkrows(spark, rows):
-    return spark.createDataFrame(
-        [(int(i), int(s), op, tx) for i, s, op, tx in rows],
-        "id long, seq long, op string, text string",
+    return arrow_frame(
+        spark, [(int(i), int(s), op, tx) for i, s, op, tx in rows],
+        T.StructType.fromDDL("id long, seq long, op string, text string"),
     )
 
 
@@ -274,8 +281,9 @@ def test_head_resolution_is_o1_at_high_commit_count(spark, tmp_path):
     t = LakeTable(spark, path, num_buckets=2)
     t.merge_upsert(_rows(spark, [1], 0, "x"), keys=["id"], order_by=["seq"],
                    batch_id=0)
-    base = t.current_manifest()
-    # synthesize 10_000 successor manifests driver-side (same file protocol)
+    base = t._current_core()
+    # synthesize 10_000 successor version files driver-side (same file
+    # protocol: a version file is a manifest core with its sections_ref)
     for v in range(1, 10_001):
         m = {**base, "version": v}
         with open(t._manifest_path(v), "w") as fh:
@@ -326,7 +334,7 @@ def test_disjoint_slice_cow_writers_both_land_without_recompute(spark, tmp_path)
     ids = list(range(400))
     res = {
         r["id"]: r["res"]
-        for r in spark.createDataFrame([(i,) for i in ids], "id long")
+        for r in arrow_frame(spark, [(i,) for i in ids], T.StructType.fromDDL("id long"))
         .withColumn(
             "res",
             F.pmod(F.xxhash64(F.col("id"), F.lit("__salt__")), F.lit(4)).cast("int"),
@@ -487,28 +495,6 @@ def test_split_manifests_write_touched_sections_only(spark, tmp_path):
     assert {r["id"]: r["seq"] for r in t.to_df().collect()} == got
 
 
-def test_pre_split_manifests_still_read(spark, tmp_path):
-    """Backward compat: a manifest written with INLINE sections (pre-split
-    layout) reads identically — assembly is pass-through."""
-    path = str(tmp_path / "tbl_inline")
-    t = LakeTable(spark, path, num_buckets=4)
-    t.merge_upsert(_rows(spark, range(50), 0, "x"), keys=["id"],
-                   order_by=["seq"], batch_id=0)
-    v = t.current_manifest()["version"]
-    # rewrite the version file in the OLD inline layout
-    m = t.current_manifest()  # assembled dict == old layout
-    with open(t._manifest_path(v), "w") as fh:
-        json.dump(m, fh)
-    t2 = LakeTable(spark, path, num_buckets=4)
-    assert t2.current_manifest()["files"] == m["files"]
-    assert t2.to_df().count() == 50
-    # and the next commit on top of it splits again
-    t2.merge_upsert(_rows(spark, [1], 1, "y"), keys=["id"], order_by=["seq"],
-                    batch_id=1, mode="mor")
-    with open(t2._manifest_path(t2.current_manifest()["version"])) as fh:
-        assert "sections_ref" in json.load(fh)
-
-
 def test_expired_anchor_raises_not_full_redelivery(spark, tmp_path):
     """Review findings: an incremental window whose ANCHOR manifest was
     expired must raise — silently diffing against an empty snapshot would
@@ -566,7 +552,7 @@ def test_cow_precombine_shrinks_hot_key_batches(spark, tmp_path):
     # one pathologically hot key: 5000 versions in a single batch
     hot = [(1, s, f"v{s}") for s in range(5000)]
     cold = [(i, 0, f"c{i}") for i in range(2, 300)]
-    df = spark.createDataFrame(hot + cold, "id long, seq long, text string")
+    df = arrow_frame(spark, hot + cold, T.StructType.fromDDL("id long, seq long, text string"))
     ta = LakeTable(spark, path_a, num_buckets=4)
     tb = LakeTable(spark, path_b, num_buckets=4)
     ta.merge_upsert(df, keys=["id"], order_by=["seq"], batch_id=0, mode="cow")
@@ -647,9 +633,9 @@ def test_bloom_key_index_lookup(spark, tmp_path):
     t = LakeTable(spark, path, num_buckets=8, files_per_bucket=4)
 
     def rows(data):
-        return spark.createDataFrame(
-            [(int(i), int(s), op, tx) for i, s, op, tx in data],
-            "id long, seq long, op string, text string",
+        return arrow_frame(
+            spark, [(int(i), int(s), op, tx) for i, s, op, tx in data],
+            T.StructType.fromDDL("id long, seq long, op string, text string"),
         )
 
     t.merge_upsert(rows([(i, 0, "upsert", f"v0-{i}") for i in range(4000)]),

@@ -62,7 +62,8 @@ def oracle_rows(wal_df, payload_schema):
     return sorted(tuple(r) for r in iv.select(*CMP).collect())
 
 
-def run_stream(spark, wal_df, payload_schema, tmp_path, crash_mid=False):
+def run_stream(spark, wal_df, payload_schema, tmp_path, crash_mid=False,
+               rebucket_state_at=None):
     state = LakeTable(spark, str(tmp_path / "state"), num_buckets=8)
     hist = LakeTable(spark, str(tmp_path / "hist"), num_buckets=8)
     conf = mkconf(payload_schema)
@@ -73,6 +74,10 @@ def run_stream(spark, wal_df, payload_schema, tmp_path, crash_mid=False):
             # crash AFTER the history commit, BEFORE the state commit —
             # then the whole batch replays (foreachBatch redelivery)
             commit_history(state, hist, conf, b, i + 1)
+        if i == rebucket_state_at:
+            # another handle changes the state table's bucket count
+            # between two batches made through ``state``
+            LakeTable(spark, state.path).rebucket(32)
         scd2_process_batch(state, hist, conf, b, i + 1)
     return state, hist, conf
 
@@ -97,6 +102,20 @@ def test_crash_between_commits_reconverges(spark, wal, tmp_path):
     wal_df, schema = wal
     state, hist, conf = run_stream(spark, wal_df, schema, tmp_path, crash_mid=True)
     got = sorted(tuple(r) for r in scd2_view(hist).select(*CMP).collect())
+    assert got == oracle_rows(wal_df, schema)
+
+
+def test_rebucket_by_another_handle_keeps_history_exact(spark, wal, tmp_path):
+    """The history half buckets the batch and reads the previous state on
+    the state snapshot it planned on: after another handle rebuckets the
+    state table, every key still has one current row and the history
+    equals the full rebuild."""
+    wal_df, schema = wal
+    state, hist, conf = run_stream(spark, wal_df, schema, tmp_path, rebucket_state_at=2)
+    assert state.num_buckets == 32
+    got = sorted(tuple(r) for r in scd2_view(hist).select(*CMP).collect())
+    current = scd2_view(hist, current_only=True).groupBy("repo", "path").count()
+    assert current.filter(F.col("count") > 1).count() == 0
     assert got == oracle_rows(wal_df, schema)
 
 

@@ -6,7 +6,9 @@ later replay of an older version.
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from tap_rest_api_msdk_spark.session import arrow_frame
 from tap_rest_api_msdk_spark.streaming.laketable import LakeTable
 
 SCHEMA = "seq long, repo string, path string, commit string, op string, content string"
@@ -15,7 +17,7 @@ ORDER = ["seq", "commit"]
 
 
 def mk(spark, rows):
-    return spark.createDataFrame(rows, SCHEMA)
+    return arrow_frame(spark, rows, T.StructType.fromDDL(SCHEMA))
 
 
 @pytest.fixture()
@@ -126,9 +128,9 @@ def test_simultaneous_assignment_swap(spark, tmp_path):
     first assignment."""
     t = LakeTable(spark, str(tmp_path / "swap"), num_buckets=2)
     t.merge_upsert(
-        spark.createDataFrame(
-            [(1, 10, "up", "left", "right")],
-            "seq long, id long, op string, a string, b string",
+        arrow_frame(
+            spark, [(1, 10, "up", "left", "right")],
+            T.StructType.fromDDL("seq long, id long, op string, a string, b string"),
         ),
         ["id"], ["seq"], batch_id=0, op_col="op",
     )
@@ -168,7 +170,7 @@ def test_point_ops_handle_bucket_shared_files(spark, tmp_path):
                   files_per_bucket=1)
     rows = [(i, f"r{i}", f"p{i}", f"c{i}", "upsert", f"v{i}") for i in range(200)]
     t.merge_upsert(
-        spark.createDataFrame(rows, SCHEMA), KEYS, ORDER,
+        arrow_frame(spark, rows, T.StructType.fromDDL(SCHEMA)), KEYS, ORDER,
         batch_id=0, op_col="op",
     )
     m = t.current_manifest()
@@ -199,7 +201,7 @@ def test_update_keys_prunes_and_updates(spark, tmp_path):
     burning the ledger, replay is a no-op, non-victims untouched."""
     t = LakeTable(spark, str(tmp_path / "pk"), num_buckets=8)
     rows = [(i, f"r{i % 50}", f"p{i}", f"c{i}", "upsert", f"v{i}") for i in range(400)]
-    df = spark.createDataFrame(rows, SCHEMA)
+    df = arrow_frame(spark, rows, T.StructType.fromDDL(SCHEMA))
     for b in range(4):
         t.merge_upsert(
             df.filter(F.col("seq") % 4 == b), KEYS, ORDER,

@@ -14,7 +14,9 @@ import math
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from tap_rest_api_msdk_spark.session import arrow_frame
 from tap_rest_api_msdk_spark.streaming.laketable import (
     LakeTable,
     zorder_cell_and_key,
@@ -37,7 +39,7 @@ def test_zorder_key_matches_python_reference(spark):
     Python reference (cell = top log2(n_cells) bits, clamped)."""
     bounds = {"a": (0, 256), "b": (0, 256)}
     rows = [(a, b) for a in (0, 1, 100, 200, 255, 256, 300) for b in (0, 37, 255, 256)]
-    df = spark.createDataFrame(rows, "a long, b long")
+    df = arrow_frame(spark, rows, T.StructType.fromDDL("a long, b long"))
     cell, z = zorder_cell_and_key(bounds, 16)
     got = df.select("a", "b", cell.alias("cell"), z.alias("z")).collect()
     for r in got:
@@ -62,9 +64,9 @@ def history(spark, tmp_path):
     t = LakeTable(spark, str(tmp_path / "t"), num_buckets=4,
                   stats_columns=["val"])
     for i, (lo, hi) in enumerate([(0, 1000), (1000, 2000), (2000, 3000), (3000, 4000)]):
-        df = spark.createDataFrame(
-            [(int(j), int(j), int(_val(j))) for j in range(lo, hi)],
-            "id long, seq long, val long",
+        df = arrow_frame(
+            spark, [(int(j), int(j), int(_val(j))) for j in range(lo, hi)],
+            T.StructType.fromDDL("id long, seq long, val long"),
         )
         t.merge_upsert(df, keys=["id"], order_by=["seq"], batch_id=i,
                        mode="mor" if i else "cow")
@@ -126,9 +128,9 @@ def test_zorder_quiet_fallback_without_bounds(spark, tmp_path):
     quietly falls back to the 1-D era split (correctness never gated on
     layout hints)."""
     t = LakeTable(spark, str(tmp_path / "t"), num_buckets=2)  # no stats_columns
-    df = spark.createDataFrame(
-        [(int(j), int(j), int(_val(j))) for j in range(1000)],
-        "id long, seq long, val long",
+    df = arrow_frame(
+        spark, [(int(j), int(j), int(_val(j))) for j in range(1000)],
+        T.StructType.fromDDL("id long, seq long, val long"),
     )
     t.merge_upsert(df, keys=["id"], order_by=["seq"], batch_id=0, mode="cow")
     before = _snap(t)
@@ -168,9 +170,9 @@ def _drive_cowinc_z(spark, path, cluster_by, n_batches=8, per_batch=500):
     t.cluster_by = cluster_by
     for b in range(n_batches):
         lo, hi = b * per_batch, (b + 1) * per_batch
-        df = spark.createDataFrame(
-            [(int(j), int(j), int(_val(j))) for j in range(lo, hi)],
-            "id long, seq long, val long",
+        df = arrow_frame(
+            spark, [(int(j), int(j), int(_val(j))) for j in range(lo, hi)],
+            T.StructType.fromDDL("id long, seq long, val long"),
         )
         t.merge_upsert(df, keys=["id"], order_by=["seq"], batch_id=b,
                        mode="cow_incremental" if b else "cow")
@@ -208,14 +210,14 @@ def test_zorder_fold_lww_across_cells(spark, tmp_path):
     t.fold_every = 1
     t.era_split = 16
     t.cluster_by = ["seq", "val"]
-    df = spark.createDataFrame(
-        [(int(j), int(j), int(_val(j))) for j in range(400)],
-        "id long, seq long, val long",
+    df = arrow_frame(
+        spark, [(int(j), int(j), int(_val(j))) for j in range(400)],
+        T.StructType.fromDDL("id long, seq long, val long"),
     )
     t.merge_upsert(df, keys=["id"], order_by=["seq"], batch_id=0)
-    upd = spark.createDataFrame(
-        [(i, 10_000 + i, int(_val(i + 7))) for i in range(100)],
-        "id long, seq long, val long",
+    upd = arrow_frame(
+        spark, [(i, 10_000 + i, int(_val(i + 7))) for i in range(100)],
+        T.StructType.fromDDL("id long, seq long, val long"),
     )
     t.merge_upsert(upd, keys=["id"], order_by=["seq"], batch_id=1,
                    mode="cow_incremental")
