@@ -42,29 +42,18 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from tap_rest_api_msdk_spark.streaming.laketable import (
+    head_version,
+    load_core_at,
+    read_tag_version,
+    walk_added_files,
+)
+
 
 @dataclass
 class _FilePartition(InputPartition):
     file_path: str
     commit_version: int
-
-
-def _head_version(table_path: str):
-    """O(1 + lag) HEAD resolution (pointer hint + forward probe), shared
-    with LakeTable — no SparkSession needed."""
-    from tap_rest_api_msdk_spark.streaming.laketable import head_version
-
-    return head_version(table_path)
-
-
-def _added_files(table_path: str, start_v: int, end_v: int):
-    """(file, commit_version) pairs added by DATA commits in (start, end]
-    — delegates to LakeTable's SHARED commit walk (one implementation for
-    batch changes_since and this stream, so they can never disagree);
-    raises on an expired window anchor or vacuumed change files."""
-    from tap_rest_api_msdk_spark.streaming.laketable import walk_added_files
-
-    return walk_added_files(table_path, start_v, end_v)
 
 
 def _read_partition(schema_json: str, partition):
@@ -102,10 +91,6 @@ def _resolve_version_option(table_path: str, name: str, v):
     try:
         return int(v)
     except ValueError:
-        from tap_rest_api_msdk_spark.streaming.laketable import (
-            read_tag_version,
-        )
-
         tv = read_tag_version(table_path, str(v))
         if tv is None:
             raise ValueError(
@@ -145,17 +130,17 @@ class LakeTableChangesStreamReader(DataSourceStreamReader):
         if self._raw_start is not None:
             name, v = self._raw_start
             return {"version": _resolve_version_option(self.table_path, name, v)}
-        head = _head_version(self.table_path)
+        head = head_version(self.table_path)
         return {"version": head if head is not None else -1}
 
     def latestOffset(self) -> dict:
-        head = _head_version(self.table_path)
+        head = head_version(self.table_path)
         if head is not None:
             return {"version": head}
         return self.initialOffset()  # empty table: stay at the baseline
 
     def partitions(self, start: dict, end: dict):
-        added = _added_files(
+        added = walk_added_files(
             self.table_path, int(start["version"]), int(end["version"])
         )
         return [_FilePartition(file_path=f, commit_version=v) for f, v in added]
@@ -197,13 +182,13 @@ class LakeTableChangesBatchReader(DataSourceReader):
                 self.table_path, "end_version", end
             )
         else:
-            head = _head_version(self.table_path)
+            head = head_version(self.table_path)
             if head is None:
                 raise ValueError(f"no committed snapshot at {self.table_path!r}")
             self.end_v = head
 
     def partitions(self):
-        added = _added_files(self.table_path, self.start_v, self.end_v)
+        added = walk_added_files(self.table_path, self.start_v, self.end_v)
         return [_FilePartition(file_path=f, commit_version=v) for f, v in added]
 
     def read(self, partition):
@@ -220,9 +205,7 @@ class LakeTableChangesDataSource(DataSource):
     def schema(self):
         from pyspark.sql import types as T
 
-        from tap_rest_api_msdk_spark.streaming.laketable import load_core_at
-
-        m_head = _head_version(self.options.get("path", ""))
+        m_head = head_version(self.options.get("path", ""))
         # CORE version file only — schema is a core field; assembling
         # every bucket section just to read it would make each stream
         # (re)construction O(live files) on a large table

@@ -9,7 +9,7 @@ can swap for ``MERGE INTO`` with zero pipeline changes:
   published by an atomic POSIX ``rename`` of the version pointer. Readers
   only ever see a fully-committed snapshot.
 * **Idempotent batch ids** — ``merge_upsert(batch_id=...)`` is a no-op when
-  ``batch_id <= last_committed_batch_id``: the standard Structured
+  ``batch_id <= last_batch_id_for(writer_id)``: the standard Structured
   Streaming ``foreachBatch`` idempotent-sink contract; replay from any
   checkpoint reconverges (north_rule). Merges are ALSO semantically
   idempotent (LWW by (seq, commit)), so even out-of-ledger replays of old
@@ -560,22 +560,27 @@ class LakeTable:
         num_buckets: int = 16,
         files_per_bucket: Optional[int] = None,
         stats_columns: Optional[Sequence[str]] = None,
+        key_index: bool = False,
     ):
         self.spark = spark
         self.path = path
-        # the bucket count and the extra zone-map columns are TABLE
-        # properties that live in the snapshot: each operation takes them
-        # from the snapshot it planned on (``_buckets_of``,
-        # ``_stats_columns_of``), and these constructor values only seed
-        # a table whose snapshot has no committed value yet. Extra
-        # zone-map columns (beyond the LWW ordering column): every commit
-        # harvests [min, max] per listed column from the parquet footers
-        # it just wrote, and reads can file-prune on any of them
-        # (``read_range(col=...)``) — e.g. the event-time column of an
-        # append-mostly table, so "events from March" touches March's
-        # files, not the table.
+        # the bucket count, the extra zone-map columns and the key index
+        # are TABLE properties that live in the snapshot: each operation
+        # takes them from the snapshot it planned on (``_buckets_of``,
+        # ``_stats_columns_of``, ``_key_index_of``), and these constructor
+        # values only seed a table whose snapshot has no committed value
+        # yet. Extra zone-map columns (beyond the LWW ordering column):
+        # every commit harvests [min, max] per listed column from the
+        # parquet footers it just wrote, and reads can file-prune on any
+        # of them (``read_range(col=...)``) — e.g. the event-time column
+        # of an append-mostly table, so "events from March" touches
+        # March's files, not the table. Key index: every write (merges,
+        # folds, compaction, rebucket) harvests a key bloom per file it
+        # writes, so ``lookup`` and the point DML verbs prune to the files
+        # that may hold a key; it is fixed when the first commit lands.
         self._seed_buckets = int(num_buckets)
         self._seed_stats_columns = list(stats_columns) if stats_columns else []
+        self._seed_key_index = bool(key_index)
         # range-clustered rewrite layout (r4 verdict lead #7): when > 1,
         # full/binpack compaction splits each (bucket, slice) granule's
         # output into up to era_split files keyed by the LWW ordering
@@ -609,7 +614,7 @@ class LakeTable:
         # 10 matches the usual lakehouse delta-commits-per-compaction
         # default (cdcbench's steady_cdc workload runs at it)
         self.fold_every = 10
-        # scan accounting for the latest read()/read_since() call:
+        # scan accounting for the latest read_state() call (every read):
         # {files_total, files_scanned, min_order}
         self.last_read_plan: Optional[dict] = None
         # merge shuffle width is DECOUPLED from the bucket count: each
@@ -639,6 +644,11 @@ class LakeTable:
         if m and m.get("stats_columns") is not None:
             return list(m["stats_columns"])
         return list(self._seed_stats_columns)
+
+    def _key_index_of(self, m: Optional[dict]) -> bool:
+        """Whether snapshot ``m``'s table keeps per-file key blooms; the
+        seed only applies to a table with nothing committed."""
+        return bool(m.get("key_index")) if m else self._seed_key_index
 
     @property
     def num_buckets(self) -> int:
@@ -861,10 +871,6 @@ class LakeTable:
             manifest if manifest is not None else self.current_manifest(), writer_id
         )
 
-    @property
-    def last_committed_batch_id(self) -> int:
-        return self.last_batch_id_for("default")
-
     def bookmarks(self) -> dict:
         m = self.current_manifest()
         return {} if m is None else m.get("bookmarks", {})
@@ -878,7 +884,7 @@ class LakeTable:
     # ------------------------------------------------------------------
     # read path
     # ------------------------------------------------------------------
-    def read(
+    def read_state(
         self,
         buckets: Optional[Sequence[int]] = None,
         version: Optional[int] = None,
@@ -887,38 +893,43 @@ class LakeTable:
         max_order: Optional[float] = None,
         col_ranges: Optional[dict] = None,
     ) -> Optional[DataFrame]:
-        """Snapshot read (with ``__bucket`` column); optionally restricted
-        to a set of buckets — only that subset's files are listed (bucket
-        pruning), and because a file may be shared by several colliding
-        buckets, a residual ``__bucket IN (...)`` filter keeps exactly the
-        requested rows. ``version`` time-travels to a historical snapshot
-        (valid until ``vacuum()`` reclaims its files).
+        """Resolved state (with ``__bucket`` column): LWW over base ∪ delta
+        rows. For a pure copy-on-write table this is a no-op dedup (base is
+        already one row per key); for merge-on-read it resolves the delta
+        log against the base — the read-side half of the MOR contract.
+
+        ``version`` time-travels to a historical snapshot, by number or
+        TAG NAME (valid until ``vacuum()`` reclaims its files). ``manifest``
+        pins an already-loaded snapshot (overrides ``version``): one
+        manifest decides BOTH the file listing and whether LWW dedup is
+        needed — two independent loads could tear (skip dedup off a
+        pre-compact no-deltas snapshot while listing a racer's new delta
+        files), so callers that also consult the manifest MUST pass the
+        one they loaded.
+
+        ``buckets`` lists only that subset's files (bucket pruning); a file
+        may be shared by several colliding buckets, so the ownership
+        semi-join keeps exactly the requested rows.
 
         ``min_order`` skips files whose zone map proves every row's LWW
         ordering value < min_order (``file_stats`` max bound);
         ``max_order`` symmetrically skips files whose MIN bound exceeds
-        it. These are FILE prunes, not row filters — callers get a
-        superset of matching rows and must still filter; ``read_since``/
-        ``read_range`` wrap them with the sound LWW-then-filter
-        composition (upper-bound pruning is only sound when every row is
-        already its key's winner — the CALLER must pass ``max_order``
-        only on a no-deltas snapshot; lower-bound pruning is always
-        sound). Files without stats are never skipped. Scan accounting
-        in ``self.last_read_plan``.
-
-        ``manifest`` pins the snapshot to an already-assembled manifest
-        (overrides ``version``): callers that also consult the manifest
-        for LWW/tombstone decisions MUST pass the one they loaded, so a
-        commit landing between two loads can't tear the read (e.g.
-        deciding to skip dedup off a pre-compact no-deltas manifest
-        while the file listing picks up a racer's new delta files)."""
-        m = (
-            manifest
-            if manifest is not None
-            else self.manifest_at(version)
-            if version is not None
-            else self.current_manifest()
-        )
+        it, and ``col_ranges`` ({col: (lo, hi)}) prunes on other zone-map
+        columns. These are FILE prunes plus scan-adjacent row filters:
+        callers get a superset of matching winners and must still filter;
+        ``read_since``/``read_range`` wrap them with the sound
+        LWW-then-filter composition (upper-bound and non-ordering pruning
+        is only sound when every row is already its key's winner — the
+        CALLER must pass ``max_order``/``col_ranges`` only on a no-deltas
+        snapshot; lower-bound pruning is always sound). Files without
+        stats are never skipped. Scan accounting in
+        ``self.last_read_plan``."""
+        if manifest is None:
+            version = self.resolve_version(version) if version is not None else None
+            manifest = (
+                self.manifest_at(version) if version is not None else self.current_manifest()
+            )
+        m = manifest
         if m is None:
             return None
         schema = T.StructType.fromJson(m["schema"])
@@ -968,28 +979,34 @@ class LakeTable:
                if col_ranges else {}),
         }
         if not files:
-            return arrow_frame(self.spark, [], stored)
-        # schema evolution: read each file with the CURRENT table schema;
-        # parquet reader fills missing columns with null by name.
-        df = self.spark.read.schema(stored).parquet(*sorted(files))
-        # push the range predicates HERE, adjacent to the scan: the
-        # ownership projection below computes __file via
-        # input_file_name(), a NONDETERMINISTIC expression Catalyst will
-        # not push filters past — a caller-side filter lands above the
-        # semi-join and the scan shows no PushedFilters (found live in
-        # r5 verify). Row-filtering before LWW is sound for exactly the
-        # bounds that reached this method: the min_order lower bound by
-        # the winner-maximizes-order argument (read_since docstring), and
-        # max_order / col_ranges only arrive on no-deltas snapshots
-        # (to_df gates them), where every row is already its key's
-        # winner. Parquet row-group stats then skip inside files the
-        # whole-file zone map cannot prune.
-        for c, (lo, hi) in ranges.items():
-            if lo is not None:
-                df = df.filter(F.col(c) >= F.lit(lo))
-            if hi is not None:
-                df = df.filter(F.col(c) <= F.lit(hi))
-        return self._owned_rows(df, pairs)
+            df = arrow_frame(self.spark, [], stored)
+        else:
+            # schema evolution: read each file with the CURRENT table
+            # schema; parquet reader fills missing columns with null by name.
+            df = self.spark.read.schema(stored).parquet(*sorted(files))
+            # push the range predicates HERE, adjacent to the scan: the
+            # ownership projection computes __file via input_file_name(),
+            # a NONDETERMINISTIC expression Catalyst will not push filters
+            # past — a caller-side filter lands above the semi-join and the
+            # scan shows no PushedFilters (found live in r5 verify).
+            # Row-filtering before LWW is sound for exactly the bounds that
+            # reach here: the min_order lower bound by the
+            # winner-maximizes-order argument (read_since docstring), and
+            # max_order / col_ranges only arrive on no-deltas snapshots
+            # (to_df gates them), where every row is already its key's
+            # winner. Parquet row-group stats then skip inside files the
+            # whole-file zone map cannot prune.
+            for c, (lo, hi) in ranges.items():
+                if lo is not None:
+                    df = df.filter(F.col(c) >= F.lit(lo))
+                if hi is not None:
+                    df = df.filter(F.col(c) <= F.lit(hi))
+            df = self._owned_rows(df, pairs)
+        if not m.get("deltas"):
+            return df
+        from tap_rest_api_msdk_spark.operators.dedup import lww_dedup
+
+        return lww_dedup(df, list(m["keys"]) + ["__bucket"], m["order_by"])
 
     def _owned_rows(self, df: DataFrame, pairs) -> DataFrame:
         """Ownership semi-join: a physical file may be SHARED by several
@@ -1010,47 +1027,6 @@ class LakeTable:
             & (df["__bucket"] == lookup["__owned_bucket"]),
             "leftsemi",
         ).drop("__file")
-
-    def read_state(
-        self,
-        buckets: Optional[Sequence[int]] = None,
-        version: Optional[int] = None,
-        min_order: Optional[float] = None,
-        manifest: Optional[dict] = None,
-        max_order: Optional[float] = None,
-        col_ranges: Optional[dict] = None,
-    ) -> Optional[DataFrame]:
-        """Resolved state: LWW over base ∪ delta rows (time-travelable).
-
-        For a pure copy-on-write table this is a no-op dedup (base is
-        already one row per key); for merge-on-read it resolves the delta
-        log against the base — the read-side half of the MOR contract.
-        ``version`` also accepts a TAG NAME (named snapshot ref).
-
-        One manifest load decides BOTH the file listing and whether LWW
-        dedup is needed (``manifest`` pins an already-loaded one) — two
-        independent loads could tear: skip dedup off a pre-compact
-        no-deltas snapshot while listing a racer's new delta files.
-        ``min_order`` zone-map-prunes the listing (see ``read``); the
-        result is then a SUPERSET of rows at that bound — ``read_since``
-        applies the residual filter."""
-        if manifest is None:
-            version = self.resolve_version(version) if version is not None else None
-            manifest = (
-                self.manifest_at(version) if version is not None else self.current_manifest()
-            )
-        m = manifest
-        if m is None:
-            return None
-        df = self.read(
-            buckets, min_order=min_order, manifest=m, max_order=max_order,
-            col_ranges=col_ranges,
-        )
-        if not m.get("deltas"):
-            return df
-        from tap_rest_api_msdk_spark.operators.dedup import lww_dedup
-
-        return lww_dedup(df, list(m["keys"]) + ["__bucket"], m["order_by"])
 
     def read_since(
         self,
@@ -1557,6 +1533,7 @@ class LakeTable:
             "bookmarks": bookmarks,
             "num_buckets": self._buckets_of(cur),
             **({"stats_columns": stats_cols} if stats_cols else {}),
+            **({"key_index": True} if self._key_index_of(cur) else {}),
             "keys": list(keys),
             "order_by": list(order_by),
             "op_col": op_col,
@@ -1667,10 +1644,11 @@ class LakeTable:
 
     def lookup(self, values: dict) -> Optional[DataFrame]:
         """Point lookup of one key: the key funnel (``_key_funnel``:
-        bucket → section → (bucket, slice64) claims → per-file key BLOOMS,
-        files without a bloom — folds/compaction output or tables written
-        without ``key_index=True`` — stay candidates) reads and
-        LWW-resolves only the surviving files, then filters the exact key.
+        bucket → section → (bucket, slice64) claims → per-file key BLOOMS)
+        reads and LWW-resolves only the surviving files, then filters the
+        exact key. Blooms exist on a table created with
+        ``LakeTable(..., key_index=True)``, for every file it writes; files
+        without a bloom stay candidates.
         ``last_lookup_stats`` records the pruning funnel. Returns None on
         an empty table.
 
@@ -1762,8 +1740,6 @@ class LakeTable:
         affected_granules: Optional[dict] = None,
         mode: str = "cow",
         writer_id: str = "default",
-        precombine: bool = False,
-        key_index: bool = False,
         delta_parts: Optional[int] = None,
         affected_est: Optional[int] = None,
         base=_HEAD,
@@ -1806,6 +1782,11 @@ class LakeTable:
           on the manifest it just published: the steady-state
           streaming-CDC write path.
 
+        Write settings are not per call: the table properties (bucket
+        count, ``stats_columns``, ``key_index``) come from the snapshot the
+        merge planned on, and the fold trigger is the handle's
+        ``fold_every``.
+
         All modes share semantics and the batch-id ledger, and may be
         mixed batch-by-batch.
 
@@ -1833,8 +1814,7 @@ class LakeTable:
             out = self._merge_upsert_once(
                 batch_df, keys, order_by, batch_id, op_col, bookmark_updates,
                 extra_manifest, affected_buckets, affected_granules,
-                eff_mode, writer_id, precombine=precombine,
-                key_index=key_index, delta_parts=delta_parts,
+                eff_mode, writer_id, delta_parts=delta_parts,
                 affected_est=affected_est,
                 # a recompute re-plans against the fresh HEAD
                 base=base if _attempt == 0 else _HEAD,
@@ -2089,8 +2069,6 @@ class LakeTable:
     def _merge_upsert_once(
         self, batch_df, keys, order_by, batch_id, op_col, bookmark_updates,
         extra_manifest, affected_buckets, affected_granules, mode, writer_id,
-        precombine: bool = False,
-        key_index: bool = False,
         delta_parts: Optional[int] = None,
         affected_est: Optional[int] = None,
         base=_HEAD,
@@ -2199,27 +2177,11 @@ class LakeTable:
         else:
             affected = [int(r[0]) for r in batch.select("__bucket").distinct().collect()]
 
-        if precombine and mode == "cow":
-            # hot-KEY skew guard for duplicate-heavy COW batches: the MOR
-            # path always pre-shrinks (its delta IS the within-batch LWW
-            # winner set), but plain COW's window merge would land every
-            # version of a hot key in one task. lww_dedup is a map-side-
-            # combined aggregate, so a key's duplicates collapse per input
-            # partition BEFORE any exchange — opt-in because unique-key
-            # batches would pay an extra exchange for nothing. Applied
-            # AFTER the footprint collection (distinct (bucket, slice) sets
-            # are identical pre/post-dedup) so the footprint action never
-            # recomputes this aggregate.
-            from tap_rest_api_msdk_spark.operators.dedup import lww_dedup
-
-            batch = lww_dedup(batch, list(keys) + ["__bucket"], list(order_by))
-
         if mode in ("mor", "cow_incremental"):
             out, committed = self._append_delta(
                 batch, keys, order_by, batch_id, op_col, affected,
                 new_schema, m, nb, bookmark_updates, extra_manifest, t0, writer_id,
-                key_index=key_index, delta_parts=delta_parts,
-                affected_est=affected_est,
+                delta_parts=delta_parts, affected_est=affected_est,
             )
             if committed is not None and mode == "cow_incremental":
                 # hierarchical granular COW: the delta commit above is the
@@ -2228,7 +2190,7 @@ class LakeTable:
                 # batch (DESIGN_hierarchical_bucketing.md) — planned on the
                 # manifest just published. A fold that loses its CAS is
                 # simply deferred to the next round.
-                out["fold"] = self.fold_due(key_index=key_index, base=committed)
+                out["fold"] = self.fold_due(base=committed)
                 out["mode"] = "cow_incremental"
             return out
 
@@ -2278,7 +2240,7 @@ class LakeTable:
             }
         )
         our_files, our_meta, our_sizes, our_stats, our_blooms = self._harvest(
-            m, by_index, affected, S, k_parts, keys, order_by, key_index, allowed=allowed
+            m, by_index, affected, S, k_parts, keys, order_by, allowed=allowed
         )
 
         def assemble(cur: Optional[dict], bookmark_updates, extra_manifest):
@@ -2332,7 +2294,6 @@ class LakeTable:
         self, batch, keys, order_by, batch_id, op_col, affected,
         new_schema, m, nb, bookmark_updates, extra_manifest, t0,
         writer_id: str = "default",
-        key_index: bool = False,
         delta_parts: Optional[int] = None,
         affected_est: Optional[int] = None,
     ) -> tuple:
@@ -2408,7 +2369,7 @@ class LakeTable:
                 raise
 
         our_deltas, our_meta, our_sizes, our_stats, our_blooms = self._harvest(
-            m, by_index, affected, S, k_parts, keys, order_by, key_index
+            m, by_index, affected, S, k_parts, keys, order_by
         )
 
         def assemble(cur: Optional[dict], bookmark_updates, extra_manifest):
@@ -2724,21 +2685,20 @@ class LakeTable:
         delta_sel = [f for f in dfiles if claims[f] & due]
         return S_b, sorted(due), base_sel, delta_sel
 
-    def fold_due(
-        self, k_fold: Optional[int] = None, key_index: bool = False, base=_HEAD
-    ) -> dict:
+    def fold_due(self, base=_HEAD) -> dict:
         """Fold the delta chains of the granules due this round into fresh
         base files — the staggered, (bucket, slice)-granular half of
-        ``mode="cow_incremental"``. One LWW merge job over ONLY the due
-        granules' files (bucket- and slice-pruned scan), one shuffle, one
-        atomic commit. Returns fold stats ({"skipped": True} when nothing
+        ``mode="cow_incremental"``. A granule is due when its pending
+        delta chain reached the handle's ``fold_every`` files. One LWW
+        merge job over ONLY the due granules' files (bucket- and
+        slice-pruned scan), one shuffle, one atomic commit. Returns fold stats ({"skipped": True} when nothing
         is due or a concurrent commit invalidated the fold). ``base`` is
         the manifest to plan on (e.g. the one a commit just published);
         omitted, HEAD is read."""
         m = self.current_manifest() if base is _HEAD else base
         if m is None or not m.get("deltas"):
             return {"skipped": True}
-        k = max(1, k_fold or self.fold_every)
+        k = max(1, self.fold_every)
         t0 = time.time()
 
         plans = {}
@@ -2808,7 +2768,7 @@ class LakeTable:
         }
         written = self._harvest(
             m, by_index, [int(b) for b in plans], S_w, k_parts, keys, order_by,
-            key_index, allowed=allowed, eras=eras,
+            allowed=allowed, eras=eras,
         )
         consumed = {b_str: (bs, ds) for b_str, (_S, _due, bs, ds) in plans.items()}
         committed = self._commit_rewrite(m, consumed, written, fold=True)
@@ -2824,9 +2784,7 @@ class LakeTable:
     # ------------------------------------------------------------------
     # maintenance
     # ------------------------------------------------------------------
-    def compact(
-        self, tombstone_watermark: Optional[int] = None, key_index: bool = False
-    ) -> dict:
+    def compact(self, tombstone_watermark: Optional[int] = None) -> dict:
         """Rewrite every non-empty bucket into fresh base files:
         ``compact_buckets`` with all buckets selected. Merges small files,
         folds pending deltas into the base and purges delete tombstones
@@ -2843,14 +2801,12 @@ class LakeTable:
         snapshot (bounded retries; compaction is maintenance, the writers
         win ties).
 
-        ``key_index=True`` re-harvests per-file key blooms for the
-        rewritten files (a full rewrite otherwise drops them — files
-        without blooms stay lookup CANDIDATES, so this only restores
-        pruning, never correctness). Returns ``compact_buckets``' result.
+        A table with the ``key_index`` property gets a key bloom for every
+        rewritten file, like any other write. Returns ``compact_buckets``'
+        result.
         """
         return self.compact_buckets(
-            buckets=_EVERY_BUCKET, tombstone_watermark=tombstone_watermark,
-            key_index=key_index,
+            buckets=_EVERY_BUCKET, tombstone_watermark=tombstone_watermark
         )
 
     @staticmethod
@@ -2952,35 +2908,31 @@ class LakeTable:
         return frame, k_parts, list(range(n_e))
 
     def _harvest(self, m: Optional[dict], by_index: dict, affected, S: int, k_parts: int,
-                 keys, order_by, key_index: bool, allowed=None, eras=None) -> tuple:
+                 keys, order_by, allowed=None, eras=None) -> tuple:
         """Manifest entries for one write job planned on ``m``: ``(files,
         slice_meta, sizes, zone stats, key blooms)`` — per-bucket claims
         (``_files_and_meta``), byte sizes, zone maps, and key blooms when
-        ``key_index`` (else None)."""
+        ``m``'s table has the ``key_index`` property (else None)."""
         files, meta = self._files_and_meta(
             affected, S, k_parts, by_index, allowed=allowed, eras=eras
         )
         blooms = (
             self._compute_file_blooms(list(by_index.values()), list(keys))
-            if key_index
+            if self._key_index_of(m)
             else None
         )
         return (files, meta, self._sizes_of(by_index),
                 self._stats_of(by_index, self._stat_cols(m, order_by)), blooms)
 
-    def _rewrite_job(self, df, affected: Sequence[int], epoch: int, m: dict,
-                     key_index: bool, input_files,
-                     files_per_bucket: Optional[int] = None):
+    def _rewrite_job(self, df, affected: Sequence[int], epoch: int, m: dict, input_files):
         """One bucket-space rewrite job: salt, repartition, write a fresh
         epoch dir, index the part files and harvest their manifest
         entries. Shared by bucket compaction and rebucket — they differ
         only in WHICH buckets they rewrite (and in which bucket space).
-        ``files_per_bucket`` overrides the parallelism-derived slice
-        count (must be a power of two <= 64 for residue nesting).
         ``input_files`` are the files ``df`` was read from: their zone
         maps bound the clustered layout (``_clustered_layout``). Returns
         ``(by_index, _harvest(...))``."""
-        S = files_per_bucket if files_per_bucket else self._fpb(len(affected))
+        S = self._fpb(len(affected))
         k_parts = max(1, len(affected) * S)
         salted = df.withColumn("__salt", key_hash(m["keys"], S, "__salt__"))
         laid = self._clustered_layout(salted, m, input_files, k_parts)
@@ -3001,8 +2953,7 @@ class LakeTable:
             shaped = shaped.drop("__salt")
         by_index = self._write_parts(shaped, self._epoch_dir(epoch))
         return by_index, self._harvest(
-            m, by_index, affected, S, k_parts, m["keys"], m.get("order_by"),
-            key_index, eras=eras,
+            m, by_index, affected, S, k_parts, m["keys"], m.get("order_by"), eras=eras
         )
 
     @staticmethod
@@ -3078,8 +3029,6 @@ class LakeTable:
         small_file_bytes: int = 32 << 20,
         min_input_files: int = 4,
         tombstone_watermark: Optional[int] = None,
-        key_index: bool = False,
-        target_file_bytes: Optional[int] = None,
     ) -> dict:
         """Incremental small-file compaction (Iceberg binpack analog):
         rewrite ONLY the buckets whose small-file count warrants it,
@@ -3103,18 +3052,12 @@ class LakeTable:
         racer's delta appended to a due bucket mid-rewrite stays
         pending (LWW re-applies it at read). ``tombstone_watermark``
         purges delete tombstones with replication key <= the watermark
-        from the rewritten buckets (same contract as ``compact``).
-
-        ``target_file_bytes`` sizes the output: the per-bucket slice
-        count becomes the power of two nearest ceil(avg consumed bucket
-        bytes / target) (clamped to [1, 64] for residue nesting) instead
-        of the parallelism heuristic — the Iceberg binpack target-size
-        knob, so compacted files are predictably sized regardless of
-        cluster width."""
+        from the rewritten buckets (same contract as ``compact``). A table
+        with the ``key_index`` property gets a key bloom for every
+        rewritten file."""
         for _attempt in range(3):
             out = self._compact_buckets_once(
-                buckets, small_file_bytes, min_input_files,
-                tombstone_watermark, key_index, target_file_bytes,
+                buckets, small_file_bytes, min_input_files, tombstone_watermark
             )
             if out is not None:
                 return out
@@ -3126,8 +3069,6 @@ class LakeTable:
         small_file_bytes: int,
         min_input_files: int,
         tombstone_watermark: Optional[int],
-        key_index: bool,
-        target_file_bytes: Optional[int] = None,
     ) -> Optional[dict]:
         m = self.current_manifest()
         if m is None:
@@ -3162,28 +3103,12 @@ class LakeTable:
             return {"skipped": True, "reason": "no bucket over the small-file threshold"}
 
         due = sorted(int(b) for b in consumed)
-        fpb = None
-        if target_file_bytes:
-            # size the output files: slices per bucket = nearest power of
-            # two to ceil(avg consumed bucket bytes / target), clamped to
-            # [1, 64] so residues keep nesting across commit depths
-            total = sum(
-                sizes.get(os.path.basename(f), 0)
-                for b_, d_ in consumed.values()
-                for f in set(b_ + d_)
-            )
-            want = max(1, -(-total // (len(due) * int(target_file_bytes))))
-            fpb = 1
-            while fpb < want and fpb < 64:
-                fpb *= 2
         df = self.read_state(buckets=due, manifest=m)
         df = self._purge_tombstones(df, m, tombstone_watermark)
         inputs = {f for b_, d_ in consumed.values() for f in b_ + d_}
         # full-bucket rewrite: the new files legitimately claim every
         # residue the job computed for them (no partial-granule caveat)
-        _by_index, written = self._rewrite_job(
-            df, due, m["version"] + 1, m, key_index, inputs, files_per_bucket=fpb
-        )
+        _by_index, written = self._rewrite_job(df, due, m["version"] + 1, m, inputs)
         committed = self._commit_rewrite(m, consumed, written)
         if committed is None:
             return None
@@ -3258,7 +3183,7 @@ class LakeTable:
             "tags": len(self.tags()),
         }
 
-    def rebucket(self, new_num_buckets: int, key_index: bool = False) -> dict:
+    def rebucket(self, new_num_buckets: int) -> dict:
         """Online bucket-count evolution (the hash-bucket analog of
         Iceberg partition evolution): rewrite the full resolved state —
         tombstones included — under ``new_num_buckets`` and commit the
@@ -3280,21 +3205,18 @@ class LakeTable:
         and the recompute plans on the fresh snapshot, whose count every
         operation reads (``_buckets_of``); no handle caches it.
         Old-version time travel still reads its own manifest's sections,
-        so history stays intact. Key blooms are dropped for the rewritten
-        files unless ``key_index=True``
-        re-harvests them (files without blooms remain lookup candidates —
-        pruning-only metadata, also rebuilt by later ``key_index=True``
-        writes or folds)."""
+        so history stays intact. A table with the ``key_index`` property
+        gets a key bloom for every rewritten file."""
         nb = int(new_num_buckets)
         if nb < 1:
             raise ValueError(f"new_num_buckets must be >= 1, got {nb}")
         for _attempt in range(3):
-            out = self._rebucket_once(nb, key_index)
+            out = self._rebucket_once(nb)
             if out is not None:
                 return out
         return {"skipped": True, "reason": "commit contention (3 attempts)"}
 
-    def _rebucket_once(self, nb: int, key_index: bool = False) -> Optional[dict]:
+    def _rebucket_once(self, nb: int) -> Optional[dict]:
         m = self.current_manifest()
         if m is None:
             raise ValueError("rebucket on an empty table")
@@ -3305,10 +3227,10 @@ class LakeTable:
         df = df.drop("__bucket").withColumn("__bucket", key_hash(m["keys"], nb))
         epoch = m["version"] + 1
         by_index, (files, slice_meta, sizes, stats, blooms) = self._rewrite_job(
-            df, range(nb), epoch, m, key_index, all_files_of(m)
+            df, range(nb), epoch, m, all_files_of(m)
         )
         manifest = self._with_file_index({
-            **{k_: v for k_, v in m.items() if k_ != "key_blooms"},
+            **m,
             "version": epoch,
             "num_buckets": nb,
             "files": files,

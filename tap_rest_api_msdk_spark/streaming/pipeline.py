@@ -100,7 +100,9 @@ class PipelineConfig:
     # the base only on an explicit LakeTable.compact()/compact_buckets()
     # (e.g. scripts/run_pipeline.py --mode maintenance from cron).
     sink_mode: str = "cow"
-    fold_every: Optional[int] = None  # cow_incremental stagger (None = table default)
+    # cow_incremental fold trigger of the handle the drivers open (None =
+    # the LakeTable default); process_batch uses the handle it is given
+    fold_every: Optional[int] = None
     # malformed payloads (unparseable JSON -> null struct after from_json):
     # "keep" emits all-null flattened fields (the tap's permissive shape),
     # "drop" filters them, "dlq" additionally lands the raw rows in a
@@ -304,8 +306,6 @@ def process_batch(
         slice_col="__s64" if want_granular else None,
     )
     shaped = prepare_batch(raw, conf, schema)
-    if conf.fold_every:
-        table.fold_every = conf.fold_every
 
     # The lineage job runs concurrently with the merge write; its rows feed
     # the commit payloads (bookmarks, counters, touched buckets) as
@@ -387,9 +387,12 @@ def process_batch(
 
 
 def _open(spark: SparkSession, table_path: str, conf: PipelineConfig) -> LakeTable:
-    return LakeTable(
+    table = LakeTable(
         spark, table_path, num_buckets=conf.num_buckets, files_per_bucket=conf.files_per_bucket
     )
+    if conf.fold_every:
+        table.fold_every = conf.fold_every
+    return table
 
 
 def run_batch_replay(

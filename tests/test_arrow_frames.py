@@ -135,12 +135,12 @@ def test_owned_rows_on_a_shared_file_rewritten_for_one_bucket(spark, tmp_path):
 
 
 def _keyed_table(spark, path, key_sql):
-    t = LakeTable(spark, path, num_buckets=4)
+    t = LakeTable(spark, path, num_buckets=4, key_index=True)
     df = spark.range(0, 60).selectExpr(
         f"{key_sql} AS k", "id AS seq", "concat('c', id) AS commit", "'upsert' AS op",
         "concat('v', id) AS v",
     )
-    t.merge_upsert(df, ["k"], ["seq", "commit"], batch_id=0, op_col="op", key_index=True)
+    t.merge_upsert(df, ["k"], ["seq", "commit"], batch_id=0, op_col="op")
     return t
 
 

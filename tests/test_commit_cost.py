@@ -162,9 +162,10 @@ def test_engine_paths_never_parallelize(spark, tmp_path):
     # cow_incremental: delta commits, then a fold of the granules due
     swal = synth_repo_wal(spark, 1600, n_repos=10, n_paths=40, partitions=2, shredded=True)
     s = LakeTable(spark, str(tmp_path / "s"), num_buckets=4)
+    s.fold_every = 2
     boot = PipelineConfig(stream="boot", num_buckets=4)
     process_batch(s, boot, swal.filter(F.col("seq") < 1000), 0)
-    inc = PipelineConfig(stream="inc", num_buckets=4, sink_mode="cow_incremental", fold_every=2)
+    inc = PipelineConfig(stream="inc", num_buckets=4, sink_mode="cow_incremental")
     folds = []
     with _parallelize_calls(counts, "delta commits and folds"):
         for i in range(3):

@@ -40,17 +40,21 @@ def n_unique_files(m):
     return len({f for b, d in live_files(m).values() for f in b + d})
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+def fragmented(spark, path, **kw):
     """Fragmented history: a COW base plus five small MOR deltas and a
     late tombstone — every bucket accumulates a pile of small files."""
-    t = LakeTable(spark, str(tmp_path / "lake"), num_buckets=4)
+    t = LakeTable(spark, path, num_buckets=4, **kw)
     up(t, [(i, i, "up", f"v{i}") for i in range(200)], 0)
     for b in range(1, 6):
         up(t, [(1000 * b + i, i * 7 % 200, "up", f"m{b}.{i}") for i in range(30)],
            b, mode="mor")
     up(t, [(9000, 13, "delete", None)], 6, mode="mor")
     return t
+
+
+@pytest.fixture()
+def table(spark, tmp_path):
+    return fragmented(spark, str(tmp_path / "lake"))
 
 
 def test_compaction_preserves_state_and_consumes_files(spark, table):
@@ -144,12 +148,11 @@ def test_null_op_rows_survive_watermarked_purge(spark, tmp_path):
         assert 3 not in {r["id"] for r in t.to_df(drop_deletes=False).collect()}
 
 
-def test_file_index_maintained(spark, table):
+def test_file_index_maintained(spark, tmp_path):
     """file_bytes / file_stats / key blooms stay consistent with the live
     file set, and pruned reads + lookups still work after compaction."""
-    out = table.compact_buckets(
-        small_file_bytes=32 << 20, min_input_files=2, key_index=True
-    )
+    table = fragmented(spark, str(tmp_path / "lake"), key_index=True)
+    out = table.compact_buckets(small_file_bytes=32 << 20, min_input_files=2)
     assert not out.get("skipped")
     m = table.current_manifest()
     live = {
@@ -169,33 +172,6 @@ def test_file_index_maintained(spark, table):
     # bloom-pruned point lookup still resolves
     hit = table.lookup({"id": 5})
     assert [r["id"] for r in hit.collect()] == [5]
-
-
-def test_target_file_bytes_sizes_output(spark, table):
-    """The binpack target-size knob: a huge target collapses each bucket
-    to ONE slice (one file); a tiny target fans out to more slices —
-    always a power of two <= 64, state always identical."""
-    before = snap(table)
-    out = table.compact_buckets(
-        buckets=list(range(4)), target_file_bytes=1 << 40
-    )
-    assert not out.get("skipped")
-    m = table.current_manifest()
-    # one slice per bucket: every slice_meta entry claims depth 1
-    for b, bmeta in m["slice_meta"].items():
-        for ent in bmeta.values():
-            assert int(ent[0]) == 1, (b, ent)
-    assert snap(table) == before
-    # tiny target: more slices per bucket, still a nesting power of two
-    out = table.compact_buckets(buckets=list(range(4)), target_file_bytes=1024)
-    assert not out.get("skipped")
-    m = table.current_manifest()
-    depths = {
-        int(ent[0]) for bmeta in m["slice_meta"].values() for ent in bmeta.values()
-    }
-    assert depths and all(d & (d - 1) == 0 and d <= 64 for d in depths)
-    assert max(depths) > 1
-    assert snap(table) == before
 
 
 def test_stats_respects_min_input_files(spark, table):
@@ -315,6 +291,7 @@ def test_racing_fold_forces_recompute_not_corruption(spark, table):
     binpack's read and publish rewrites due buckets' bases — the binpack
     must recompute (or rebase safely), never drop the fold's result."""
     racer = LakeTable(spark, table.path, num_buckets=4)
+    racer.fold_every = 1
     before = snap(table)
     real_publish = table._publish
     injected = {"done": False}
@@ -322,7 +299,7 @@ def test_racing_fold_forces_recompute_not_corruption(spark, table):
     def racing_publish(manifest):
         if not injected["done"]:
             injected["done"] = True
-            racer.fold_due(k_fold=1)  # consume pending delta chains
+            racer.fold_due()  # consume pending delta chains
         return real_publish(manifest)
 
     table._publish = racing_publish

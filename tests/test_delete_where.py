@@ -146,7 +146,7 @@ def test_requires_op_col_and_integral_seq(spark, tmp_path):
 
 
 def test_delete_keys_prunes_and_deletes(spark, tmp_path):
-    t = LakeTable(spark, str(tmp_path / "pk"), num_buckets=8)
+    t = LakeTable(spark, str(tmp_path / "pk"), num_buckets=8, key_index=True)
     rows = [(i, f"r{i % 50}", f"p{i}", f"c{i}", "upsert", f"v{i}") for i in range(400)]
     df = arrow_frame(spark, rows, T.StructType.fromDDL(SCHEMA))
     # several batches so each bucket holds several bloom-indexed files
@@ -157,7 +157,6 @@ def test_delete_keys_prunes_and_deletes(spark, tmp_path):
             ORDER,
             batch_id=b,
             op_col="op",
-            key_index=True,
             mode="mor",
         )
     stats = t.delete_keys(

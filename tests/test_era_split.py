@@ -138,7 +138,9 @@ def test_era_split_table_still_merges_and_folds(spark, history):
     t.compact()
     t.merge_upsert(_rows(spark, 2000, 2400), keys=["id"], order_by=["seq"],
                    batch_id=4, mode="cow_incremental")
-    t.fold_due(k_fold=10**9)  # fold everything pending
+    t.fold_every = 1  # every granule with a pending delta is due
+    assert t.fold_due()["skipped"] is False
+    assert not t.current_manifest().get("deltas")
     # append-mostly ids: every id's winner is its own seq
     assert _snap(t) == {i: i for i in range(2400)}
 
@@ -232,9 +234,9 @@ def test_era_split_fold_lww_across_eras(spark, tmp_path):
         spark, [(i, 10_000 + i, f"u{i}") for i in range(100)],
         T.StructType.fromDDL("id long, seq long, text string"),
     )
-    t.merge_upsert(upd, keys=["id"], order_by=["seq"], batch_id=1,
-                   mode="cow_incremental")
-    t.fold_due(k_fold=10**9)
+    out = t.merge_upsert(upd, keys=["id"], order_by=["seq"], batch_id=1,
+                         mode="cow_incremental")
+    assert out["fold"]["skipped"] is False
     got = _snap(t)
     want = {i: (10_000 + i if i < 100 else i) for i in range(400)}
     assert got == want

@@ -248,19 +248,20 @@ def test_vacuum_reclaims_dead_epoch_dirs(spark, tmp_path):
 def test_compact_key_index_reharvests_blooms(spark, tmp_path):
     from tap_rest_api_msdk_spark.streaming.laketable import LakeTable
 
-    t = LakeTable(spark, str(tmp_path / "cb"), num_buckets=2)
+    t = LakeTable(spark, str(tmp_path / "cb"), num_buckets=2, key_index=True)
     df = arrow_frame(
         spark, [(k, k, "up", f"v{k}") for k in range(50)],
         T.StructType.fromDDL("k long, seq long, op string, v string"),
     )
-    t.merge_upsert(
-        df, keys=["k"], order_by=["seq"], batch_id=0, op_col="op", key_index=True
-    )
+    t.merge_upsert(df, keys=["k"], order_by=["seq"], batch_id=0, op_col="op")
     assert t.current_manifest().get("key_blooms")
-    t.compact()  # default: full rewrite drops blooms (prune-only metadata)
-    assert not t.current_manifest().get("key_blooms")
-    t.compact(key_index=True)
-    assert t.current_manifest().get("key_blooms")
+    v = t.current_manifest()["version"]
+    # a handle opened without the seed still harvests: the property is
+    # the snapshot's
+    LakeTable(spark, t.path, num_buckets=2).compact()
+    m = t.current_manifest()
+    assert m["version"] > v and m["key_index"] is True
+    assert set(m["key_blooms"]) == set(m["file_owners"])
     assert t.lookup({"k": 7}).count() == 1
     assert t.last_lookup_stats["candidate_files"] <= 2
     assert t.lookup({"k": 9999}).count() == 0

@@ -46,9 +46,9 @@ def test_multi_file_buckets_roundtrip(spark, tmp_path):
     assert got == want
     # bucket-pruned read returns exactly that bucket's rows
     for b in (0, 1):
-        rows = t.read(buckets=[b]).collect()
+        rows = t.read_state(buckets=[b]).collect()
         assert rows and all(r["__bucket"] == b for r in rows)
-    assert sum(t.read(buckets=[b]).count() for b in (0, 1)) == 500
+    assert sum(t.read_state(buckets=[b]).count() for b in (0, 1)) == 500
 
 
 def test_multi_file_merge_into_existing(spark, tmp_path):

@@ -392,7 +392,8 @@ def test_committed_schema_survives_maintenance(spark, tmp_path):
         process_batch(table, c, spark.read.parquet(p), batch_id=i)
     schema = committed_payload_schema(table.current_manifest(), "evo")
     assert schema is not None and "x" in schema.names
-    for op in (lambda: table.fold_due(k_fold=1), table.compact, lambda: table.rebucket(8)):
+    table.fold_every = 1
+    for op in (table.fold_due, table.compact, lambda: table.rebucket(8)):
         v = table.current_manifest()["version"]
         op()
         m = table.current_manifest()

@@ -157,11 +157,14 @@ def test_cow_rebase_guard_recomputes_after_racing_rebucket(spark, tmp_path):
     assert t1.to_df(drop_deletes=True).count() == 51
 
 
-def test_rebucket_key_index_reharvests_blooms(spark, table):
-    # default rebucket drops blooms (prune-only); key_index re-harvests
-    table.rebucket(16, key_index=True)
+def test_rebucket_key_index_reharvests_blooms(spark, tmp_path):
+    # a key_index table keeps a bloom on every file the rewrite writes
+    table = LakeTable(spark, str(tmp_path / "keyed"), num_buckets=4, key_index=True)
+    up(table, [(i, i % 60, "up", f"v{i}") for i in range(200)], 0)
+    up(table, [(200, 7, "delete", None), (201, 61, "up", "new")], 1, mode="mor")
+    table.rebucket(16)
     m = table.current_manifest()
-    assert m.get("key_blooms")
+    assert set(m["key_blooms"]) == set(m["file_owners"])
     rows = table.lookup({"id": 3}).collect()
     assert len(rows) == 1
     st = table.last_lookup_stats

@@ -165,7 +165,8 @@ def test_partial_fold_claims_only_due_residues(spark, tmp_path):
     m0 = t.current_manifest()
     S_b, due, _base_sel, _delta_sel = t._bucket_granule_plan(m0, "0", 2)
     assert S_b == 4 and 0 in due and set(due) < set(range(4)), (S_b, due)
-    out = t.fold_due(k_fold=2)
+    t.fold_every = 2
+    out = t.fold_due()
     assert not out.get("skipped"), out
     m = t.current_manifest()
     assert not m.get("deltas")  # the hot chain folded
@@ -500,7 +501,7 @@ def test_expired_anchor_raises_not_full_redelivery(spark, tmp_path):
     expired must raise — silently diffing against an empty snapshot would
     redeliver the whole table as changes (changes_since, the streaming
     source) or misreport every live key as an insert (cdc_diff)."""
-    from tap_rest_api_msdk_spark.streaming.changes_source import _added_files
+    from tap_rest_api_msdk_spark.streaming.laketable import walk_added_files
 
     path = str(tmp_path / "tbl_expired")
     t = LakeTable(spark, path, num_buckets=4)
@@ -515,12 +516,12 @@ def test_expired_anchor_raises_not_full_redelivery(spark, tmp_path):
     with pytest.raises(ValueError, match="expired"):
         t.cdc_diff(0)
     with pytest.raises(ValueError, match="expired"):
-        _added_files(path, 0, head)
+        walk_added_files(path, 0, head)
 
     # retained windows still work on all three surfaces
     assert t.changes_since(head - 1).count() == 3
     assert t.cdc_diff(head - 1).count() == 3
-    assert len(_added_files(path, head - 1, head)) >= 1
+    assert len(walk_added_files(path, head - 1, head)) >= 1
     # pre-creation anchor (< 0) stays a legitimate full-history read
     t2 = LakeTable(spark, str(tmp_path / "fresh"), num_buckets=4)
     t2.merge_upsert(_rows(spark, [1], 0, "x"), keys=["id"], order_by=["seq"],
@@ -542,26 +543,6 @@ def test_gc_sections_reclaims_crashed_tmp_files(spark, tmp_path):
     t.expire_manifests(retain_last=1, grace_seconds=0.0)
     assert not os.path.exists(orphan)
     assert t.to_df().count() == 3  # live sections untouched
-
-
-def test_cow_precombine_shrinks_hot_key_batches(spark, tmp_path):
-    """precombine=True pre-shrinks duplicate-heavy COW batches with the
-    map-side-combined LWW aggregate before the merge shuffle; the result
-    is identical to the plain path (same fixpoint)."""
-    path_a, path_b = str(tmp_path / "a"), str(tmp_path / "b")
-    # one pathologically hot key: 5000 versions in a single batch
-    hot = [(1, s, f"v{s}") for s in range(5000)]
-    cold = [(i, 0, f"c{i}") for i in range(2, 300)]
-    df = arrow_frame(spark, hot + cold, T.StructType.fromDDL("id long, seq long, text string"))
-    ta = LakeTable(spark, path_a, num_buckets=4)
-    tb = LakeTable(spark, path_b, num_buckets=4)
-    ta.merge_upsert(df, keys=["id"], order_by=["seq"], batch_id=0, mode="cow")
-    tb.merge_upsert(df, keys=["id"], order_by=["seq"], batch_id=0, mode="cow",
-                    precombine=True)
-    rows_a = sorted((r["id"], r["seq"], r["text"]) for r in ta.to_df().collect())
-    rows_b = sorted((r["id"], r["seq"], r["text"]) for r in tb.to_df().collect())
-    assert rows_a == rows_b
-    assert rows_b[0] == (1, 4999, "v4999")  # hot key resolved to max seq
 
 
 def test_split_manifest_roundtrip_property(tmp_path):
@@ -626,11 +607,10 @@ def test_split_manifest_roundtrip_property(tmp_path):
 
 
 def test_bloom_key_index_lookup(spark, tmp_path):
-    """Per-file key blooms (key_index=True) prune point lookups to ~1
-    candidate file; correctness never depends on the index (files without
-    blooms — e.g. fold output — stay candidates)."""
+    """Per-file key blooms (a key_index table) prune point lookups to ~1
+    candidate file; correctness never depends on the index."""
     path = str(tmp_path / "tbl_bloom")
-    t = LakeTable(spark, path, num_buckets=8, files_per_bucket=4)
+    t = LakeTable(spark, path, num_buckets=8, files_per_bucket=4, key_index=True)
 
     def rows(data):
         return arrow_frame(
@@ -640,10 +620,10 @@ def test_bloom_key_index_lookup(spark, tmp_path):
 
     t.merge_upsert(rows([(i, 0, "upsert", f"v0-{i}") for i in range(4000)]),
                    keys=["id"], order_by=["seq"], batch_id=0, op_col="op",
-                   mode="cow", key_index=True)
+                   mode="cow")
     t.merge_upsert(rows([(7, 1, "upsert", "v1-7"), (9, 1, "delete", "")]),
                    keys=["id"], order_by=["seq"], batch_id=1, op_col="op",
-                   mode="mor", key_index=True)
+                   mode="mor")
 
     out = t.lookup({"id": 7}).collect()
     assert [(r["seq"], r["text"]) for r in out] == [(1, "v1-7")]
@@ -658,11 +638,11 @@ def test_bloom_key_index_lookup(spark, tmp_path):
         total += t.last_lookup_stats["candidate_files"]
     assert total <= 3, total
 
-    # fold output has no blooms -> still correct, just scans its granule
+    # a fold keeps the index: its output files get blooms too
     t.fold_every = 1
     t.merge_upsert(rows([(42, 2, "upsert", "v2-42")]), keys=["id"],
                    order_by=["seq"], batch_id=2, op_col="op",
-                   mode="cow_incremental", key_index=True)
+                   mode="cow_incremental")
     assert t.lookup({"id": 42}).collect()[0]["text"] == "v2-42"
     assert t.lookup({"id": 7}).collect()[0]["text"] == "v1-7"
     # wrong key set refused
@@ -677,9 +657,9 @@ def test_lookup_metadata_is_bucket_scoped(spark, tmp_path):
     import tap_rest_api_msdk_spark.streaming.laketable as LT
 
     path = str(tmp_path / "tbl_scoped")
-    t = LakeTable(spark, path, num_buckets=32)
+    t = LakeTable(spark, path, num_buckets=32, key_index=True)
     t.merge_upsert(_rows(spark, range(3000), 0, "x"), keys=["id"],
-                   order_by=["seq"], batch_id=0, mode="cow", key_index=True)
+                   order_by=["seq"], batch_id=0, mode="cow")
     LT._SECTION_CACHE.clear()
     loads = []
     orig = LT._load_section

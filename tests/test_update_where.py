@@ -199,13 +199,13 @@ def test_update_keys_prunes_and_updates(spark, tmp_path):
     """Point updates run the same bloom/slice funnel as delete_keys:
     candidate files << touched buckets' files, absent keys skip without
     burning the ledger, replay is a no-op, non-victims untouched."""
-    t = LakeTable(spark, str(tmp_path / "pk"), num_buckets=8)
+    t = LakeTable(spark, str(tmp_path / "pk"), num_buckets=8, key_index=True)
     rows = [(i, f"r{i % 50}", f"p{i}", f"c{i}", "upsert", f"v{i}") for i in range(400)]
     df = arrow_frame(spark, rows, T.StructType.fromDDL(SCHEMA))
     for b in range(4):
         t.merge_upsert(
             df.filter(F.col("seq") % 4 == b), KEYS, ORDER,
-            batch_id=b, op_col="op", key_index=True, mode="mor",
+            batch_id=b, op_col="op", mode="mor",
         )
     stats = t.update_keys(
         [{"repo": "r7", "path": "p7"}, {"repo": "r7", "path": "p107"}],

@@ -184,12 +184,13 @@ def test_zorder_fold_path_prunes_and_matches(spark, tmp_path):
     columns; state is identical to the plain-fold control."""
     plain, hi = _drive_cowinc_z(spark, str(tmp_path / "plain"), None)
     zt, _ = _drive_cowinc_z(spark, str(tmp_path / "z"), ["seq", "val"])
-    # drain pending delta chains (k_fold=1 folds any granule with >= 1
+    # drain pending delta chains (fold_every=1 folds any granule with >= 1
     # pending file): non-ordering-column FILE pruning only engages on
     # delta-free snapshots (to_df's LWW-resurrection guard), and the
     # point here is the fold OUTPUT's layout
-    zt.fold_due(k_fold=1)
-    plain.fold_due(k_fold=1)
+    for t in (zt, plain):
+        t.fold_every = 1
+        t.fold_due()
     assert _snap(zt) == _snap(plain)
     assert len(_snap(zt)) == hi
 
@@ -219,9 +220,9 @@ def test_zorder_fold_lww_across_cells(spark, tmp_path):
         spark, [(i, 10_000 + i, int(_val(i + 7))) for i in range(100)],
         T.StructType.fromDDL("id long, seq long, val long"),
     )
-    t.merge_upsert(upd, keys=["id"], order_by=["seq"], batch_id=1,
-                   mode="cow_incremental")
-    t.fold_due(k_fold=10**9)
+    out = t.merge_upsert(upd, keys=["id"], order_by=["seq"], batch_id=1,
+                         mode="cow_incremental")
+    assert out["fold"]["skipped"] is False
     got = _snap(t)
     want = {
         i: ((10_000 + i, _val(i + 7)) if i < 100 else (i, _val(i)))
