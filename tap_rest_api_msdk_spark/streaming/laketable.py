@@ -6,8 +6,9 @@ can swap for ``MERGE INTO`` with zero pipeline changes:
 
 * **Atomic snapshot commit** — data files are written first, then a JSON
   manifest (naming live files, schema, committed batch id, bookmarks) is
-  published by an atomic POSIX ``rename`` of the version pointer. Readers
-  only ever see a fully-committed snapshot.
+  published by the exclusive creation of its version file; ``_latest.json``
+  holds only a HEAD version hint. Readers only ever see a fully-committed
+  snapshot.
 * **Idempotent batch ids** — ``merge_upsert(batch_id=...)`` is a no-op when
   ``batch_id <= last_batch_id_for(writer_id)``: the standard Structured
   Streaming ``foreachBatch`` idempotent-sink contract; replay from any
@@ -65,6 +66,16 @@ LATEST_POINTER = "_latest.json"
 # uses (slice mod S), and because S | SLICE_MOD the residues nest across
 # commits with different S (DESIGN_hierarchical_bucketing.md)
 SLICE_MOD = 64
+
+# Target rows per DELTA file: a delta append's write fan-out is capped at
+# ceil(batch_rows / this), so a small batch's delta files are SHARED across
+# buckets. Uncapped, a small batch writes up to num_buckets near-empty
+# files whose footers and commit latency dominate (measured +30% steady
+# ingest at 64 buckets, 2.9x at 1024); 4096 puts 50k-row steady batches at
+# ~13 files, the measured knee (16 files beat both 64 and 4 on the
+# 30-batch steady shape). batch_rows is the writer's previous delta batch,
+# kept in the snapshot (``delta_fanout``).
+DELTA_FILE_ROWS_AUTO = 4096
 
 # lookup frames built from Python rows: (file basename, owning bucket)
 # ownership pairs and touched (bucket, slice64) granules
@@ -640,10 +651,9 @@ class LakeTable:
         return key_hash(keys, self._buckets_of(m))
 
     def _stats_columns_of(self, m: Optional[dict]) -> list:
-        """Snapshot ``m``'s extra zone-map columns, else this handle's seed."""
-        if m and m.get("stats_columns") is not None:
-            return list(m["stats_columns"])
-        return list(self._seed_stats_columns)
+        """Snapshot ``m``'s extra zone-map columns; the seed only applies
+        to a table with nothing committed."""
+        return list(m.get("stats_columns") or []) if m else list(self._seed_stats_columns)
 
     def _key_index_of(self, m: Optional[dict]) -> bool:
         """Whether snapshot ``m``'s table keeps per-file key blooms; the
@@ -752,11 +762,7 @@ class LakeTable:
                     return json.load(fh)
             except (json.JSONDecodeError, OSError):
                 continue
-        try:
-            with open(self._pointer_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return None
+        return None
 
     def manifest_at(self, version: int) -> Optional[dict]:
         """Historical snapshot manifest (time travel): every commit's
@@ -773,7 +779,7 @@ class LakeTable:
         wins, the other gets False and must rebase or recompute against
         the new current snapshot. On an object store this maps to
         put-if-absent / Iceberg's pointer CAS. ``_latest.json`` is swung
-        afterwards as a best-effort read cache only.
+        afterwards to ``{"version": N}``, a best-effort HEAD hint only.
 
         Returns True iff this call committed the version.
         """
@@ -793,7 +799,7 @@ class LakeTable:
                 os.remove(tmp)
         ptmp = self._pointer_path() + f".tmp.{uuid.uuid4().hex}"
         with open(ptmp, "w") as fh:
-            json.dump(core, fh)
+            json.dump({"version": version}, fh)
         os.rename(ptmp, self._pointer_path())
         return True
 
@@ -1394,19 +1400,6 @@ class LakeTable:
         return extra
 
     @staticmethod
-    def _buckets_touched(old: Optional[dict], new: Optional[dict]) -> set:
-        """Bucket ids whose file or delta lists differ between two
-        manifests — the conflict footprint of the commits between them."""
-        touched = set()
-        for section in ("files", "deltas"):
-            o = (old or {}).get(section, {})
-            n = (new or {}).get(section, {})
-            for b in set(o) | set(n):
-                if o.get(b, []) != n.get(b, []):
-                    touched.add(int(b))
-        return touched
-
-    @staticmethod
     def _bucket_claims(m: dict, b_str: str) -> tuple:
         """``granule_claims`` over one bucket's base and delta files: the
         bucket's granule depth and each file's claims there."""
@@ -1415,14 +1408,17 @@ class LakeTable:
             f: bmeta[os.path.basename(f)] for f in LakeTable._bucket_files(m, b_str)
         })
 
-    def _cow_granule_plans(self, m: dict, foot: dict):
+    def _cow_granule_plans(self, m: Optional[dict], foot: dict, S_w: Optional[int] = None):
         """Granular-COW plan (r3 verdict item #5): per touched bucket, the
         granule depth ``S_b``, the CLOSED touched residue set, and the
         base/delta files this commit consumes (rewrites). Buckets with no
-        existing files plan at the write depth (pure inserts, nothing
-        consumed). The whole-file closure (``claim_closure``) is the
-        fold's: a file spanning a touched and an untouched granule drags
-        the other granule in, so commits always consume whole files."""
+        existing files plan at the write depth ``S_w`` (pure inserts,
+        nothing consumed; default: sized from the footprint and the
+        touched buckets' depths). The whole-file closure
+        (``claim_closure``) is the fold's: a file spanning a touched and an
+        untouched granule drags the other granule in, so commits always
+        consume whole files."""
+        m = m or {}
         raw = {}
         for b, s64s in foot.items():
             b_str = str(b)
@@ -1437,7 +1433,7 @@ class LakeTable:
                 [f for f in m.get("files", {}).get(b_str, []) if claims[f] & touched],
                 [f for f in m.get("deltas", {}).get(b_str, []) if claims[f] & touched],
             )
-        S_w = max(
+        S_w = S_w or max(
             [self._fpb(len(foot))] + [p[0] for p in raw.values() if p is not None]
         )
         plans = {}
@@ -1449,7 +1445,7 @@ class LakeTable:
         return plans, S_w
 
     @staticmethod
-    def _cow_granular_rebase_ok(m: dict, cur: dict, plans: dict) -> bool:
+    def _cow_granular_rebase_ok(m: Optional[dict], cur: dict, plans: dict) -> bool:
         """Can a granular-COW commit rebase onto ``cur`` without recompute?
 
         Yes iff, per planned bucket: every file we consumed is still
@@ -1466,7 +1462,7 @@ class LakeTable:
                 return False
             if not set(cd) <= set(cur.get("deltas", {}).get(b_str, [])):
                 return False
-            m_base = set(m.get("files", {}).get(b_str, []))
+            m_base = set((m or {}).get("files", {}).get(b_str, []))
             cmeta = cur.get("slice_meta", {}).get(b_str, {})
             if any(
                 claims_at(cmeta[os.path.basename(f)], S_b) & touched
@@ -1736,12 +1732,9 @@ class LakeTable:
         op_col: Optional[str] = None,
         bookmark_updates: Optional[dict] = None,
         extra_manifest: Optional[dict] = None,
-        affected_buckets: Optional[Sequence[int]] = None,
-        affected_granules: Optional[dict] = None,
         mode: str = "cow",
         writer_id: str = "default",
-        delta_parts: Optional[int] = None,
-        affected_est: Optional[int] = None,
+        footprint=None,
         base=_HEAD,
     ) -> dict:
         """LWW MERGE of a change batch into the table (exactly-once).
@@ -1750,12 +1743,17 @@ class LakeTable:
         empty table): the first attempt plans and commits against it
         instead of reading HEAD again. Omitted, HEAD is read here.
 
-        ``affected_buckets`` may be a zero-arg CALLABLE for the delta-
-        append modes (the caller's lineage pass runs concurrently with
-        the write); ``affected_est`` then sizes the write fan-out — see
-        ``_append_delta``. ``affected_granules`` (bucket -> slice64 set)
-        is the batch's footprint for a COW merge into a non-empty table;
-        omitted, one distinct scan of the batch collects it.
+        ``footprint`` is the batch's one planning fact: a zero-arg
+        callable returning ``{bucket: (slice64 residues, events)}`` under
+        ``base``'s bucket count (e.g. from the caller's lineage aggregate,
+        running concurrently with the write). None: one (bucket, slice64)
+        count aggregate over the batch computes it. It is resolved BEFORE
+        the write only when the write cannot be planned without it — a
+        COW into a snapshot that has files (its granule plan) and a delta
+        append whose writer has no recorded fan-out (its file count) —
+        and otherwise after the write, where it names the exact claims. A
+        recompute after a lost race computes its own footprint on the
+        fresh snapshot (a ``rebucket()`` may have changed the space).
 
         Returns a small stats dict (for the metrics/lineage table).
         Semantics: per key, the row with max (order_by...) wins across
@@ -1770,14 +1768,17 @@ class LakeTable:
         * ``"cow"`` — copy-on-write: the (bucket, slice) granules the
           batch touches are rewritten fully merged, closed over the files
           they share (``_cow_granule_plans``); into an empty table the
-          batch is written whole. Reads are one-row-per-key with zero
-          resolve cost.
+          batch is written whole, as a granule plan that consumes
+          nothing. Reads are one-row-per-key with zero resolve cost.
         * ``"mor"`` — merge-on-read: the batch's within-batch LWW winners
           are appended as DELTA files without touching the base — write
           amplification is O(batch), not O(table); readers resolve via
           ``read_state`` (Hudi/Iceberg MOR equivalent). ``mor`` is
           ``cow_incremental`` with folds off: its deltas reach the base
           only through an explicit ``compact()``/``compact_buckets()``.
+          Every delta append sizes its files by one rule
+          (``DELTA_FILE_ROWS_AUTO`` rows per file, from the writer's
+          recorded ``delta_fanout``; see ``_append_delta``).
         * ``"cow_incremental"`` — the same delta append, then ``fold_due``
           on the manifest it just published: the steady-state
           streaming-CDC write path.
@@ -1813,10 +1814,10 @@ class LakeTable:
             eff_mode = mode if (mode != "cow" or _attempt < 3) else "mor"
             out = self._merge_upsert_once(
                 batch_df, keys, order_by, batch_id, op_col, bookmark_updates,
-                extra_manifest, affected_buckets, affected_granules,
-                eff_mode, writer_id, delta_parts=delta_parts,
-                affected_est=affected_est,
-                # a recompute re-plans against the fresh HEAD
+                extra_manifest, eff_mode, writer_id,
+                # a recompute re-plans against the fresh HEAD, footprint
+                # included
+                footprint=footprint if _attempt == 0 else None,
                 base=base if _attempt == 0 else _HEAD,
             )
             if out is not None:
@@ -2068,15 +2069,12 @@ class LakeTable:
 
     def _merge_upsert_once(
         self, batch_df, keys, order_by, batch_id, op_col, bookmark_updates,
-        extra_manifest, affected_buckets, affected_granules, mode, writer_id,
-        delta_parts: Optional[int] = None,
-        affected_est: Optional[int] = None,
-        base=_HEAD,
+        extra_manifest, mode, writer_id, footprint=None, base=_HEAD,
     ) -> Optional[dict]:
         """One optimistic attempt: compute + write data files against the
         snapshot ``base`` (default: HEAD), then CAS-commit. Returns None
         when a concurrent commit invalidated the data files (conflicting
-        buckets) — the caller recomputes from the fresh snapshot."""
+        granules) — the caller recomputes from the fresh snapshot."""
         m = self.current_manifest() if base is _HEAD else base
         if batch_id <= self._last_for(m, writer_id):
             return {"skipped": True, "batch_id": batch_id}
@@ -2142,46 +2140,12 @@ class LakeTable:
         # before a rebucket() still hashes into the new space)
         nb = self._buckets_of(m)
         batch = align(batch_df).withColumn("__bucket", key_hash(keys, nb))
-
-        if callable(affected_buckets) and mode not in ("mor", "cow_incremental"):
-            # the caller's lineage aggregate is STILL RUNNING — legal only
-            # for delta appends, which need the exact set only after their
-            # write action (claims enumeration)
-            raise ValueError(
-                "lazy affected_buckets requires a delta-append mode "
-                f"(got {mode!r}: COW plans its rewrite from the batch's "
-                "footprint, so it needs the set up front)"
-            )
-        foot = None
-        if mode == "cow" and m is not None:
-            # (bucket, slice)-granular COW (r3 verdict item #5): the commit
-            # rewrites only the granules the batch touches, so two COW
-            # writers hitting disjoint slices of one bucket both land
-            # without recompute. The (bucket, slice64) footprint comes from
-            # the caller (the pipeline's lineage pass collects it in its
-            # one aggregate) or from one distinct scan of the batch.
-            if affected_granules is not None:
-                foot = {int(b): {int(s) for s in v} for b, v in affected_granules.items()}
-            else:
-                s64 = key_hash(keys, SLICE_MOD, "__salt__")
-                foot = {}
-                for r in batch.select("__bucket", s64.alias("__s64")).distinct().collect():
-                    foot.setdefault(int(r[0]), set()).add(int(r[1]))
-            affected = sorted(foot)
-        elif callable(affected_buckets):
-            affected = affected_buckets
-        elif affected_buckets is not None:
-            # caller already knows the touched buckets (e.g. from its
-            # lineage-metrics pass) — skip the extra distinct scan
-            affected = [int(b) for b in affected_buckets]
-        else:
-            affected = [int(r[0]) for r in batch.select("__bucket").distinct().collect()]
+        foot_of = footprint or (lambda: self._footprint(batch, keys))
 
         if mode in ("mor", "cow_incremental"):
             out, committed = self._append_delta(
-                batch, keys, order_by, batch_id, op_col, affected,
+                batch, keys, order_by, batch_id, op_col, foot_of,
                 new_schema, m, nb, bookmark_updates, extra_manifest, t0, writer_id,
-                delta_parts=delta_parts, affected_est=affected_est,
             )
             if committed is not None and mode == "cow_incremental":
                 # hierarchical granular COW: the delta commit above is the
@@ -2194,13 +2158,17 @@ class LakeTable:
                 out["mode"] = "cow_incremental"
             return out
 
-        plans = S_w = None
         all_rows = batch
-        if foot is not None:
-            # granular COW: read ONLY the consumed files (the granules the
-            # batch touches, closed over shared files) instead of whole
-            # buckets; untouched granules' files carry forward untouched
-            plans, S_w = self._cow_granule_plans(m, foot)
+        plan_first = bool(all_files_of(m))
+        if plan_first:
+            # (bucket, slice)-granular COW (r3 verdict item #5): the commit
+            # rewrites only the granules the batch touches, so two COW
+            # writers hitting disjoint slices of one bucket both land
+            # without recompute. It reads ONLY the consumed files (the
+            # touched granules, closed over shared files) instead of whole
+            # buckets; untouched granules' files carry forward untouched.
+            plans, S = self._cow_granule_plans(m, self._slices_of(foot_of()))
+            k_parts = max(1, len(plans) * S)
             files_needed: set = set()
             own_pairs: list = []
             for b, (S_b, touched, cb, cd) in plans.items():
@@ -2218,29 +2186,33 @@ class LakeTable:
                 # re-derive the bucket after align (same pure function of keys)
                 ex_aligned = align(ex).withColumn("__bucket", key_hash(keys, nb))
                 all_rows = ex_aligned.unionByName(batch)
+        else:
+            # into an empty table nothing is consumed: the width comes from
+            # the bucket count, and the footprint, resolved after the write,
+            # names the claims of a plan that consumes nothing
+            S = self._fpb(nb)
+            k_parts = nb * S
 
         # The salt DECOUPLES shuffle width from num_buckets: a batch
         # touching 16 buckets on a 512-core cluster still merges 16*S-wide
         # (S files per bucket, recorded per-commit in the manifest).
         # Skew note: a pathologically hot KEY still lands in one partition;
         # operators/dedup.lww_dedup_salted pre-shrinks such batches first.
-        S = S_w if S_w is not None else self._fpb(len(affected))
-        k_parts = max(1, len(affected) * S)
         merged = self._lww_partitioned(all_rows, keys, order_by, k_parts, S).drop("__salt")
 
-        # --- write new files for affected buckets only (copy-on-write)
+        # --- write new files for the touched granules only (copy-on-write)
         out_dir = self._epoch_dir((m["version"] + 1) if m else 0)
         by_index = self._write_parts(merged, out_dir)
-        allowed = (
-            None
-            if plans is None
-            else {
+        if not plan_first:
+            plans, _S = self._cow_granule_plans(
+                m, self._slices_of(self._after_write(foot_of, out_dir)), S
+            )
+        our_files, our_meta, our_sizes, our_stats, our_blooms = self._harvest(
+            m, by_index, sorted(plans), S, k_parts, keys, order_by,
+            allowed={
                 b: claims_at([S_b, touched], S)
                 for b, (S_b, touched, _cb, _cd) in plans.items()
-            }
-        )
-        our_files, our_meta, our_sizes, our_stats, our_blooms = self._harvest(
-            m, by_index, affected, S, k_parts, keys, order_by, allowed=allowed
+            },
         )
 
         def assemble(cur: Optional[dict], bookmark_updates, extra_manifest):
@@ -2252,24 +2224,14 @@ class LakeTable:
                 if final_schema is None or final_schema is self._SKIP:
                     return final_schema
                 # lost the CAS: our rewritten files embody the OLD state of
-                # the granules we consumed — conflict detection is
-                # (bucket, slice)-granular against a non-empty snapshot,
-                # bucket-granular for a write into an empty table
-                if plans is None:
-                    if self._buckets_touched(m, cur) & set(affected):
-                        return None
-                elif not self._cow_granular_rebase_ok(m, cur, plans):
+                # the granules we consumed — (bucket, slice)-granular
+                # conflict detection
+                if not self._cow_granular_rebase_ok(m, cur, plans):
                     return None
-            if plans is None:
-                # write into an empty table: nothing consumed (a racer's
-                # file in our buckets forced the recompute above)
-                consumed = {str(b): ([], []) for b in affected}
-            else:
-                # granular COW: swap ONLY the consumed files; untouched
-                # granules' files (and deltas landed since our snapshot in
-                # OUR granules — newer batches, LWW-safe as pending
-                # deltas) carry forward
-                consumed = {str(b): (cb, cd) for b, (_S, _t, cb, cd) in plans.items()}
+            # swap ONLY the consumed files; untouched granules' files (and
+            # deltas landed since our snapshot in OUR granules — newer
+            # batches, LWW-safe as pending deltas) carry forward
+            consumed = {str(b): (cb, cd) for b, (_S, _t, cb, cd) in plans.items()}
             files, deltas, slice_meta = self._swap_consumed(cur, consumed, our_files, our_meta)
             return self._batch_manifest(
                 cur, batch_id, writer_id, final_schema, keys, order_by, op_col,
@@ -2279,23 +2241,77 @@ class LakeTable:
 
         committed = self._commit_batch(m, out_dir, bookmark_updates, extra_manifest, assemble)
         if committed is None:
-            return None  # conflicting buckets: caller recomputes
+            return None  # conflicting granules: caller recomputes
         if committed is self._SKIP:
             return {"skipped": True, "batch_id": batch_id}
         return {
             "skipped": False,
             "batch_id": batch_id,
             "version": committed["version"],
-            "affected_buckets": len(affected),
+            "buckets_touched": len(plans),
             "merge_seconds": time.time() - t0,
         }
 
+    @staticmethod
+    def _footprint(batch: DataFrame, keys) -> dict:
+        """``{bucket: (slice64 residues, events)}`` of a bucketed batch,
+        from one (__bucket, slice64) count aggregate."""
+        foot: dict = {}
+        s64 = key_hash(keys, SLICE_MOD, "__salt__").alias("__s64")
+        for b, s, n in batch.groupBy("__bucket", s64).count().collect():
+            residues, events = foot.get(int(b), (set(), 0))
+            residues.add(int(s))
+            foot[int(b)] = (residues, events + int(n))
+        return foot
+
+    @staticmethod
+    def _slices_of(foot: dict) -> dict:
+        """A footprint's ``{bucket: slice64 residues}`` (granule plans)."""
+        return {int(b): {int(s) for s in res} for b, (res, _n) in foot.items()}
+
+    @staticmethod
+    def _fanout_of(foot: dict) -> list:
+        """A footprint's ``[buckets touched, events]``: the fan-out record
+        that sizes the writer's next delta append."""
+        return [len(foot), sum(int(n) for _res, n in foot.values())]
+
+    @staticmethod
+    def _after_write(foot_of, out_dir: str) -> dict:
+        """Resolve a footprint once the write is done; a failing resolver
+        (e.g. the pipeline's empty-batch signal) reclaims the
+        unreferenced epoch dir, like a failing lazy commit payload."""
+        try:
+            return foot_of()
+        except BaseException:
+            shutil.rmtree(out_dir, ignore_errors=True)
+            raise
+
+    def _delta_width(self, m: Optional[dict], writer_id: str, foot: Optional[dict] = None):
+        """``(S, k_parts)`` of ``writer_id``'s delta append planned on
+        ``m``: from ``foot`` when given, else from the writer's recorded
+        ``delta_fanout`` (None when it has none). The file count is capped
+        at ``DELTA_FILE_ROWS_AUTO`` rows per file."""
+        fanout = (
+            self._fanout_of(foot) if foot is not None
+            else ((m or {}).get("delta_fanout") or {}).get(writer_id)
+        )
+        if fanout is None:
+            return None
+        n_buckets, events = fanout
+        S = self._fpb(n_buckets)
+        return S, max(1, min(n_buckets * S, -(-int(events) // DELTA_FILE_ROWS_AUTO)))
+
+    def delta_plans_one_file(self, m: Optional[dict], writer_id: str) -> bool:
+        """Whether ``writer_id``'s next delta append planned on ``m``
+        writes one file (a caller can then aggregate its batch in one
+        task too)."""
+        width = self._delta_width(m, writer_id)
+        return width is not None and width[1] == 1
+
     def _append_delta(
-        self, batch, keys, order_by, batch_id, op_col, affected,
+        self, batch, keys, order_by, batch_id, op_col, foot_of,
         new_schema, m, nb, bookmark_updates, extra_manifest, t0,
         writer_id: str = "default",
-        delta_parts: Optional[int] = None,
-        affected_est: Optional[int] = None,
     ) -> tuple:
         """MOR write: within-batch LWW winners appended as delta files.
 
@@ -2309,45 +2325,32 @@ class LakeTable:
         once by (bucket, salt) and the LWW aggregate, grouped by (keys,
         bucket, salt), reuses that partitioning.
 
-        ``delta_parts`` caps the write fan-out for small batches into
-        HIGH-bucket-count tables: several (bucket, salt) cells hash into
-        one partition and the delta file is SHARED across buckets — the
-        claim format's existing collision case ([S, residues] per
-        (bucket, file); the ownership semi-join already filters shared
-        files on read). Measured +30% steady ingest at
-        64 buckets / 50k-row batches and 2.9x at 1024 buckets; it matters
-        whenever batch_rows is small against num_buckets and the
-        footers/commit latency dominate. The pipeline sizes it from the
-        stream's previous batch at ``pipeline.DELTA_FILE_ROWS_AUTO``
-        (4096) rows per file.
+        Fan-out: every delta writer sizes by one rule. The write is
+        planned from the writer's ``delta_fanout`` record (the buckets
+        and events of its previous delta batch — a CDC stream is
+        stationary), and each delta commit records the batch's own. The
+        file count is capped at ``DELTA_FILE_ROWS_AUTO`` rows per file:
+        several (bucket, salt) cells hash into one partition and a delta
+        file is SHARED across buckets — the claim format's existing
+        collision case ([S, residues] per (bucket, file); the ownership
+        semi-join already filters shared files on read). S and the
+        fan-out are a perf heuristic only; claims stay exact because the
+        SAME S feeds both the salt column and ``_files_and_meta``.
+
+        The footprint is resolved after the write action (for claims
+        enumeration), so the caller's lineage aggregate runs concurrently
+        with the write — except for a writer with no recorded fan-out,
+        whose write is sized from the footprint, resolved first.
 
         Multi-writer: delta files are independent of the base snapshot, so
         a lost CAS always rebases (append our entries onto the fresh
         manifest) — MOR appends never recompute.
-
-        ``affected`` may be a CALLABLE: the delta write never reads the
-        base, so the exact touched-bucket set is only needed AFTER the
-        write action, for claims enumeration — the caller's lineage
-        aggregate can then run CONCURRENTLY with the write.
-        ``affected_est`` (estimated touched-bucket count, e.g. the
-        previous micro-batch's — steady CDC streams are stationary) sizes
-        S and the fan-out eagerly; S is a perf heuristic only, claims stay
-        exact because the SAME S feeds both the salt column and
-        ``_files_and_meta``. A resolution failure (e.g. an empty batch)
-        reclaims the unreferenced epoch dir, like a failing lazy commit
-        payload (``_commit_batch``).
         """
         from tap_rest_api_msdk_spark.operators.dedup import lww_dedup
 
-        lazy_affected = callable(affected)
-        n_aff = (
-            int(affected_est) if lazy_affected and affected_est else
-            (nb if lazy_affected else len(affected))
-        )
-        S = self._fpb(n_aff)
-        k_parts = max(1, n_aff * S)
-        if delta_parts is not None:
-            k_parts = max(1, min(k_parts, int(delta_parts)))
+        width = self._delta_width(m, writer_id)
+        foot = None if width else foot_of()
+        S, k_parts = width or self._delta_width(m, writer_id, foot)
         out_dir = self._epoch_dir((m["version"] + 1) if m else 0)
         if k_parts == 1:
             winners = lww_dedup(batch.coalesce(1), list(keys) + ["__bucket"], order_by)
@@ -2358,18 +2361,15 @@ class LakeTable:
                 "__salt"
             )
         by_index = self._write_parts(winners, out_dir)
+        if foot is None:
+            foot = self._after_write(foot_of, out_dir)
+        fanout = {"delta_fanout": {writer_id: self._fanout_of(foot)}}
 
-        if lazy_affected:
-            # resolve the exact touched-bucket set now that the write is
-            # done; an aborting resolver reclaims the unreferenced dir
-            try:
-                affected = sorted(int(b) for b in affected())
-            except BaseException:
-                shutil.rmtree(out_dir, ignore_errors=True)
-                raise
-
+        # claims are the footprint's residues: a file shared by several
+        # (bucket, salt) cells claims only the cells that wrote rows
         our_deltas, our_meta, our_sizes, our_stats, our_blooms = self._harvest(
-            m, by_index, affected, S, k_parts, keys, order_by
+            m, by_index, sorted(foot), S, k_parts, keys, order_by,
+            allowed={b: claims_at([SLICE_MOD, res], S) for b, (res, _n) in foot.items()},
         )
 
         def assemble(cur: Optional[dict], bookmark_updates, extra_manifest):
@@ -2390,7 +2390,8 @@ class LakeTable:
             return self._batch_manifest(
                 cur, batch_id, writer_id, final_schema, keys, order_by, op_col,
                 dict(cur["files"]) if cur else {}, deltas, slice_meta,
-                bookmark_updates, extra_manifest, our_sizes, our_blooms, our_stats,
+                bookmark_updates, {**(extra_manifest or {}), **fanout},
+                our_sizes, our_blooms, our_stats,
             )
 
         committed = self._commit_batch(m, out_dir, bookmark_updates, extra_manifest, assemble)
@@ -2403,7 +2404,7 @@ class LakeTable:
             "batch_id": batch_id,
             "version": committed["version"],
             "mode": "mor",
-            "affected_buckets": len(affected),
+            "buckets_touched": len(foot),
             "merge_seconds": time.time() - t0,
         }, committed
 

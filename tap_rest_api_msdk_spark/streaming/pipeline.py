@@ -48,16 +48,6 @@ from tap_rest_api_msdk_spark.streaming.laketable import SLICE_MOD, LakeTable, ke
 from tap_rest_api_msdk_spark.streaming.metrics import append_metrics_rows, lineage_metrics
 
 
-# Target rows per DELTA file of a mor/cow_incremental batch: the delta write
-# fan-out is capped at ceil(batch_rows / this), so files are SHARED across
-# buckets. Uncapped, a small batch writes up to num_buckets near-empty files
-# whose footers and commit latency dominate (measured +30% steady ingest at
-# 64 buckets, 2.9x at 1024); 4096 puts 50k-row steady batches at ~13 files,
-# the measured knee (16 files beat both 64 and 4 on the 30-batch steady
-# shape). batch_rows is the stream's previous batch, kept in the snapshot.
-DELTA_FILE_ROWS_AUTO = 4096
-
-
 @dataclass(frozen=True)
 class PipelineConfig:
     """Resolved engine config for one stream (F6 analog at the Spark layer).
@@ -79,9 +69,6 @@ class PipelineConfig:
     ts_col: Optional[str] = "ts"
     result_limit: Optional[int] = None
     num_buckets: int = 16
-    # merge shuffle width = num_affected_buckets * files_per_bucket (None =
-    # auto from cores): decouples write parallelism from the bucket layout
-    files_per_bucket: Optional[int] = None
     # payload schema drift handling (FX6): "fixed" trusts the discovered
     # schema for the stream's lifetime, restarts included (fastest;
     # late-appearing fields are dropped); "sample" re-samples N+1 payloads
@@ -172,10 +159,10 @@ def prepare_batch(
 
 
 class _EmptyBatch(Exception):
-    """The lineage job reported ZERO rows. Raised from a lazy commit
-    payload, it aborts merge_upsert between its write action and its CAS
-    commit, so an empty batch never commits a manifest or burns the
-    writer's ledger slot (the unreferenced epoch dir is reclaimed)."""
+    """The lineage job reported ZERO rows. Raised from the footprint or a
+    lazy commit payload, it aborts merge_upsert before its CAS commit, so
+    an empty batch never commits a manifest or burns the writer's ledger
+    slot (an epoch dir already written is reclaimed)."""
 
 
 class _Lineage:
@@ -264,8 +251,8 @@ def process_batch(
             )
         raw = raw.filter(ok)
 
-    # lineage + high-watermark + affected buckets in ONE cheap pass over the
-    # RAW batch (merge keys / seq / ts / payload are all pre-flatten
+    # lineage + high-watermark + the batch footprint in ONE cheap pass over
+    # the RAW batch (merge keys / seq / ts / payload are all pre-flatten
     # columns, so this pass never parses JSON). The flatten then runs
     # exactly once, inside the merge write action — measured 2x replay
     # throughput vs persisting the flattened batch across both passes.
@@ -275,22 +262,18 @@ def process_batch(
     metrics_src = (
         raw if all(k in raw.columns for k in conf.keys) else prepare_batch(raw, conf, schema)
     )
-    # a COW sink on a non-empty table also collects the exact (bucket,
-    # slice64) footprint in the same aggregate, so merge_upsert rewrites
-    # only the touched granules; metrics_src carries the shaped batch's
-    # keys after malformed/result-limit filtering, so claims stay exact
-    delta = conf.sink_mode in ("mor", "cow_incremental")
-    want_granular = conf.sink_mode == "cow" and snap is not None
-    # delta fan-out: (touched buckets, events) of the stream's previous
-    # batch — a CDC stream is stationary, so it sizes this batch's write
-    est = ((snap or {}).get("delta_fanout") or {}).get(conf.stream) if delta else None
-    src = metrics_src.withColumn("__p", bucket)
-    if est is not None and est[1] <= DELTA_FILE_ROWS_AUTO:
-        # a batch expected to fill one delta file is aggregated in one task:
-        # no exchange, one job
+    # the (bucket, slice64) footprint rides in the same aggregate;
+    # metrics_src carries the shaped batch's keys after malformed/result-
+    # limit filtering, so the merge's claims stay exact
+    src = metrics_src.withColumn("__p", bucket).withColumn(
+        "__s64", key_hash(conf.keys, SLICE_MOD, "__salt__")
+    )
+    if conf.sink_mode in ("mor", "cow_incremental") and table.delta_plans_one_file(
+        snap, conf.stream
+    ):
+        # a batch whose delta append writes one file is aggregated in one
+        # task too: no exchange, one job
         src = src.coalesce(1)
-    if want_granular:
-        src = src.withColumn("__s64", key_hash(conf.keys, SLICE_MOD, "__salt__"))
     metrics_df = lineage_metrics(
         src,
         "__p",
@@ -303,17 +286,16 @@ def process_batch(
             if json_payload and conf.payload_col in metrics_src.columns
             else None
         ),
-        slice_col="__s64" if want_granular else None,
+        slice_col="__s64",
     )
     shaped = prepare_batch(raw, conf, schema)
 
     # The lineage job runs concurrently with the merge write; its rows feed
-    # the commit payloads (bookmarks, counters, touched buckets) as
-    # callables that laketable resolves after the write action and right
-    # before the CAS, so exact bookmarks land in the same atomic manifest.
-    # A COW merge into a non-empty table plans its rewrite from the exact
-    # footprint, and a delta append without a fan-out estimate sizes from
-    # the exact counts: those wait for the lineage rows first.
+    # the commit payloads (bookmarks, counters) and the footprint as
+    # callables that laketable resolves when it needs them — after the
+    # write action, unless the write cannot be planned without the
+    # footprint (see merge_upsert) — so exact bookmarks land in the same
+    # atomic manifest.
     lineage = _Lineage(metrics_df)
 
     def _bookmarks():
@@ -324,39 +306,19 @@ def process_batch(
         )
 
     def _extra():
-        rows = lineage.rows(nonempty=True)
-        events = sum(r["event_count"] for r in rows)
-        n = records_committed + events
+        n = records_committed + sum(r["event_count"] for r in lineage.rows(nonempty=True))
         out = {"records_committed": n, "records_committed_by": {conf.stream: n}}
-        if delta:
-            out["delta_fanout"] = {conf.stream: [len(rows), events]}
         if schema is not None:
             out["payload_schema"] = {conf.stream: schema.jsonValue()}
         return out
 
+    def _footprint():
+        return {
+            int(r["partition_id"]): (set(r["slice_classes"]), r["event_count"])
+            for r in lineage.rows(nonempty=True)
+        }
+
     try:  # an empty batch raises _EmptyBatch wherever the rows are first used
-        mu_kwargs: dict = {}
-        if want_granular:
-            mrows = lineage.rows(nonempty=True)
-            mu_kwargs = {
-                # lineage partition == merge bucket
-                "affected_buckets": sorted(r["partition_id"] for r in mrows),
-                "affected_granules": {
-                    int(r["partition_id"]): set(r["slice_classes"]) for r in mrows
-                },
-            }
-        if delta:
-            if est is None:
-                mrows = lineage.rows(nonempty=True)
-                est = [len(mrows), sum(r["event_count"] for r in mrows)]
-            mu_kwargs = {
-                # exact touched-bucket set, needed only after the delta write
-                "affected_buckets": lambda: sorted(
-                    int(r["partition_id"]) for r in lineage.rows(nonempty=True)
-                ),
-                "affected_est": est[0],
-                "delta_parts": -(-est[1] // DELTA_FILE_ROWS_AUTO),
-            }
         stats = table.merge_upsert(
             shaped,
             keys=conf.keys,
@@ -367,8 +329,8 @@ def process_batch(
             extra_manifest=_extra,
             mode=conf.sink_mode,
             writer_id=conf.stream,
+            footprint=_footprint,
             base=snap,
-            **mu_kwargs,
         )
         mrows = lineage.rows(nonempty=True)  # the merge may skip before resolving
     except _EmptyBatch:
@@ -387,9 +349,7 @@ def process_batch(
 
 
 def _open(spark: SparkSession, table_path: str, conf: PipelineConfig) -> LakeTable:
-    table = LakeTable(
-        spark, table_path, num_buckets=conf.num_buckets, files_per_bucket=conf.files_per_bucket
-    )
+    table = LakeTable(spark, table_path, num_buckets=conf.num_buckets)
     if conf.fold_every:
         table.fold_every = conf.fold_every
     return table

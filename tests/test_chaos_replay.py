@@ -73,7 +73,7 @@ def test_chaos_replay_reconverges(spark, wal, tmp_path, seed):
             process_batch(table, conf, batch, i)
         if ps is not None and rng.random() < 0.4:
             # granular-COW audit writer: re-applies a random earlier slice
-            # DIRECTLY through merge_upsert (no affected_buckets, so the
+            # DIRECTLY through merge_upsert (no footprint, so the
             # (bucket, slice)-granular COW path plans/consumes files);
             # replaying already-applied events is LWW-idempotent, so the
             # oracle stays unchanged while the granular bookkeeping mixes

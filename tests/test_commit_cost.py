@@ -112,6 +112,32 @@ def test_steady_commit_fixed_cost(spark, tmp_path):
     assert wide["py4j"] <= 1.10 * narrow["py4j"], (narrow, wide)
 
 
+def test_cow_into_empty_table_runs_lineage_and_write_only(spark, tmp_path):
+    """A shredded COW micro-batch into an empty 8-bucket table plans its
+    write width from the bucket count and takes its footprint from the
+    concurrent lineage aggregate after the write: its job group holds the
+    lineage and the write jobs only (2 each under AQE), no footprint scan
+    of its own."""
+    wal = synth_repo_wal(spark, BOOT, n_repos=10, n_paths=40, partitions=2, shredded=True)
+    wal.write.parquet(str(tmp_path / "wal"))
+    wal = spark.read.parquet(str(tmp_path / "wal"))
+    n_keys = wal.select("repo", "path").distinct().count()
+    table = LakeTable(spark, str(tmp_path / "t"), num_buckets=8)
+    conf = PipelineConfig(stream="boot", num_buckets=8, sink_mode="cow")
+    sc = spark.sparkContext
+    group = "commit-cost-empty-cow"
+    sc.setJobGroup(group, "one COW commit into an empty table")
+    try:
+        out = process_batch(table, conf, wal, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not out.get("skipped")
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 4, jobs
+    assert table.to_df(drop_deletes=False).count() == n_keys
+
+
 @contextmanager
 def _parallelize_calls(counts: dict, name: str):
     """Count ``SparkContext.parallelize`` calls inside the block: every

@@ -105,8 +105,7 @@ def test_crash_between_delta_and_fold_reconverges(spark, tmp_path):
     # simulate the crash: delta committed, fold never ran
     rows1 = [(i, 1, "upsert", f"v1-{i}") for i in range(0, 500, 3)]
     out = t._merge_upsert_once(
-        _mk(spark, rows1), ["id"], ["seq"], 1, "op", None, None, None, None,
-        "mor", "default",
+        _mk(spark, rows1), ["id"], ["seq"], 1, "op", None, None, "mor", "default",
     )
     assert out is not None and not out.get("skipped")
 
@@ -208,10 +207,11 @@ def test_cdc_diff_from_empty_is_all_inserts(spark, tmp_path):
 
 
 def test_shared_delta_files_cap_converges_identically(spark, tmp_path):
-    """The pipeline caps the delta fan-out at DELTA_FILE_ROWS_AUTO rows
+    """Every delta append caps its fan-out at DELTA_FILE_ROWS_AUTO rows
     per file, so a small batch writes delta files SHARED across buckets
     (several (bucket, salt) cells per file). Claims, folds, and reads must
-    converge to the identical LWW state as uncapped direct delta merges."""
+    converge to the identical LWW state as direct COW merges, which write
+    no delta files."""
     from tap_rest_api_msdk_spark.streaming.pipeline import (
         PipelineConfig,
         process_batch,
@@ -236,7 +236,7 @@ def test_shared_delta_files_cap_converges_identically(spark, tmp_path):
         num_buckets=16, sink_mode="cow_incremental",
     )
     states = {}
-    for label in ("capped", "uncapped"):
+    for label in ("capped", "cow"):
         t = LakeTable(spark, str(tmp_path / label), num_buckets=16)
         t.fold_every = 3
         for b in range(6):
@@ -247,7 +247,7 @@ def test_shared_delta_files_cap_converges_identically(spark, tmp_path):
                 process_batch(t, conf, sl, b)
             else:
                 t.merge_upsert(sl, keys=["id"], order_by=["seq"], batch_id=b,
-                               op_col="op", mode="cow_incremental", writer_id="s")
+                               op_col="op", mode="cow", writer_id="s")
         states[label] = {
             r["id"]: (r["seq"], r["text"]) for r in t.to_df().collect()
         }
@@ -257,7 +257,7 @@ def test_shared_delta_files_cap_converges_identically(spark, tmp_path):
             m = t.current_manifest()
             sizes = [len(v) for v in m.get("deltas", {}).values()]
             assert sum(sizes) < 16 * 2, m.get("deltas")
-    assert states["capped"] == states["uncapped"]
+    assert states["capped"] == states["cow"]
     assert len(states["capped"]) > 0
 
 
@@ -312,3 +312,55 @@ def test_time_travel_across_fold_commits(spark, tmp_path):
     # and the current state reflects the later writes
     now = {r["id"]: r["text"] for r in t.to_df().collect()}
     assert now[0] == "v3-0" and now[1] == "v0-1"
+
+
+def _delta_files(t):
+    return {f for fl in (t.current_manifest() or {}).get("deltas", {}).values() for f in fl}
+
+
+def test_every_delta_writer_sizes_by_one_rule(spark, tmp_path):
+    """Direct delta merges, mor DML and the SCD2 history table record
+    their fan-out in the snapshot (``delta_fanout[writer_id]``) and cap
+    their delta files at DELTA_FILE_ROWS_AUTO rows: each small batch into
+    a 16-bucket table writes ONE delta file, shared across buckets, and
+    the state is the LWW oracle's."""
+    from tap_rest_api_msdk_spark.sources.wal_synth import synth_repo_wal
+    from tap_rest_api_msdk_spark.streaming.laketable import DELTA_FILE_ROWS_AUTO
+    from tap_rest_api_msdk_spark.streaming.pipeline import PipelineConfig
+    from tap_rest_api_msdk_spark.streaming.scd2 import scd2_process_batch
+
+    t = LakeTable(spark, str(tmp_path / "t"), num_buckets=16)
+    truth = {i: (0, "upsert", f"v0-{i}") for i in range(1000)}
+    t.merge_upsert(_mk(spark, [(i, *truth[i]) for i in range(1000)]), keys=["id"],
+                   order_by=["seq"], batch_id=0, op_col="op")
+    assert "delta_fanout" not in t.current_manifest()  # COW records none
+    for b in (1, 2):  # no recorded fan-out yet, then the recorded one
+        batch = [(i, b, "upsert", f"v{b}-{i}") for i in range(b, 1000, 3)]
+        before = _delta_files(t)
+        t.merge_upsert(_mk(spark, batch), keys=["id"], order_by=["seq"],
+                       batch_id=b, op_col="op", mode="mor")
+        assert len(_delta_files(t) - before) == 1
+        truth.update({i: (s, o, x) for i, s, o, x in batch})
+        fan = t.current_manifest()["delta_fanout"]["default"]
+        assert fan[0] > 1 and fan[1] == len(batch) <= DELTA_FILE_ROWS_AUTO
+    before = _delta_files(t)
+    assert t.delete_keys([{"id": 5}, {"id": 6}], batch_id=3, mode="mor")["n_deleted"] == 2
+    assert len(_delta_files(t) - before) == 1
+    assert t.current_manifest()["delta_fanout"]["default"][1] == 2
+    truth[5], truth[6] = (1, "delete", None), (1, "delete", None)
+    got = {r["id"]: (r["seq"], r["op"], r["text"]) for r in t.to_df(drop_deletes=False).collect()}
+    assert {i: v for i, v in got.items() if v[1] == "upsert"} == {
+        i: v for i, v in truth.items() if v[1] == "upsert"
+    }
+    assert {i for i, v in got.items() if v[1] == "delete"} == {5, 6}
+
+    wal = synth_repo_wal(spark, 600, n_repos=5, n_paths=40, partitions=2, shredded=True)
+    state = LakeTable(spark, str(tmp_path / "state"), num_buckets=16)
+    hist = LakeTable(spark, str(tmp_path / "hist"), num_buckets=16)
+    conf = PipelineConfig(stream="s", num_buckets=16)
+    for b in range(3):
+        before = _delta_files(hist)
+        sl = wal.filter((F.col("seq") >= 200 * b) & (F.col("seq") < 200 * (b + 1)))
+        assert not scd2_process_batch(state, hist, conf, sl, b)["history"]["skipped"]
+        assert len(_delta_files(hist) - before) == 1
+        assert hist.current_manifest()["delta_fanout"]["s"][1] > 0

@@ -83,7 +83,7 @@ def test_delete_tombstone_blocks_late_resurrection(spark, table):
     assert [r.content for r in table.to_df().collect()] == ["back"]
 
 
-def test_copy_on_write_only_affected_buckets(spark, table):
+def test_copy_on_write_only_touched_buckets(spark, table):
     rows = [(i, f"r{i}", f"p{i}", f"c{i}", "upsert", f"v{i}") for i in range(20)]
     table.merge_upsert(mk(spark, rows), KEYS, ORDER, 0, op_col="op")
     m0 = table.current_manifest()

@@ -413,6 +413,67 @@ def test_disjoint_slice_cow_writers_both_land_without_recompute(spark, tmp_path)
     assert all(got2[i] == 3 for i in c_keys)  # max seq wins after recompute
 
 
+def test_cow_into_empty_table_rebases_unless_granules_meet(spark, tmp_path):
+    """A COW into an empty table commits as a granule plan that consumes
+    nothing. On a lost CAS it rebases metadata-only when the racer's base
+    files claim other granules of the same bucket, and recomputes when
+    they meet its own; either way the state is the LWW oracle's."""
+    ids = list(range(400))
+    res = {
+        r["id"]: r["res"]
+        for r in arrow_frame(spark, [(i,) for i in ids], T.StructType.fromDDL("id long"))
+        .withColumn(
+            "res",
+            F.pmod(F.xxhash64(F.col("id"), F.lit("__salt__")), F.lit(4)).cast("int"),
+        )
+        .collect()
+    }
+    a_keys = [i for i in ids if res[i] == 0][:40]
+    b_keys = [i for i in ids if res[i] == 1][:40]
+
+    def race(path, ours, theirs):
+        """Writer A merges ``ours`` (seq 2) into the empty table at
+        ``path``; writer B's ``theirs`` (seq 1) commits first, inside A's
+        CAS. Returns the compute attempts per writer and the state."""
+        tA = LakeTable(spark, path, num_buckets=1, files_per_bucket=4)
+        tB = LakeTable(spark, path, num_buckets=1, files_per_bucket=4)
+        attempts = {"A": 0, "B": 0}
+        for tag, tt in (("A", tA), ("B", tB)):
+            orig = tt._merge_upsert_once
+
+            def counted(*args, __tag=tag, __orig=orig, **kw):
+                attempts[__tag] += 1
+                return __orig(*args, **kw)
+
+            tt._merge_upsert_once = counted
+        real_publish = tA._publish
+        injected = {"done": False}
+
+        def racing_publish(manifest):
+            if not injected["done"]:
+                injected["done"] = True
+                tB.merge_upsert(_rows(spark, theirs, 1, "wb"), keys=["id"],
+                                order_by=["seq"], batch_id=0, mode="cow",
+                                writer_id="wb")
+            return real_publish(manifest)
+
+        tA._publish = racing_publish
+        out = tA.merge_upsert(_rows(spark, ours, 2, "wa"), keys=["id"],
+                              order_by=["seq"], batch_id=0, mode="cow",
+                              writer_id="wa")
+        assert not out.get("skipped")
+        state = {r["id"]: r["text"] for r in LakeTable(spark, path).to_df().collect()}
+        return attempts, state
+
+    attempts, got = race(str(tmp_path / "disjoint"), a_keys, b_keys)
+    assert attempts == {"A": 1, "B": 1}, attempts  # rebased, no recompute
+    assert got == {**{i: f"wb-{i}-1" for i in b_keys}, **{i: f"wa-{i}-2" for i in a_keys}}
+
+    attempts, got = race(str(tmp_path / "overlap"), a_keys, a_keys[:10])
+    assert attempts == {"A": 2, "B": 1}, attempts  # granules meet: recompute
+    assert got == {i: f"wa-{i}-2" for i in a_keys}
+
+
 def test_pipeline_cow_uses_granular_footprint(spark, tmp_path):
     """process_batch (sink_mode='cow') collects the (bucket, slice64)
     footprint inside its lineage aggregate and merge_upsert rewrites only
@@ -429,7 +490,7 @@ def test_pipeline_cow_uses_granular_footprint(spark, tmp_path):
     path = str(tmp_path / "t")
     table = LakeTable(spark, path, num_buckets=8, files_per_bucket=4)
     conf = PipelineConfig(stream="s", payload_col="payload", num_buckets=8,
-                          files_per_bucket=4, sink_mode="cow")
+                          sink_mode="cow")
     process_batch(table, conf, wal, 0)
     m0 = table.current_manifest()
     n0 = table.to_df().count()

@@ -97,3 +97,21 @@ def test_stats_survive_maintenance_multicol(spark, table):
     for entry in m.get("file_stats", {}).values():
         assert isinstance(entry, dict) and "ts" in entry
     assert {r["id"] for r in table.read_range(400, 1000, col="ts").collect()} == before
+
+
+def test_stats_columns_seed_ignored_on_committed_table(spark, tmp_path):
+    """The stats_columns seed only applies to a table with nothing
+    committed: a handle opened with it on a table committed without stats
+    columns adds none at its next commit (and harvests no zone map)."""
+    path = str(tmp_path / "t")
+    LakeTable(spark, path, num_buckets=4).merge_upsert(
+        _rows(spark, 0, 100), keys=["id"], order_by=["seq"], batch_id=0, op_col=None
+    )
+    t = LakeTable(spark, path, num_buckets=4, stats_columns=["ts"])
+    t.merge_upsert(_rows(spark, 100, 120), keys=["id"], order_by=["seq"],
+                   batch_id=1, op_col=None)
+    m = t.current_manifest()
+    assert "stats_columns" not in m
+    assert m["file_stats"]
+    assert all("ts" not in entry for entry in m["file_stats"].values())
+    assert t.stats_columns == []
